@@ -314,41 +314,19 @@ def main() -> None:
     for t in _tables:
         _lt(spark, SF_DIR, t).limit(1).count()
 
-    # Per-query shuffle volume (records/bytes written) alongside wall
-    # time: wall time on a busy local box swings up to 5x, shuffle
-    # volume is deterministic — round-over-round comparisons argue with
-    # the metric that doesn't lie. A query that caches a sketch stage
-    # (minhash/LSH bucket tables) is billed the cache-build shuffle on
-    # its own row, which is exactly where the cost belongs.
-    from example_kafkastreams_spark.operators.cache import release_sketch_caches
+    from pyspark.sql import functions as _F
 
-    canary_start = host_canary()
-    timings: dict[str, float] = {}
-    shuffles: dict[str, dict] = {}
-    for name in sorted(QUERIES):
-        fn = QUERIES[name]
-        before = shuffle_totals(spark)
-        t0 = time.perf_counter()
-        run_noop(fn(spark, SF_DIR))
-        timings[name] = round(time.perf_counter() - t0, 3)
-        # each query's row is billed its own sketch-cache build; release
-        # between queries so 50 runs in one session don't accumulate
-        # cached stages (ADVICE r2)
-        release_sketch_caches()
-        after = shuffle_totals(spark)
-        if before is not None and after is not None:
-            shuffles[name] = {
-                "shuffle_write_records": after[0] - before[0],
-                "shuffle_write_bytes": after[1] - before[1],
-            }
+    from example_kafkastreams_spark.operators.cache import (
+        release_build_memos,
+        release_sketch_caches,
+    )
 
     # Per-branch wall inside the merged slots (VERDICT r6 item 6):
     # filtering on the union discriminator folds every other branch's
     # lit(mode) predicate to false, so Catalyst prunes those union
     # children and each timing runs ONLY that branch's sub-plan —
     # attributing the slot's wall without restructuring the registry.
-    from pyspark.sql import functions as _F
-
+    branches: dict[str, tuple] = {}
     branch_timings: dict[str, dict] = {}
     for qname, disc, modes in (
         ("q11_pricing_summary", "mode", ("full", "mv")),
@@ -402,17 +380,45 @@ def main() -> None:
         ("q64_decontaminate", "mode", ("exact", "fuzzy", "bloom")),
         ("q65_lm_score", "mode", ("lm", "clf", "calib")),
     ):
-        if qname not in QUERIES:
-            continue
-        rows: dict[str, float] = {}
-        for m in modes:
-            t0 = time.perf_counter()
-            run_noop(
-                QUERIES[qname](spark, SF_DIR).filter(_F.col(disc) == m)
-            )
-            rows[m] = round(time.perf_counter() - t0, 3)
-            release_sketch_caches()
-        branch_timings[qname] = rows
+        branches[qname] = (disc, modes)
+
+    # Per-query shuffle volume (records/bytes written) alongside wall
+    # time: wall time on a busy local box swings up to 5x, shuffle
+    # volume is deterministic — round-over-round comparisons argue with
+    # the metric that doesn't lie. A query that caches a sketch stage
+    # (minhash/LSH bucket tables) is billed the cache-build shuffle on
+    # its own row, which is exactly where the cost belongs.
+    canary_start = host_canary()
+    timings: dict[str, float] = {}
+    shuffles: dict[str, dict] = {}
+    for name in sorted(QUERIES):
+        fn = QUERIES[name]
+        before = shuffle_totals(spark)
+        t0 = time.perf_counter()
+        run_noop(fn(spark, SF_DIR))
+        timings[name] = round(time.perf_counter() - t0, 3)
+        # each query's row is billed its own sketch-cache build; release
+        # between queries so 50 runs in one session don't accumulate
+        # cached stages (ADVICE r2)
+        release_sketch_caches()
+        after = shuffle_totals(spark)
+        if before is not None and after is not None:
+            shuffles[name] = {
+                "shuffle_write_records": after[0] - before[0],
+                "shuffle_write_bytes": after[1] - before[1],
+            }
+        if name in branches:
+            disc, modes = branches[name]
+            rows: dict[str, float] = {}
+            for m in modes:
+                t0 = time.perf_counter()
+                run_noop(fn(spark, SF_DIR).filter(_F.col(disc) == m))
+                rows[m] = round(time.perf_counter() - t0, 3)
+                release_sketch_caches()
+            branch_timings[name] = rows
+        # the slot's memoized build retires with it: owned frames from
+        # 50 slots would otherwise pile up and GC-throttle the tail
+        release_build_memos()
 
     # Translated 10x claim (BASELINE.md): the declarative co-partitioned
     # flagship plan vs the reference-DSL-style re-keyed plan with its

@@ -59,7 +59,6 @@ def candidate_eval(
     id_col: str = "doc_id",
     text_col: str = "text",
     sig_df: DataFrame | None = None,
-    persist_fn=persist_tracked,
 ) -> DataFrame:
     """Three rows — (metric, n, value):
 
@@ -84,7 +83,7 @@ def candidate_eval(
     # postings/freq sides, the exact-Jaccard verify's two aliases, and
     # the MinHash signature) — without it each reference re-runs the
     # tokenize+slice tree over the sample (with_shingles doc).
-    sdocs = persist_fn(
+    sdocs = persist_tracked(
         with_shingles(
             sample, id_col=id_col, text_col=text_col, shingle_n=shingle_n
         )
@@ -115,7 +114,7 @@ def candidate_eval(
     # below — unpersisted, the join+window tree executes once per side
     # (measured: the two duplicated 92k/120k-record stages in q41's
     # eval branch).
-    pref = persist_fn(
+    pref = persist_tracked(
         post.join(F.broadcast(freq), "tok")
         .withColumn(
             "__r",

@@ -671,17 +671,14 @@ def simhash_table(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    persist_fn=persist_tracked,
 ) -> DataFrame:
     """Persisted (id, simhash) sketch table — build it ONCE and pass
     as ``sh_df`` to every sketch consumer in a pipeline
     (``simhash_components_edges``, ``simhash_chain_hops``, …) so the
     corpus token-hash scan is paid once. The 12-byte-per-row sketch is
-    the natural checkpoint artifact at 100 TB. Callers whose build is
-    memoized per (session, corpus) pass ``persist_fn=persist_pinned``
-    so a tracked release between re-invocations cannot de-materialize
-    the table the memo re-serves."""
-    return persist_fn(with_simhash(
+    the natural checkpoint artifact at 100 TB. Inside a memoized build
+    the persist is owned by the memo (operators.cache)."""
+    return persist_tracked(with_simhash(
         _rebalance(docs, id_col), id_col, text_col
     ))
 

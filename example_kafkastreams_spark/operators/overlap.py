@@ -15,14 +15,16 @@ Rules for callers:
 * pre-warm `catalog.load_table` for every table a section reads (the
   memo makes subsequent loads read-only and thread-safe — a FIRST
   load mutates session confs during the footer read);
-* sections that persist through ``persist_tracked``/``persist_pinned``
-  are safe (list append is atomic under the GIL), and concurrent
-  materialization of a shared cached frame is serialized per block by
-  the BlockManager.
+* sections that persist through ``persist_tracked`` are safe (list
+  append is atomic under the GIL), and concurrent materialization of
+  a shared cached frame is serialized per block by the BlockManager;
+  each section runs in a copy of the caller's context, so inside a
+  ``build_memo`` build its persists are owned by the memo.
 """
 
 from __future__ import annotations
 
+import contextvars
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any
@@ -69,7 +71,10 @@ def build_overlapped(
 
     with ThreadPoolExecutor(max_workers=max_workers or len(builders)) as pool:
         futures = {
-            k: pool.submit(inheritable_thread_target(labeled(k, fn)))
+            k: pool.submit(
+                contextvars.copy_context().run,
+                inheritable_thread_target(labeled(k, fn)),
+            )
             for k, fn in builders.items()
         }
         return {k: f.result() for k, f in futures.items()}

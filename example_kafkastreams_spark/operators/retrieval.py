@@ -1379,7 +1379,6 @@ def mmr_diversify(
     lam_div: str = MMR_LAMBDA,
     id_col: str = "doc_id",
     text_col: str = "text",
-    persist_fn=None,
     local: bool = True,
 ) -> DataFrame:
     """Maximal Marginal Relevance (Carbonell & Goldstein 1998) over a
@@ -1417,12 +1416,10 @@ def mmr_diversify(
     repeated references to one InMemoryRelation, keeping the plan
     linear in k and each subtree executed once.
 
-    ``persist_fn``: the persist used for those frames — default
-    ``persist_tracked`` (released by ``release_sketch_caches``); a
-    memo-backed caller (q55) passes ``persist_pinned`` so a tracked
-    release between invocations cannot silently restore the
-    exponential re-execution on the memoized plan. Only the
-    distributed unroll persists anything.
+    Inside a memoized build (q55) those persists are owned by the memo
+    (operators.cache), so a sketch release between invocations cannot
+    silently restore the exponential re-execution on the memoized
+    plan. Only the distributed unroll persists anything.
 
     ``local`` (default): the shortlist is bounded by CONSTRUCTION —
     |queries|·top_k rows, serve-page constants independent of corpus
@@ -1439,9 +1436,7 @@ def mmr_diversify(
     """
     from .cache import persist_tracked
 
-    persist_tracked = (
-        (lambda df: df) if local else (persist_fn or persist_tracked)
-    )
+    persist_tracked = (lambda df: df) if local else persist_tracked
 
     lam_e = F.expr(f"CAST('{lam}' AS DOUBLE)")
     div_e = F.expr(f"CAST('{lam_div}' AS DOUBLE)")

@@ -66,7 +66,6 @@ def corpus_stages(
     decontam_bench: DataFrame | None = None,
     decontam_mode: str = "bloom",
     language_stage_hook=None,
-    persist_fn=persist_tracked,
 ) -> dict[str, DataFrame]:
     """Every intermediate of the funnel, keyed by stage name — all lazy.
 
@@ -208,7 +207,7 @@ def corpus_stages(
     # Persist the two fan-out stages — the in-session analog of the
     # stage-boundary parquet materialization a production 100 TB run
     # uses; release with operators.cache.release_sketch_caches.
-    language = persist_fn(
+    language = persist_tracked(
         with_pred.filter(F.col("pred_lang").isin(*languages)).drop(
             *[f"score_{lang}" for lang in scores]
         )
@@ -229,7 +228,7 @@ def corpus_stages(
 
         lo, hi = lm_range
         sc = lm_score(language)  # corpus-trained on this stage
-        lm_filtered = persist_fn(
+        lm_filtered = persist_tracked(
             language.join(
                 sc.select("doc_id", "lm_score"), "doc_id", "left"
             )
@@ -256,7 +255,7 @@ def corpus_stages(
             "__pos", F.col("quality_score") >= clf_seed
         )
         w = weights_vector(train_hashed_classifier(labeled, "__pos"))
-        clf_filtered = persist_fn(
+        clf_filtered = persist_tracked(
             score_inline(dedup_in, w)
             .filter(F.col("clf_keep"))
             .drop("clf_score", "clf_n_tokens", "clf_keep")
@@ -264,7 +263,7 @@ def corpus_stages(
         dedup_in = clf_filtered
 
     survivors = exact_text_dedup(dedup_in)
-    exact = persist_fn(
+    exact = persist_tracked(
         dedup_in.join(survivors.select("doc_id"), "doc_id", "semi")
     )
 
@@ -382,7 +381,7 @@ def corpus_stages(
         # chunks now fans out (its own consumer + the packer): persist
         # like the other fan-out stages so the explode + PII chain runs
         # once, not once per consumer.
-        stages["chunks"] = persist_fn(chunks)
+        stages["chunks"] = persist_tracked(chunks)
         stages["packs"] = pack_chunks(
             stages["chunks"], budget=pack_budget, canonical=True
         )
@@ -1302,7 +1301,6 @@ def corpus_stages_delta(
     substr_k: int | None = None,
     whash_index: DataFrame | None = None,
     normalize: bool = False,
-    persist_fn=persist_tracked,
 ) -> dict[str, DataFrame]:
     """The DAY-2 funnel: run a new delta through the same
     quality → language → exact-dedup → near-dup → scrub → chunks
@@ -1374,7 +1372,7 @@ def corpus_stages_delta(
             delta, whash_index, k=substr_k
         )
         substr_cleaned = remove_repeated_substrings(
-            delta, k=substr_k, spans=persist_fn(spans)
+            delta, k=substr_k, spans=persist_tracked(spans)
         )
         delta = substr_cleaned
 
@@ -1390,7 +1388,7 @@ def corpus_stages_delta(
         "pred_lang",
         F.expr(P.lang_predict({l: f"score_{l}" for l in P.LANG_MARKERS})),
     )
-    language = persist_fn(
+    language = persist_tracked(
         with_pred.filter(F.col("pred_lang").isin(*languages)).drop(
             *[f"score_{lang}" for lang in scores]
         )
@@ -1400,7 +1398,7 @@ def corpus_stages_delta(
         digest_new = exact_text_dedup(language)
     else:
         digest_new = incremental_exact_dedup(language, digest_index)
-    exact = persist_fn(
+    exact = persist_tracked(
         language.join(digest_new.select("doc_id"), "doc_id", "semi")
     )
 
@@ -1413,7 +1411,7 @@ def corpus_stages_delta(
     # evaluation — persist so day-2's most expensive stage pair
     # (admission + chunking) pays the banding once (r10's
     # delta_funnel_stages attribution: neardup_admitted dominates)
-    admitted = persist_fn(admitted)
+    admitted = persist_tracked(admitted)
     if scrub_pii:
         admitted = admitted.withColumn(
             "text", F.expr(P.pii_scrub("text", P.SPARK))

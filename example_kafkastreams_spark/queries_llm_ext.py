@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .catalog import load_table
 from .functions import portable as P
 from .operators import knn as KNN
+from .operators.cache import build_memo, persist_tracked
 from .operators.components import connected_components, with_component_sizes
 from .operators.text_chunks import chunk_documents, tfidf_top_terms
 from .registry import query
@@ -276,6 +277,7 @@ def _chunk_dedup_sql() -> str:
 
 
 @query("q54_chunk_documents", oracle=_chunk_dedup_sql())
+@build_memo
 def q54_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chunking + passage-level dedup in one driver row (round-5 tag
     merge). ``chunk``: each document sliced into 32-token windows
@@ -324,19 +326,6 @@ def q54_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     convention: eight branch timings each re-built the union (~1.5 s
     py4j) and re-ran the span/assignment passes their tracked persists
     had just released."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _Q54_CACHE.get(key)
-    if cached is None:
-        cached = _q54_build(spark, sf_dir)
-        _Q54_CACHE[key] = cached
-    return cached
-
-
-_Q54_CACHE: dict = {}
-
-
-def _q54_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.cache import persist_pinned
     from .operators.packing import (
         length_bucketed_batches,
         pack_assignments,
@@ -350,16 +339,16 @@ def _q54_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     # chunks fan out five ways (chunk branch, dedup, masks, the
-    # assignment fold, lbatch) — PINNED under the memo so each
+    # assignment fold, lbatch) — persisted under the memo so each
     # consumer and each branch-timing re-invocation reads the one
     # materialized chunk table instead of re-chunking the corpus
-    chunks = persist_pinned(
+    chunks = persist_tracked(
         chunk_documents(docs, chunk_size=CHUNK_SIZE, stride=STRIDE)
     )
     deduped = dedup_chunks(chunks)
     # spans feed two branches (span table + rebuild): one fingerprint
-    # pass, persisted (PINNED — memo lifetime)
-    spans = persist_pinned(repeated_spans(docs, k=SUBSTR_K))
+    # pass, persisted
+    spans = persist_tracked(repeated_spans(docs, k=SUBSTR_K))
     rebuilt = remove_repeated_substrings(docs, k=SUBSTR_K, spans=spans)
     # masks feed two branches (chunk-local + pack-local): one frame
     masks_df = chunk_loss_masks(chunks, spans, stride=STRIDE)
@@ -372,7 +361,7 @@ def _q54_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # instead of a second repartition+sort+Arrow pass over the chunks
     # (guide §2.4; the text concat the shard branch never read also
     # disappears).
-    asg = persist_pinned(
+    asg = persist_tracked(
         pack_assignments(chunks, budget=SHARD_PACK_BUDGET)
     )
     placed = shard_assignment(
@@ -512,7 +501,6 @@ BM25_TOP_K = 5
 # session (the deployment contract — build once, serve many)
 _Q55_IDX_CACHE: dict = {}
 _Q55_MS_IDX_CACHE: dict = {}
-_Q55_MS_CH_CACHE: dict = {}
 
 # maxsim branch: late-interaction retrieval over the same query set
 # (signed feature-hash token vectors; operators.retrieval.maxsim_*)
@@ -902,25 +890,8 @@ def _q55_sql() -> str:
 
 
 @query("q55_tfidf_top_term", oracle=_q55_sql())
+@build_memo
 def q55_tfidf_top_term(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(see _q55_build — memoized per (session, corpus) like q57/q58:
-    the nine-branch union costs ~3.5 s of py4j plan construction per
-    build on top of the first call's eager index writes; the memo
-    hands every later invocation the same frame, with the shared
-    bmr/ch/mmr frames persist_PINNED so a tracked release between
-    bench branch timings cannot de-materialize them mid-lifetime.)"""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _Q55_CACHE.get(key)
-    if cached is None:
-        cached = _q55_build(spark, sf_dir)
-        _Q55_CACHE[key] = cached
-    return cached
-
-
-_Q55_CACHE: dict = {}
-
-
-def _q55_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``tfidf``: highest-tf-idf term per document (tie →
     lexicographic). ``bm25`` (round 8): operators.retrieval
     .bm25_top_docs — top-5 documents per fixed two-term query by Okapi
@@ -964,7 +935,11 @@ def _q55_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-20 shortlist rescored by MaxSim over CANDIDATE docs only;
     per-(query, doc) MaxSim is pool-independent, so the oracle
     restricts its corpus-wide msagg to the shortlist (zero-score BM25
-    hits kept at 0, ranks re-derived)."""
+    hits kept at 0, ranks re-derived).
+
+    Memoized per (session, corpus): the nine-branch union costs ~3.5 s
+    of py4j plan construction per build on top of the first call's
+    eager index writes."""
     import atexit
     import os
     import shutil
@@ -996,11 +971,8 @@ def _q55_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rank <= top_k IS the top_k ranking bitwise. Persisted so the
     # full postings-scoring tree is planned and executed once per
     # invocation instead of once per consumer (guide §2.4: shared
-    # subtree, one exchange). PINNED: the frame lives inside the
-    # memoized build.
-    from .operators.cache import persist_pinned as _pp
-
-    bmr_k1 = _pp(
+    # subtree, one exchange).
+    bmr_k1 = persist_tracked(
         bm25_top_docs(docs, list(BM25_QUERIES), top_k=RERANK_K1)
     )
     bmr = bmr_k1.filter(F.col("rank") <= BM25_TOP_K)
@@ -1031,20 +1003,15 @@ def _q55_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # artifact build writes the same frame) — persist it once per
     # (session, corpus), constructed HERE so the overlapped index
     # writes below can share it
-    from .operators.cache import persist_pinned
     from .operators.overlap import build_overlapped
     from .operators.retrieval import _maxsim_score, maxsim_chunk_vectors
 
-    ch_key = (spark.sparkContext.applicationId, sf_dir)
-    ch = _Q55_MS_CH_CACHE.get(ch_key)
-    if ch is None:
-        ch = persist_pinned(
-            maxsim_chunk_vectors(
-                docs, dim=MAXSIM_DIM, n_hashes=MAXSIM_HASHES,
-                chunk_size=CHUNK_SIZE, stride=STRIDE,
-            )
+    ch = persist_tracked(
+        maxsim_chunk_vectors(
+            docs, dim=MAXSIM_DIM, n_hashes=MAXSIM_HASHES,
+            chunk_size=CHUNK_SIZE, stride=STRIDE,
         )
-        _Q55_MS_CH_CACHE[ch_key] = ch
+    )
 
     # build the persistent indexes inside the query (the build is the
     # one-time 100 TB pass; the serve is what a fresh session pays)
@@ -1073,7 +1040,7 @@ def _q55_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     # mmr's eager greedy rounds are the build's only OTHER
     # driver-synchronized section, and their first job materializes
-    # the pinned bmr_k1 (the full BM25 postings pass, ~4.5 s at
+    # the persisted bmr_k1 (the full BM25 postings pass, ~4.5 s at
     # sf0.1) — a third overlapped thread, so the scoring pass
     # back-fills the executor slots the index writes leave idle
     # (guide §2.6) instead of running after them.
@@ -1368,6 +1335,7 @@ _PQ_TR_CB_UNION = " UNION ALL ".join(
     SELECT 'pq_tr', vec_id, CAST(NULL AS DOUBLE), qvec, {PQ_M} FROM tpq
     """,
 )
+@build_memo
 def q56_quantize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding compression, every index format in one driver row
     (round-5 tag merge). ``int8``: per-vector L2-normalized int8 lanes
@@ -1406,18 +1374,6 @@ def q56_quantize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     five-branch union's spliced-codebook plans cost ~4 s of py4j
     construction per invocation and the bench invokes the slot six
     times (main loop + five branch timings)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _Q56_CACHE.get(key)
-    if cached is None:
-        cached = _q56_build(spark, sf_dir)
-        _Q56_CACHE[key] = cached
-    return cached
-
-
-_Q56_CACHE: dict = {}
-
-
-def _q56_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .catalog import load_head_rows
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1795,23 +1751,8 @@ def _q57_pr_ctes(iterations: int = _PR_ITERS) -> str:
     FROM pr{_PR_ITERS}
     """,
 )
+@build_memo
 def q57_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(see _q57_build — memoized because the three component loops
-    run eagerly at DataFrame-build time; re-building per branch-timing
-    filter would re-pay them. The _Q46_IDX_CACHE convention, keyed by
-    session so a restarted session never serves stale plans.)"""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _Q57_CACHE.get(key)
-    if cached is None:
-        cached = _q57_build(spark, sf_dir)
-        _Q57_CACHE[key] = cached
-    return cached
-
-
-_Q57_CACHE: dict = {}
-
-
-def _q57_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairs → clusters: transitive closure of the SimHash near-dup
     graph via distributed min-label propagation (see
     operators.components). The oracle computes the same fixpoint with
@@ -1847,32 +1788,28 @@ def _q57_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps each node's (shortest hop, smallest root) row. Deep chains
     are how LSH transitive closure drifts into merging unrelated
     documents — hop-to-representative is the release-review number.
-    Columns shoehorn as component_size=hop."""
+    Columns shoehorn as component_size=hop.
+
+    Memoized per (session, corpus): the three component loops run
+    eagerly at DataFrame-build time, so re-building per branch-timing
+    filter would re-pay them."""
     from .operators.neardup import simhash_components_edges, simhash_table
     from .operators.report import split_leakage_report
     from .operators.sampling import assign_split
 
-    from .operators.cache import persist_pinned
-
     docs = load_table(spark, sf_dir, "documents")
     # ONE sketch pass feeds the component edges AND the bfs branch's
-    # contracted chain audit. PINNED, not tracked: this build is
-    # memoized per (session, corpus), so a release_sketch_caches
-    # between bench branch timings would de-materialize frames the
-    # memo is about to re-serve and every later branch re-pays the
-    # sketch/banding/labeling it was supposed to share (the q55/q63
-    # memo lesson; measured: the pr branch timing re-paid ~5 s, bfs
-    # ~2 s per timing).
-    sh = simhash_table(docs, persist_fn=persist_pinned)
+    # contracted chain audit.
+    sh = simhash_table(docs)
     # edges now fan out three ways (the full labeling + the inc
     # branch's old/delta splits) — persist so banding runs once
-    edges = persist_pinned(
+    edges = persist_tracked(
         simhash_components_edges(docs, max_hamming=3, sh_df=sh)
     )
     # the labeling fans out into four union children (comp/leak/
     # mine_pos/mine_neg) plus the miner's bucket-count job — persist
     # it once or every child re-runs the banding + the component loop
-    comp = persist_pinned(
+    comp = persist_tracked(
         connected_components(edges, nodes=docs, node_col="doc_id")
     )
     # inc (round 10): operators.components.incremental_components —
@@ -2336,22 +2273,8 @@ _ER_MAX_BLOCK = 256
     JOIN gtop t ON t.cid = g.cid
     """,
 )
+@build_memo
 def q59_dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(see _q59_build — memoized per (session, corpus) like q55/q57/
-    q58: the gold branch's component loop runs EAGERLY at build time,
-    so re-building per branch-timing filter would re-pay it.)"""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _Q59_CACHE.get(key)
-    if cached is None:
-        cached = _q59_build(spark, sf_dir)
-        _Q59_CACHE[key] = cached
-    return cached
-
-
-_Q59_CACHE: dict = {}
-
-
-def _q59_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fuzzy identity, both grains in one driver row. ``edit``:
     normalized Levenshtein ≤ 0.2 on MinHash-LSH candidates — the
     character-level fuzzy-dedup modality (catches small in-place edits
@@ -2367,8 +2290,11 @@ def _q59_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens (the same (df, tok) rank kept to 2), candidate id pairs
     DISTINCT before scoring (a pair can now meet through several
     blocks); cross-name matches that disagree on the single rarest
-    token still meet (the recall case tests/test_entity.py pins)."""
-    from .operators.cache import persist_pinned
+    token still meet (the recall case tests/test_entity.py pins).
+
+    Memoized per (session, corpus): the gold branch's component loop
+    runs EAGERLY at build time, so re-building per branch-timing
+    filter would re-pay it."""
     from .operators.entity import blocked_er_matches, ranked_name_tokens
     from .operators.neardup import edit_distance_pairs
 
@@ -2387,8 +2313,8 @@ def _q59_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE tokenize+df pass feeds both blocking variants (er rank-1,
     # er2 rank-2) — each call re-ran it before; max_block pruning
     # stays inside each variant because block sizes depend on
-    # num_keys. PINNED: the frame lives inside the memoized build.
-    ranked = persist_pinned(
+    # num_keys.
+    ranked = persist_tracked(
         ranked_name_tokens(part, "p_partkey", "p_name")
     )
 
@@ -2408,14 +2334,14 @@ def _q59_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _tag(m: DataFrame, tag: str) -> DataFrame:
         return m.select(F.lit(tag).alias("mode"), "id_a", "id_b", "score")
 
-    # PINNED: m2 fans out into the er2 branch AND six references
+    # Persisted: m2 fans out into the er2 branch AND six references
     # inside the gold branch's survivorship plan (edges both
     # directions for the component closure's checkpoint, the node
     # set, the vote join) — unpersisted, the blocked scoring tree
     # re-executed per reference (measured: the gold branch's noop
-    # shuffled 960k records, 6x the er2 branch's 160k; pinned it pays
-    # the 160k once).
-    m2 = persist_pinned(_er_matches(2))
+    # shuffled 960k records, 6x the er2 branch's 160k; persisted it
+    # pays the 160k once).
+    m2 = persist_tracked(_er_matches(2))
     # gold branch (round 11): survivorship — the er2 match pairs
     # closed into entity clusters, a golden id elected per cluster
     # (min member), and p_brand fused by majority vote
@@ -2772,23 +2698,8 @@ def _q58_sql() -> str:
 
 
 @query("q58_srp_histogram", oracle=_q58_sql())
+@build_memo
 def q58_srp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(see _q58_build — memoized per (session, corpus) like q55/q57:
-    ten branches share the SAME persisted token and shingle frames, so
-    neither the union run nor the per-branch bench timings re-tokenize
-    the corpus per branch — the r10 accretion-arrest item.)"""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _Q58_CACHE.get(key)
-    if cached is None:
-        cached = _q58_build(spark, sf_dir)
-        _Q58_CACHE[key] = cached
-    return cached
-
-
-_Q58_CACHE: dict = {}
-
-
-def _q58_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch diagnostics in one driver row (round-5 tag merge).
     ``srp``: 8-plane sign-random-projection signatures + bucket
     occupancy — the load-balance check run before committing to an LSH
@@ -2822,7 +2733,11 @@ def _q58_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-checks build and merge against the oracle's one-shot count.
     ``hist_grp`` (round 10): the per-group single-pass form
     (histogram_sketch_grouped) — one histogram per event_type, the
-    feed for curation.prune_thresholds' per-cluster cutoffs."""
+    feed for curation.prune_thresholds' per-cluster cutoffs.
+
+    Memoized per (session, corpus): ten branches share the SAME
+    persisted token and shingle frames, so neither the union run nor
+    the per-branch bench timings re-tokenize the corpus per branch."""
     from .operators.sketches import (
         hll_estimate,
         hll_estimate_grouped,
@@ -2842,7 +2757,6 @@ def _q58_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("vec_id").alias("min_vec_id"),
         )
     )
-    from .operators.cache import persist_pinned
     from .operators.sketches import count_min_estimates
 
     from .operators.neardup import _rebalance
@@ -2857,12 +2771,12 @@ def _q58_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialization would otherwise run in ONE task (the q48/q55
     # single-row-group lesson).
     docs_spread = _rebalance(docs_src, "doc_id")
-    toks = persist_pinned(
+    toks = persist_tracked(
         docs_spread.select(
             F.explode(F.expr(P.split_ws("text", P.SPARK))).alias("v")
         )
     )
-    sh2 = persist_pinned(
+    sh2 = persist_tracked(
         docs_spread.select(
             "source",
             F.explode(F.expr(P.shingles("text", 3, P.SPARK))).alias("v"),
@@ -2876,7 +2790,7 @@ def _q58_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact count is count(1) over the persisted distinct frame minus
     # NULLs (count_distinct semantics) — a 32-row partial-count
     # exchange instead of a vocabulary-grain one (guide §2.4).
-    dtoks = persist_pinned(toks.select("v").distinct())
+    dtoks = persist_tracked(toks.select("v").distinct())
     kmv = kmv_distinct(dtoks, "v", KMV_K).crossJoin(
         dtoks.filter(F.col("v").isNotNull()).agg(
             F.count(F.lit(1)).alias("exact_distinct")
@@ -2910,7 +2824,7 @@ def _q58_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every branch value is unchanged. KMV's source frames are the
     # membership filters — per-source DISTINCT shingles, value-
     # identical because _kmv_top_hashes dedupes.
-    mem = persist_pinned(
+    mem = persist_tracked(
         sh2.groupBy("v").agg(
             F.max(F.col("source") == two_srcs[0]).alias("__in_a"),
             F.max(F.col("source") == two_srcs[1]).alias("__in_b"),
@@ -3091,8 +3005,8 @@ def _q58_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         ams_f2_exact,
     )
 
-    amsc = persist_pinned(ams_f2_counters(toks, "v", AMS_DEPTH))
-    amsx = persist_pinned(ams_f2_exact(toks, "v"))
+    amsc = persist_tracked(ams_f2_counters(toks, "v", AMS_DEPTH))
+    amsx = persist_tracked(ams_f2_exact(toks, "v"))
     ams_rows = amsc.crossJoin(amsx).select(
         F.col("d").cast("int").alias("k_used"),
         F.col("counter").alias("kth_hash"),

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .catalog import load_table
 from .functions import portable as P
+from .operators.cache import build_memo
 from .operators.mixing import mix_sources
 from .operators.neardup import _rebalance
 from .pipelines import corpus_funnel_counts, corpus_stages
@@ -407,6 +408,7 @@ def _mixing_sql() -> str:
 
 
 @query("q61_domain_mixing", oracle=_mixing_sql())
+@build_memo
 def q61_domain_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``mix``: down-sample each over-weighted source to literal
     target ratios via hash-bucket acceptance (operators.mixing): one
@@ -438,18 +440,6 @@ def q61_domain_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
     the branch timings re-built the eight-child union and re-ran the
     blocking source-list/count jobs the mixers fold into their
     literal predicates."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _Q61_CACHE.get(key)
-    if cached is None:
-        cached = _q61_build(spark, sf_dir)
-        _Q61_CACHE[key] = cached
-    return cached
-
-
-_Q61_CACHE: dict = {}
-
-
-def _q61_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.mixing import mix_sources_temperature
     from .operators.report import corpus_report
     from .operators.sampling import assign_split
@@ -870,24 +860,8 @@ def _funnel_sql() -> str:
 
 
 @query("q63_corpus_funnel", oracle=_funnel_sql())
+@build_memo
 def q63_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(see _q63_build — memoized per (session, corpus) like
-    q55/q57/q58: both funnels run their component loops EAGERLY at
-    DataFrame-build time, so an un-memoized branch-timing filter pays
-    BOTH branches' builds on every call — the r10 attribution muddle.)
-    """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _Q63_CACHE.get(key)
-    if cached is None:
-        cached = _q63_build(spark, sf_dir)
-        _Q63_CACHE[key] = cached
-    return cached
-
-
-_Q63_CACHE: dict = {}
-
-
-def _q63_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The whole pretrain corpus funnel (pipelines.corpus_stages) as one
     driver-checked row: per-stage survivor counts for quality filter →
     language filter → exact dedup → near-dup component survivor → PII
@@ -907,14 +881,18 @@ def _q63_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexes — so the incremental admission contract (within-delta
     components, index-poisoned components dropped wholesale, min-id
     survivor) is value-checked by the driver end-to-end, with the
-    oracle re-deriving both indexes and the admission in SQL."""
+    oracle re-deriving both indexes and the admission in SQL.
+
+    Memoized per (session, corpus): both funnels run their component
+    loops EAGERLY at DataFrame-build time, so an un-memoized
+    branch-timing filter pays BOTH branches' builds on every call."""
     docs = load_table(spark, sf_dir, "documents")
 
+    import contextvars
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
 
-    from .operators.cache import persist_pinned
     from .operators.neardup import exact_text_dedup, simhash_band_index
     from .pipelines import corpus_stages_delta
 
@@ -956,22 +934,20 @@ def _q63_build(spark: SparkSession, sf_dir: str) -> DataFrame:
                     exact_text_dedup(lang_h),
                     simhash_band_index(lang_h),
                     sketch="simhash",
-                    persist_fn=persist_pinned,
                     **kw,
                 )
             finally:
                 spark.sparkContext.setJobDescription(None)
 
+        # the copied context carries the active build into the pool
+        # thread, so the delta funnel's persists are owned by the memo
         delta_future.append(
-            pool.submit(inheritable_thread_target(_build_delta))
+            pool.submit(
+                contextvars.copy_context().run,
+                inheritable_thread_target(_build_delta),
+            )
         )
 
-    # persist_PINNED, not tracked: this build is memoized per
-    # (session, corpus), so a release_sketch_caches between bench
-    # branch timings would de-materialize stages the memo is about to
-    # re-serve and every later branch re-runs the whole funnel (the
-    # q55 memo lesson; measured: the delta branch re-paid ~7 s per
-    # timing).
     spark.sparkContext.setJobDescription("build:q63_full")
     try:
         stages = corpus_stages(
@@ -984,7 +960,6 @@ def _q63_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             scrub_pii=True,
             pack_budget=_FUNNEL_PACK_BUDGET,
             language_stage_hook=_kickoff_delta,
-            persist_fn=persist_pinned,
         )
     finally:
         spark.sparkContext.setJobDescription(None)
@@ -1079,6 +1054,7 @@ def _decontam_sql() -> str:
 
 
 @query("q64_decontaminate", oracle=_decontam_sql())
+@build_memo
 def q64_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Both decontamination regimes in one driver row (round-5 tag
     merge). ``exact``: per training doc, the count of distinct 5-token
@@ -1096,18 +1072,6 @@ def q64_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     branch timing re-built the three-branch union and re-collected the
     Bloom filter's benchmark shingle set (a blocking job per
     invocation)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _Q64_CACHE.get(key)
-    if cached is None:
-        cached = _q64_build(spark, sf_dir)
-        _Q64_CACHE[key] = cached
-    return cached
-
-
-_Q64_CACHE: dict = {}
-
-
-def _q64_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.decontam import (
         contamination_report,
         contamination_report_fuzzy,
@@ -1248,6 +1212,7 @@ def _lm_sql() -> str:
 
 
 @query("q65_lm_score", oracle=_lm_sql())
+@build_memo
 def q65_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model-based quality scoring, two branches. ``lm`` — CCNet-style
     LM scoring (operators.lm): a bigram transition model trained on
@@ -1269,18 +1234,6 @@ def q65_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     Memoized per (session, corpus) — the q41/q54 convention: each
     branch timing re-ran the classifier's bounded training job and the
     LM model fold at construction time."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _Q65_CACHE.get(key)
-    if cached is None:
-        cached = _q65_build(spark, sf_dir)
-        _Q65_CACHE[key] = cached
-    return cached
-
-
-_Q65_CACHE: dict = {}
-
-
-def _q65_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.lm import lm_score
     from .operators.quality_clf import (
         score_inline,

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from .catalog import load_table
 from .operators.asof_join import interval_left_join
+from .operators.cache import build_memo
 from .registry import davg, davg_sql, dsum, dsum_sql, query
 
 
@@ -1007,6 +1008,7 @@ def _q26_sql() -> str:
 
 
 @query("q26_interval_join_symmetric", oracle=_q26_sql())
+@build_memo
 def q26_interval_join_symmetric(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temporal joins, three branches in one driver row. ``pairs`` —
     J1: the DSL's symmetric JoinWindows.of(w) proximity join
@@ -1038,18 +1040,6 @@ def q26_interval_join_symmetric(spark: SparkSession, sf_dir: str) -> DataFrame:
     Memoized per (session, corpus) — the q41/q54 convention: the
     seven-child union costs ~1.8 s of py4j construction per
     invocation and the bench invokes the slot eight times."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _Q26_CACHE.get(key)
-    if cached is None:
-        cached = _q26_build(spark, sf_dir)
-        _Q26_CACHE[key] = cached
-    return cached
-
-
-_Q26_CACHE: dict = {}
-
-
-def _q26_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.scd import (
         changelog_from_snapshots,
         scd2_apply_delta,

@@ -12,9 +12,12 @@ rebuilds correctly.
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 from pyspark.sql import functions as F
 
 from example_kafkastreams_spark.operators import cache as C
+from example_kafkastreams_spark.operators.overlap import build_overlapped
 
 
 def test_release_build_memos_unpersists_pinned_and_clears_memos(spark):
@@ -53,4 +56,68 @@ def test_released_memoized_slot_rebuilds_identically(spark):
     after_df = q(spark, sf)
     after = sorted(map(tuple, after_df.collect()))
     assert before == after
+    C.release_build_memos()
+
+
+def test_build_memo_owns_persists_until_release(spark):
+    calls = []
+
+    @C.build_memo
+    def build(s, sf_dir):
+        calls.append(sf_dir)
+        return C.persist_tracked(s.range(40).withColumn("y", F.col("id") + 1))
+
+    df = build(spark, "memo-owned")
+    df.count()
+    assert build(spark, "memo-owned") is df and len(calls) == 1
+    C.release_sketch_caches()
+    assert df.storageLevel.useMemory  # owned by the memo, not tracked
+    C.release_build_memos()
+    assert not df.storageLevel.useMemory
+    assert build(spark, "memo-owned") is not df and len(calls) == 2
+    C.release_build_memos()
+
+
+def test_overlapped_sections_inside_build_are_owned(spark):
+    """build_overlapped runs its sections on pool threads; each must
+    see the active build, or its persists fall back to tracked."""
+    sections = []
+
+    def section(n):
+        df = C.persist_tracked(spark.range(n))
+        sections.append(df)
+        return df
+
+    @C.build_memo
+    def build(s, sf_dir):
+        out = build_overlapped({"a": lambda: section(30), "b": lambda: section(60)})
+        return out["a"].union(out["b"])
+
+    assert build(spark, "memo-overlap").count() == 90
+    assert len(sections) == 2
+    C.release_sketch_caches()
+    assert all(df.storageLevel.useMemory for df in sections)
+    C.release_build_memos()
+    assert not any(df.storageLevel.useMemory for df in sections)
+
+
+def test_new_application_id_rebuilds(spark):
+    """A restarted session (new applicationId) must rebuild, never be
+    served a frame bound to the old context. The second context is a
+    stand-in carrying only the id the memo keys on: one JVM holds a
+    single SparkContext."""
+
+    @C.build_memo
+    def build(s, sf_dir):
+        return C.persist_tracked(spark.range(10))
+
+    first = build(spark, "memo-app")
+    restarted = SimpleNamespace(
+        sparkContext=SimpleNamespace(
+            applicationId=spark.sparkContext.applicationId + "-restarted"
+        )
+    )
+    second = build(restarted, "memo-app")
+    assert second is not first
+    assert build(spark, "memo-app") is first
     C.release_build_memos()
