@@ -15,12 +15,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from example_kafkastreams_spark import obs  # noqa: E402
 from example_kafkastreams_spark.queries import QUERIES  # noqa: E402
-from example_kafkastreams_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -31,113 +30,6 @@ def sf_from_dir(path: str) -> float:
         return float(base.replace("sf", ""))
     except ValueError:
         return -1.0
-
-
-def run_noop(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def shuffle_totals(spark) -> tuple[int, int] | None:
-    """Cumulative (shuffle write records, bytes) over all completed
-    stages, from the UI REST API. Diffing before/after a run gives that
-    run's shuffle volume — a deterministic, non-noise metric (unlike
-    local wall time, where a 2-vs-3-exchange delta drowns in JVM
-    jitter at sf0.1)."""
-    import urllib.request
-
-    ui = spark.sparkContext.uiWebUrl
-    if not ui:
-        return None
-    app = spark.sparkContext.applicationId
-    url = f"{ui}/api/v1/applications/{app}/stages?status=COMPLETE"
-    try:
-        with urllib.request.urlopen(url, timeout=10) as r:
-            stages = json.load(r)
-    except OSError:
-        return None
-    return (
-        sum(s.get("shuffleWriteRecords", 0) for s in stages),
-        sum(s.get("shuffleWriteBytes", 0) for s in stages),
-    )
-
-
-def _stages_json(spark) -> list | None:
-    """All completed stages from the UI REST API (None if UI off)."""
-    import urllib.request
-
-    ui = spark.sparkContext.uiWebUrl
-    if not ui:
-        return None
-    app = spark.sparkContext.applicationId
-    url = f"{ui}/api/v1/applications/{app}/stages?status=COMPLETE"
-    try:
-        with urllib.request.urlopen(url, timeout=10) as r:
-            return json.load(r)
-    except OSError:
-        return None
-
-
-def task_skew_metrics(spark, seen_stages: set) -> dict | None:
-    """Per-task shuffle-read max/median for the heaviest NEW multi-task
-    stage since ``seen_stages`` — the straggler-vs-flattened artifact.
-    Quantiles come from the stage taskSummary endpoint; records (not
-    wall time) so the comparison is deterministic."""
-    import urllib.request
-
-    stages = _stages_json(spark)
-    if stages is None:
-        return None
-    new = [
-        s
-        for s in stages
-        if (s["stageId"], s["attemptId"]) not in seen_stages
-        and s.get("numTasks", 0) >= 2
-        and s.get("shuffleReadRecords", 0) > 0
-    ]
-    if not new:
-        return None
-    target = max(new, key=lambda s: s.get("shuffleReadRecords", 0))
-    ui = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    url = (
-        f"{ui}/api/v1/applications/{app}/stages/{target['stageId']}"
-        f"/{target['attemptId']}/taskSummary?quantiles=0.5,1.0"
-    )
-    try:
-        with urllib.request.urlopen(url, timeout=10) as r:
-            summary = json.load(r)
-    except OSError:
-        return None
-    rd = summary["shuffleReadMetrics"]
-    return {
-        "num_tasks": target["numTasks"],
-        "median_task_shuffle_read_records": int(rd["readRecords"][0]),
-        "max_task_shuffle_read_records": int(rd["readRecords"][1]),
-        "median_task_shuffle_read_bytes": int(rd["readBytes"][0]),
-        "max_task_shuffle_read_bytes": int(rd["readBytes"][1]),
-    }
-
-
-def input_totals(spark) -> tuple[int, int] | None:
-    """Cumulative (input records, bytes) read across completed stages —
-    the metric partition pruning moves: a pruned scan never reads the
-    skipped partitions, so inputRecords drops with the pruning ratio."""
-    import urllib.request
-
-    ui = spark.sparkContext.uiWebUrl
-    if not ui:
-        return None
-    app = spark.sparkContext.applicationId
-    url = f"{ui}/api/v1/applications/{app}/stages?status=COMPLETE"
-    try:
-        with urllib.request.urlopen(url, timeout=10) as r:
-            stages = json.load(r)
-    except OSError:
-        return None
-    return (
-        sum(s.get("inputRecords", 0) for s in stages),
-        sum(s.get("inputBytes", 0) for s in stages),
-    )
 
 
 # A merged slot's wall is the SUM of its branches, so a baseline
@@ -183,14 +75,13 @@ def host_canary() -> float:
     from "this query got slower" — round 8 measured the SAME code at
     71.5 s and 119.6 s total across host windows, with per-query
     spreads like q65 at 1.6 s / 13.6 s / 1.8 s."""
-    best = float("inf")
-    for _ in range(2):
-        t0 = time.perf_counter()
+
+    def loop():
         s = 0
         for i in range(10_000_000):
             s += i
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 3)
+
+    return obs.measure(None, loop, runs=2).sec
 
 
 def load_baselines() -> tuple[dict, dict, dict, dict, dict]:
@@ -279,40 +170,167 @@ def load_baselines() -> tuple[dict, dict, dict, dict, dict]:
     return wall, shuf, src, canaries, tag_queries
 
 
-def main() -> None:
-    # UI on: the plan-compare shuffle metrics come from the status REST API
-    spark = get_spark(
-        app_name="bench",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            # the plan-compare rows diff CUMULATIVE stage metrics from
-            # the status store; at the default retainedStages (1000) the
-            # store evicts early stages mid-run and the diffs go
-            # negative — keep every stage of the bench resident
-            "spark.ui.retainedStages": "100000",
-            # ... but only the stage-level AGGREGATES are read. Task
-            # rows (default 100000 retained per stage) and SQL-tab
-            # execution snapshots (default 1000, each holding the full
-            # physicalPlanDescription string — MEGABYTES for the
-            # spliced-literal quantizer plans) are never queried, and
-            # by the 40th slot their retained heap measurably drags
-            # every later timed region via GC (guide §5: driver-side
-            # state). Keep the store stage-grain only.
-            "spark.ui.retainedTasks": "1",
-            "spark.sql.ui.retainedExecutions": "2",
-        },
-    )
-    # warmup: JVM + codegen, then one tiny read per table so parquet
-    # footer/listing caches and the scan codegen path are warm — without
-    # this the alphabetically-first queries (q01/q02) are billed the
-    # whole session warmup (~2 s of their ~3 s wall, VERDICT r3 noted
-    # exactly this noise)
-    spark.range(1000).selectExpr("sum(id)").collect()
-    from example_kafkastreams_spark.catalog import load_table as _lt
-    from example_kafkastreams_spark.schemas import TABLE_NAMES as _tables
+# sample_fraction 0.2 here (default 0.02): the probe's absolute
+# sample must hold a statistically visible number of hot-key rows,
+# and sandbox tables are 4-6 orders of magnitude under production —
+# 2% of sf0.01's events is ~200 rows, where a 10%-share key sits at
+# the min_sampled_rows floor and detection becomes a coin flip. At
+# 100 TB the default 2% samples billions of rows; the fraction is a
+# caller knob precisely because it should scale inversely with data.
+PROBE_FRACTION = 0.2
 
-    for t in _tables:
-        _lt(spark, SF_DIR, t).limit(1).count()
+
+def skew_rows(spark) -> dict[str, dict]:
+    """The skewed_* plan_compare rows. ``spark`` must keep every task
+    row of a stage in its status store (``obs.task_skew`` reads None
+    from a trimmed one), so the bench runs these last, in a session of
+    their own: the timed slots keep the stage-grain store.
+
+    Skew survival (VERDICT r3 item 5): machinery (q37) is not
+    evidence — this measures the straggler being FLATTENED. One
+    synthetic hot user owns ~10% of events; the same fact⋈agg
+    equi-join runs three ways and each row records per-task
+    max/median shuffle-read for its heaviest join stage:
+      * skewed_plain_noaqe — static plan: the hot key's whole volume
+        lands on one task (max >> median = the 100x-scale killer);
+      * skewed_plain_aqe_skewjoin — AQE splits the oversized
+        partition at runtime (thresholds scaled to sandbox data
+        volume; at 100 TB the defaults fire on real sizes);
+      * skewed_salted — planner-independent 16-way salt
+        (operators.salted), the explicit form that also works where
+        AQE can't reach (bucketed inputs, agg-then-join).
+    Broadcast stays off, as in plan_compare: at 100 TB neither side
+    broadcasts.
+    """
+    from pyspark.sql import functions as F
+
+    from example_kafkastreams_spark.catalog import load_table
+    from example_kafkastreams_spark.operators.salted import (
+        detect_hot_keys,
+        salted_equijoin,
+        salted_equijoin_auto,
+    )
+
+    events = load_table(spark, SF_DIR, "events")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    # The upstream repartition(32) stands in for the multi-file scan a
+    # real 100 TB table has: AQE splits a skewed reduce partition at MAP
+    # OUTPUT granularity, so a single-mapper upstream (this sandbox's
+    # one-file parquet scan) makes every reduce partition one indivisible
+    # block and the splitter can never fire. The dim side is a plain
+    # projection, NOT an aggregate: OptimizeSkewedJoin pattern-matches
+    # shuffle stages directly under the join's sorts, so an agg-then-join
+    # defeats it — which is exactly the regime where explicit salting
+    # remains the only fix (operators/salted.py docstring).
+    skewed = (
+        events.select("event_id", "user_id", "event_type")
+        .repartition(32)
+        .withColumn(
+            "user_id",
+            F.when(
+                F.pmod(F.hash("event_id"), F.lit(10)) == 0, F.lit(-1)
+            ).otherwise(F.col("user_id")),
+        )
+    )
+    skew_dim = events.select(
+        F.col("user_id").alias("dim_user_id"), F.col("value").alias("dim_value")
+    ).filter(F.col("event_id") % 100 == 0)
+
+    def skew_plain(src):
+        return src.join(skew_dim, src.user_id == skew_dim.dim_user_id)
+
+    def skew_salted(src):
+        return salted_equijoin(
+            src, skew_dim, fact_key="user_id", dim_key="dim_user_id",
+            salt_source="event_id", salts=16,
+        )
+
+    skew_confs = {  # sandbox-scale AQE skew thresholds (defaults are
+        # 256 MB partitions — sized for clusters, not a 100k-row demo)
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "32k",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16k",
+        # without these two, coalescing targets default-parallelism /
+        # 1 MB floors and folds the whole demo into one task before the
+        # skew splitter ever sees a partition
+        "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "16k",
+    }
+    # The agg-then-join regime: the dim side is an AGGREGATE of the
+    # skewed fact (per-user totals joined back). OptimizeSkewedJoin
+    # pattern-matches plain shuffle stages directly under the join's
+    # sorts, so the aggregate child defeats it — even with AQE on and
+    # thresholds met, the straggler SURVIVES (the _aqe row proves the
+    # gap: same max/median as static). Explicit salting is the only
+    # remedy here (salted.py's stated purpose), and the _salted row
+    # shows it flattening the same join AQE could not.
+    def skew_aggjoin(src):
+        agg = src.groupBy("user_id").agg(F.count(F.lit(1)).alias("user_total"))
+        return src.join(agg, "user_id")
+
+    def skew_aggjoin_salted(src):
+        agg = (
+            src.groupBy("user_id")
+            .agg(F.count(F.lit(1)).alias("user_total"))
+            .withColumnRenamed("user_id", "dim_user_id")
+        )
+        return salted_equijoin(
+            src, agg, fact_key="user_id", dim_key="dim_user_id",
+            salt_source="event_id", salts=16,
+        )
+
+    # Self-deciding remedy (VERDICT r4 item 2): the probe detects the
+    # hot key itself and salts ONLY it — same agg-then-join regime AQE
+    # cannot split. The probe job runs inside the timed call (its cost
+    # is part of the honest wall time).
+    def skew_aggjoin_autosalted(src):
+        agg = (
+            src.groupBy("user_id")
+            .agg(F.count(F.lit(1)).alias("user_total"))
+            .withColumnRenamed("user_id", "dim_user_id")
+        )
+        return salted_equijoin_auto(
+            src, agg, fact_key="user_id", dim_key="dim_user_id",
+            salt_source="event_id", salts=16,
+            sample_fraction=PROBE_FRACTION,
+        )
+
+    rows: dict[str, dict] = {}
+    for label, fn, aqe in (
+        ("skewed_plain_noaqe", skew_plain, False),
+        ("skewed_plain_aqe_skewjoin", skew_plain, True),
+        ("skewed_salted", skew_salted, False),
+        ("skewed_aggjoin_aqe", skew_aggjoin, True),
+        ("skewed_aggjoin_salted", skew_aggjoin_salted, False),
+        ("skewed_aggjoin_autosalted", skew_aggjoin_autosalted, False),
+    ):
+        spark.conf.set("spark.sql.adaptive.enabled", str(aqe).lower())
+        if aqe:
+            for k, v in skew_confs.items():
+                spark.conf.set(k, v)
+        seen = obs.stage_keys(spark)
+        sec = obs.measure(
+            None, lambda: obs.run_noop(fn(skewed)), runs=2
+        ).sec
+        rows[label] = {"sec": sec, **(obs.skew_since(spark, seen) or {})}
+        if aqe:
+            for k in skew_confs:
+                spark.conf.unset(k)
+    probe = obs.measure(
+        None,
+        lambda: detect_hot_keys(
+            skewed, "user_id", sample_fraction=PROBE_FRACTION
+        ),
+    )
+    rows["skewed_aggjoin_autosalted"]["probe_sec"] = probe.sec
+    rows["skewed_aggjoin_autosalted"]["hot_keys_detected"] = len(probe.value)
+    return rows
+
+
+def main() -> None:
+    # UI on: every counter comes from the status store (obs)
+    spark = obs.measuring_session("bench", SF_DIR)
 
     from pyspark.sql import functions as _F
 
@@ -393,27 +411,24 @@ def main() -> None:
     shuffles: dict[str, dict] = {}
     for name in sorted(QUERIES):
         fn = QUERIES[name]
-        before = shuffle_totals(spark)
-        t0 = time.perf_counter()
-        run_noop(fn(spark, SF_DIR))
-        timings[name] = round(time.perf_counter() - t0, 3)
+        main_row = obs.measure(spark, lambda: obs.run_noop(fn(spark, SF_DIR)))
+        timings[name] = main_row.sec
         # each query's row is billed its own sketch-cache build; release
         # between queries so 50 runs in one session don't accumulate
         # cached stages (ADVICE r2)
         release_sketch_caches()
-        after = shuffle_totals(spark)
-        if before is not None and after is not None:
-            shuffles[name] = {
-                "shuffle_write_records": after[0] - before[0],
-                "shuffle_write_bytes": after[1] - before[1],
-            }
+        if main_row.counters is not None:
+            shuffles[name] = {k: main_row.counters[k] for k in obs.SHUFFLE}
         if name in branches:
             disc, modes = branches[name]
             rows: dict[str, float] = {}
             for m in modes:
-                t0 = time.perf_counter()
-                run_noop(fn(spark, SF_DIR).filter(_F.col(disc) == m))
-                rows[m] = round(time.perf_counter() - t0, 3)
+                rows[m] = obs.measure(
+                    None,
+                    lambda: obs.run_noop(
+                        fn(spark, SF_DIR).filter(_F.col(disc) == m)
+                    ),
+                ).sec
                 release_sketch_caches()
             branch_timings[name] = rows
         # the slot's memoized build retires with it: owned frames from
@@ -483,22 +498,10 @@ def main() -> None:
         ("flagship_copartitioned", enrich_clickstream, events),
         ("flagship_bucketed", enrich_clickstream, events_bucketed),
     ):
-        best = float("inf")
-        shuffled: tuple[int, int] | None = None
-        for i in range(3):  # min of 3: local wall time is noisy; the
-            before = shuffle_totals(spark)  # shuffle volume is not
-            t0 = time.perf_counter()
-            run_noop(fn(src))
-            best = min(best, time.perf_counter() - t0)
-            after = shuffle_totals(spark)
-            if i == 0 and before is not None and after is not None:
-                shuffled = (after[0] - before[0], after[1] - before[1])
-        compare[label] = {
-            "sec": round(best, 3),
-            "exchanges": count_exchanges(fn(src)),
-            "shuffle_write_records": shuffled[0] if shuffled else None,
-            "shuffle_write_bytes": shuffled[1] if shuffled else None,
-        }
+        # min of 3: local wall time is noisy; the shuffle volume is not
+        compare[label] = obs.measure(
+            spark, lambda: obs.run_noop(fn(src)), runs=3
+        ).row(obs.SHUFFLE, exchanges=count_exchanges(fn(src)))
 
     # J3 persistent co-partitioning, minimal pair: the same fact⋈agg
     # join once over the bucketed table (bucket metadata co-locates
@@ -512,22 +515,9 @@ def main() -> None:
         ("plain_parquet_join", events.select("event_id", "user_id", "event_type", "value")),
         ("bucketed_join", events_bucketed.select("event_id", "user_id", "event_type", "value")),
     ):
-        best = float("inf")
-        shuffled = None
-        for i in range(3):
-            before = shuffle_totals(spark)
-            t0 = time.perf_counter()
-            run_noop(fact_agg_join(src))
-            best = min(best, time.perf_counter() - t0)
-            after = shuffle_totals(spark)
-            if i == 0 and before is not None and after is not None:
-                shuffled = (after[0] - before[0], after[1] - before[1])
-        compare[label] = {
-            "sec": round(best, 3),
-            "exchanges": count_exchanges(fact_agg_join(src)),
-            "shuffle_write_records": shuffled[0] if shuffled else None,
-            "shuffle_write_bytes": shuffled[1] if shuffled else None,
-        }
+        compare[label] = obs.measure(
+            spark, lambda: obs.run_noop(fact_agg_join(src)), runs=3
+        ).row(obs.SHUFFLE, exchanges=count_exchanges(fact_agg_join(src)))
 
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
     spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
@@ -572,21 +562,9 @@ def main() -> None:
         ("plain_time_filter", one_day_plain, events),
         ("daypartitioned_time_filter", one_day_pruned, events_daypart),
     ):
-        best = float("inf")
-        read: tuple[int, int] | None = None
-        for i in range(3):
-            before = input_totals(spark)
-            t0 = time.perf_counter()
-            run_noop(fn(src))
-            best = min(best, time.perf_counter() - t0)
-            after = input_totals(spark)
-            if i == 0 and before is not None and after is not None:
-                read = (after[0] - before[0], after[1] - before[1])
-        compare[label] = {
-            "sec": round(best, 3),
-            "input_records": read[0] if read else None,
-            "input_bytes": read[1] if read else None,
-        }
+        compare[label] = obs.measure(
+            spark, lambda: obs.run_noop(fn(src)), runs=3
+        ).row(obs.INPUT)
     shutil.rmtree(part_path, ignore_errors=True)
 
     # Runtime bloom-filter join pruning: a selective dim filter on a
@@ -630,22 +608,9 @@ def main() -> None:
     ):
         if gate is not None:
             spark.conf.set(_bloom_gate_key, gate)
-        best = float("inf")
-        shuffled = None
-        for i in range(3):
-            before = shuffle_totals(spark)
-            t0 = time.perf_counter()
-            run_noop(bloom_join())
-            best = min(best, time.perf_counter() - t0)
-            after = shuffle_totals(spark)
-            if i == 0 and before is not None and after is not None:
-                shuffled = (after[0] - before[0], after[1] - before[1])
-        compare[label] = {
-            "sec": round(best, 3),
-            "bloom_filters": runtime_bloom_filters(bloom_join()),
-            "shuffle_write_records": shuffled[0] if shuffled else None,
-            "shuffle_write_bytes": shuffled[1] if shuffled else None,
-        }
+        compare[label] = obs.measure(
+            spark, lambda: obs.run_noop(bloom_join()), runs=3
+        ).row(obs.SHUFFLE, bloom_filters=runtime_bloom_filters(bloom_join()))
     spark.conf.set(_bloom_gate_key, old_bloom_gate)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
     spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
@@ -706,180 +671,26 @@ def main() -> None:
             .mode("overwrite").parquet(path)
         )
         src = spark.read.parquet(path)
-        best = float("inf")
-        read = None
-        for i in range(3):
-            before = input_totals(spark)
-            t0 = time.perf_counter()
-            run_noop(box(src))
-            best = min(best, time.perf_counter() - t0)
-            after = input_totals(spark)
-            if i == 0 and before is not None and after is not None:
-                read = (after[0] - before[0], after[1] - before[1])
-        z_rows[label] = {
-            "sec": round(best, 3),
-            "input_records": read[0] if read else None,
-            "input_bytes": read[1] if read else None,
-        }
+        z_rows[label] = obs.measure(
+            spark, lambda: obs.run_noop(box(src)), runs=3
+        ).row(obs.INPUT)
         shutil.rmtree(path, ignore_errors=True)
     compare["zorder_box_query"] = z_rows
 
-    # Skew survival (VERDICT r3 item 5): machinery (q37) is not
-    # evidence — this measures the straggler being FLATTENED. One
-    # synthetic hot user owns ~10% of events; the same fact⋈agg
-    # equi-join runs three ways and each row records per-task
-    # max/median shuffle-read for its heaviest join stage:
-    #   * skewed_plain_noaqe — static plan: the hot key's whole volume
-    #     lands on one task (max >> median = the 100x-scale killer);
-    #   * skewed_plain_aqe_skewjoin — AQE splits the oversized
-    #     partition at runtime (thresholds scaled to sandbox data
-    #     volume; at 100 TB the defaults fire on real sizes);
-    #   * skewed_salted — planner-independent 16-way salt
-    #     (operators.salted), the explicit form that also works where
-    #     AQE can't reach (bucketed inputs, agg-then-join).
-    # Broadcast stays off, as in plan_compare: at 100 TB neither side
+    # Auto-salting on an UNSKEWED join (the skewed half of this compare
+    # is ``skew_rows``, run last in its own session): the probe finds
+    # nothing and the auto path IS the plain join — same exchange count,
+    # overhead = one sampled probe aggregate. Both rows time the
+    # identical fact⋈agg over the natural user_id distribution, with
+    # broadcast off as in plan_compare: at 100 TB neither side
     # broadcasts.
-    from example_kafkastreams_spark.operators.salted import salted_equijoin
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    # The upstream repartition(32) stands in for the multi-file scan a
-    # real 100 TB table has: AQE splits a skewed reduce partition at MAP
-    # OUTPUT granularity, so a single-mapper upstream (this sandbox's
-    # one-file parquet scan) makes every reduce partition one indivisible
-    # block and the splitter can never fire. The dim side is a plain
-    # projection, NOT an aggregate: OptimizeSkewedJoin pattern-matches
-    # shuffle stages directly under the join's sorts, so an agg-then-join
-    # defeats it — which is exactly the regime where explicit salting
-    # remains the only fix (operators/salted.py docstring).
-    skewed = (
-        events.select("event_id", "user_id", "event_type")
-        .repartition(32)
-        .withColumn(
-            "user_id",
-            F.when(
-                F.pmod(F.hash("event_id"), F.lit(10)) == 0, F.lit(-1)
-            ).otherwise(F.col("user_id")),
-        )
-    )
-    skew_dim = events.select(
-        F.col("user_id").alias("dim_user_id"), F.col("value").alias("dim_value")
-    ).filter(F.col("event_id") % 100 == 0)
-
-    def skew_plain(src):
-        return src.join(skew_dim, src.user_id == skew_dim.dim_user_id)
-
-    def skew_salted(src):
-        return salted_equijoin(
-            src, skew_dim, fact_key="user_id", dim_key="dim_user_id",
-            salt_source="event_id", salts=16,
-        )
-
-    aqe_prior = spark.conf.get("spark.sql.adaptive.enabled")
-    skew_confs = {  # sandbox-scale AQE skew thresholds (defaults are
-        # 256 MB partitions — sized for clusters, not a 100k-row demo)
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "32k",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16k",
-        # without these two, coalescing targets default-parallelism /
-        # 1 MB floors and folds the whole demo into one task before the
-        # skew splitter ever sees a partition
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "16k",
-    }
-    # The agg-then-join regime: the dim side is an AGGREGATE of the
-    # skewed fact (per-user totals joined back). OptimizeSkewedJoin
-    # pattern-matches plain shuffle stages directly under the join's
-    # sorts, so the aggregate child defeats it — even with AQE on and
-    # thresholds met, the straggler SURVIVES (the _aqe row proves the
-    # gap: same max/median as static). Explicit salting is the only
-    # remedy here (salted.py's stated purpose), and the _salted row
-    # shows it flattening the same join AQE could not.
-    def skew_aggjoin(src):
-        agg = src.groupBy("user_id").agg(F.count(F.lit(1)).alias("user_total"))
-        return src.join(agg, "user_id")
-
-    def skew_aggjoin_salted(src):
-        agg = (
-            src.groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("user_total"))
-            .withColumnRenamed("user_id", "dim_user_id")
-        )
-        return salted_equijoin(
-            src, agg, fact_key="user_id", dim_key="dim_user_id",
-            salt_source="event_id", salts=16,
-        )
-
-    # Self-deciding remedy (VERDICT r4 item 2): the probe detects the
-    # hot key itself and salts ONLY it — same agg-then-join regime AQE
-    # cannot split. The probe job runs inside the timed call (its cost
-    # is part of the honest wall time).
     from example_kafkastreams_spark.operators.salted import (
         detect_hot_keys,
         salted_equijoin_auto,
     )
 
-    # sample_fraction 0.2 here (default 0.02): the probe's absolute
-    # sample must hold a statistically visible number of hot-key rows,
-    # and sandbox tables are 4-6 orders of magnitude under production —
-    # 2% of sf0.01's events is ~200 rows, where a 10%-share key sits at
-    # the min_sampled_rows floor and detection becomes a coin flip. At
-    # 100 TB the default 2% samples billions of rows; the fraction is a
-    # caller knob precisely because it should scale inversely with data.
-    _PROBE_FRACTION = 0.2
-
-    def skew_aggjoin_autosalted(src):
-        agg = (
-            src.groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("user_total"))
-            .withColumnRenamed("user_id", "dim_user_id")
-        )
-        return salted_equijoin_auto(
-            src, agg, fact_key="user_id", dim_key="dim_user_id",
-            salt_source="event_id", salts=16,
-            sample_fraction=_PROBE_FRACTION,
-        )
-
-    for label, fn, aqe in (
-        ("skewed_plain_noaqe", skew_plain, False),
-        ("skewed_plain_aqe_skewjoin", skew_plain, True),
-        ("skewed_salted", skew_salted, False),
-        ("skewed_aggjoin_aqe", skew_aggjoin, True),
-        ("skewed_aggjoin_salted", skew_aggjoin_salted, False),
-        ("skewed_aggjoin_autosalted", skew_aggjoin_autosalted, False),
-    ):
-        spark.conf.set("spark.sql.adaptive.enabled", str(aqe).lower())
-        if aqe:
-            for k, v in skew_confs.items():
-                spark.conf.set(k, v)
-        stages0 = _stages_json(spark) or []
-        seen = {(s["stageId"], s["attemptId"]) for s in stages0}
-        best = float("inf")
-        tasks: dict | None = None
-        for i in range(2):
-            t0 = time.perf_counter()
-            run_noop(fn(skewed))
-            best = min(best, time.perf_counter() - t0)
-            if i == 0:
-                time.sleep(1)  # status-store listener lag
-                tasks = task_skew_metrics(spark, seen)
-        if aqe:
-            for k in skew_confs:
-                spark.conf.unset(k)
-        compare[label] = {"sec": round(best, 3), **(tasks or {})}
-    t0 = time.perf_counter()
-    hot_found = detect_hot_keys(
-        skewed, "user_id", sample_fraction=_PROBE_FRACTION
-    )
-    compare["skewed_aggjoin_autosalted"]["probe_sec"] = round(
-        time.perf_counter() - t0, 3
-    )
-    compare["skewed_aggjoin_autosalted"]["hot_keys_detected"] = len(hot_found)
-
-    # The other half of the auto-salt claim: on an UNSKEWED join the
-    # probe finds nothing and the auto path IS the plain join — same
-    # exchange count, overhead = one sampled probe aggregate. Both rows
-    # time the identical fact⋈agg over the natural user_id distribution.
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    aqe_prior = spark.conf.get("spark.sql.adaptive.enabled")
     unskewed = events.select("event_id", "user_id", "event_type").repartition(32)
 
     def unskew_plain(src):
@@ -899,7 +710,7 @@ def main() -> None:
         return salted_equijoin_auto(
             src, agg, fact_key="user_id", dim_key="dim_user_id",
             salt_source="event_id", salts=16,
-            sample_fraction=_PROBE_FRACTION,
+            sample_fraction=PROBE_FRACTION,
         )
 
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -907,22 +718,17 @@ def main() -> None:
         ("unskewed_aggjoin_plain", unskew_plain),
         ("unskewed_aggjoin_autosalt", unskew_auto),
     ):
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            run_noop(fn(unskewed))
-            best = min(best, time.perf_counter() - t0)
-        compare[label] = {
-            "sec": round(best, 3),
-            "exchanges": count_exchanges(fn(unskewed)),
-        }
-    t0 = time.perf_counter()
-    unskew_hot = detect_hot_keys(
-        unskewed, "user_id", sample_fraction=_PROBE_FRACTION
+        compare[label] = obs.measure(
+            None, lambda: obs.run_noop(fn(unskewed)), runs=3
+        ).row(exchanges=count_exchanges(fn(unskewed)))
+    probe = obs.measure(
+        None,
+        lambda: detect_hot_keys(
+            unskewed, "user_id", sample_fraction=PROBE_FRACTION
+        ),
     )
-    compare["unskewed_aggjoin_autosalt"]["probe_sec"] = round(
-        time.perf_counter() - t0, 3
-    )
+    unskew_hot = probe.value
+    compare["unskewed_aggjoin_autosalt"]["probe_sec"] = probe.sec
     compare["unskewed_aggjoin_autosalt"]["hot_keys_detected"] = len(unskew_hot)
 
     # Amortized probe (VERDICT r5 item 5): with a CACHED detection
@@ -939,16 +745,12 @@ def main() -> None:
             salt_source="event_id", salts=16, hot_keys=unskew_hot,
         )
 
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        run_noop(unskew_auto_cached(unskewed))
-        best = min(best, time.perf_counter() - t0)
-    compare["unskewed_aggjoin_autosalt_cached"] = {
-        "sec": round(best, 3),
-        "exchanges": count_exchanges(unskew_auto_cached(unskewed)),
-        "hot_keys_cached": len(unskew_hot),
-    }
+    compare["unskewed_aggjoin_autosalt_cached"] = obs.measure(
+        None, lambda: obs.run_noop(unskew_auto_cached(unskewed)), runs=3
+    ).row(
+        exchanges=count_exchanges(unskew_auto_cached(unskewed)),
+        hot_keys_cached=len(unskew_hot),
+    )
     spark.conf.set("spark.sql.adaptive.enabled", aqe_prior)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
 
@@ -973,17 +775,17 @@ def main() -> None:
         # few-percent claim on this short-document corpus (r4 item 4)
         ("canonical_grouped16", {"canonical": True, "group_docs": 16}),
     ):
-        t0 = time.perf_counter()
-        row = (
-            pack_chunks(chunks, budget=budget, **kw)
+        packed = obs.measure(
+            None,
+            lambda: pack_chunks(chunks, budget=budget, **kw)
             .agg(F.sum("n_tokens").alias("toks"), F.count(F.lit(1)).alias("n"))
-            .first()
+            .first(),
         )
-        fill[mode] = {
-            "sec": round(time.perf_counter() - t0, 3),
-            "n_packs": row["n"],
-            "fill_rate": round(row["toks"] / (row["n"] * budget), 4),
-        }
+        row = packed.value
+        fill[mode] = packed.row(
+            n_packs=row["n"],
+            fill_rate=round(row["toks"] / (row["n"] * budget), 4),
+        )
     fill["canonical_fill_loss"] = round(
         fill["greedy"]["fill_rate"] - fill["canonical"]["fill_rate"], 4
     )
@@ -1005,20 +807,10 @@ def main() -> None:
     stages = corpus_stages(docs, pack_budget=96)
     fmetrics: dict[str, dict] = {}
     for sname, sdf in stages.items():
-        before = shuffle_totals(spark)
-        t0 = time.perf_counter()
-        n_rows = sdf.count()
-        sec = round(time.perf_counter() - t0, 3)
-        after = shuffle_totals(spark)
-        fmetrics[sname] = {
-            "sec": sec,
-            "rows": n_rows,
-            "shuffle_write_records": (
-                after[0] - before[0]
-                if before is not None and after is not None
-                else None
-            ),
-        }
+        counted = obs.measure(spark, sdf.count)
+        fmetrics[sname] = counted.row(
+            ("shuffle_write_records",), rows=counted.value
+        )
     release_sketch_caches()
     compare["funnel_stages"] = fmetrics
 
@@ -1068,11 +860,9 @@ def main() -> None:
                 "spark.sql.adaptive.autoBroadcastJoinThreshold", "-1"
             )
         try:
-            before = shuffle_totals(spark)
-            t0 = time.perf_counter()
-            run_noop(thunk())
-            sec = round(time.perf_counter() - t0, 3)
-            after = shuffle_totals(spark)
+            inc_rows[label] = obs.measure(
+                spark, lambda: obs.run_noop(thunk())
+            ).row(obs.SHUFFLE)
         finally:
             if nobcast:
                 spark.conf.set(
@@ -1081,19 +871,6 @@ def main() -> None:
                 spark.conf.unset(
                     "spark.sql.adaptive.autoBroadcastJoinThreshold"
                 )
-        inc_rows[label] = {
-            "sec": sec,
-            "shuffle_write_records": (
-                after[0] - before[0]
-                if before is not None and after is not None
-                else None
-            ),
-            "shuffle_write_bytes": (
-                after[1] - before[1]
-                if before is not None and after is not None
-                else None
-            ),
-        }
     index.unpersist()
     compare["incremental_dedup"] = inc_rows
 
@@ -1124,25 +901,10 @@ def main() -> None:
             lambda: incremental_minhash_edges(delta, nd_index)[0],
         ),
     ):
-        before = shuffle_totals(spark)
-        t0 = time.perf_counter()
-        run_noop(thunk())
-        sec = round(time.perf_counter() - t0, 3)
-        after = shuffle_totals(spark)
+        nd_rows[label] = obs.measure(
+            spark, lambda: obs.run_noop(thunk())
+        ).row(obs.SHUFFLE)
         release_sketch_caches()
-        nd_rows[label] = {
-            "sec": sec,
-            "shuffle_write_records": (
-                after[0] - before[0]
-                if before is not None and after is not None
-                else None
-            ),
-            "shuffle_write_bytes": (
-                after[1] - before[1]
-                if before is not None and after is not None
-                else None
-            ),
-        }
     shutil.rmtree(nd_index_path, ignore_errors=True)
     nd_rows["delta_fraction"] = 0.1
     compare["incremental_neardup"] = nd_rows
@@ -1181,21 +943,11 @@ def main() -> None:
             lambda: corpus_stages_delta(delta, f_digest, f_band)["chunks"],
         ),
     ):
-        before = shuffle_totals(spark)
-        t0 = time.perf_counter()
-        n = thunk().count()
-        sec = round(time.perf_counter() - t0, 3)
-        after = shuffle_totals(spark)
+        counted = obs.measure(spark, lambda: thunk().count())
+        fd_rows[label] = counted.row(
+            ("shuffle_write_records",), chunk_rows=counted.value
+        )
         release_sketch_caches()
-        fd_rows[label] = {
-            "sec": sec,
-            "chunk_rows": n,
-            "shuffle_write_records": (
-                after[0] - before[0]
-                if before is not None and after is not None
-                else None
-            ),
-        }
     fd_rows["delta_fraction"] = 0.1
     compare["delta_funnel"] = fd_rows
 
@@ -1208,20 +960,10 @@ def main() -> None:
     dstages = corpus_stages_delta(delta, f_digest, f_band)
     fd_stage_rows: dict[str, dict] = {}
     for sname, sdf in dstages.items():
-        before = shuffle_totals(spark)
-        t0 = time.perf_counter()
-        n_rows = sdf.count()
-        sec = round(time.perf_counter() - t0, 3)
-        after = shuffle_totals(spark)
-        fd_stage_rows[sname] = {
-            "sec": sec,
-            "rows": n_rows,
-            "shuffle_write_records": (
-                after[0] - before[0]
-                if before is not None and after is not None
-                else None
-            ),
-        }
+        counted = obs.measure(spark, sdf.count)
+        fd_stage_rows[sname] = counted.row(
+            ("shuffle_write_records",), rows=counted.value
+        )
     release_sketch_caches()
     compare["delta_funnel_stages"] = fd_stage_rows
     f_digest.unpersist()
@@ -1256,11 +998,11 @@ def main() -> None:
     # training, Arrow encode, ADC shortlist + exact refine).
     embt = load_table(spark, SF_DIR, "embeddings")
     NQ, K = 64, 10
-    t0 = time.perf_counter()
-    truth_rows = brute_force_knn(embt, num_queries=NQ, k=K).collect()
-    bf_sec = round(time.perf_counter() - t0, 3)
+    bf = obs.measure(
+        None, lambda: brute_force_knn(embt, num_queries=NQ, k=K).collect()
+    )
     truth: dict = {}
-    for r in truth_rows:
+    for r in bf.value:
         truth.setdefault(r["query_id"], set()).add(r["neighbor_id"])
     # L2 ground truth for the RAW-ADC PQ rows' documented regime:
     # PQ/IVF-PQ approximate EUCLIDEAN distance, so their recall
@@ -1302,7 +1044,7 @@ def main() -> None:
     ).collect():
         l2_truth.setdefault(r["query_id"], set()).add(r["neighbor_id"])
     ann_rows: dict[str, dict] = {
-        "brute_force": {"sec": bf_sec, "recall_at_10": 1.0},
+        "brute_force": {"sec": bf.sec, "recall_at_10": 1.0},
         "num_queries": NQ,
     }
     def _ann_recall_of(got_rows, against=None):
@@ -1311,7 +1053,7 @@ def main() -> None:
             got.setdefault(r["query_id"], set()).add(r["neighbor_id"])
         t = truth if against is None else against
         hits = sum(len(got.get(q, set()) & neigh) for q, neigh in t.items())
-        return round(hits / (len(t) * K), 4), got
+        return round(hits / (len(t) * K), 4)
 
     for label, thunk in (
         ("lsh", lambda: lsh_ann(embt, num_queries=NQ, k=K)),
@@ -1327,14 +1069,12 @@ def main() -> None:
         ("pca16", lambda: _pca(embt, num_queries=NQ, k=K,
                                out_dim=16, shortlist=4 * K)),
     ):
-        t0 = time.perf_counter()
-        got_rows = thunk().collect()
-        sec = round(time.perf_counter() - t0, 3)
+        served = obs.measure(None, lambda: thunk().collect())
         release_sketch_caches()
-        recall, got = _ann_recall_of(got_rows)
-        ann_rows[label] = {"sec": sec, "recall_at_10": recall}
+        recall = _ann_recall_of(served.value)
+        ann_rows[label] = {"sec": served.sec, "recall_at_10": recall}
         if label in ("pq", "ivfpq"):
-            l2_recall, _ = _ann_recall_of(got_rows, l2_truth)
+            l2_recall = _ann_recall_of(served.value, l2_truth)
             ann_rows[label]["recall_at_10_l2"] = l2_recall
 
     # In-session trained families, build/serve split (VERDICT r8 item
@@ -1357,19 +1097,19 @@ def main() -> None:
     ann_qrows = qrows  # the NQ (id, vector) rows collected above
 
     def _split_row(build_thunk, serve_thunk):
-        t0 = time.perf_counter()
-        built = build_thunk()
-        built[-1].count()  # materialize the session cache
-        build_sec = round(time.perf_counter() - t0, 3)
-        t0 = time.perf_counter()
-        got_rows = serve_thunk(built).collect()
-        serve_sec = round(time.perf_counter() - t0, 3)
+        def build():
+            built = build_thunk()
+            built[-1].count()  # materialize the session cache
+            return built
+
+        b = obs.measure(None, build)
+        served = obs.measure(None, lambda: serve_thunk(b.value).collect())
         release_sketch_caches()
-        recall, _ = _ann_recall_of(got_rows)
+        recall = _ann_recall_of(served.value)
         return {
-            "build_sec": build_sec,
-            "serve_sec": serve_sec,
-            "sec": round(build_sec + serve_sec, 3),
+            "build_sec": b.sec,
+            "serve_sec": served.sec,
+            "sec": round(b.sec + served.sec, 3),
             "recall_at_10": recall,
         }
 
@@ -1411,32 +1151,32 @@ def main() -> None:
     NC, NPROBE = 64, 16
     idx_dir = tempfile.mkdtemp(prefix="bench_ivfpq_idx_")
     try:
-        t0 = time.perf_counter()
-        cents_t, cb_t = train_ivfpq_local(embt, NC, 16, 256)
-        ivfpq_index_write(embt, idx_dir, cents=cents_t, codebook=cb_t)
-        build_sec = round(time.perf_counter() - t0, 3)
-        t0 = time.perf_counter()
-        got_rows = ann_index_query(
-            spark,
-            idx_dir,
-            embt.filter(F.col("vec_id") < NQ),
-            k=K,
-            nprobe=NPROBE,
-            refine=100,
-            rerank_against=embt,
-        ).collect()
-        serve_sec = round(time.perf_counter() - t0, 3)
-        release_sketch_caches()
-        got = {}
-        for r in got_rows:
-            got.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-        hits = sum(
-            len(got.get(q, set()) & neigh) for q, neigh in truth.items()
+        def build():
+            trained = train_ivfpq_local(embt, NC, 16, 256)
+            ivfpq_index_write(
+                embt, idx_dir, cents=trained[0], codebook=trained[1]
+            )
+            return trained
+
+        b = obs.measure(None, build)
+        cents_t = b.value[0]
+        served = obs.measure(
+            None,
+            lambda: ann_index_query(
+                spark,
+                idx_dir,
+                embt.filter(F.col("vec_id") < NQ),
+                k=K,
+                nprobe=NPROBE,
+                refine=100,
+                rerank_against=embt,
+            ).collect(),
         )
+        release_sketch_caches()
         ann_rows["ivfpq_trained_index"] = {
-            "build_sec": build_sec,
-            "serve_sec": serve_sec,
-            "recall_at_10": round(hits / (len(truth) * K), 4),
+            "build_sec": b.sec,
+            "serve_sec": served.sec,
+            "recall_at_10": _ann_recall_of(served.value),
             "config": f"nc={NC} nprobe={NPROBE} m=16 codes=256 refine=100",
         }
         # IVF-Flat serve from the SAME coarse quantizer (the raw-vector
@@ -1449,30 +1189,24 @@ def main() -> None:
 
         flat_dir = tempfile.mkdtemp(prefix="bench_ivfflat_idx_")
         try:
-            t0 = time.perf_counter()
-            ivfflat_index_write(embt, flat_dir, cents_t)
-            flat_build = round(time.perf_counter() - t0, 3)
-            t0 = time.perf_counter()
-            got_rows = ann_index_query(
-                spark,
-                flat_dir,
-                embt.filter(F.col("vec_id") < NQ),
-                k=K,
-                nprobe=12,
-            ).collect()
-            flat_serve = round(time.perf_counter() - t0, 3)
-            release_sketch_caches()
-            got = {}
-            for r in got_rows:
-                got.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-            hits = sum(
-                len(got.get(q, set()) & neigh)
-                for q, neigh in truth.items()
+            flat_build = obs.measure(
+                None, lambda: ivfflat_index_write(embt, flat_dir, cents_t)
             )
+            flat_served = obs.measure(
+                None,
+                lambda: ann_index_query(
+                    spark,
+                    flat_dir,
+                    embt.filter(F.col("vec_id") < NQ),
+                    k=K,
+                    nprobe=12,
+                ).collect(),
+            )
+            release_sketch_caches()
             ann_rows["ivfflat_trained_index"] = {
-                "build_sec": flat_build,
-                "serve_sec": flat_serve,
-                "recall_at_10": round(hits / (len(truth) * K), 4),
+                "build_sec": flat_build.sec,
+                "serve_sec": flat_served.sec,
+                "recall_at_10": _ann_recall_of(flat_served.value),
                 "config": f"nc={NC} nprobe=12 raw-vector cells",
             }
         finally:
@@ -1595,21 +1329,9 @@ def main() -> None:
             ),
         ),
     ):
-        best = float("inf")
-        shuffled = None
-        for i in range(3):
-            before = shuffle_totals(spark)
-            t0 = time.perf_counter()
-            run_noop(mk())
-            best = min(best, time.perf_counter() - t0)
-            after = shuffle_totals(spark)
-            if i == 0 and before is not None and after is not None:
-                shuffled = (after[0] - before[0], after[1] - before[1])
-        topk_cmp[label] = {
-            "sec": round(best, 3),
-            "shuffle_write_records": shuffled[0] if shuffled else None,
-            "shuffle_write_bytes": shuffled[1] if shuffled else None,
-        }
+        topk_cmp[label] = obs.measure(
+            spark, lambda: obs.run_noop(mk()), runs=3
+        ).row(obs.SHUFFLE)
     compare["topk_vs_window"] = topk_cmp
 
     # (b) incremental rollup: ONE maintenance step over a
@@ -1631,12 +1353,13 @@ def main() -> None:
     mv_sums = {"sum_qty": (F.col("l_quantity"), 2)}
     mv_keys = ["l_returnflag", "l_linestatus"]
     state_dir = _tf.mkdtemp(prefix="bench_mv_state_")
-    t0 = time.perf_counter()
-    rollup_build(
-        li10.filter(F.col("l_orderkey") % 20 != 0), mv_keys, mv_sums
-    ).write.mode("overwrite").parquet(state_dir)
-    build_sec = round(time.perf_counter() - t0, 3)
-    mv_cmp: dict[str, dict] = {"state_build_once": {"sec": build_sec}}
+    state_build = obs.measure(
+        None,
+        lambda: rollup_build(
+            li10.filter(F.col("l_orderkey") % 20 != 0), mv_keys, mv_sums
+        ).write.mode("overwrite").parquet(state_dir),
+    )
+    mv_cmp: dict[str, dict] = {"state_build_once": state_build.row()}
     for label, mk in (
         (
             "full_rebuild",
@@ -1657,25 +1380,23 @@ def main() -> None:
             ),
         ),
     ):
-        best = float("inf")
-        shuffled = None
-        for i in range(3):
-            before = shuffle_totals(spark)
-            t0 = time.perf_counter()
-            run_noop(mk())
-            best = min(best, time.perf_counter() - t0)
-            after = shuffle_totals(spark)
-            if i == 0 and before is not None and after is not None:
-                shuffled = (after[0] - before[0], after[1] - before[1])
-        mv_cmp[label] = {
-            "sec": round(best, 3),
-            "shuffle_write_records": shuffled[0] if shuffled else None,
-            "shuffle_write_bytes": shuffled[1] if shuffled else None,
-        }
+        mv_cmp[label] = obs.measure(
+            spark, lambda: obs.run_noop(mk()), runs=3
+        ).row(obs.SHUFFLE)
     import shutil as _sh
 
     _sh.rmtree(state_dir, ignore_errors=True)
     compare["mv_maintenance"] = mv_cmp
+
+    # The skewed_* rows last, in a fresh session whose status store
+    # keeps every task row: their skew reads need the whole task
+    # population, while every timed region above keeps the stage-grain
+    # store (retained task rows drag later regions via GC).
+    spark.stop()
+    spark = obs.measuring_session(
+        "bench-skew", SF_DIR, {"spark.ui.retainedTasks": "100000"}
+    )
+    compare.update(skew_rows(spark))
 
     # Regression gate (VERDICT r6 item 5; share-normalized round 9).
     # Shuffle records are deterministic — a shuffle flag means "the

@@ -22,6 +22,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+# Driver heap default: min(16g, 40% of physical memory), in MiB. Local
+# mode is ONE JVM holding driver AND all executor slots: 32 concurrent
+# task working sets + the session-lifetime build caches + (in bench) the
+# status store share this heap. 8g measurably GC-throttled the back half
+# of the bench (q64's main row read 10.8 s at 8g, 2.2 s at 16g — same
+# code, same shuffle), so 16g is the cap. On a small host a fixed 16g
+# lets the JVM grow past what the host has (a 15 GiB VM's kernel OOM
+# killer ended the test suite's JVM at 14.8 GB RSS); 40% leaves the rest
+# to the Python workers and the OS. A real cluster sizes executor memory
+# instead — this default only exists for the single-JVM profile.
+_PHYS_MIB = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+_DEFAULT_DRIVER_MEM = f"{min(16 * 1024, int(0.4 * _PHYS_MIB))}m"
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -44,15 +58,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # local mode = ONE JVM holding driver AND all executor slots:
-        # 32 concurrent task working sets + the session-lifetime pinned
-        # build caches + (in bench) the status store all share this
-        # heap. 8g measurably GC-throttled the back half of the bench
-        # (q64's main row read 10.8 s at 8g, 2.2 s at 16g — same code,
-        # same shuffle); 16g leaves headroom without crowding the
-        # 128 GiB host. A real cluster sizes executor memory instead
-        # (guide §5) — this knob only exists for the single-JVM profile.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _DEFAULT_DRIVER_MEM),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # testdata parquet carries TIMESTAMP(NANOS) which the vectorized

@@ -37,13 +37,12 @@ import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
-from bench import _stages_json  # noqa: E402
+from example_kafkastreams_spark import obs  # noqa: E402
 from example_kafkastreams_spark.catalog import load_table  # noqa: E402
 from example_kafkastreams_spark.operators import knn as KNN  # noqa: E402
 from example_kafkastreams_spark.operators import neardup as ND  # noqa: E402
@@ -60,7 +59,6 @@ from example_kafkastreams_spark.pipelines import (  # noqa: E402
     corpus_funnel_counts,
     corpus_stages,
 )
-from example_kafkastreams_spark.session import get_spark  # noqa: E402
 
 AMP_DIR = os.path.join("/tmp", "scale_probe_data")
 
@@ -968,20 +966,9 @@ def probe_ops(spark, sf_dir: str, bench_base: str) -> dict[str, dict]:
         ("ams_f2", ams_op),
         ("cohort_retention", cohort_op),
     ):
-        before = _stages_json(spark) or []
-        b_rec = sum(s.get("shuffleWriteRecords", 0) for s in before)
-        t0 = time.perf_counter()
-        df = mk()
-        rows = df.count()
-        sec = round(time.perf_counter() - t0, 3)
+        counted = obs.measure(spark, lambda: mk().count())
         release_sketch_caches()
-        after = _stages_json(spark) or []
-        a_rec = sum(s.get("shuffleWriteRecords", 0) for s in after)
-        out[name] = {
-            "sec": sec,
-            "rows": rows,
-            "shuffle_write_records": a_rec - b_rec,
-        }
+        out[name] = counted.row(("shuffle_write_records",), rows=counted.value)
     shutil.rmtree(nd_idx_path, ignore_errors=True)
     shutil.rmtree(sb_idx_path, ignore_errors=True)
     shutil.rmtree(dig_idx_path, ignore_errors=True)
@@ -1497,20 +1484,7 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    spark = get_spark(
-        app_name="scale_probe",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            # the probe sums COMPLETE-stage shuffle totals before and
-            # after each op; if the UI store evicts old stages mid-run
-            # the cumulative total SHRINKS and a later op's delta goes
-            # negative (bit the snapshot_diff row when the op list
-            # outgrew the default 1000-stage retention)
-            "spark.ui.retainedStages": "100000",
-            "spark.ui.retainedJobs": "100000",
-        },
-    )
-    spark.range(1000).selectExpr("sum(id)").collect()  # warmup
+    spark = obs.measuring_session("scale_probe", args.base)
 
     if args.streaming_only:
         report = {

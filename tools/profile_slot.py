@@ -1,76 +1,91 @@
 #!/usr/bin/env python
-"""Profile one declared slot standalone: build + noop with UI on,
-then dump per-job wall (with job descriptions/groups) and the top
-stages by executor time — the round-11 attribution helper.
+"""Profile declared slots the way the bench times them.
 
-Usage: python tools/profile_slot.py q63_corpus_funnel [sf_dir]
+Usage: python tools/profile_slot.py <name-substring> [sf_dir] [--runs 2] [--branches]
+
+Per slot and run, one JSON line: build wall (DataFrame construction,
+including eager build jobs) and noop-sink execute wall, each with its
+shuffle/input counter deltas. Run 0 is cold; later runs find memoized
+builds warm. --branches then times each union branch through the
+bench's discriminator filter. Last, the session's jobs (wall >= 0.15 s,
+with descriptions/groups) and its top 15 stages by executor run time.
+sf_dir defaults to catalog.DEFAULT_SF_DIR ($SPARK_GRAFT_SF_DIR).
 """
+
+from __future__ import annotations
+
+import argparse
 import json
 import os
 import sys
-import time
-import urllib.request
+from datetime import datetime
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import functions as F  # noqa: E402
+
+from example_kafkastreams_spark import obs  # noqa: E402
+from example_kafkastreams_spark.catalog import DEFAULT_SF_DIR  # noqa: E402
+from example_kafkastreams_spark.operators.cache import (  # noqa: E402
+    release_sketch_caches,
+)
 from example_kafkastreams_spark.queries import QUERIES  # noqa: E402
-from example_kafkastreams_spark.session import get_spark  # noqa: E402
 
 
-def main() -> None:
-    qname = sys.argv[1]
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    spark = get_spark(
-        app_name=f"profile-{qname}",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.retainedStages": "100000",
-            "spark.ui.retainedJobs": "100000",
-        },
+def _ts(s: str) -> datetime:
+    return datetime.strptime(s[:23], "%Y-%m-%dT%H:%M:%S.%f")
+
+
+def main() -> int:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("name")
+    ap.add_argument("sf_dir", nargs="?", default=DEFAULT_SF_DIR)
+    ap.add_argument("--runs", type=int, default=2)
+    ap.add_argument("--branches", action="store_true")
+    args = ap.parse_args()
+    sf_dir = args.sf_dir
+    spark = obs.measuring_session(
+        f"profile-{args.name}", sf_dir, {"spark.ui.retainedJobs": "100000"}
     )
-    spark.range(1000).selectExpr("sum(id)").collect()
-    from example_kafkastreams_spark.catalog import load_table
-    from example_kafkastreams_spark.schemas import TABLE_NAMES
+    spark.sparkContext.setLogLevel("ERROR")
 
-    for t in TABLE_NAMES:
-        load_table(spark, sf_dir, t).limit(1).count()
+    for name in [n for n in sorted(QUERIES) if args.name in n]:
+        for i in range(args.runs):
+            build = obs.measure(spark, lambda: QUERIES[name](spark, sf_dir))
+            noop = obs.measure(spark, lambda: obs.run_noop(build.value))
+            release_sketch_caches()
+            print(json.dumps({
+                "query": name,
+                "run": i,
+                "build_sec": build.sec,
+                "noop_sec": noop.sec,
+                "total_sec": round(build.sec + noop.sec, 3),
+                "build_counters": build.counters,
+                "noop_counters": noop.counters,
+            }), flush=True)
+        if not args.branches:
+            continue
+        df = QUERIES[name](spark, sf_dir)
+        disc = next((c for c in ("mode", "method") if c in df.columns), None)
+        if disc is None:
+            continue
+        for m in sorted(r[0] for r in df.select(disc).distinct().collect()):
+            branch = obs.measure(
+                spark,
+                lambda: obs.run_noop(
+                    QUERIES[name](spark, sf_dir).filter(F.col(disc) == m)
+                ),
+            )
+            release_sketch_caches()
+            row = {"query": name, "branch": m, **branch.row(obs.SHUFFLE)}
+            print(json.dumps(row), flush=True)
 
-    t0 = time.perf_counter()
-    df = QUERIES[qname](spark, sf_dir)
-    t_build = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    df.write.format("noop").mode("overwrite").save()
-    t_noop = time.perf_counter() - t0
-    # warm re-invocation (memoized slots serve from cache)
-    t0 = time.perf_counter()
-    df2 = QUERIES[qname](spark, sf_dir)
-    t_rebuild = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    df2.write.format("noop").mode("overwrite").save()
-    t_renoop = time.perf_counter() - t0
-
-    ui = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    with urllib.request.urlopen(f"{ui}/api/v1/applications/{app}/jobs") as r:
-        jobs = json.load(r)
-    with urllib.request.urlopen(
-        f"{ui}/api/v1/applications/{app}/stages?status=COMPLETE"
-    ) as r:
-        stages = json.load(r)
-
-    print(f"\n== {qname}  build={t_build:.2f}s noop={t_noop:.2f}s "
-          f"rebuild={t_rebuild:.2f}s renoop={t_renoop:.2f}s")
-    from datetime import datetime
-
-    def ts(s):
-        return datetime.strptime(s[:23], "%Y-%m-%dT%H:%M:%S.%f")
-
-    print("\n-- jobs (wall ≥ 0.15 s), chronological:")
+    print("\n-- jobs (wall >= 0.15 s), chronological:")
     tot = 0.0
-    for j in sorted(jobs, key=lambda j: j["jobId"]):
+    for j in sorted(obs.jobs(spark) or [], key=lambda j: j["jobId"]):
         if "completionTime" not in j or "submissionTime" not in j:
             continue
-        dur = (ts(j["completionTime"]) - ts(j["submissionTime"])).total_seconds()
+        dur = (_ts(j["completionTime"]) - _ts(j["submissionTime"])).total_seconds()
         tot += dur
         if dur >= 0.15:
             desc = (j.get("description") or j.get("name") or "")[:110]
@@ -78,16 +93,18 @@ def main() -> None:
     print(f"  (sum of ALL job walls: {tot:.2f}s — overlapped jobs double-count)")
 
     print("\n-- top 15 stages by executorRunTime:")
-    for s in sorted(stages, key=lambda s: -s.get("executorRunTime", 0))[:15]:
+    top = sorted(obs.stages(spark) or [], key=lambda s: -s.get("executorRunTime", 0))
+    for s in top[:15]:
         print(
             f"  stage {s['stageId']:>4}  run={s['executorRunTime']/1e3:7.2f}s"
-            f" cpu={s.get('executorCpuTime',0)/1e9:7.2f}s"
+            f" cpu={s.get('executorCpuTime', 0)/1e9:7.2f}s"
             f" tasks={s['numCompleteTasks']:>3}"
-            f" shW={s.get('shuffleWriteRecords',0):>9}"
+            f" shW={s.get('shuffleWriteRecords', 0):>9}"
             f" {(s.get('description') or s['name'])[:70]}"
         )
     spark.stop()
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())
