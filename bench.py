@@ -19,7 +19,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from example_kafkastreams_spark import obs  # noqa: E402
-from example_kafkastreams_spark.queries import QUERIES  # noqa: E402
+from example_kafkastreams_spark.queries import BRANCHES, QUERIES  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -30,42 +30,6 @@ def sf_from_dir(path: str) -> float:
         return float(base.replace("sf", ""))
     except ValueError:
         return -1.0
-
-
-# A merged slot's wall is the SUM of its branches, so a baseline
-# recorded before a branch landed under-counts the slot and the gate
-# false-alarms on the merge commit itself (q47 read 2.81x "slower" the
-# round its delta/deltaidx branches landed). Baselines for these slots
-# are only taken from artifacts of the round the branch set last
-# changed, or later; per-branch drift inside them is attributed by
-# ``branch_timings``.
-_MERGED_SINCE = {
-    "q20_sessionize": 11,         # +trans/+funnel (r11)
-    "q30_pivot_event_types": 11,  # +cohort retention (r11)
-    "q11_pricing_summary": 10,    # +mv incremental maintenance (r10)
-    "q19_window_topn_per_user": 10,  # +topk two-phase combiner (r10)
-    "q26_interval_join_symmetric": 10,  # +dim/+enrich (r9), +asof/+chlog (r10)
-    "q40_dedup_exact_text": 10,   # +diff_* (r9), +xsrc overlap (r10)
-    "q45_knn_bruteforce": 11,     # +mrl (r9), +pca shipped basis (r11)
-    "q65_lm_score": 11,           # +clf (r9), +calib (r11)
-    "q41_dedup_minhash_lsh": 10,  # +incr (r6), +eval (r10)
-    "q44_dedup_ngram_jaccard": 10,  # +contain (r10)
-    "q46_ann_lsh_ivf": 10,        # +ivfflat_idx (r9), +ivf_tr (r10)
-    "q47_embedding_neardup": 10,  # +delta/+deltaidx (r8), +prune (r10)
-    "q34_hash_sample": 10,        # +wsample (r9), +prio (r10)
-    "q56_quantize_embeddings": 10,  # +adc (r8), +pq_tr (r10)
-    "q57_neardup_components": 11,  # +gsplit/+pr (r11)
-    "q58_srp_histogram": 11,      # +qdig/+qdig_q/+ams, shared-scan persists (r11)
-    "q48_doc_profile": 10,        # +cols table profiler (r10)
-    "q50_token_stats": 10,        # +bpe (r9), +dupgram (r10)
-    "q54_chunk_documents": 11,    # +masks (r10), +lbatch (r11)
-    "q55_tfidf_top_term": 11,     # +maxsim family (r10), +mmr (r11)
-    "q59_dedup_edit_distance": 11,  # +er2/+gold survivorship (r11)
-    "q61_domain_mixing": 11,      # +drift (r10), +dsir (r11)
-    "q62_pii_scrub": 10,          # +norm (r9), +ccn Luhn (r10)
-    "q63_corpus_funnel": 6,       # +delta (r6)
-    "q64_decontaminate": 9,       # +bloom (r9)
-}
 
 
 def host_canary() -> float:
@@ -90,14 +54,18 @@ def load_baselines() -> tuple[dict, dict, dict, dict, dict]:
     taken from the FIRST committed artifact that recorded the query —
     the driver-recorded ``BENCH_r{N}.json`` files (r01 earliest), then
     the clean self-runs ``BENCH_SELF_r{N}.json`` (the only source of
-    shuffle baselines) — skipping artifacts older than a merged slot's
-    last branch change. Returns (wall, shuffle_records, source_tag,
-    source_canary, source_queries) — source_canary maps each artifact
-    tag to the host canary it recorded (None for pre-canary
-    artifacts); source_queries maps each tag to its full per-query
-    wall map, the denominator the share-normalized wall gate needs."""
+    shuffle baselines). Only artifacts recorded at this run's scale
+    factor count. A merged slot's wall is the SUM of its branches, so
+    an artifact is a floor for a slot in ``BRANCHES`` only when the
+    ``branch_timings`` it recorded for that slot cover exactly the
+    declared branch set — an older branch set under-counts the slot
+    and the gate would false-alarm on the change that added a branch.
+    Returns (wall, shuffle_records, source_tag, source_canary,
+    source_queries) — source_canary maps each artifact tag to the host
+    canary it recorded (None for pre-canary artifacts); source_queries
+    maps each tag to its full per-query wall map, the denominator the
+    share-normalized wall gate needs."""
     import glob
-    import re
 
     repo = os.path.dirname(os.path.abspath(__file__))
     files = sorted(glob.glob(os.path.join(repo, "BENCH_r[0-9]*.json")))
@@ -105,18 +73,18 @@ def load_baselines() -> tuple[dict, dict, dict, dict, dict]:
         glob.glob(os.path.join(repo, "BENCH_SELF_r[0-9]*.json"))
     )
 
-    def _valid(key: str, path: str) -> bool:
-        since = _MERGED_SINCE.get(key)
-        if since is None:
+    def _valid(key: str, body: dict) -> bool:
+        if key not in BRANCHES:
             return True
-        m = re.search(r"_r(\d+)\.json$", path)
-        return bool(m) and int(m.group(1)) >= since
+        timed = (body.get("branch_timings") or {}).get(key) or {}
+        return set(timed) == set(BRANCHES[key][1])
 
     wall: dict = {}
     shuf: dict = {}
     src: dict = {}
     canaries: dict = {}
-    parsed: list[tuple[str, str, dict]] = []
+    parsed: list[tuple[str, dict]] = []
+    sf = sf_from_dir(SF_DIR)
     for path in files:
         try:
             with open(path) as f:
@@ -127,16 +95,18 @@ def load_baselines() -> tuple[dict, dict, dict, dict, dict]:
         # driver records wrap the bench line under "parsed" — which is
         # null when a round's bench crashed; fall back to the raw dict
         body = d.get("parsed") if isinstance(d.get("parsed"), dict) else d
+        if body.get("sf") != sf:
+            continue
         hc = body.get("host_canary")
         canaries[tag] = hc.get("loop_sec") if isinstance(hc, dict) else None
-        parsed.append((path, tag, body))
+        parsed.append((tag, body))
     tag_queries = {
         tag: {
             k: float(v)
             for k, v in (body.get("queries") or {}).items()
             if isinstance(v, (int, float))
         }
-        for _, tag, body in parsed
+        for tag, body in parsed
     }
     # Two passes (VERDICT r8 item 2): WALL floors come from the
     # earliest CANARY-BEARING artifact, so the host-normalization gate
@@ -147,25 +117,25 @@ def load_baselines() -> tuple[dict, dict, dict, dict, dict]:
     # floors stay earliest-artifact: records are deterministic, so the
     # oldest floor is strictly the strongest regression signal.
     for canary_only in (True, False):
-        for path, tag, body in parsed:
+        for tag, body in parsed:
             if canary_only and canaries[tag] is None:
                 continue
             for k, v in (body.get("queries") or {}).items():
                 if (
                     isinstance(v, (int, float))
                     and k not in wall
-                    and _valid(k, path)
+                    and _valid(k, body)
                 ):
                     wall[k] = float(v)
                     src[k] = tag
-    for path, tag, body in parsed:
+    for tag, body in parsed:
         for k, v in (body.get("query_shuffle") or {}).items():
             rec = (
                 v.get("shuffle_write_records")
                 if isinstance(v, dict)
                 else None
             )
-            if isinstance(rec, int) and k not in shuf and _valid(k, path):
+            if isinstance(rec, int) and k not in shuf and _valid(k, body):
                 shuf[k] = rec
     return wall, shuf, src, canaries, tag_queries
 
@@ -339,66 +309,13 @@ def main() -> None:
         release_sketch_caches,
     )
 
-    # Per-branch wall inside the merged slots (VERDICT r6 item 6):
-    # filtering on the union discriminator folds every other branch's
-    # lit(mode) predicate to false, so Catalyst prunes those union
-    # children and each timing runs ONLY that branch's sub-plan —
-    # attributing the slot's wall without restructuring the registry.
-    branches: dict[str, tuple] = {}
+    # Per-branch wall inside the merged slots (VERDICT r6 item 6),
+    # over the branch sets the slots declare (registry.BRANCHES): the
+    # timing filters the union on its discriminator. Children with
+    # literal tags fold to false and are pruned; a child that emits
+    # several tags from one computation (q40's fused full/incr dedup)
+    # stays in every branch's plan, so those timings include it.
     branch_timings: dict[str, dict] = {}
-    for qname, disc, modes in (
-        ("q11_pricing_summary", "mode", ("full", "mv")),
-        ("q19_window_topn_per_user", "mode", ("window", "topk")),
-        ("q26_interval_join_symmetric", "mode",
-         ("pairs", "dim", "enrich", "delta", "asof", "chlog", "near")),
-        ("q34_hash_sample", "method",
-         ("hash", "strat", "wsample", "prio", "gprio")),
-        ("q40_dedup_exact_text", "mode",
-         ("full", "incr", "diff_changed", "diff_unchanged", "xsrc")),
-        ("q20_sessionize", "mode", ("sess", "trans", "funnel")),
-        ("q30_pivot_event_types", "mode", ("pivot", "cohort")),
-        ("q41_dedup_minhash_lsh", "mode", ("pairs", "incr", "eval")),
-        ("q44_dedup_ngram_jaccard", "mode", ("jac", "contain")),
-        ("q45_knn_bruteforce", "method", ("brute", "mrl", "pca")),
-        (
-            "q46_ann_lsh_ivf",
-            "method",
-            ("lsh", "ivf", "lsh_mp", "ivfflat_mp", "ivfflat_idx", "ivf_tr"),
-        ),
-        ("q47_embedding_neardup", "mode",
-         ("pair", "sem", "delta", "deltaidx", "prune")),
-        ("q48_doc_profile", "mode", ("doc", "cols")),
-        ("q50_token_stats", "mode", ("stats", "bpe", "dupgram")),
-        ("q54_chunk_documents", "mode",
-         ("chunk", "dedup", "substr", "rebuilt", "shard", "masks",
-          "packmask", "lbatch")),
-        (
-            "q55_tfidf_top_term",
-            "mode",
-            ("tfidf", "bm25", "bm25idx", "rrf", "eval", "maxsim",
-             "maxsimidx", "rerank", "mmr"),
-        ),
-        ("q56_quantize_embeddings", "mode",
-         ("int8", "pq", "ivfpq", "adc", "pq_tr")),
-        ("q57_neardup_components", "mode",
-         ("comp", "leak", "mine_pos", "mine_neg", "mine_hard", "inc",
-          "bfs", "gsplit", "pr")),
-        (
-            "q58_srp_histogram",
-            "mode",
-            ("srp", "kmv", "kmvops", "cms", "hll", "hll_est",
-             "hll_grp", "hll_grp_est", "hist", "hist_grp", "qdig",
-             "qdig_q", "ams"),
-        ),
-        ("q59_dedup_edit_distance", "mode", ("edit", "er", "er2", "gold")),
-        ("q61_domain_mixing", "mode",
-         ("mix", "card", "temp", "budget", "drift", "dsir")),
-        ("q62_pii_scrub", "mode", ("pii", "norm", "ccn")),
-        ("q63_corpus_funnel", "mode", ("full", "delta")),
-        ("q64_decontaminate", "mode", ("exact", "fuzzy", "bloom")),
-        ("q65_lm_score", "mode", ("lm", "clf", "calib")),
-    ):
-        branches[qname] = (disc, modes)
 
     # Per-query shuffle volume (records/bytes written) alongside wall
     # time: wall time on a busy local box swings up to 5x, shuffle
@@ -419,8 +336,8 @@ def main() -> None:
         release_sketch_caches()
         if main_row.counters is not None:
             shuffles[name] = {k: main_row.counters[k] for k in obs.SHUFFLE}
-        if name in branches:
-            disc, modes = branches[name]
+        if name in BRANCHES:
+            disc, modes = BRANCHES[name]
             rows: dict[str, float] = {}
             for m in modes:
                 rows[m] = obs.measure(

@@ -14,6 +14,9 @@ Reproduces the correctness driver as faithfully as we can observe it:
   ``1791.0`` even though they compare equal).
 
 Prints one JSON line per query plus a summary; exit 1 on any mismatch.
+A mismatch in a branch-merged slot names its failing branches
+(``registry.BRANCHES`` discriminator), split from the frames already
+collected.
 
 Usage:  python driver_sim.py [sf_dir] [--double] [--only q40,q63]
         (default sf_dir /root/testdata/sf0.01; --double re-executes each
@@ -61,7 +64,8 @@ def main() -> int:
     spec.loader.exec_module(entry_mod)
 
     sys.path.insert(0, "/root/repo")
-    from tests.oracle_utils import compare_typed, duckdb_run
+    from example_kafkastreams_spark.registry import BRANCHES
+    from tests.oracle_utils import duckdb_run, typed_errors
 
     # Vanilla session on purpose — mirrors the driver's.
     spark = (
@@ -91,14 +95,16 @@ def main() -> int:
         try:
             got = fn(spark, sf_dir).toPandas()
             want = duckdb_run(oracles[name], sf_dir)
-            errs = compare_typed(got, want)
+            branches = BRANCHES.get(name)
+            errs = typed_errors(got, want, branches)
             if "--double" in sys.argv and not errs:
                 # Determinism probe: a second physical execution must
                 # produce identical typed values — catches min_by/max_by
                 # tie-breaks that float with partition order.
+                again = fn(spark, sf_dir).toPandas()
                 errs = [
                     f"nondeterministic: {e}"
-                    for e in compare_typed(fn(spark, sf_dir).toPandas(), got)
+                    for e in typed_errors(again, got, branches)
                 ]
             row = {
                 "rows_match": len(got) == len(want),

@@ -3,6 +3,7 @@
 Every implemented operator from SURVEY.md §2 registers here as
   name -> callable(spark, sf_dir) -> DataFrame     (QUERIES)
   name -> DuckDB-equivalent ANSI SQL               (ORACLE_SQL)
+  name -> (discriminator, branch values)           (BRANCHES, merged slots)
 Non-SQL-expressible ops register without oracle SQL (rows-only check).
 
 Naming: q0x reference parity, q1x relational breadth, q2x analytic/
@@ -22,7 +23,13 @@ from .operators import (
     enrich_clickstream,
 )
 
-from .registry import ORACLE_SQL, QUERIES, query, window_start_sql as _day_window_sql
+from .registry import (
+    BRANCHES,
+    ORACLE_SQL,
+    QUERIES,
+    query,
+    window_start_sql as _day_window_sql,
+)
 
 
 # --- q01: A1 windowed dedup (ClickstreamJoinExample.scala:243-257) --------

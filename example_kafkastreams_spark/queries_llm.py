@@ -45,6 +45,10 @@ SHINGLE_N = 3
 
 @query(
     "q40_dedup_exact_text",
+    branches=(
+        "full", "incr", "diff_added", "diff_removed", "diff_changed",
+        "diff_unchanged", "xsrc",
+    ),
     oracle="""
     WITH fulld AS (
       SELECT md5(text) AS content_hash,
@@ -363,7 +367,11 @@ def _minhash_pairs_incr_sql(threshold: float) -> str:
     """
 
 
-@query("q41_dedup_minhash_lsh", oracle=_minhash_pairs_incr_sql(0.5))
+@query(
+    "q41_dedup_minhash_lsh",
+    branches=("pairs", "incr", "eval"),
+    oracle=_minhash_pairs_incr_sql(0.5),
+)
 @build_memo
 def q41_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup, both ingestion regimes in one row (the q40 tag-merge
@@ -490,6 +498,7 @@ _CONT_THRESHOLD = 0.8
 
 @query(
     "q44_dedup_ngram_jaccard",
+    branches=("jac", "contain"),
     oracle=f"""
     WITH {_sig_ctes(D)},
     bands AS ({_bands_cte(D)}),
@@ -644,6 +653,8 @@ def _pca_red_sql(vec_col: str, d: str) -> str:
 
 @query(
     "q45_knn_bruteforce",
+    branches=("brute", "mrl", "pca"),
+    disc="method",
     oracle=f"""
     WITH q AS (
       SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 8
@@ -926,6 +937,8 @@ _Q46_IDX_CACHE: dict = {}
 
 @query(
     "q46_ann_lsh_ivf",
+    branches=("lsh", "ivf", "lsh_mp", "ivfflat_mp", "ivfflat_idx", "ivf_tr"),
+    disc="method",
     oracle=f"({_LSH_ANN_SQL}) UNION ALL ({_IVF_ANN_SQL})"
     f" UNION ALL ({_LSH_MP_SQL}) UNION ALL ({_IVFFLAT_MP_SQL})"
     f" UNION ALL ({_IVFFLAT_IDX_SQL}) UNION ALL ({_IVF_TR_SQL})",
@@ -1033,6 +1046,7 @@ _SEM_THRESHOLD = "0.4"  # spliced via CAST('…' AS DOUBLE) both dialects
 
 @query(
     "q47_embedding_neardup",
+    branches=("pair", "sem", "delta", "deltaidx", "prune"),
     oracle=f"""
     WITH RECURSIVE b AS ({_bucket_cte(D)}),
     p AS (
@@ -1408,7 +1422,11 @@ def _profile_sql() -> str:
     """
 
 
-@query("q48_doc_profile", oracle=_profile_sql())
+@query(
+    "q48_doc_profile",
+    branches=("doc", "cols"),
+    oracle=_profile_sql(),
+)
 def q48_doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc corpus profile: lang-ID + quality + repetition in one
     scan (round-5 merge of the former q48/q49 slots, freeing one for
@@ -1623,6 +1641,7 @@ def _bpe_oracle_sql() -> str:
 
 @query(
     "q50_token_stats",
+    branches=("stats", "bpe", "dupgram"),
     oracle=f"""
     WITH RECURSIVE {_bpe_oracle_sql().strip().rstrip()}
     UNION ALL

@@ -276,7 +276,14 @@ def _chunk_dedup_sql() -> str:
     """
 
 
-@query("q54_chunk_documents", oracle=_chunk_dedup_sql())
+@query(
+    "q54_chunk_documents",
+    branches=(
+        "chunk", "dedup", "substr", "rebuilt", "shard", "masks", "packmask",
+        "lbatch",
+    ),
+    oracle=_chunk_dedup_sql(),
+)
 @build_memo
 def q54_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chunking + passage-level dedup in one driver row (round-5 tag
@@ -889,7 +896,14 @@ def _q55_sql() -> str:
     """
 
 
-@query("q55_tfidf_top_term", oracle=_q55_sql())
+@query(
+    "q55_tfidf_top_term",
+    branches=(
+        "tfidf", "bm25", "bm25idx", "rrf", "eval", "maxsim", "maxsimidx",
+        "rerank", "mmr",
+    ),
+    oracle=_q55_sql(),
+)
 @build_memo
 def q55_tfidf_top_term(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``tfidf``: highest-tf-idf term per document (tie →
@@ -1179,6 +1193,7 @@ _PQ_TR_CB_UNION = " UNION ALL ".join(
 
 @query(
     "q56_quantize_embeddings",
+    branches=("int8", "pq", "ivfpq", "adc", "pq_tr"),
     oracle=f"""
     WITH base AS (
       SELECT vec_id, embedding,
@@ -1523,6 +1538,10 @@ def _q57_pr_ctes(iterations: int = _PR_ITERS) -> str:
 
 @query(
     "q57_neardup_components",
+    branches=(
+        "comp", "leak", "mine_pos", "mine_neg", "mine_hard", "inc", "bfs",
+        "gsplit", "pr",
+    ),
     oracle=f"""
     WITH RECURSIVE thv AS (
       SELECT doc_id, {P.token_hash_array('text', D)} AS thv FROM documents
@@ -2106,6 +2125,7 @@ _ER_MAX_BLOCK = 256
 
 @query(
     "q59_dedup_edit_distance",
+    branches=("edit", "er", "er2", "gold"),
     oracle=f"""
     WITH RECURSIVE {QL._sig_ctes(D)},
     bands AS ({QL._bands_cte(D)}),
@@ -2697,7 +2717,14 @@ def _q58_sql() -> str:
     """
 
 
-@query("q58_srp_histogram", oracle=_q58_sql())
+@query(
+    "q58_srp_histogram",
+    branches=(
+        "srp", "kmv", "kmvops", "cms", "hll", "hll_est", "hll_grp",
+        "hll_grp_est", "hist", "hist_grp", "qdig", "qdig_q", "ams",
+    ),
+    oracle=_q58_sql(),
+)
 @build_memo
 def q58_srp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch diagnostics in one driver row (round-5 tag merge).

@@ -407,7 +407,14 @@ def _mixing_sql() -> str:
     """
 
 
-@query("q61_domain_mixing", oracle=_mixing_sql())
+@query(
+    "q61_domain_mixing",
+    branches=(
+        "mix", "temp", "budget", "card", "split_train", "split_val",
+        "split_test", "drift", "dsir",
+    ),
+    oracle=_mixing_sql(),
+)
 @build_memo
 def q61_domain_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``mix``: down-sample each over-weighted source to literal
@@ -505,9 +512,16 @@ def q61_domain_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
         "'card' AS mode", "CAST(NULL AS long) AS doc_id", "source",
         *[c for c, _ in card_cols],
     )
-    split = assign_split(docs, list(_SPLIT_RATIOS)).selectExpr(
-        "concat('split_', split) AS mode", "doc_id", "source", *pad_sql
-    )
+    # one union child per split with a LITERAL tag (the q40 diff
+    # convention): a computed concat('split_', split) tag cannot fold,
+    # so it would keep the split scan under every other branch's filter
+    assigned = assign_split(docs, list(_SPLIT_RATIOS))
+    splits = [
+        assigned.filter(F.col("split") == s).selectExpr(
+            f"'split_{s}' AS mode", "doc_id", "source", *pad_sql
+        )
+        for s, _ in _SPLIT_RATIOS
+    ]
     # drift branch (round 10): per-source length-distribution TVD vs a
     # derived re-release (operators.diffs.corpus_drift_report) — the
     # statistical release audit next to q40's key-level diff. Columns
@@ -568,11 +582,10 @@ def q61_domain_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
         "score AS n_tokens",
         *pad_sql[2:],
     )
-    return (
-        mix.unionByName(temp).unionByName(budget)
-        .unionByName(card).unionByName(split).unionByName(drift)
-        .unionByName(dsir_w).unionByName(dsir_s)
-    )
+    out = mix
+    for child in (temp, budget, card, *splits, drift, dsir_w, dsir_s):
+        out = out.unionByName(child)
+    return out
 
 
 # --- q62: PII scrubbing ---------------------------------------------------
@@ -600,6 +613,7 @@ def _ccn_text(d: str) -> str:
 
 @query(
     "q62_pii_scrub",
+    branches=("pii", "norm", "ccn"),
     oracle=f"""
     SELECT 'pii' AS mode, doc_id,
            {P.pii_scrub('text', D)} AS out_text,
@@ -859,7 +873,11 @@ def _funnel_sql() -> str:
     """
 
 
-@query("q63_corpus_funnel", oracle=_funnel_sql())
+@query(
+    "q63_corpus_funnel",
+    branches=("full", "delta"),
+    oracle=_funnel_sql(),
+)
 @build_memo
 def q63_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The whole pretrain corpus funnel (pipelines.corpus_stages) as one
@@ -1053,7 +1071,11 @@ def _decontam_sql() -> str:
     """
 
 
-@query("q64_decontaminate", oracle=_decontam_sql())
+@query(
+    "q64_decontaminate",
+    branches=("exact", "fuzzy", "bloom"),
+    oracle=_decontam_sql(),
+)
 @build_memo
 def q64_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Both decontamination regimes in one driver row (round-5 tag
@@ -1211,7 +1233,11 @@ def _lm_sql() -> str:
     """
 
 
-@query("q65_lm_score", oracle=_lm_sql())
+@query(
+    "q65_lm_score",
+    branches=("lm", "clf", "calib"),
+    oracle=_lm_sql(),
+)
 @build_memo
 def q65_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model-based quality scoring, two branches. ``lm`` — CCNet-style

@@ -61,6 +61,7 @@ _PRICING_AGG_SQL = f"""
 
 @query(
     "q11_pricing_summary",
+    branches=("full", "mv"),
     oracle=f"""
     SELECT 'full' AS mode, l_returnflag, l_linestatus, {_PRICING_AGG_SQL}
     GROUP BY l_returnflag, l_linestatus
@@ -385,6 +386,7 @@ def q18_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q19_window_topn_per_user",
+    branches=("window", "topk"),
     oracle="""
     WITH ranked AS (
       SELECT user_id, event_id, event_type, value,
@@ -441,6 +443,7 @@ _SESSION_GAP_US = 30 * 60 * 1_000_000
 
 @query(
     "q20_sessionize",
+    branches=("sess", "trans", "funnel"),
     oracle=f"""
     WITH seq AS (
       SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us,
@@ -1007,7 +1010,11 @@ def _q26_sql() -> str:
     """
 
 
-@query("q26_interval_join_symmetric", oracle=_q26_sql())
+@query(
+    "q26_interval_join_symmetric",
+    branches=("pairs", "dim", "enrich", "delta", "asof", "chlog", "near"),
+    oracle=_q26_sql(),
+)
 @build_memo
 def q26_interval_join_symmetric(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temporal joins, three branches in one driver row. ``pairs`` —

@@ -123,6 +123,7 @@ _EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
 @query(
     "q30_pivot_event_types",
+    branches=("pivot", "cohort"),
     oracle=f"""
     WITH ud AS (
       SELECT DISTINCT user_id,
@@ -332,6 +333,8 @@ from .functions import portable as P  # noqa: E402
 
 @query(
     "q34_hash_sample",
+    branches=("hash", "strat", "wsample", "prio", "gprio"),
+    disc="method",
     oracle=f"""
     SELECT 'hash' AS method, o_orderkey, o_custkey, o_totalprice,
            o_orderpriority

@@ -23,15 +23,41 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE_SQL: dict[str, str] = {}
+# merged slot -> (discriminator column, every value it emits)
+BRANCHES: dict[str, tuple[str, tuple[str, ...]]] = {}
 
 DAY_MS = 86_400_000
 
 
-def query(name: str, oracle: str | None = None):
+def query(
+    name: str,
+    oracle: str | None = None,
+    branches: tuple[str, ...] = (),
+    disc: str = "mode",
+):
+    """Register ``fn`` itself (no wrapper) as slot ``name``.
+
+    A merged slot unions several branches and tags each row with its
+    branch in column ``disc``; ``branches`` declares the full set of
+    tags it emits, and is the one place that set is written down (the
+    bench's per-branch timings, ``tools/profile_slot.py --branches``
+    and the driver simulation's failing-branch report all read
+    ``BRANCHES``; a registry test pins it equal to what the slot
+    emits).
+
+    Filtering ``disc == value`` times one branch only when its union
+    children carry LITERAL tags: Catalyst folds every other child's
+    tag predicate to false and prunes that child. A child whose tag is
+    computed, or that emits several tags from one computation (q40's
+    fused full/incr dedup aggregate), keeps a residual predicate and
+    stays in every branch's filtered plan."""
+
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         QUERIES[name] = fn
         if oracle is not None:
             ORACLE_SQL[name] = oracle
+        if branches:
+            BRANCHES[name] = (disc, tuple(branches))
         return fn
 
     return deco

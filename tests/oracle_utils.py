@@ -87,9 +87,45 @@ def _cell_eq(a, b) -> bool:
     return bool(a == b)
 
 
-def assert_matches_oracle_typed(spark_df, sql: str, sf_dir: str):
-    """The driver-sim check: typed, exact."""
-    errs = compare_typed(spark_df.toPandas(), duckdb_run(sql, sf_dir))
+def typed_errors(
+    got: pd.DataFrame,
+    want: pd.DataFrame,
+    branches: tuple[str, tuple[str, ...]] | None = None,
+) -> list[str]:
+    """``compare_typed``, and for a branch-merged slot (``branches`` =
+    its ``registry.BRANCHES`` entry) a mismatch is reported per failing
+    branch: both collected frames are split by the discriminator
+    column, so a broken branch is named without another Spark job.
+    Tags outside the declared set (and NULL tags) get their own
+    entries."""
+    errs = compare_typed(got, want)
+    if not errs or not branches:
+        return errs
+    disc, declared = branches
+    if disc not in got.columns or disc not in want.columns:
+        return errs
+    tags = {None if _isna(t) else t for t in [*got[disc], *want[disc]]}
+
+    def rows(df: pd.DataFrame, tag) -> pd.DataFrame:
+        return df[df[disc].isna()] if tag is None else df[df[disc] == tag]
+
+    per_branch = [
+        f"{disc}={tag}: " + "; ".join(e)
+        for tag in sorted(tags | set(declared), key=str)
+        if (e := compare_typed(rows(got, tag), rows(want, tag)))
+    ]
+    return per_branch or errs
+
+
+def assert_matches_oracle_typed(
+    spark_df,
+    sql: str,
+    sf_dir: str,
+    branches: tuple[str, tuple[str, ...]] | None = None,
+):
+    """The driver-sim check: typed, exact; a branch-merged slot's
+    failure names its failing branches."""
+    errs = typed_errors(spark_df.toPandas(), duckdb_run(sql, sf_dir), branches)
     assert not errs, "; ".join(errs)
 
 

@@ -18,11 +18,12 @@ round end.
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 
-from example_kafkastreams_spark.queries import ORACLE_SQL, QUERIES
+from example_kafkastreams_spark.queries import BRANCHES, ORACLE_SQL, QUERIES
 from tests.conftest import SMOKE
-from tests.oracle_utils import assert_matches_oracle_typed
+from tests.oracle_utils import assert_matches_oracle_typed, typed_errors
 
 DRIVER_MAX_QUERIES = 50
 
@@ -56,36 +57,34 @@ def test_entry_module_contract():
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_driver_sim_typed(spark, name):
     assert_matches_oracle_typed(
-        QUERIES[name](spark, SMOKE), ORACLE_SQL[name], SMOKE
+        QUERIES[name](spark, SMOKE), ORACLE_SQL[name], SMOKE, BRANCHES.get(name)
     )
 
 
-def test_bench_branch_lists_match_slot_modes(spark):
-    """Every branch value bench.py's branch_timings registers must
-    actually appear in that slot's discriminator column (and cover it,
-    split_* modes aside) — a typo'd branch entry would silently time
-    an empty-pruned sub-plan as 0 s forever."""
-    import re
+def test_declared_branches_equal_emitted(spark):
+    """``registry.BRANCHES`` is the one declaration of each merged
+    slot's branch set (the bench's branch timings, ``profile_slot.py
+    --branches`` and the failing-branch report read it), so the values
+    each slot emits must EQUAL it: a declared branch the slot never
+    emits would time an empty-pruned plan as 0 s forever, and an
+    emitted one left undeclared would never be timed."""
+    bad = []
+    for name, (disc, modes) in sorted(BRANCHES.items()):
+        out = QUERIES[name](spark, SMOKE)
+        got = {r[0] for r in out.select(disc).distinct().collect()}
+        if got != set(modes) or len(modes) != len(got):
+            bad.append(f"{name}: declares {modes}, emits {sorted(got)}")
+    assert BRANCHES and not bad, "\n".join(bad)
 
-    src = open("/root/repo/bench.py").read()
-    block = re.search(
-        r"branch_timings: dict\[str, dict\] = \{\}\s*for qname, disc, "
-        r"modes in \((.*?)\n    \):",
-        src,
-        re.S,
-    ).group(1)
-    declared = re.findall(
-        r'\(\s*"(q\w+)",\s*"(\w+)",\s*\(([^)]*)\)', block
+
+def test_typed_errors_name_failing_branches():
+    want = pd.DataFrame(
+        {"mode": ["a", "a", "b", "c"], "v": [1, 2, 3, 4]}
     )
-    assert declared, "could not parse bench branch_timings list"
-    for qname, disc, modes_src in declared:
-        modes = set(re.findall(r'"([^"]+)"', modes_src))
-        out = QUERIES[qname](spark, SMOKE)
-        got = {
-            r[0] for r in out.select(disc).distinct().collect()
-        }
-        missing = modes - got
-        assert not missing, (
-            f"{qname}: bench times branches {sorted(missing)} that the "
-            f"query never emits (have {sorted(got)})"
-        )
+    got = pd.DataFrame(
+        {"mode": ["a", "a", "b", "c", "x"], "v": [1, 2, 30, 4, 5]}
+    )
+    errs = typed_errors(got, want, ("mode", ("a", "b", "c")))
+    assert [e.split(":")[0] for e in errs] == ["mode=b", "mode=x"]
+    assert typed_errors(got, want, None) == typed_errors(got, want)
+    assert typed_errors(want, want, ("mode", ("a", "b", "c"))) == []

@@ -539,9 +539,10 @@ def test_round9_branch_plan_shapes(spark):
     partition — the q48 rationale), and q61's split modes are pure
     scan-fused CASEs with ZERO exchanges (a shuffle appearing in
     either would mean the normalization chain or the split CASE
-    stopped being map-side)."""
+    stopped being map-side); every q61 branch filter prunes to its
+    own children."""
     from example_kafkastreams_spark.plans import count_exchanges
-    from example_kafkastreams_spark.queries import QUERIES
+    from example_kafkastreams_spark.queries import BRANCHES, QUERIES
     from tests.conftest import SMOKE
 
     q62 = QUERIES["q62_pii_scrub"](spark, SMOKE)
@@ -550,6 +551,21 @@ def test_round9_branch_plan_shapes(spark):
     q61 = QUERIES["q61_domain_mixing"](spark, SMOKE)
     for mode in ("split_train", "split_val", "split_test"):
         assert count_exchanges(q61.filter(F.col("mode") == mode)) == 0, mode
+    # every q61 child carries a LITERAL tag, so each branch filter folds
+    # away: no optimized plan keeps a residual predicate on the tag (a
+    # computed tag would keep its child, and that filter, in every other
+    # branch's plan)
+    disc, modes = BRANCHES["q61_domain_mixing"]
+    for mode in modes:
+        plan = (
+            q61.filter(F.col(disc) == mode)
+            ._jdf.queryExecution().optimizedPlan().toString()
+        )
+        residual = [
+            line.strip() for line in plan.splitlines()
+            if "Filter" in line and f"= {mode})" in line
+        ]
+        assert not residual, (mode, residual)
 
 
 def test_runtime_bloom_filter_prefilters_fact_side(spark):

@@ -6,9 +6,10 @@ Usage: python tools/profile_slot.py <name-substring> [sf_dir] [--runs 2] [--bran
 Per slot and run, one JSON line: build wall (DataFrame construction,
 including eager build jobs) and noop-sink execute wall, each with its
 shuffle/input counter deltas. Run 0 is cold; later runs find memoized
-builds warm. --branches then times each union branch through the
-bench's discriminator filter. Last, the session's jobs (wall >= 0.15 s,
-with descriptions/groups) and its top 15 stages by executor run time.
+builds warm. --branches then times each declared union branch
+(registry.BRANCHES) through the bench's discriminator filter. Last,
+the session's jobs (wall >= 0.15 s, with descriptions/groups) and its
+top 15 stages by executor run time.
 sf_dir defaults to catalog.DEFAULT_SF_DIR ($SPARK_GRAFT_SF_DIR).
 """
 
@@ -29,7 +30,7 @@ from example_kafkastreams_spark.catalog import DEFAULT_SF_DIR  # noqa: E402
 from example_kafkastreams_spark.operators.cache import (  # noqa: E402
     release_sketch_caches,
 )
-from example_kafkastreams_spark.queries import QUERIES  # noqa: E402
+from example_kafkastreams_spark.queries import BRANCHES, QUERIES  # noqa: E402
 
 
 def _ts(s: str) -> datetime:
@@ -63,13 +64,10 @@ def main() -> int:
                 "build_counters": build.counters,
                 "noop_counters": noop.counters,
             }), flush=True)
-        if not args.branches:
+        if not args.branches or name not in BRANCHES:
             continue
-        df = QUERIES[name](spark, sf_dir)
-        disc = next((c for c in ("mode", "method") if c in df.columns), None)
-        if disc is None:
-            continue
-        for m in sorted(r[0] for r in df.select(disc).distinct().collect()):
+        disc, modes = BRANCHES[name]
+        for m in modes:
             branch = obs.measure(
                 spark,
                 lambda: obs.run_noop(
