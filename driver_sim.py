@@ -30,6 +30,7 @@ Usage:  python driver_sim.py [sf_dir] [--double] [--only q40,q63]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 import traceback
@@ -57,13 +58,16 @@ def main() -> int:
 
     import importlib.util
 
+    # verify THIS checkout: the entry module and the package next to
+    # this script, not whatever tree the working directory points at
+    here = os.path.dirname(os.path.abspath(__file__))
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
+        "__spark_entry__", os.path.join(here, "__spark_entry__.py")
     )
     entry_mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(entry_mod)
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, here)
     from example_kafkastreams_spark.registry import BRANCHES
     from tests.oracle_utils import duckdb_run, typed_errors
 

@@ -160,17 +160,3 @@ def load_head_rows(
         )
         _HEAD_MEMO[key] = cached
     return cached
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES
-) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
-def register_views(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES
-) -> None:
-    """Register each table as a temp view for the SQL entry points."""
-    for n in names:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)

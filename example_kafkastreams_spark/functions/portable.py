@@ -452,14 +452,6 @@ def l2sq(a: str, b: str, d: str) -> str:
     return fold(diffs, "CAST(0 AS DOUBLE)", "acc", "x", "acc + x", d)
 
 
-def arr_position(arr: str, elem: str, d: str) -> str:
-    """1-based index of the FIRST exact match — both engines compare
-    doubles bitwise here, so argmin ties resolve to the first (lowest)
-    index in both."""
-    fn = "array_position" if d == SPARK else "list_position"
-    return f"{fn}({arr}, {elem})"
-
-
 def vec_literal(values: list[float], d: str) -> str:
     """Exact double literals in both dialects — via STRING cast.
 

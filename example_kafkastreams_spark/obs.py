@@ -4,7 +4,8 @@
 module and nothing else reads the status store. It is read over the
 UI's REST API, so a session built with the UI off reads no counters:
 every reader returns ``None`` there. ``measuring_session`` builds the
-session the harness measures in.
+session the harness measures in. A streaming query's per-batch
+progress reports are read here too (``progress``).
 
 Counters (shuffle write and input records/bytes) are cumulative totals
 over completed stages; a region's counter is the difference of two
@@ -101,6 +102,20 @@ def stages(spark) -> list[dict] | None:
 def jobs(spark) -> list[dict] | None:
     """Every job in the status store (None with the UI off)."""
     return _get(spark, "/jobs")
+
+
+def progress(query) -> list[dict]:
+    """A streaming query's retained progress reports, oldest first, one
+    parsed dict per micro-batch (the ``StreamingQueryProgress`` JSON:
+    ``batchId``, ``numInputRows``, ``durationMs``, ``stateOperators``,
+    ``observedMetrics``, ...). The JSON form is the stable common
+    denominator: depending on the version ``recentProgress`` yields
+    progress objects (whose ``observedMetrics`` values are Rows) or
+    plain dicts."""
+    return [
+        json.loads(p.json) if hasattr(p, "json") else dict(p)
+        for p in query.recentProgress
+    ]
 
 
 def totals(stage_list: list[dict] | None) -> dict[str, int] | None:

@@ -56,6 +56,19 @@ def interval_left_join(
     as-of ``groupBy``/``max_by`` does; ``max_by`` ignores NULL-ordering
     rows whenever a real match exists).
 
+    ``bucket_seconds=0`` joins on the keys alone. Streams must pass 0:
+    the bucketized left join emits one NULL row per unmatched bucket,
+    which the batch as-of join collapses in its ``groupBy``, but an
+    append-mode stream would emit every one of them. On streams whose
+    inputs carry watermarks on ``left_ts``/``right_ts`` this is the
+    stream-stream interval LEFT OUTER join (J1/J2): the time bounds let
+    Spark evict join state once the watermark passes them, and an
+    unmatched left row emits with NULL right columns when it does
+    (Spark holds it exactly as the reference's window store holds
+    candidates until retention expires). The stream emits ALL matches
+    in the window (J1 multiplicity); the first-match pick of J2 is the
+    batch :func:`asof_lookback_left_join`, which the oracle checks.
+
     Returns (joined, left_aliased, right_aliased); columns are accessed
     via aliases ``l`` / ``r``.
     """

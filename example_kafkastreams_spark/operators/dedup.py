@@ -5,14 +5,16 @@ Reference semantics (SURVEY.md §2.4):
 - A1 — windowed dedup via first-wins reduce:
   ``groupByKey().windowedBy(TimeWindows.of(w)).reduce((a, _) => a)``
   (ClickstreamJoinExample.scala:243-257): per (key, tumbling window) keep
-  the FIRST record. Batch analog: :func:`dedup_tumbling_window`.
+  the FIRST record. Batch analog: :func:`dedup_tumbling_window`, which
+  is also the streaming operator on a watermarked stream.
 
 - A2 — emission-anchored dedup (Processor API,
   DeduplicationExample.scala:126-142): suppress a record iff a record
   with the same key was *emitted* within the trailing window; windows are
   anchored at the last emission, not bucket-aligned. Not expressible in
   single-pass SQL (state depends on prior emissions); batch analog via
-  per-key ordered scan in :func:`dedup_emission_anchored`.
+  per-key ordered scan in :func:`dedup_emission_anchored`; its fold,
+  :func:`emission_anchored_keep`, is the streaming operator's too.
 
 Scale notes: A1 is a hash aggregation with ``min_by`` over a struct —
 Catalyst plans partial (map-side) aggregation before the single shuffle
@@ -27,7 +29,7 @@ from __future__ import annotations
 
 from collections.abc import Iterable
 
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 
@@ -52,6 +54,14 @@ def dedup_tumbling_window(
 
     Output: keys + ``window_start`` + all original columns of the
     surviving row.
+
+    Streaming: the same operator on a stream that carries a watermark
+    on ``ts_col`` (``df.withWatermark(ts_col, delay)``; the reference's
+    2×window retention). An append-mode sink emits each window once
+    the watermark passes its end, and batch and stream agree
+    record-for-record PROVIDED ``order_cols`` includes a unique
+    tie-break column (e.g. ``event_id``): the keys are constant within
+    a group, so they cannot break ``ts`` ties.
     """
     order_cols = order_cols or []
     ordering = _ordering_struct([ts_col, *order_cols])
@@ -93,6 +103,32 @@ def dedup_exact(
     )
 
 
+def emission_anchored_keep(
+    ts_us: np.ndarray, last: int | None, win_us: int
+) -> tuple[list[int], int | None]:
+    """The A2 fold over ONE key's event-time-sorted µs stamps: a stamp
+    is kept iff it lies STRICTLY more than ``win_us`` after the last
+    kept one (a stamp exactly ``win_us`` after the anchor is
+    suppressed), and each kept stamp re-anchors. ``last`` is the anchor
+    carried in from earlier records of the key (``None``: no emission
+    yet). Returns (kept indices into ``ts_us``, the new anchor).
+
+    Emissions are found by binary-search jumps, not a per-row walk.
+    The batch scan (:func:`dedup_emission_anchored`) calls it once per
+    key segment of each Arrow chunk, the streaming operator
+    (``streaming.ops.dedup_emission_anchored_stream``) once per key and
+    micro-batch chunk; both carry ``last`` between calls.
+    """
+    n = len(ts_us)
+    i = 0 if last is None else int(np.searchsorted(ts_us, last + win_us, side="right"))
+    keep: list[int] = []
+    while i < n:
+        keep.append(i)
+        last = int(ts_us[i])
+        i = int(np.searchsorted(ts_us, last + win_us, side="right"))
+    return keep, last
+
+
 def dedup_emission_anchored(
     df: DataFrame,
     keys: list[str],
@@ -111,13 +147,11 @@ def dedup_emission_anchored(
     whole partition in a handful of Arrow batches instead of one tiny
     pandas DataFrame per group (per-group apply overhead dominates when
     groups are small — ~4× faster here). Group state (last emission)
-    carries across Arrow chunk boundaries. Emissions are found by
-    binary-search jumps, not a per-row walk. Oracle-checked against a
+    carries across Arrow chunk boundaries; each key segment runs
+    through :func:`emission_anchored_keep`. Oracle-checked against a
     recursive-CTE left fold (queries.q03) that walks the same
     (ts, payload) order with the same strict window boundary.
     """
-    import numpy as np
-
     schema = df.schema
     key_cols = list(keys)
     ts = ts_col
@@ -147,20 +181,8 @@ def dedup_emission_anchored(
             for s, e in zip(starts[:-1], starts[1:]):
                 gks = tuple(a[s] for a in karr)
                 last = carry_last if gks == carry_key else None
-                i = (
-                    s
-                    if last is None
-                    else s
-                    + int(
-                        np.searchsorted(t[s:e], last + win_us, side="right")
-                    )
-                )
-                while i < e:
-                    keep.append(i)
-                    last = int(t[i])
-                    i = s + int(
-                        np.searchsorted(t[s:e], last + win_us, side="right")
-                    )
+                kept, last = emission_anchored_keep(t[s:e], last, win_us)
+                keep.extend(s + i for i in kept)
                 carry_key, carry_last = gks, last
             if keep:
                 yield pdf.iloc[keep]

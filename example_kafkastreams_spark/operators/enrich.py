@@ -47,21 +47,24 @@ def split_clickstream(events: DataFrame) -> tuple[DataFrame, DataFrame]:
     return pv, ev
 
 
-def enrich_clickstream(
+def _enrich(
     events: DataFrame,
-    lookback_seconds: float = 24 * 3600.0,
-    dedup_window: str = "1 day",
+    lookback_seconds: float,
+    lookahead_seconds: float,
+    dedup_window: str,
+    pick: str,
+    rekey: bool,
 ) -> DataFrame:
-    """Flagship: enriched, deduplicated event stream.
-
-    Each non-view event is joined to the most recent page view by the
-    same user within ``lookback_seconds`` (NULL columns when none — the
-    left-outer EvPv shaping, ClickstreamJoinExample.scala:60,222-228),
-    then deduplicated first-wins per (user, event_type, matched pv,
-    tumbling window) — the A1 stage keyed like EvPvKey
-    (ClickstreamJoinExample.scala:58,237-257).
-    """
+    """The one body of the three enrichment topologies: split → as-of
+    join (``pick`` one pv within [ts − lookback, ts + lookahead]) → A1
+    dedup per (user, event_type, matched pv, tumbling window) → P4
+    projection. ``rekey`` adds the DSL path's explicit repartition
+    "topics" before each stateful stage."""
     pv, ev = split_clickstream(events)
+    if rekey:
+        # P1/P2 "selectKey" repartition topics
+        pv = pv.repartition("user_id", "pv_event_id")
+        ev = ev.repartition("user_id", "event_id")
     joined = asof_lookback_left_join(
         ev.withColumnRenamed("ts", "ev_ts"),
         pv,
@@ -71,9 +74,13 @@ def enrich_clickstream(
         left_ts="ev_ts",
         right_ts="pv_ts",
         lookback_seconds=lookback_seconds,
+        lookahead_seconds=lookahead_seconds,
         right_order=["pv_ts", "pv_event_id"],
-        pick="latest",
+        pick=pick,
     )
+    if rekey:
+        # P3 "selectKey" repartition topic before the dedup store
+        joined = joined.repartition("user_id", "event_type", "pv_event_id")
     deduped = dedup_tumbling_window(
         joined.withColumnRenamed("ev_ts", "ts"),
         keys=["user_id", "event_type", "pv_event_id"],
@@ -94,6 +101,25 @@ def enrich_clickstream(
     )
 
 
+def enrich_clickstream(
+    events: DataFrame,
+    lookback_seconds: float = 24 * 3600.0,
+    dedup_window: str = "1 day",
+) -> DataFrame:
+    """Flagship: enriched, deduplicated event stream.
+
+    Each non-view event is joined to the most recent page view by the
+    same user within ``lookback_seconds`` (NULL columns when none — the
+    left-outer EvPv shaping, ClickstreamJoinExample.scala:60,222-228),
+    then deduplicated first-wins per (user, event_type, matched pv,
+    tumbling window) — the A1 stage keyed like EvPvKey
+    (ClickstreamJoinExample.scala:58,237-257).
+    """
+    return _enrich(
+        events, lookback_seconds, 0.0, dedup_window, pick="latest", rekey=False
+    )
+
+
 def enrich_clickstream_dsl(
     events: DataFrame,
     window_seconds: float = 24 * 3600.0,
@@ -109,36 +135,9 @@ def enrich_clickstream_dsl(
     makes it deterministic: earliest (pv_ts, pv_event_id) wins. Same
     plan shapes as :func:`enrich_clickstream` — symmetric bounds only
     widen the bucket range."""
-    pv, ev = split_clickstream(events)
-    joined = asof_lookback_left_join(
-        ev.withColumnRenamed("ts", "ev_ts"),
-        pv,
-        on=["user_id"],
-        left_id="event_id",
-        right_payload=["pv_event_id", "pv_value", "pv_ts"],
-        left_ts="ev_ts",
-        right_ts="pv_ts",
-        lookback_seconds=window_seconds,
-        lookahead_seconds=window_seconds,
-        right_order=["pv_ts", "pv_event_id"],
-        pick="earliest",
-    )
-    deduped = dedup_tumbling_window(
-        joined.withColumnRenamed("ev_ts", "ts"),
-        keys=["user_id", "event_type", "pv_event_id"],
-        ts_col="ts",
-        window_duration=dedup_window,
-        order_cols=["event_id"],
-    )
-    return deduped.select(
-        "user_id",
-        "event_id",
-        "event_type",
-        F.col("value").alias("ev_value"),
-        "ts",
-        "pv_event_id",
-        "pv_value",
-        "pv_ts",
+    return _enrich(
+        events, window_seconds, window_seconds, dedup_window,
+        pick="earliest", rekey=False,
     )
 
 
@@ -159,38 +158,6 @@ def enrich_clickstream_naive(
     worse plan. Exists so tests/bench can demonstrate the translated
     claim: the declarative plan carries fewer exchanges and wins.
     """
-    pv, ev = split_clickstream(events)
-    # P1/P2 "selectKey" repartition topics
-    pv = pv.repartition("user_id", "pv_event_id")
-    ev = ev.repartition("user_id", "event_id")
-    joined = asof_lookback_left_join(
-        ev.withColumnRenamed("ts", "ev_ts"),
-        pv,
-        on=["user_id"],
-        left_id="event_id",
-        right_payload=["pv_event_id", "pv_value", "pv_ts"],
-        left_ts="ev_ts",
-        right_ts="pv_ts",
-        lookback_seconds=lookback_seconds,
-        right_order=["pv_ts", "pv_event_id"],
-        pick="latest",
-    )
-    # P3 "selectKey" repartition topic before the dedup store
-    joined = joined.repartition("user_id", "event_type", "pv_event_id")
-    deduped = dedup_tumbling_window(
-        joined.withColumnRenamed("ev_ts", "ts"),
-        keys=["user_id", "event_type", "pv_event_id"],
-        ts_col="ts",
-        window_duration=dedup_window,
-        order_cols=["event_id"],
-    )
-    return deduped.select(
-        "user_id",
-        "event_id",
-        "event_type",
-        F.col("value").alias("ev_value"),
-        "ts",
-        "pv_event_id",
-        "pv_value",
-        "pv_ts",
+    return _enrich(
+        events, lookback_seconds, 0.0, dedup_window, pick="latest", rekey=True
     )

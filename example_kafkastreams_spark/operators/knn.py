@@ -47,10 +47,6 @@ def hyperplanes(num_planes: int = 4, dim: int = 64, seed: int = ANN_SEED) -> lis
     ]
 
 
-def _cosine_expr(a: str, b: str) -> str:
-    return P.round_dbl(P.cosine(a, b, P.SPARK), 6, P.SPARK)
-
-
 def _pair_cosine_expr(a: str, b: str, n2a: str, n2b: str) -> str:
     """Per-pair cosine with PRE-COMPUTED squared norms.
 
@@ -1476,45 +1472,6 @@ def _py_cosine(a: list[float], b: list[float]) -> float:
     return dot / math.sqrt(n2a * n2b)
 
 
-def ivf_residuals(
-    emb: DataFrame,
-    cents: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, residual) — each vector minus its assigned coarse
-    centroid, the TRAINING SET for a residual PQ codebook
-    (``pq_codebook_trained(ivf_residuals(emb, cents))`` is the
-    production IVF-PQ training recipe; the deterministic-sample
-    fallback lives inside ``ivf_pq_index``). Map-side only: the same
-    argmax-cosine cell pick and ``zip_with`` subtraction the index
-    build splices, so training sees exactly the residuals the encoder
-    will quantize."""
-    cents_lit = (
-        "array("
-        + ", ".join(P.vec_literal(c, P.SPARK) for c in cents)
-        + ")"
-    )
-    cos_arr = "array(" + ", ".join(
-        P.cosine(vec_col, P.vec_literal(c, P.SPARK), P.SPARK)
-        for c in cents
-    ) + ")"
-    cell_expr = (
-        f"CAST(array_position({cos_arr}, array_max({cos_arr})) - 1 AS INT)"
-    )
-    return (
-        emb.select(F.col(id_col), F.col(vec_col))
-        .withColumn("__cell", F.expr(cell_expr))
-        .select(
-            id_col,
-            F.expr(
-                f"zip_with({vec_col}, element_at({cents_lit},"
-                f" __cell + 1), (x, y) -> CAST(x AS DOUBLE) - y)"
-            ).alias(vec_col),
-        )
-    )
-
-
 def ivf_pq_index(
     emb: DataFrame,
     num_centroids: int = 8,
@@ -1531,7 +1488,7 @@ def ivf_pq_index(
     centroids, residual codebook).
 
     Pass ``cents`` (``kmeans_train`` output) and/or ``codebook``
-    (``pq_codebook_trained`` over ``ivf_residuals``) to swap the
+    (``pq_codebook_trained`` output) to swap the
     deterministic samples for TRAINED parameters — the literal
     substitution both docstrings promise; the plan is identical.
 

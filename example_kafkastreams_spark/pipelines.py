@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .functions import portable as P
+from .obs import progress
 from .operators.cache import persist_tracked
 from .operators.components import connected_components
 from .operators.neardup import (
@@ -575,19 +576,14 @@ def ingest_batch_metrics(query) -> list[dict]:
          "gate_dropped",   # quality/language/decontam drops
          "dedup_dropped"}  # content-dedup (and neardup-gate) drops
 
-    sourced from ``query.recentProgress`` — the metrics Spark already
-    computed inline (no extra action touched the stream). Batches are
-    at-least-once like the data: a crash-replayed batch reports again
-    under the same batch_id; consumers keep the last report per id
-    (the dynamic-overwrite convention, applied to telemetry)."""
-    import json as _json
-
+    sourced from the query's progress reports (``obs.progress``) — the
+    metrics Spark already computed inline (no extra action touched the
+    stream). Batches are at-least-once like the data: a crash-replayed
+    batch reports again under the same batch_id; consumers keep the
+    last report per id (the dynamic-overwrite convention, applied to
+    telemetry)."""
     out = []
-    for p in query.recentProgress:
-        # recentProgress yields StreamingQueryProgress (observedMetrics
-        # values are Rows) or plain dicts depending on version — the
-        # JSON form is the stable common denominator
-        d = p if isinstance(p, dict) else _json.loads(p.json)
+    for d in progress(query):
         om = d.get("observedMetrics") or {}
         if "ingest_raw" not in om:
             continue  # no-data finalization batch

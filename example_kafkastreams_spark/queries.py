@@ -111,7 +111,7 @@ def q02_clickstream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rank each key's events (ts, then payload columns — mirroring the
 # operator's sortWithinPartitions order), then step rn→rn+1 carrying
 # (emitted, last_emit). Strict '>' on the window boundary matches the
-# operator's searchsorted(side="right") jump. This upgrades q03 from
+# operator's fold (operators.dedup.emission_anchored_keep). This upgrades q03 from
 # the r1 rows-only check to a full value-hash oracle.
 
 _A2_WIN_US = 24 * 3600 * 1_000_000

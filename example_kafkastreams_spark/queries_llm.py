@@ -226,19 +226,6 @@ _PAIRSIG_SQL = """
 """
 
 
-def _minhash_pairs_sql(threshold: float) -> str:
-    est = P.round_dbl(P.sig_agreement("sig_a", "sig_b", NUM_HASHES, D), 6, D)
-    return f"""
-    WITH {_sig_ctes(D)},
-    bands AS ({_bands_cte(D)}),
-    cand AS ({_CAND_SQL}),
-    pairsig AS ({_PAIRSIG_SQL})
-    SELECT * FROM (
-      SELECT doc_a, doc_b, {est} AS est_jaccard FROM pairsig
-    ) WHERE est_jaccard >= {threshold}
-    """
-
-
 def _bands_sig_cte(src: str, d: str) -> str:
     """Band rows KEEPING the signature column (the band-index layout)."""
     parts = [

@@ -36,6 +36,13 @@ _PHYS_MIB = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
 _DEFAULT_DRIVER_MEM = f"{min(16 * 1024, int(0.4 * _PHYS_MIB))}m"
 
 
+# The directory holding the package. Python workers unpickle UDFs by
+# importing the package, so they need it on their path whatever the
+# driver's working directory; the environment's own PYTHONPATH stays
+# behind it.
+_PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -67,6 +74,10 @@ def get_spark(
         # testdata parquet carries TIMESTAMP(NANOS) which the vectorized
         # reader rejects; read as long ns and convert in catalog.load_table
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.pathsep.join(filter(None, [_PKG_PARENT, os.environ.get("PYTHONPATH")])),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -1,13 +1,20 @@
 """Streaming operators (SURVEY.md §7 phase 4) — the reference's two
 topologies as Structured Streaming dataflows.
 
-| reference                                  | here                          |
-|--------------------------------------------|-------------------------------|
-| windowed dedup DSL (A1)                    | windowed_dedup_stream         |
-| emission-anchored dedup Processor API (A2) | dedup_emission_anchored_stream|
-| retention / store TTL                      | withWatermark                 |
-| windowed stream-stream left join (J1/J2)   | interval_left_join_stream     |
-| approx dedup-within-retention              | dedup_within_watermark        |
+A streaming query is the batch query run incrementally (Structured
+Streaming, SIGMOD 2018), so the reference's operators are written once,
+in ``operators/``, and run on a stream that carries a watermark:
+
+| reference                                  | here                                    |
+|--------------------------------------------|-----------------------------------------|
+| windowed dedup DSL (A1)                    | dedup.dedup_tumbling_window             |
+| emission-anchored dedup Processor API (A2) | dedup_emission_anchored_stream          |
+|                                            | (fold: dedup.emission_anchored_keep)    |
+| retention / store TTL                      | withWatermark                           |
+| windowed stream-stream left join (J1/J2)   | asof_join.interval_left_join            |
+|                                            | (``bucket_seconds=0``)                  |
+| approx dedup-within-retention              | dropDuplicatesWithinWatermark           |
+| both clickstream topologies (E2/E3)        | clickstream_enrich_stream               |
 
 State-bound notes (the 100 TB concern): every operator declares a
 watermark, which is exactly the reference's store retention
@@ -29,94 +36,8 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-
-def windowed_dedup_stream(
-    df: DataFrame,
-    keys: list[str],
-    ts_col: str = "ts",
-    window_duration: str = "5 seconds",
-    watermark_delay: str = "10 seconds",
-    order_cols: list[str] | None = None,
-) -> DataFrame:
-    """A1 streaming: first record per (keys, tumbling window).
-
-    ``min_by(struct(*), (ts, *order_cols))`` under a windowed
-    aggregate — the same ordering contract as the batch
-    ``dedup_tumbling_window``, so batch and stream agree
-    record-for-record once windows finalize PROVIDED ``order_cols``
-    includes a unique tie-break column (e.g. ``event_id``); the keys
-    are constant within a group, so they cannot break ``ts`` ties.
-    Watermark = the reference's 2×window retention.
-    """
-    payload = F.struct(*[F.col(c) for c in df.columns])
-    ordering = F.struct(F.col(ts_col), *[F.col(c) for c in (order_cols or [])])
-    return (
-        df.withWatermark(ts_col, watermark_delay)
-        .groupBy(F.window(F.col(ts_col), window_duration), *keys)
-        .agg(F.min_by(payload, ordering).alias("first_rec"))
-        .select(F.col("window.start").alias("window_start"), F.col("first_rec.*"))
-    )
-
-
-def dedup_within_watermark(
-    df: DataFrame,
-    keys: list[str],
-    ts_col: str = "ts",
-    watermark_delay: str = "15 seconds",
-    declare_watermark: bool = True,
-) -> DataFrame:
-    """Built-in approximation of A2: drop a record if the same key was
-    seen within the watermark horizon (state = emitted keys, evicted by
-    watermark — the reference's emit-branch-only ``put``,
-    DeduplicationExample.scala:137-140).
-
-    ``declare_watermark=False`` when ``df`` already carries one
-    (re-declaring downstream of a stateful operator is disallowed).
-    """
-    if declare_watermark:
-        df = df.withWatermark(ts_col, watermark_delay)
-    return df.dropDuplicatesWithinWatermark(keys)
-
-
-def interval_left_join_stream(
-    left: DataFrame,
-    right: DataFrame,
-    on: list[str],
-    left_ts: str = "ts",
-    right_ts: str = "pv_ts",
-    lookback_seconds: int = 15,
-    lookahead_seconds: int = 0,
-    watermark_delay: str = "30 seconds",
-) -> DataFrame:
-    """J1/J2 streaming: interval LEFT OUTER stream-stream join.
-
-    right matches left when keys agree and right_ts ∈ [left_ts −
-    lookback, left_ts + lookahead]. The default (lookahead=0) is the
-    Processor-API look-back semantics (J2); ``lookahead_seconds =
-    lookback_seconds`` gives the DSL's symmetric ``JoinWindows.of``
-    (J1, ClickstreamJoinExample.scala:230-231) — under which the
-    reference's out-of-order event (an ev arriving before its pv,
-    :144-149) DOES match, the documented behavioral difference between
-    the two topologies. Unmatched left rows emit with NULL right
-    columns once the watermark passes (Spark holds them exactly as the
-    reference's window store holds candidates until retention expires).
-
-    Note: emits ALL matches in the window (J1 multiplicity). The
-    reference's first-match-wins refinement (J2) is a per-left-row
-    ``min_by`` on top; in streaming that requires a stateful stage —
-    see the batch ``asof_lookback_left_join`` for the canonical
-    semantics the oracle checks.
-    """
-    lw = left.withWatermark(left_ts, watermark_delay)
-    rw = right.withWatermark(right_ts, watermark_delay)
-    key_cond = " AND ".join(f"l.{k} = r.{k}" for k in on)
-    cond = F.expr(
-        f"{key_cond} AND r.{right_ts} >= l.{left_ts}"
-        f" - INTERVAL {lookback_seconds} SECONDS"
-        f" AND r.{right_ts} <= l.{left_ts}"
-        f" + INTERVAL {lookahead_seconds} SECONDS"
-    )
-    return lw.alias("l").join(rw.alias("r"), cond, "leftOuter")
+from ..operators.asof_join import interval_left_join
+from ..operators.dedup import emission_anchored_keep
 
 
 def session_window_agg_stream(
@@ -199,8 +120,9 @@ def clickstream_enrich_stream(
     watermark_delay: str = "30 seconds",
 ) -> DataFrame:
     """The reference's clickstream topology end-to-end as one streaming
-    dataflow: windowed join → EvPv shaping with NULLs for unmatched
-    (P6) → dedup within the retention window (A2-approx via
+    dataflow: windowed join (the batch ``interval_left_join`` on
+    watermarked inputs) → EvPv shaping with NULLs for unmatched (P6) →
+    dedup within the retention window (A2-approx via
     dropDuplicatesWithinWatermark) → re-key to the client key (P4).
 
     ``lookahead_seconds`` selects which of the reference's two
@@ -216,11 +138,13 @@ def clickstream_enrich_stream(
     hand-builds by keeping both topics keyed by ClientKey (its entire
     10× optimization, README.md:12).
     """
-    joined = interval_left_join_stream(
-        ev, pv, on=on, left_ts=left_ts, right_ts=right_ts,
+    joined, _, _ = interval_left_join(
+        ev.withWatermark(left_ts, watermark_delay),
+        pv.withWatermark(right_ts, watermark_delay),
+        on=on, left_ts=left_ts, right_ts=right_ts,
         lookback_seconds=lookback_seconds,
         lookahead_seconds=lookahead_seconds,
-        watermark_delay=watermark_delay,
+        bucket_seconds=0,
     )
     ev_cols = [f"l.{c}" for c in ev.columns]
     # EvPv shape (ClickstreamJoinExample.scala:60): pv payload WITHOUT
@@ -232,87 +156,15 @@ def clickstream_enrich_stream(
         *[F.col(f"r.{c}").alias(c) for c in pv_payload],
     )
     dedup_keys = dedup_keys or [c for c in ev.columns if c != left_ts]
-    deduped = dedup_within_watermark(
-        shaped, keys=dedup_keys, ts_col=left_ts,
-        watermark_delay=watermark_delay, declare_watermark=False,
-    )
+    # A2-approx: drop a record whose key was seen within the watermark
+    # horizon (state = emitted keys, evicted by watermark — the
+    # reference's emit-branch-only ``put``,
+    # DeduplicationExample.scala:137-140); ``shaped`` already carries
+    # the left watermark
+    deduped = shaped.dropDuplicatesWithinWatermark(dedup_keys)
     # P4: client key first, everything else in declared order
     rest = [c for c in deduped.columns if c != client_key]
     return deduped.select(client_key, *rest)
-
-
-def dedup_emission_anchored_tws(
-    df: DataFrame,
-    keys: list[str],
-    ts_col: str = "ts",
-    window_seconds: float = 15.0,
-    watermark_delay: str = "30 seconds",
-) -> DataFrame:
-    """A2 exact semantics on Spark 4's ``transformWithStateInPandas``
-    (the successor Processor-API analog: explicit named state, timers,
-    RocksDB-backed).
-
-    Same contract as ``dedup_emission_anchored_stream`` — per key, emit
-    iff nothing was emitted in the trailing window; state is one long
-    (last emission epoch-µs). Requires the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass``) and a working
-    ``google.protobuf`` for the TWS driver worker — this sandbox ships
-    a broken protobuf, so the operator is exercised by a test that
-    SKIPS when the import fails (same honest gating as the multimodal
-    codecs); the applyInPandasWithState implementation above is the
-    tested-everywhere path.
-    """
-    from pyspark.sql.streaming import StatefulProcessor
-
-    win_us = int(window_seconds * 1_000_000)
-    col_order = [f.name for f in df.schema.fields]
-    out_schema = df.schema
-
-    class EmissionAnchoredDedup(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._last = handle.getValueState("last_emit_us", "last_emit_us LONG")
-
-        def handleInputRows(self, key, rows, timer_values):
-            import numpy as np
-
-            last = self._last.get()[0] if self._last.exists() else None
-            for pdf in rows:
-                pdf = pdf.sort_values(
-                    [ts_col] + [c for c in pdf.columns if c != ts_col],
-                    kind="mergesort",
-                )
-                ts_us = (
-                    pdf[ts_col].astype("datetime64[us]").astype("int64").to_numpy()
-                )
-                n = len(pdf)
-                i = (
-                    0
-                    if last is None
-                    else int(np.searchsorted(ts_us, last + win_us, side="right"))
-                )
-                keep = []
-                while i < n:
-                    keep.append(i)
-                    last = int(ts_us[i])
-                    i = int(np.searchsorted(ts_us, last + win_us, side="right"))
-                if keep:
-                    yield pdf.iloc[keep][col_order]
-            if last is not None:
-                self._last.update((last,))
-
-        def close(self) -> None:
-            pass
-
-    return (
-        df.withWatermark(ts_col, watermark_delay)
-        .groupBy(*keys)
-        .transformWithStateInPandas(
-            statefulProcessor=EmissionAnchoredDedup(),
-            outputStructType=out_schema,
-            outputMode="append",
-            timeMode="eventTime",
-        )
-    )
 
 
 def dedup_emission_anchored_stream(
@@ -334,7 +186,9 @@ def dedup_emission_anchored_stream(
     so no idle micro-batch spinning — a processing-time timeout would
     keep the query re-triggering forever). Records are processed in
     event-time order within each micro-batch (the reference processes
-    arrival order; its generator is in-order per key).
+    arrival order; its generator is in-order per key). Each chunk runs
+    through the batch operator's fold, ``emission_anchored_keep``, with
+    the key's state as the carried anchor.
     """
     out_schema = df.schema
     state_schema = T.StructType(
@@ -359,20 +213,7 @@ def dedup_emission_anchored_stream(
             ts_us = (
                 pdf[ts_col].astype("datetime64[us]").astype("int64").to_numpy()
             )
-            # jump between sparse emissions via binary search
-            import numpy as np
-
-            n = len(pdf)
-            i = (
-                0
-                if last is None
-                else int(np.searchsorted(ts_us, last + win_us, side="right"))
-            )
-            keep = []
-            while i < n:
-                keep.append(i)
-                last = int(ts_us[i])
-                i = int(np.searchsorted(ts_us, last + win_us, side="right"))
+            keep, last = emission_anchored_keep(ts_us, last, win_us)
             if keep:
                 yield pdf.iloc[keep][col_order]
         if last is not None:

@@ -985,8 +985,7 @@ def _progress_rows(q) -> list[dict]:
     streaming query's own progress telemetry — the driver-side numbers
     an operator on a real cluster would alarm on."""
     rows = []
-    for p in q.recentProgress:
-        d = json.loads(p.json) if hasattr(p, "json") else dict(p)
+    for d in obs.progress(q):
         if int(d.get("numInputRows", 0) or 0) <= 0:
             continue
         rows.append(

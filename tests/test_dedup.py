@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import numpy as np
 from pyspark.sql import Row
 
 from example_kafkastreams_spark.operators import (
@@ -12,6 +13,7 @@ from example_kafkastreams_spark.operators import (
     dedup_exact,
     dedup_tumbling_window,
 )
+from example_kafkastreams_spark.operators.dedup import emission_anchored_keep
 from tests.conftest import ORACLE
 from tests.oracle_utils import assert_matches_oracle
 
@@ -30,6 +32,26 @@ def _dedup_fixture(spark):
         for i, off in enumerate([0, 1, 3, 7])
     ] + [Row(k="001", v="v_99", ts=_ts(17))]
     return spark.createDataFrame(rows)
+
+
+def test_emission_anchored_keep_fold():
+    """The A2 fold both the batch scan and the stream call, without a
+    JVM: the golden 0/1/3/7/17 s sequence, a strict window boundary, an
+    anchor carried in from an earlier chunk, and empty input."""
+    win = 15_000_000
+    us = np.array([0, 1, 3, 7, 17], dtype=np.int64) * 1_000_000
+    assert emission_anchored_keep(us, None, win) == ([0, 4], 17_000_000)
+    # a stamp exactly win after the anchor is suppressed; 1 µs later emits
+    edge = np.array([0, win, win + 1], dtype=np.int64)
+    assert emission_anchored_keep(edge, None, win) == ([0, 2], win + 1)
+    # the anchor from an earlier chunk suppresses this chunk's head, and
+    # the chunk's first emission re-anchors from there
+    chunk = np.array([5, 10, 17, 20, 33], dtype=np.int64) * 1_000_000
+    assert emission_anchored_keep(chunk, 1_000_000, win) == ([2, 4], 33_000_000)
+    # empty input keeps the carried anchor (None stays None)
+    empty = np.array([], dtype=np.int64)
+    assert emission_anchored_keep(empty, 7, win) == ([], 7)
+    assert emission_anchored_keep(empty, None, win) == ([], None)
 
 
 def test_emission_anchored_golden(spark):

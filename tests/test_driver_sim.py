@@ -18,6 +18,8 @@ round end.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pandas as pd
 import pytest
 
@@ -45,7 +47,8 @@ def test_entry_module_contract():
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
+        "__spark_entry__",
+        Path(__file__).resolve().parent.parent / "__spark_entry__.py",
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

@@ -157,3 +157,19 @@ def test_py4j_calls_counts_every_thread_and_restores(monkeypatch):
     assert calls.n == workers * per_worker
     assert sum(calls.sites.values()) == calls.n
     assert GatewayClient.send_command is stub
+
+
+def test_progress_parses_every_report():
+    """``progress`` returns one dict per retained report, oldest first,
+    from progress objects (their JSON form) and plain dicts alike."""
+
+    class Report:
+        json = '{"batchId": 0, "numInputRows": 3}'
+
+    class Query:
+        recentProgress = [Report(), {"batchId": 1, "numInputRows": 0}]
+
+    assert obs.progress(Query()) == [
+        {"batchId": 0, "numInputRows": 3},
+        {"batchId": 1, "numInputRows": 0},
+    ]

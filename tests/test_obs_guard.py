@@ -3,8 +3,9 @@
 Every status-store read (the UI REST API) and every py4j round-trip
 counter in the harness goes through ``obs``. This scan fails if another
 copy comes back in ``bench.py``, ``scale_probe.py``, ``tools/`` or the
-package: a ``urlopen`` call, an ``/api/v1/`` path, or a
-``GatewayClient.send_command =`` monkeypatch. ``perfbench/`` is the
+package: a ``urlopen`` call, an ``/api/v1/`` path, a
+``GatewayClient.send_command =`` monkeypatch, or a streaming query's
+``recentProgress`` read outside ``obs.progress``. ``perfbench/`` is the
 benchmark harness and keeps its own reader, so it is not scanned.
 """
 
@@ -15,7 +16,9 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 OWNER = REPO / "example_kafkastreams_spark" / "obs.py"
-PATTERN = re.compile(r"urlopen|/api/v1/|GatewayClient\.send_command\s*=")
+PATTERN = re.compile(
+    r"urlopen|/api/v1/|GatewayClient\.send_command\s*=|recentProgress"
+)
 
 
 def _sources() -> list[Path]:
@@ -35,6 +38,6 @@ def test_status_store_and_py4j_reads_only_in_obs():
         if PATTERN.search(line)
     ]
     assert not offenders, (
-        "read the status store and count py4j calls through "
-        "example_kafkastreams_spark.obs:\n" + "\n".join(offenders)
+        "read the status store and streaming progress, and count py4j "
+        "calls, through example_kafkastreams_spark.obs:\n" + "\n".join(offenders)
     )

@@ -19,12 +19,9 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from example_kafkastreams_spark.streaming.ops import (
-    dedup_emission_anchored_stream,
-    dedup_within_watermark,
-    interval_left_join_stream,
-    windowed_dedup_stream,
-)
+from example_kafkastreams_spark.operators.asof_join import interval_left_join
+from example_kafkastreams_spark.operators.dedup import dedup_tumbling_window
+from example_kafkastreams_spark.streaming.ops import dedup_emission_anchored_stream
 from example_kafkastreams_spark.streaming.sources import (
     CLICK_EV_SCHEMA,
     CLICK_PV_SCHEMA,
@@ -147,52 +144,6 @@ def test_emission_anchored_stream_golden(spark, tmp_path):
     assert sorted(r.v for r in got.collect()) == ["v0", "v17"]
 
 
-def _tws_runtime_available() -> bool:
-    """transformWithStateInPandas spawns a protobuf-speaking Python
-    driver worker; this sandbox ships a broken google.protobuf, so the
-    TWS test gates on the import the worker performs."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _tws_runtime_available(),
-    reason="google.protobuf unusable: TWS driver worker cannot start",
-)
-def test_emission_anchored_tws_golden(spark, tmp_path):
-    """Spark 4 transformWithStateInPandas variant must reproduce the
-    exact A2 golden sequence (emitted at +0 and +17 only)."""
-    from example_kafkastreams_spark.streaming.ops import (
-        dedup_emission_anchored_tws,
-    )
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        src = str(tmp_path / "in_tws")
-        write_batches(
-            spark, src, DEDUP_SCHEMA, [DEDUP_GOLDEN[:2], DEDUP_GOLDEN[2:]]
-        )
-        stream = file_stream(spark, src, DEDUP_SCHEMA, max_files_per_trigger=1)
-        out = dedup_emission_anchored_tws(
-            stream, keys=["k"], ts_col="ts", window_seconds=15.0
-        )
-        got = run_to_memory(spark, out, "tws_golden", tmp_path)
-        assert sorted(r.v for r in got.collect()) == ["v0", "v17"]
-    finally:
-        if prev is not None:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-
-
 def test_dedup_within_watermark_golden(spark, tmp_path):
     """The built-in approximation's guarantee differs from A2: keys are
     suppressed while their state lives, and state is evicted only when
@@ -215,8 +166,8 @@ def test_dedup_within_watermark_golden(spark, tmp_path):
         ],
     )
     stream = file_stream(spark, src, DEDUP_SCHEMA, max_files_per_trigger=1)
-    out = dedup_within_watermark(
-        stream, keys=["k"], ts_col="ts", watermark_delay="15 seconds"
+    out = stream.withWatermark("ts", "15 seconds").dropDuplicatesWithinWatermark(
+        ["k"]
     )
     got = run_to_memory(spark, out, "ddww_golden", tmp_path)
     assert sorted(r.v for r in got.collect() if r.k == "001") == ["v0", "v110"]
@@ -230,9 +181,10 @@ def test_windowed_dedup_stream_golden(spark, tmp_path):
     src = str(tmp_path / "in_a1")
     write_batches(spark, src, DEDUP_SCHEMA, [DEDUP_GOLDEN, sentinel])
     stream = file_stream(spark, src, DEDUP_SCHEMA, max_files_per_trigger=1)
-    out = windowed_dedup_stream(
-        stream, keys=["k"], ts_col="ts",
-        window_duration="5 seconds", watermark_delay="10 seconds",
+    # the batch A1 operator on a watermarked stream
+    out = dedup_tumbling_window(
+        stream.withWatermark("ts", "10 seconds"), keys=["k"], ts_col="ts",
+        window_duration="5 seconds",
     )
     got = run_to_memory(spark, out, "a1_golden", tmp_path)
     vals = sorted(r.v for r in got.collect() if r.k == "001")
@@ -282,11 +234,14 @@ def test_interval_join_stream_golden(spark, tmp_path):
     write_batches(spark, ev_src, CLICK_EV_SCHEMA, [GOLDEN_EVS, SENTINEL_EV])
     pv = file_stream(spark, pv_src, CLICK_PV_SCHEMA, max_files_per_trigger=1)
     ev = file_stream(spark, ev_src, CLICK_EV_SCHEMA, max_files_per_trigger=1)
-    joined = interval_left_join_stream(
-        ev, pv, on=["client_id", "pv_id"],
-        left_ts="ts", right_ts="pv_ts",
-        lookback_seconds=15, watermark_delay="30 seconds",
-    ).select(
+    # the batch J1/J2 join, unbucketized, on watermarked streams
+    joined, _, _ = interval_left_join(
+        ev.withWatermark("ts", "30 seconds"),
+        pv.withWatermark("pv_ts", "30 seconds"),
+        on=["client_id", "pv_id"], left_ts="ts", right_ts="pv_ts",
+        lookback_seconds=15, bucket_seconds=0,
+    )
+    joined = joined.select(
         F.col("l.client_id").alias("client_id"),
         F.col("l.ev_id").alias("ev_id"),
         F.col("l.ev_value").alias("ev_value"),
@@ -327,12 +282,14 @@ def test_symmetric_vs_lookback_out_of_order(spark, tmp_path):
     def run(name, lookahead):
         pv = file_stream(spark, pv_src, CLICK_PV_SCHEMA, max_files_per_trigger=1)
         ev = file_stream(spark, ev_src, CLICK_EV_SCHEMA, max_files_per_trigger=1)
-        joined = interval_left_join_stream(
-            ev, pv, on=["client_id", "pv_id"],
-            left_ts="ts", right_ts="pv_ts",
+        joined, _, _ = interval_left_join(
+            ev.withWatermark("ts", "30 seconds"),
+            pv.withWatermark("pv_ts", "30 seconds"),
+            on=["client_id", "pv_id"], left_ts="ts", right_ts="pv_ts",
             lookback_seconds=15, lookahead_seconds=lookahead,
-            watermark_delay="30 seconds",
-        ).select(
+            bucket_seconds=0,
+        )
+        joined = joined.select(
             F.col("l.pv_id").alias("ev_pv"),
             F.col("l.ev_id").alias("ev_id"),
             F.col("l.ts").alias("ts"),
