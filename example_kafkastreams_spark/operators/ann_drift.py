@@ -52,6 +52,8 @@ import os
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..streaming.sinks import read_leaves
+
 _DRIFT = "drift"
 _STATS_SCHEMA = "cell int, n long, err_sum double"
 
@@ -213,15 +215,10 @@ def ann_index_drift(spark: SparkSession, path: str) -> dict:
         "imbalance": None,
         "per_run": {},
     }
-    drift_dir = os.path.join(path, _DRIFT)
-    # committed-leaf check (not bare isdir): crash debris must not
-    # break the report
-    if os.path.isdir(drift_dir) and any(
-        e.startswith("ingest_run=") for e in os.listdir(drift_dir)
-    ):
+    drift = read_leaves(spark, os.path.join(path, _DRIFT))
+    if drift is not None:
         rows = (
-            spark.read.parquet(drift_dir)
-            .groupBy("ingest_run", "cell")
+            drift.groupBy("ingest_run", "cell")
             .agg(F.sum("n").alias("n"), F.sum("err_sum").alias("e"))
             .collect()
         )

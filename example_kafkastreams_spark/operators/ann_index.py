@@ -30,6 +30,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..streaming.sinks import leaf_sink, read_leaves, write_leaf
 from .knn import (
     _empty_ann_result,
     exact_rerank,
@@ -199,17 +200,9 @@ def ann_index_read(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
     with open(os.path.join(path, _META)) as f:
         meta = json.load(f)
     enc = spark.read.parquet(os.path.join(path, _CODES))
-    delta_dir = os.path.join(path, _DELTA)
-    # committed-leaf check, not bare isdir: a crash during the first
-    # append can leave the delta dir holding only _temporary debris,
-    # and reading that raises instead of serving the base index
-    if os.path.isdir(delta_dir) and any(
-        e.startswith("ingest_run=") for e in os.listdir(delta_dir)
-    ):
-        cols = enc.columns
-        enc = enc.unionByName(
-            spark.read.parquet(delta_dir).select(*cols)
-        )
+    delta = read_leaves(spark, os.path.join(path, _DELTA))
+    if delta is not None:
+        enc = enc.unionByName(delta.select(*enc.columns))
     return enc, meta
 
 
@@ -236,35 +229,20 @@ def ann_index_append_sink(
     Encode dispatch matches the writers: ivfflat → spliced-literal
     cell tag; ivfpq → one-pass Arrow build; pq → Arrow above 32 codes,
     expression below. All map-side; the parquet write is the only data
-    movement. At-least-once safety: rows land under
-    ``codes_delta/ingest_run=<token>/ingest_batch=<id>/`` with dynamic
-    partition overwrite, so a crash-replayed batch rewrites its own
-    leaf byte-for-byte (the ``training_shards_sink`` discipline).
+    movement. Codes land as ``codes_delta`` leaves of
+    ``streaming.sinks``'s replay protocol.
 
     ``track_drift=True`` additionally records each batch's
     quantization stats (``ann_drift.quantization_stats`` — the raw
-    vectors are in hand exactly here, never again) under
-    ``drift/ingest_run/ingest_batch`` with the same replay-idempotent
-    layout, feeding ``ann_drift.ann_index_drift``'s rebuild
+    vectors are in hand exactly here, never again) as ``drift``
+    leaves, feeding ``ann_drift.ann_index_drift``'s rebuild
     decision."""
-    import hashlib
-    import uuid
-
     with open(os.path.join(path, _META)) as f:
         meta = json.load(f)
-    token = (
-        hashlib.md5(run_id.encode()).hexdigest()[:16]
-        if run_id
-        else uuid.uuid4().hex[:16]
-    )
     idc = meta["id_col"]
     vec_col = meta.get("vec_col", "embedding")
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            # an empty batch must not materialize a dataless delta
-            # tree (an empty parquet dir has no inferable schema)
-            return
+    def write(batch_df: DataFrame, token: str, batch_id: int) -> None:
         if meta["kind"] == "ivfflat":
             enc = ivf_flat_encode(batch_df, meta["centroids"], idc, vec_col)
         elif meta["kind"] == "ivfpq":
@@ -280,28 +258,18 @@ def ann_index_append_sink(
             enc = encode(batch_df, meta["codebook"], idc, vec_col)
         else:
             raise ValueError(f"unknown index kind {meta['kind']!r}")
-        (
-            enc.withColumn("ingest_run", F.lit(token))
-            .withColumn("ingest_batch", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_run", "ingest_batch")
-            .parquet(os.path.join(path, _DELTA))
-        )
+        write_leaf(enc, os.path.join(path, _DELTA), token, batch_id)
         if track_drift:
             from .ann_drift import quantization_stats
 
-            (
-                quantization_stats(batch_df, meta, vec_col)
-                .withColumn("ingest_run", F.lit(token))
-                .withColumn("ingest_batch", F.lit(int(batch_id)))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("ingest_run", "ingest_batch")
-                .parquet(os.path.join(path, "drift"))
+            write_leaf(
+                quantization_stats(batch_df, meta, vec_col),
+                os.path.join(path, "drift"),
+                token,
+                batch_id,
             )
 
-    return sink
+    return leaf_sink(path, write, run_id)
 
 
 def ann_index_compact(spark: SparkSession, path: str) -> None:
@@ -342,9 +310,7 @@ def ann_index_compact(spark: SparkSession, path: str) -> None:
         os.rename(codes_pre, codes)
     if not os.path.isdir(delta) and os.path.isdir(delta_pre):
         os.rename(delta_pre, delta)
-    if not os.path.isdir(delta) or not any(
-        e.startswith("ingest_run=") for e in os.listdir(delta)
-    ):
+    if read_leaves(spark, delta) is None:
         return  # nothing appended since the last compaction
     import shutil
 

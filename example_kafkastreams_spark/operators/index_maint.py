@@ -31,15 +31,15 @@ Two safety properties (ADVICE r7), both structural:
   batch (earlier batches have committed offsets). Folding that batch
   into ``__compacted__`` would put its admitted signatures where the
   sink's own-(run,batch) replay-exclusion filter
-  (pipelines.py, VERDICT r7) cannot remove them — the replayed batch
-  would self-collide and drop its own admitted docs. Compaction
+  (``streaming.sinks.read_leaves``) cannot remove them — the replayed
+  batch would self-collide and drop its own admitted docs. Compaction
   therefore HOLDS BACK each run's frontier (max ``ingest_batch``)
   partition, leaving it precisely excludable; it folds in on a later
   compaction once the run has moved past it (a dead run permanently
   costs one small partition). The synthetic ``__compacted__`` token
-  itself contains non-hex characters, so no real run token (16-hex
-  md5/uuid slice) can ever equal it and no replay filter can ever
-  exclude the compacted partition.
+  itself contains non-hex characters, so no real run token (16 hex
+  digits, ``streaming.sinks``) can ever equal it and no replay filter
+  can ever exclude the compacted partition.
 
 Applies to every index grain this engine persists:
 * digest index   — (doc_id, content_hash); key = content_hash
@@ -57,13 +57,12 @@ from urllib.parse import unquote, urlparse
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..sources.bucketed import read_bucketed, write_bucketed
+from ..streaming.sinks import INGEST_PARTS, write_leaf
 
 # Synthetic partition token for the compacted path artifact. A real
-# sink token is a 16-hex digest/uuid slice, so no batch's
+# sink token is 16 hex digits, so no batch's
 # own-partition replay-exclusion filter can ever match this value.
 COMPACTED_RUN = "__compacted__"
-
-_INGEST_PARTS = ("ingest_run", "ingest_batch")
 
 
 def _require_local(path: str, what: str) -> str:
@@ -149,7 +148,7 @@ def compact_index(
     if not os.path.isdir(local_index) and os.path.isdir(_old):
         os.rename(_old, local_index)
     df = spark.read.parquet(local_index)
-    had_parts = all(c in df.columns for c in _INGEST_PARTS)
+    had_parts = all(c in df.columns for c in INGEST_PARTS)
 
     if table_name is None:
         base = os.path.basename(os.path.normpath(local_index))
@@ -159,7 +158,7 @@ def compact_index(
 
     # catalog twin: canonical reps of EVERYTHING (frontier included —
     # delta joins must see every admitted key)
-    body = df.drop(*_INGEST_PARTS) if had_parts else df
+    body = df.drop(*INGEST_PARTS) if had_parts else df
     catalog = _canonical_reps(body, key_cols, id_col)
     if not had_parts:
         # the static branch materializes the catalog twice (table +
@@ -198,7 +197,7 @@ def compact_index(
     # overwrite target, and no replay can name it).
     pairs = [
         (r[0], r[1])
-        for r in df.select(*_INGEST_PARTS).distinct().collect()
+        for r in df.select(*INGEST_PARTS).distinct().collect()
     ]
     frontier: dict = {}
     for run, batch in pairs:
@@ -219,7 +218,7 @@ def compact_index(
         fold_cond = c if fold_cond is None else (fold_cond | c)
     folded = df if fold_cond is None else df.filter(~fold_cond)
     compacted = _canonical_reps(
-        folded.drop(*_INGEST_PARTS), key_cols, id_col
+        folded.drop(*INGEST_PARTS), key_cols, id_col
     )
     # num_buckets output files, clustered on the join keys (NOT one
     # file: a 100 TB corpus's digest index is itself large) — same
@@ -233,18 +232,7 @@ def compact_index(
     compacted.repartition(
         num_buckets, *[F.col(c) for c in bucket_cols]
     ).write.parquet(tmp)
-    (
-        spark.read.parquet(tmp)
-        .select(
-            "*",
-            F.lit(COMPACTED_RUN).alias("ingest_run"),
-            F.lit(0).alias("ingest_batch"),
-        )
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*_INGEST_PARTS)
-        .parquet(local_index)
-    )
+    write_leaf(spark.read.parquet(tmp), local_index, COMPACTED_RUN, 0)
     shutil.rmtree(tmp, ignore_errors=True)
     # prune AFTER the additive write: every folded row is now in
     # __compacted__, so losing a crash race here only leaves

@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions import portable as P
+from ..streaming.sinks import INGEST_PARTS, leaf_sink, read_leaves, write_leaf
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -49,21 +50,6 @@ _PDELTA = "postings_delta"
 # prunes it, nothing writes or reads it (stat increments derive from
 # the postings leaves themselves; see _delta_leaf_stats)
 _SDELTA = "stats_delta"
-
-
-def _has_delta_leaves(path: str) -> bool:
-    """True only when ``postings_delta`` holds at least one COMMITTED
-    leaf — a crash can leave the directory existing with only
-    ``_temporary`` debris, and reading that would raise (unable to
-    infer schema) instead of serving the base index."""
-    import os
-
-    pdelta = os.path.join(path, _PDELTA)
-    if not os.path.isdir(pdelta):
-        return False
-    return any(
-        e.startswith("ingest_run=") for e in os.listdir(pdelta)
-    )
 
 
 def _delta_leaf_stats(spark, path: str) -> list:
@@ -80,12 +66,11 @@ def _delta_leaf_stats(spark, path: str) -> list:
     small delta tree only, never the base index."""
     import os
 
-    if not _has_delta_leaves(path):
+    delta = read_leaves(spark, os.path.join(path, _PDELTA))
+    if delta is None:
         return []
-    pdelta = os.path.join(path, _PDELTA)
     return (
-        spark.read.parquet(pdelta)
-        .select("ingest_run", "ingest_batch", "doc_id", "dl")
+        delta.select("ingest_run", "ingest_batch", "doc_id", "dl")
         .dropDuplicates(["ingest_run", "ingest_batch", "doc_id"])
         .groupBy("ingest_run", "ingest_batch")
         .agg(
@@ -337,20 +322,19 @@ def bm25_index_query(
         }
     )
 
-    def pruned(dirname):
-        return (
-            spark.read.parquet(os.path.join(path, dirname))
-            .filter(F.col("__bucket").isin(buckets))
-            .filter(F.col("term").isin(terms))
+    def pruned(df):
+        return df.filter(F.col("__bucket").isin(buckets)).filter(
+            F.col("term").isin(terms)
         )
 
-    base = pruned("postings")
+    base = pruned(spark.read.parquet(os.path.join(path, "postings")))
+    delta = read_leaves(spark, os.path.join(path, _PDELTA))
     n_docs, tot_dl = st["n_docs"], st["tot_dl"]
     core = ["term", "doc_id", "dl", "tf"]
-    if _has_delta_leaves(path):
+    if delta is not None:
         cand = (
             base.select(*core)
-            .unionByName(pruned(_PDELTA).select(*core))
+            .unionByName(pruned(delta).select(*core))
             .dropDuplicates(["term", "doc_id"])
         )
         dfq = cand.groupBy("term").agg(F.count(F.lit(1)).alias("df_count"))
@@ -401,61 +385,38 @@ def bm25_index_append_sink(
     is EXACT: ``bm25_index_query`` recomputes df from the pruned
     base ∪ delta postings and adds the derived stat increments, so a
     serve after N appends equals a full rebuild bit-for-bit
-    (golden-pinned). At-least-once safety is the family discipline:
-    dynamic-overwrite (run, batch) leaves make a crash-replayed batch
-    rewrite itself, never double-append. Ingesting the SAME document
-    id twice across batches is the upstream dedup gate's job (as for
-    every index here); the serve-side (term, doc_id) dedup keeps even
-    that case from double-scoring."""
-    import hashlib
+    (golden-pinned). Postings land as leaves of ``streaming.sinks``'s
+    replay protocol. Ingesting the SAME document id twice across
+    batches is the upstream dedup gate's job (as for every index
+    here); the serve-side (term, doc_id) dedup keeps even that case
+    from double-scoring."""
     import json
     import os
-    import uuid
-
-    with open(os.path.join(path, "stats.json")) as f:
-        nb = json.load(f)["num_buckets"]
-    token = (
-        hashlib.md5(run_id.encode()).hexdigest()[:16]
-        if run_id
-        else uuid.uuid4().hex[:16]
-    )
 
     from .packing import shard_assignment
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # persist: foreachBatch re-executes the batch plan (source
-        # scan included) once per ACTION — the emptiness probe plus
-        # the write would tokenize the micro-batch twice and
-        # double-count source telemetry (numInputRows)
-        batch_df = batch_df.persist()
-        try:
-            if not batch_df.take(1):
-                return
-            tf, _ = _bm25_postings(batch_df, id_col, text_col)
-            rows = (
-                shard_assignment(tf, nb, key_col="term")
-                .drop("__shard_ord")
-                .withColumnRenamed("__shard", "__bucket")
-                .withColumns(
-                    {
-                        # schema-compatible with the base tree; serving
-                        # ignores stored df whenever a delta exists
-                        "df_count": F.lit(None).cast("long"),
-                        "ingest_run": F.lit(token),
-                        "ingest_batch": F.lit(int(batch_id)),
-                    }
-                )
-            )
-            (
-                rows.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("ingest_run", "ingest_batch", "__bucket")
-                .parquet(os.path.join(path, _PDELTA))
-            )
-        finally:
-            batch_df.unpersist()
+    with open(os.path.join(path, "stats.json")) as f:
+        nb = json.load(f)["num_buckets"]
 
-    return sink
+    def write(batch_df: DataFrame, token: str, batch_id: int) -> None:
+        tf, _ = _bm25_postings(batch_df, id_col, text_col)
+        rows = (
+            shard_assignment(tf, nb, key_col="term")
+            .drop("__shard_ord")
+            .withColumnRenamed("__shard", "__bucket")
+            # schema-compatible with the base tree; serving ignores
+            # stored df whenever a delta exists
+            .withColumn("df_count", F.lit(None).cast("long"))
+        )
+        write_leaf(
+            rows,
+            os.path.join(path, _PDELTA),
+            token,
+            batch_id,
+            (*INGEST_PARTS, "__bucket"),
+        )
+
+    return leaf_sink(path, write, run_id)
 
 
 def bm25_index_compact(spark, path: str) -> None:
@@ -501,44 +462,29 @@ def bm25_index_compact(spark, path: str) -> None:
     shutil.rmtree(tmp, ignore_errors=True)
     sdelta = os.path.join(local, _SDELTA)
     pdelta = os.path.join(local, _PDELTA)
-    if not _has_delta_leaves(local):
-        return
     with open(os.path.join(local, "stats.json")) as f:
         st = json.load(f)
     folded = dict(st.get("folded_runs", {}))
 
-    def leaf_dirs(root, run, batch):
-        return os.path.join(
-            root, f"ingest_run={run}", f"ingest_batch={batch}"
-        )
+    def prune(run, batch):
+        for root in (pdelta, sdelta):
+            shutil.rmtree(
+                os.path.join(
+                    root, f"ingest_run={run}", f"ingest_batch={batch}"
+                ),
+                ignore_errors=True,
+            )
 
-    def walk_leaves(root):
-        out = []
-        if not os.path.isdir(root):
-            return out
-        for rd in os.listdir(root):
-            if rd.startswith("ingest_run="):
-                run = rd.split("=", 1)[1]
-                for bd in os.listdir(os.path.join(root, rd)):
-                    if bd.startswith("ingest_batch="):
-                        out.append((run, int(bd.split("=", 1)[1])))
-        return out
-
-    # prune leaves a prior crash left marked-folded but unpruned —
-    # walked on DISK in both trees (a crash can leave either one)
-    for root in (pdelta, sdelta):
-        for run, batch in walk_leaves(root):
-            if batch <= folded.get(run, -1):
-                shutil.rmtree(
-                    leaf_dirs(root, run, batch), ignore_errors=True
-                )
     # stat increments derive from the postings leaves themselves —
-    # one source of truth with the serve path (_delta_leaf_stats)
-    leaves = [
-        (r["ingest_run"], int(r["ingest_batch"]), int(r["n_docs"]),
-         int(r["tot_dl"]))
-        for r in _delta_leaf_stats(spark, local)
-    ]
+    # one source of truth with the serve path (_delta_leaf_stats); a
+    # leaf a prior crash left marked-folded but unpruned is pruned now
+    leaves = []
+    for r in _delta_leaf_stats(spark, local):
+        run, batch = r["ingest_run"], int(r["ingest_batch"])
+        if batch <= folded.get(run, -1):
+            prune(run, batch)
+        else:
+            leaves.append((run, batch, int(r["n_docs"]), int(r["tot_dl"])))
     frontier: dict[str, int] = {}
     for run, batch, _, _ in leaves:
         frontier[run] = max(frontier.get(run, -1), batch)
@@ -596,8 +542,7 @@ def bm25_index_compact(spark, path: str) -> None:
         json.dump(st, f)
     os.replace(stats_tmp, os.path.join(local, "stats.json"))
     for run, batch, _, _ in foldable:
-        shutil.rmtree(leaf_dirs(pdelta, run, batch), ignore_errors=True)
-        shutil.rmtree(leaf_dirs(sdelta, run, batch), ignore_errors=True)
+        prune(run, batch)
 
 
 def term_overlap_top_docs(
@@ -1169,25 +1114,14 @@ def maxsim_index_query(
     with open(os.path.join(path, "meta.json")) as f:
         meta = json.load(f)
     ch = spark.read.parquet(os.path.join(path, "chunks"))
-    if _has_ms_delta_leaves(path):
-        delta = spark.read.parquet(os.path.join(path, _MSDELTA)).select(
-            "doc_id", "chunk_idx", "cv", "n2c"
-        )
-        ch = ch.unionByName(delta)
+    delta = read_leaves(spark, os.path.join(path, _MSDELTA))
+    if delta is not None:
+        ch = ch.unionByName(delta.select("doc_id", "chunk_idx", "cv", "n2c"))
     return _maxsim_score(
         ch, queries, top_k, meta["n_hashes"], meta["dim"]
     )
 
 _MSDELTA = "chunks_delta"
-
-
-def _has_ms_delta_leaves(path: str) -> bool:
-    import os
-
-    d = os.path.join(path, _MSDELTA)
-    if not os.path.isdir(d):
-        return False
-    return any(e.startswith("ingest_run=") for e in os.listdir(d))
 
 
 def maxsim_index_append_sink(
@@ -1208,51 +1142,27 @@ def maxsim_index_append_sink(
     MaxSim scoring has NO corpus-global statistics (each chunk scores
     independently), so incremental serving is exact by construction:
     a serve over base ∪ delta after N appends equals a full rebuild
-    bit-for-bit. At-least-once safety is the family discipline —
-    dynamic-overwrite (run, batch) leaves make a crash-replayed batch
-    rewrite itself, never double-append."""
-    import hashlib
+    bit-for-bit. Chunk vectors land as leaves of ``streaming.sinks``'s
+    replay protocol."""
     import json
     import os
-    import uuid
 
     with open(os.path.join(path, "meta.json")) as f:
         meta = json.load(f)
-    token = (
-        hashlib.md5(run_id.encode()).hexdigest()[:16]
-        if run_id
-        else uuid.uuid4().hex[:16]
-    )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()
-        try:
-            if not batch_df.take(1):
-                return
-            rows = maxsim_chunk_vectors(
-                batch_df,
-                dim=meta["dim"],
-                n_hashes=meta["n_hashes"],
-                chunk_size=meta["chunk_size"],
-                stride=meta["stride"],
-                id_col=id_col,
-                text_col=text_col,
-            ).withColumns(
-                {
-                    "ingest_run": F.lit(token),
-                    "ingest_batch": F.lit(int(batch_id)),
-                }
-            )
-            (
-                rows.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("ingest_run", "ingest_batch")
-                .parquet(os.path.join(path, _MSDELTA))
-            )
-        finally:
-            batch_df.unpersist()
+    def write(batch_df: DataFrame, token: str, batch_id: int) -> None:
+        rows = maxsim_chunk_vectors(
+            batch_df,
+            dim=meta["dim"],
+            n_hashes=meta["n_hashes"],
+            chunk_size=meta["chunk_size"],
+            stride=meta["stride"],
+            id_col=id_col,
+            text_col=text_col,
+        )
+        write_leaf(rows, os.path.join(path, _MSDELTA), token, batch_id)
 
-    return sink
+    return leaf_sink(path, write, run_id)
 
 
 def maxsim_index_compact(spark, path: str, num_buckets: int = 8):

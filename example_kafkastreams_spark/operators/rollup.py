@@ -25,7 +25,7 @@ Spark shape:
   shot, day-by-day, or micro-batch by micro-batch — finalizes to the
   IDENTICAL double bits as a full rebuild. That bit-equality is the
   correctness contract the q11 ``mv`` branch driver-checks against a
-  plain GROUP BY oracle, and what ``rollup_store_sink``'s golden test
+  plain GROUP BY oracle, and what ``rollup_fold``'s golden test
   pins across micro-batch schedules.
 
 Contract: deltas are INSERT-ONLY. min/max (and counts/sums without a
@@ -46,7 +46,7 @@ Reference parity: the reference's KTable materialization
 (``groupByKey().reduce(..., Materialized.as("deduplication_store"))``,
 ClickstreamJoinExample.scala:254-256) maintains exactly this running
 per-key aggregate state inside RocksDB; here the state is an explicit
-DataFrame the batch AND streaming (``rollup_store_sink``) paths share.
+DataFrame the batch AND streaming (``rollup_fold``) paths share.
 """
 
 from __future__ import annotations
@@ -58,8 +58,7 @@ __all__ = [
     "rollup_merge",
     "rollup_apply_delta",
     "rollup_finalize",
-    "rollup_store_read",
-    "rollup_store_sink",
+    "rollup_fold",
 ]
 
 _COUNT_COL = "n_rows"
@@ -175,78 +174,27 @@ def rollup_finalize(
     return state.select(*cols)
 
 
-def rollup_store_read(spark, path: str) -> DataFrame | None:
-    """Current stored rollup state (the meta-pointed snapshot), or
-    None for an empty store. Feed through ``rollup_finalize`` to
-    serve."""
-    import os
-
-    from .scd import _scd2_read_meta
-
-    meta = _scd2_read_meta(path)
-    if meta is None or meta.get("current") is None:
-        return None
-    return spark.read.parquet(os.path.join(path, meta["current"]))
-
-
-def rollup_store_sink(
-    spark,
-    path: str,
+def rollup_fold(
     keys: list[str],
     sums: dict[str, tuple[Column, int]] | None = None,
     mins: dict[str, Column] | None = None,
     maxs: dict[str, Column] | None = None,
-    run_id: str | None = None,
 ):
-    """foreachBatch sink maintaining a PERSISTENT rollup state — the
-    aggregate member of the ingest-sink family (Bloom = membership,
-    count-min = frequency, SCD2 = dimension history, this = metric
-    rollup). Long-sum partials are NOT idempotent under re-merge (a
-    replayed batch would double-count), so the sink uses the SCD2
-    store's versioned-snapshot + atomic-pointer discipline verbatim:
-    each applied batch writes a full state snapshot named by its
-    (run, batch) identity, then flips meta.json (tmp + os.replace).
-    Replays at/below the run's high-water mark are skipped; a crash
-    before the pointer flip leaves the old pointer valid and the
-    replay overwrites the orphan byte-identically (the batch's
-    partials are a pure function of its rows). The replay token
-    defaults to the store path so it survives driver restarts (the
-    ``cms_store_sink`` fix).
+    """Snapshot-store fold (``streaming.sinks.snapshot_sink``) keeping a
+    PERSISTENT rollup state — the aggregate member of the ingest-store
+    family (Bloom = membership, count-min = frequency, SCD2 =
+    dimension history, this = metric rollup). Long-sum partials are
+    not idempotent under re-merge; the store's replay skip keeps a
+    replayed batch from double-counting. Feed ``snapshot_read``
+    through ``rollup_finalize`` to serve.
 
     Scale: the snapshot is |groups| rows of keys + longs — at 100 TB
     the micro-batch aggregation dominates and is delta-sized; state
     I/O is rollup-sized, independent of history length.
     """
-    import hashlib
-    import os
-    import shutil
 
-    from .scd import _scd2_read_meta, _scd2_write_meta
-
-    token = hashlib.md5(
-        (run_id if run_id else path).encode()
-    ).hexdigest()[:16]
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        meta = _scd2_read_meta(path) or {"current": None, "applied": {}}
-        if int(batch_id) <= meta["applied"].get(token, -1):
-            return
+    def fold(batch_df: DataFrame, cur: DataFrame | None) -> DataFrame:
         new = rollup_build(batch_df, keys, sums, mins, maxs)
-        cur = (
-            None
-            if meta["current"] is None
-            else spark.read.parquet(os.path.join(path, meta["current"]))
-        )
-        merged = new if cur is None else rollup_merge(cur, new)
-        vdir = f"v_{token}_{int(batch_id)}"
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(path, vdir)
-        )
-        prev = meta["current"]
-        meta["current"] = vdir
-        meta["applied"][token] = int(batch_id)
-        _scd2_write_meta(path, meta)
-        if prev is not None and prev != vdir:
-            shutil.rmtree(os.path.join(path, prev), ignore_errors=True)
+        return (new if cur is None else rollup_merge(cur, new)).coalesce(1)
 
-    return sink
+    return fold

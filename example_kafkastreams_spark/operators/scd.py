@@ -115,115 +115,26 @@ def scd2_apply_delta(
     return untouched.unionByName(recut)
 
 
-def _scd2_meta_path(path: str) -> str:
-    import os
-
-    return os.path.join(path, "meta.json")
-
-
-def _scd2_read_meta(path: str) -> dict | None:
-    import json
-    import os
-
-    mp = _scd2_meta_path(path)
-    if not os.path.exists(mp):
-        return None
-    with open(mp) as f:
-        return json.load(f)
-
-
-def _scd2_write_meta(path: str, meta: dict) -> None:
-    """tmp + os.replace — the snapshot pointer flips atomically, so a
-    crash mid-write can never publish a torn meta.json (the same
-    discipline as the BM25/ANN index stats writes)."""
-    import json
-    import os
-
-    os.makedirs(path, exist_ok=True)
-    tmp = _scd2_meta_path(path) + ".__tmp__"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, _scd2_meta_path(path))
-
-
-def scd2_store_read(spark, path: str) -> DataFrame | None:
-    """Current dimension snapshot, or None for an empty store."""
-    import os
-
-    meta = _scd2_read_meta(path)
-    if meta is None:
-        return None
-    return spark.read.parquet(os.path.join(path, meta["current"]))
-
-
-def scd2_store_sink(
-    spark,
-    path: str,
-    key: str,
-    ts: str,
-    attrs: list[str],
-    tie: str,
-    run_id: str | None = None,
-):
-    """foreachBatch sink maintaining a PERSISTENT SCD2 dimension from
-    a streaming change log — the KTable-materialization twin: each
-    micro-batch folds in via ``scd2_apply_delta`` (delta-proportional;
-    untouched keys pass through).
-
-    SCD2 mutates history (the previously-current row's ``valid_to``
-    closes), so the store is a VERSIONED SNAPSHOT with an atomic
-    pointer, not partition appends: each applied batch writes a new
-    snapshot directory named by its (run, batch) identity, then flips
-    ``meta.json`` (tmp + os.replace). Crash anywhere leaves the old
-    pointer valid (an orphan directory is rewritten by the replay);
-    foreachBatch's at-least-once replays are exactly-once at the
-    storage layer — a batch id at or below the run's high-water mark
-    is skipped outright, and a re-run before the pointer flipped
-    overwrites its own orphan snapshot byte-for-byte. The dimension is
+def scd2_fold(key: str, ts: str, attrs: list[str], tie: str):
+    """Snapshot-store fold (``streaming.sinks.snapshot_sink``) keeping a
+    PERSISTENT SCD2 dimension from a streaming change log — the
+    KTable-materialization twin: each micro-batch folds in via
+    ``scd2_apply_delta`` (delta-proportional; untouched keys pass
+    through). SCD2 mutates history (the previously-current row's
+    ``valid_to`` closes), so the dimension lives in a versioned
+    snapshot store rather than partition appends. The dimension is
     keys×versions-sized (the broadcast side of every downstream
-    point-in-time join), so rewriting the snapshot per batch is the
-    standard warehouse MERGE cost, not a corpus rewrite.
+    point-in-time join), so rewriting it per batch is the standard
+    warehouse MERGE cost, not a corpus rewrite.
     """
-    import hashlib
-    import os
 
-    # Path-derived default token (same rationale as cms_store_sink): a
-    # restart's checkpoint-replayed batch is recognized and skipped
-    # outright. A fresh-uuid token would merely heal instead — the
-    # replayed apply is idempotent under drop_unchanged compaction —
-    # but recognizing it skips the recompute entirely.
-    token = hashlib.md5(
-        (run_id if run_id else path).encode()
-    ).hexdigest()[:16]
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        meta = _scd2_read_meta(path) or {"current": None, "applied": {}}
-        if int(batch_id) <= meta["applied"].get(token, -1):
-            return  # replay of an already-committed batch
+    def fold(batch_df: DataFrame, cur: DataFrame | None) -> DataFrame:
         delta = batch_df.select(key, ts, tie, *attrs)
-        cur = (
-            None
-            if meta["current"] is None
-            else spark.read.parquet(os.path.join(path, meta["current"]))
-        )
         if cur is None:
-            new = scd2_from_changelog(delta, key, ts, attrs, tie)
-        else:
-            new = scd2_apply_delta(cur, delta, key, ts, attrs, tie)
-        vdir = f"v_{token}_{int(batch_id)}"
-        new.write.mode("overwrite").parquet(os.path.join(path, vdir))
-        prev = meta["current"]
-        meta["current"] = vdir
-        meta["applied"][token] = int(batch_id)
-        _scd2_write_meta(path, meta)
-        # prune the superseded snapshot (post-commit: a crash here
-        # leaves one stale directory, never a broken pointer)
-        if prev is not None and prev != vdir:
-            import shutil
+            return scd2_from_changelog(delta, key, ts, attrs, tie)
+        return scd2_apply_delta(cur, delta, key, ts, attrs, tie)
 
-            shutil.rmtree(os.path.join(path, prev), ignore_errors=True)
-
-    return sink
+    return fold
 
 
 def scd2_point_in_time_join(

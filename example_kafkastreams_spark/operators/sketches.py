@@ -810,8 +810,7 @@ def bloom_member_sql(
 def bloom_merge(a: DataFrame, b: DataFrame) -> DataFrame:
     """Union two filters built with the same (m, k): word-wise bit OR.
     OR is idempotent and associative, so merges tree-aggregate across
-    any executor topology AND a replayed batch merged twice changes
-    nothing — the property the streaming maintenance sink leans on.
+    any executor topology and a value merged twice changes nothing.
     Merge-then-probe equals build-on-the-unioned-input exactly (both
     are the OR of the same per-value bit sets)."""
     return (
@@ -833,70 +832,22 @@ def cms_merge(a: DataFrame, b: DataFrame) -> DataFrame:
     )
 
 
-def bloom_store_read(spark, path: str) -> DataFrame | None:
-    """Current stored filter registers, or None for an empty store.
-    Falls back to the ``.__old__`` sibling when a crash landed between
-    the sink's two renames (the previous filter keeps serving; the
-    replayed batch re-merges idempotently and republishes)."""
-    import os
+def bloom_fold(value_col: str = "v", m_bits: int = BLOOM_M, k: int = BLOOM_K):
+    """Snapshot-store fold (``streaming.sinks.snapshot_sink``) keeping a
+    PERSISTENT Bloom filter — the membership-index member of the
+    ingest-maintenance family (digest index, band indexes, SRP index,
+    BM25 postings, ANN codes, SCD2 store… and the ~KB filter the
+    cheap map-side membership probes load). Each micro-batch's values
+    fold in via ``bloom_merge`` (word-wise OR); the snapshot is ≤ m/32
+    rows, a few KB."""
 
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        old = path + ".__old__"
-        if os.path.exists(os.path.join(old, "_SUCCESS")):
-            return spark.read.parquet(old)
-        return None
-    return spark.read.parquet(path)
-
-
-def bloom_store_sink(
-    spark,
-    path: str,
-    value_col: str = "v",
-    m_bits: int = BLOOM_M,
-    k: int = BLOOM_K,
-):
-    """foreachBatch sink maintaining a PERSISTENT Bloom filter from a
-    stream — the membership-index member of the ingest-maintenance
-    family (digest index, band indexes, SRP index, BM25 postings, ANN
-    codes, SCD2 store… and now the ~KB filter the cheap map-side
-    membership probes load).
-
-    Each micro-batch's values fold in via ``bloom_merge`` (word-wise
-    OR). OR is IDEMPOTENT, so foreachBatch's at-least-once replays
-    need no run/batch bookkeeping at all — re-merging a replayed
-    batch is a mathematical no-op, the strongest replay story any
-    sink here has. The store is rewritten per batch (≤ m/32 rows — a
-    few KB), staged to a sibling directory and atomically swapped via
-    os.replace-style directory rename so a crash mid-write leaves the
-    previous filter serving.
-    """
-    import os
-    import shutil
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
+    def fold(batch_df: DataFrame, cur: DataFrame | None) -> DataFrame:
         new = bloom_words(
             batch_df.select(F.col(value_col).alias("v")), "v", m_bits, k
         )
-        cur = bloom_store_read(spark, path)
-        merged = new if cur is None else bloom_merge(cur, new)
-        staged = path + ".__staging__"
-        shutil.rmtree(staged, ignore_errors=True)
-        merged.coalesce(1).write.mode("overwrite").parquet(staged)
-        old = path + ".__old__"
-        if os.path.exists(path):
-            # normal batch: retire the previous filter to .__old__
-            # (clearing any stale .__old__ only now that a current
-            # `path` exists to take its place as the fallback)
-            shutil.rmtree(old, ignore_errors=True)
-            os.rename(path, old)
-        # recovery batch (`path` absent, .__old__ serving): keep
-        # .__old__ readable until the publish rename lands — a crash
-        # anywhere in this window still leaves one _SUCCESS-bearing
-        # copy for bloom_store_read
-        os.rename(staged, path)
-        shutil.rmtree(old, ignore_errors=True)
+        return (new if cur is None else bloom_merge(cur, new)).coalesce(1)
 
-    return sink
+    return fold
 
 
 # --- Mergeable equi-width histogram — bounded-error quantiles ---------------
@@ -1018,82 +969,20 @@ def bloom_cardinality_estimate(
     return -(m / k) * math.log(1.0 - x / m)
 
 
-def cms_store_read(spark, path: str) -> DataFrame | None:
-    """Current stored count-min counters (the meta-pointed snapshot),
-    or None for an empty store."""
-    from .scd import _scd2_read_meta
+def cms_fold(value_col: str = "v", depth: int = 4, width: int = 256):
+    """Snapshot-store fold (``streaming.sinks.snapshot_sink``) keeping a
+    PERSISTENT count-min sketch — the frequency twin of ``bloom_fold``.
+    Counter sums are not idempotent, so the store's replay skip is
+    what keeps a replayed batch from double-counting; the snapshot is
+    ≤ depth×width counter rows."""
 
-    import os
-
-    meta = _scd2_read_meta(path)
-    if meta is None or meta.get("current") is None:
-        return None
-    return spark.read.parquet(os.path.join(path, meta["current"]))
-
-
-def cms_store_sink(
-    spark,
-    path: str,
-    value_col: str = "v",
-    depth: int = 4,
-    width: int = 256,
-    run_id: str | None = None,
-):
-    """foreachBatch sink maintaining a PERSISTENT count-min sketch —
-    the frequency twin of ``bloom_store_sink``. Counter SUMS are NOT
-    idempotent (a replayed batch would double-count), so unlike the
-    Bloom OR this sink uses the SCD2 store's VERSIONED-SNAPSHOT +
-    atomic-pointer discipline: each applied batch writes a snapshot
-    directory named by its (run, batch) identity and then flips
-    meta.json (tmp + os.replace). A replay at/below the run's
-    high-water mark is skipped; a crash BEFORE the pointer flip
-    leaves the old pointer valid, and the replay recomputes from the
-    POINTED-AT snapshot — overwriting the orphan byte-identically
-    (the batch's counters are a pure function of its rows) — so no
-    ordering of crash and replay can double-count.
-    """
-    import hashlib
-    import os
-    import shutil
-
-    from .scd import _scd2_read_meta, _scd2_write_meta
-
-    # The token must SURVIVE a driver restart, or the checkpoint's
-    # replayed micro-batch arrives under a fresh identity and the
-    # high-water mark can't recognize it — double-counting. Default
-    # to the store path itself (stable across restarts of the same
-    # query); pass run_id only to let distinct logical streams share
-    # one store.
-    token = hashlib.md5(
-        (run_id if run_id else path).encode()
-    ).hexdigest()[:16]
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        meta = _scd2_read_meta(path) or {"current": None, "applied": {}}
-        if int(batch_id) <= meta["applied"].get(token, -1):
-            return
+    def fold(batch_df: DataFrame, cur: DataFrame | None) -> DataFrame:
         new = count_min_counters(
-            batch_df.select(F.col(value_col).alias("v")), "v",
-            depth, width,
+            batch_df.select(F.col(value_col).alias("v")), "v", depth, width
         )
-        cur = (
-            None
-            if meta["current"] is None
-            else spark.read.parquet(os.path.join(path, meta["current"]))
-        )
-        merged = new if cur is None else cms_merge(cur, new)
-        vdir = f"v_{token}_{int(batch_id)}"
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(path, vdir)
-        )
-        prev = meta["current"]
-        meta["current"] = vdir
-        meta["applied"][token] = int(batch_id)
-        _scd2_write_meta(path, meta)
-        if prev is not None and prev != vdir:
-            shutil.rmtree(os.path.join(path, prev), ignore_errors=True)
+        return (new if cur is None else cms_merge(cur, new)).coalesce(1)
 
-    return sink
+    return fold
 
 
 # --- q-digest: mergeable deterministic quantile sketch ----------------------
@@ -1431,82 +1320,31 @@ def qdigest_quantiles_sql(
     return "\nUNION ALL\n".join(arms)
 
 
-def qdigest_store_read(spark, path: str) -> DataFrame | None:
-    """Current stored q-digest nodes (the meta-pointed snapshot), or
-    None for an empty store. ``n`` needs no bookkeeping: the build and
-    merge conserve total mass, so Σcnt over the snapshot IS n."""
-    import os
-
-    from .scd import _scd2_read_meta
-
-    meta = _scd2_read_meta(path)
-    if meta is None or meta.get("current") is None:
-        return None
-    return spark.read.parquet(os.path.join(path, meta["current"]))
-
-
-def qdigest_store_sink(
-    spark,
-    path: str,
-    value_col: str = "v",
-    k: int = QDIG_K,
-    levels: int = QDIG_LEVELS,
-    run_id: str | None = None,
+def qdigest_fold(
+    value_col: str = "v", k: int = QDIG_K, levels: int = QDIG_LEVELS
 ):
-    """Streaming q-digest maintenance — the QUANTILE member of the
-    ingest-sink family (Bloom = membership, count-min = frequency,
-    rollup = metrics, top-k = heavy keys, this = distribution shape).
-    Digest merges are not idempotent (counts sum), so it reuses the
-    SCD2/CMS versioned-snapshot + atomic-pointer discipline verbatim:
-    per-(run, batch) snapshot dirs, meta.json tmp+os.replace,
-    high-water-mark replay skip, path-derived default replay token
-    (survives driver restarts). Snapshot I/O is O(k log U) node rows —
-    independent of stream length; the per-batch build is delta-sized.
-    The merged digest re-runs the canonical percolation with the
-    combined n (Σcnt of both sides — mass is conserved, so no separate
-    count bookkeeping can drift)."""
-    import hashlib
-    import os
-    import shutil
+    """Snapshot-store fold (``streaming.sinks.snapshot_sink``) keeping a
+    PERSISTENT q-digest — the QUANTILE member of the ingest-store
+    family (Bloom = membership, count-min = frequency, rollup =
+    metrics, top-k = heavy keys, this = distribution shape). The
+    snapshot is O(k log U) node rows, independent of stream length;
+    the per-batch build is delta-sized. The merged digest re-runs the
+    canonical percolation with the combined n (Σcnt of both sides —
+    mass is conserved, so the snapshot needs no separate count)."""
 
-    from .scd import _scd2_read_meta, _scd2_write_meta
-
-    token = hashlib.md5(
-        (run_id if run_id else path).encode()
-    ).hexdigest()[:16]
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        meta = _scd2_read_meta(path) or {"current": None, "applied": {}}
-        if int(batch_id) <= meta["applied"].get(token, -1):
-            return
+    def fold(batch_df: DataFrame, cur: DataFrame | None) -> DataFrame:
         new, _n = qdigest_build(
             batch_df.select(F.col(value_col).alias("v")), "v",
             k=k, levels=levels,
         )
-        cur = (
-            None
-            if meta["current"] is None
-            else spark.read.parquet(os.path.join(path, meta["current"]))
-        )
         if cur is None:
-            merged = new
-        else:
-            n_total = int(
-                cur.agg(F.sum("cnt")).first()[0] or 0
-            ) + int(new.agg(F.sum("cnt")).first()[0] or 0)
-            merged = qdigest_merge(cur, new, n_total, k=k, levels=levels)
-        vdir = f"v_{token}_{int(batch_id)}"
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(path, vdir)
+            return new.coalesce(1)
+        n_total = int(cur.agg(F.sum("cnt")).first()[0] or 0) + int(
+            new.agg(F.sum("cnt")).first()[0] or 0
         )
-        prev = meta["current"]
-        meta["current"] = vdir
-        meta["applied"][token] = int(batch_id)
-        _scd2_write_meta(path, meta)
-        if prev is not None and prev != vdir:
-            shutil.rmtree(os.path.join(path, prev), ignore_errors=True)
+        return qdigest_merge(cur, new, n_total, k=k, levels=levels).coalesce(1)
 
-    return sink
+    return fold
 
 
 # --- AMS / tug-of-war F2 sketch (round 11) ---------------------------------

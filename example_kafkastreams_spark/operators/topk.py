@@ -18,7 +18,7 @@ group-limit BEFORE the exchange. On the bench events table both plans
 shuffle the identical 4,500 survivor rows (k·groups·partitions) out
 of 100k input — and the native plan is faster (no Arrow round-trip).
 q19's ``window`` branch is therefore the SERVING plan; this module is
-(a) the explicit, plan-pattern-independent form — ``topk_store_sink``
+(a) the explicit, plan-pattern-independent form — ``topk_fold``
 uses the local prune inside ``foreachBatch`` where no rank-filter
 pattern exists for Catalyst to recognize, and pre-join/pre-sink
 prunes generally don't match SPARK-37099's filter shape — and (b)
@@ -40,7 +40,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
-__all__ = ["topk_per_group", "topk_store_read", "topk_store_sink"]
+__all__ = ["topk_fold", "topk_per_group"]
 
 
 def topk_per_group(
@@ -84,75 +84,30 @@ def topk_per_group(
     )
 
 
-def topk_store_read(spark, path: str) -> DataFrame | None:
-    """Current stored per-group top-k rows (rank included), or None
-    for an empty store."""
-    import os
-
-    from .scd import _scd2_read_meta
-
-    meta = _scd2_read_meta(path)
-    if meta is None or meta.get("current") is None:
-        return None
-    return spark.read.parquet(os.path.join(path, meta["current"]))
-
-
-def topk_store_sink(
-    spark,
-    path: str,
+def topk_fold(
     group_cols: list[str],
     order_cols: list[tuple[str, bool]],
     k: int,
     rank_col: str = "rn",
-    run_id: str | None = None,
 ):
-    """foreachBatch sink maintaining PERSISTENT per-group top-k rows —
-    the leaderboard member of the ingest-sink family (next to Bloom /
-    count-min / SCD2 / rollup). Top-k is mergeable over insert-only
-    streams: topk(state ∪ topk(batch)) == topk(all rows so far), so
-    each micro-batch costs a batch-sized two-phase prune plus a merge
-    over ≤ k·groups state rows — never a re-rank of history. A
-    REPLAYED batch is not idempotent (its rows would enter the ranking
-    twice and evict legitimate rows), so the sink uses the
-    versioned-snapshot + atomic-pointer + high-water-mark discipline
-    verbatim (``rollup_store_sink``), replay token derived from the
-    store path by default.
+    """Snapshot-store fold (``streaming.sinks.snapshot_sink``) keeping
+    PERSISTENT per-group top-k rows (rank included) — the leaderboard
+    member of the ingest-store family (next to Bloom / count-min /
+    SCD2 / rollup). Top-k is mergeable over insert-only streams:
+    topk(state ∪ topk(batch)) == topk(all rows so far), so each
+    micro-batch costs a batch-sized two-phase prune plus a merge over
+    ≤ k·groups state rows — never a re-rank of history. A replayed
+    batch is not idempotent (its rows would enter the ranking twice
+    and evict legitimate rows); the store's replay skip covers it.
     """
-    import hashlib
-    import os
-    import shutil
 
-    from .scd import _scd2_read_meta, _scd2_write_meta
-
-    token = hashlib.md5(
-        (run_id if run_id else path).encode()
-    ).hexdigest()[:16]
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        meta = _scd2_read_meta(path) or {"current": None, "applied": {}}
-        if int(batch_id) <= meta["applied"].get(token, -1):
-            return
+    def fold(batch_df: DataFrame, cur: DataFrame | None) -> DataFrame:
         local = topk_per_group(
             batch_df, group_cols, order_cols, k, rank_col
         ).drop(rank_col)
-        cur = (
-            None
-            if meta["current"] is None
-            else spark.read.parquet(
-                os.path.join(path, meta["current"])
-            ).drop(rank_col)
-        )
-        pool = local if cur is None else cur.unionByName(local)
-        merged = topk_per_group(pool, group_cols, order_cols, k, rank_col)
-        vdir = f"v_{token}_{int(batch_id)}"
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(path, vdir)
-        )
-        prev = meta["current"]
-        meta["current"] = vdir
-        meta["applied"][token] = int(batch_id)
-        _scd2_write_meta(path, meta)
-        if prev is not None and prev != vdir:
-            shutil.rmtree(os.path.join(path, prev), ignore_errors=True)
+        pool = local if cur is None else cur.drop(rank_col).unionByName(local)
+        return topk_per_group(
+            pool, group_cols, order_cols, k, rank_col
+        ).coalesce(1)
 
-    return sink
+    return fold

@@ -42,6 +42,7 @@ from .operators.neardup import (
 )
 from .operators.text_chunks import chunk_documents
 from .queries_llm import _quality_exprs
+from .streaming.sinks import INGEST_PARTS, leaf_sink, read_leaves, write_leaf
 
 
 def corpus_stages(
@@ -398,20 +399,6 @@ def build_pretrain_corpus(docs: DataFrame, **kwargs) -> DataFrame:
 
 
 
-def _has_committed_leaves(path: str) -> bool:
-    """True only when a sink-maintained index tree holds at least one
-    COMMITTED ``ingest_run=`` leaf — a crash during the very first
-    batch can leave the directory existing with only ``_temporary``
-    debris, and a bare-isdir read would raise (unable to infer
-    schema) instead of treating the index as empty (the ann_index /
-    BM25 guard, shared by every ingest family here)."""
-    import os
-
-    return os.path.isdir(path) and any(
-        e.startswith("ingest_run=") for e in os.listdir(path)
-    )
-
-
 def corpus_filter_stream(
     docs: DataFrame,
     min_quality: float = 0.25,
@@ -733,52 +720,34 @@ def training_shards_sink(
     lands in the same shard whether it was written by the nightly
     batch job, this stream, or a crash-replayed micro-batch.
 
-    Layout: ``__shard=k/ingest_run=<token>/ingest_batch=<id>/`` with
-    dynamic partition OVERWRITE — foreachBatch is at-least-once, so a
-    replayed batch rewrites its own (run, batch) leaves byte-for-byte
-    instead of double-appending (the ``corpus_ingest_with_index`` sink
-    discipline). Within a leaf, rows sort by the full md5 (the same
-    seedless decorrelated order). A data loader reads ``__shard=k/``
-    recursively; distinct runs get distinct tokens so restarts never
-    clobber prior data. Pass ``run_id=<checkpoint path>`` so the token
-    survives a query restart from the same checkpoint.
+    Layout: ``__shard=k/ingest_run=<token>/ingest_batch=<id>/``, the
+    leaf layout of ``streaming.sinks``. Within a leaf, rows sort by the
+    full md5 (the same seedless decorrelated order). A data loader
+    reads ``__shard=k/`` recursively.
 
     Wire as::
 
         packs = corpus_ingest_packs_stream(docs, budget=4096)
         q = packs.writeStream.foreachBatch(
-            training_shards_sink(out, num_shards=64, run_id=ckpt)
+            training_shards_sink(out, num_shards=64)
         ).option("checkpointLocation", ckpt).start()
     """
-    import hashlib
-    import uuid
 
-    token = (
-        hashlib.md5(run_id.encode()).hexdigest()[:16]
-        if run_id
-        else uuid.uuid4().hex[:16]
-    )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
+    def write(batch_df: DataFrame, token: str, batch_id: int) -> None:
         from .operators.packing import shard_assignment
 
-        keyed = shard_assignment(batch_df, num_shards, key_col).withColumns(
-            {
-                "ingest_run": F.lit(token),
-                "ingest_batch": F.lit(int(batch_id)),
-            }
-        )
-        (
-            keyed.repartition(num_shards, F.col("__shard"))
+        write_leaf(
+            shard_assignment(batch_df, num_shards, key_col)
+            .repartition(num_shards, F.col("__shard"))
             .sortWithinPartitions("__shard", "__shard_ord")
-            .drop("__shard_ord")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__shard", "ingest_run", "ingest_batch")
-            .parquet(path)
+            .drop("__shard_ord"),
+            path,
+            token,
+            batch_id,
+            ("__shard", *INGEST_PARTS),
         )
 
-    return sink
+    return leaf_sink(path, write, run_id)
 
 
 def compact_training_shards(
@@ -959,64 +928,30 @@ def corpus_ingest_with_index(
     carries digests, never text; the per-batch index append is the
     same digest-only layout a nightly batch job would write.
 
-    Exactly-once contract: foreachBatch is at-least-once — after a
-    crash, Structured Streaming re-runs the last batch id. The sink is
-    therefore IDEMPOTENT per (run, batch_id): both outputs are written
-    as dynamic partition OVERWRITES into ``ingest_run=<run>/
-    ingest_batch=<batch_id>`` directories, so a replayed batch rewrites
-    its own partition byte-for-byte instead of double-appending, and a
-    failure between the two writes is repaired when the replay
-    overwrites both. Pass ``make_sink(out_path, run_id=<checkpoint
-    path>)`` so the run token survives a query RESTART from the same
-    checkpoint (the default is a fresh uuid, which is idempotent
-    within one ``start()`` but would treat a restarted query as a new
-    run); distinct runs (fresh checkpoints) get distinct tokens, so
-    batch ids restarting at 0 never clobber a previous run's data.
+    Both outputs are leaves of ``streaming.sinks``'s replay protocol
+    (a failure between the two writes is repaired when the replay
+    rewrites both).
     """
-    import hashlib
-    import os
-    import uuid
-
     out = corpus_ingest_stream(
         docs, ts_col=ts_col, **ingest_kwargs
     ).withColumn("content_hash", F.md5(F.col(text_col)))
-    if _has_committed_leaves(index_path):
-        idx = spark.read.parquet(index_path).select("content_hash")
-        out = out.join(idx, "content_hash", "left_anti")
+    idx = read_leaves(spark, index_path)
+    if idx is not None:
+        out = out.join(idx.select("content_hash"), "content_hash", "left_anti")
 
     def make_sink(out_path: str, run_id: str | None = None):
-        token = (
-            hashlib.md5(run_id.encode()).hexdigest()[:16]
-            if run_id
-            else uuid.uuid4().hex[:16]
-        )
+        def write(batch_df: DataFrame, token: str, batch_id: int) -> None:
+            write_leaf(
+                batch_df.drop("content_hash"), out_path, token, batch_id
+            )
+            write_leaf(
+                batch_df.select(id_col, "content_hash"),
+                index_path,
+                token,
+                batch_id,
+            )
 
-        def sink(batch_df, batch_id: int):
-            batch_df = batch_df.withColumn(
-                "ingest_run", F.lit(token)
-            ).withColumn("ingest_batch", F.lit(int(batch_id)))
-            batch_df.persist()
-            try:
-                (
-                    batch_df.drop("content_hash")
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("ingest_run", "ingest_batch")
-                    .parquet(out_path)
-                )
-                (
-                    batch_df.select(
-                        id_col, "content_hash", "ingest_run", "ingest_batch"
-                    )
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("ingest_run", "ingest_batch")
-                    .parquet(index_path)
-                )
-            finally:
-                batch_df.unpersist()
-
-        return sink
+        return leaf_sink(out_path, write, run_id)
 
     return out, make_sink
 
@@ -1068,11 +1003,13 @@ def corpus_ingest_with_neardup_index(
        their docs collide with the same index entries that poisoned
        them, deterministically.
 
-    Both writes use the (ingest_run, ingest_batch) dynamic-partition
-    overwrite of ``corpus_ingest_with_index`` — idempotent under
-    foreachBatch replay, crash between the two writes repaired by the
-    replay; pass ``run_id`` (e.g. the checkpoint path) for
-    restart-stable tokens.
+    Both writes are leaves of ``streaming.sinks``'s replay protocol,
+    and the index read excludes the batch's own leaf: a replay (crash
+    after the index write, before the offset commit) would otherwise
+    re-read this batch's own admitted sigs under the same doc ids,
+    violating the disjoint-id assumption of
+    ``admit_against_band_index`` — clean multi-sig components would
+    self-collide and drop.
 
     The index is re-read per batch (not once at query start like the
     digest version) because within-run cross-BATCH near-dups are only
@@ -1081,75 +1018,28 @@ def corpus_ingest_with_neardup_index(
     reps: compact, and bucketed storage would drop its exchange
     (tests/test_incremental_neardup.py).
     """
-    import hashlib
-    import os
-    import uuid
-
+    from .operators.cache import release_sketch_caches
     from .operators.neardup import admit_against_band_index
 
     out = corpus_ingest_stream(docs, ts_col=ts_col, **ingest_kwargs)
 
     def make_sink(out_path: str, run_id: str | None = None):
-        token = (
-            hashlib.md5(run_id.encode()).hexdigest()[:16]
-            if run_id
-            else uuid.uuid4().hex[:16]
-        )
-
-        def sink(batch_df, batch_id: int):
-            batch_df = batch_df.persist()
+        def write(batch_df: DataFrame, token: str, batch_id: int) -> None:
             try:
-                idx = (
-                    spark.read.parquet(index_path)
-                    if _has_committed_leaves(index_path)
-                    else None
-                )
-                if idx is not None:
-                    # Replay safety: a foreachBatch replay (crash after
-                    # the index write, before the offset commit) would
-                    # otherwise re-read this batch's OWN admitted sigs
-                    # under the same doc ids, violating the disjoint-id
-                    # assumption of admit_against_band_index — clean
-                    # multi-sig components would self-collide and drop.
-                    # (ingest_run, ingest_batch) are partition columns,
-                    # so this prunes rather than scans.
-                    idx = idx.filter(
-                        ~(
-                            (F.col("ingest_run") == token)
-                            & (F.col("ingest_batch") == int(batch_id))
-                        )
-                    )
                 survivors, admitted_sigs = admit_against_band_index(
-                    batch_df, idx, id_col=id_col, text_col=text_col,
+                    batch_df,
+                    read_leaves(spark, index_path, (token, batch_id)),
+                    id_col=id_col, text_col=text_col,
                     num_hashes=num_hashes, bands=bands,
                     shingle_n=shingle_n, threshold=threshold,
                     sketch=sketch, max_hamming=max_hamming,
                 )
-                meta = [
-                    F.lit(token).alias("ingest_run"),
-                    F.lit(int(batch_id)).alias("ingest_batch"),
-                ]
-                (
-                    survivors.select("*", *meta)
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("ingest_run", "ingest_batch")
-                    .parquet(out_path)
-                )
-                (
-                    admitted_sigs.select("*", *meta)
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("ingest_run", "ingest_batch")
-                    .parquet(index_path)
-                )
+                write_leaf(survivors, out_path, token, batch_id)
+                write_leaf(admitted_sigs, index_path, token, batch_id)
             finally:
-                batch_df.unpersist()
-                from .operators.cache import release_sketch_caches
-
                 release_sketch_caches()
 
-        return sink
+        return leaf_sink(out_path, write, run_id)
 
     return out, make_sink
 
@@ -1184,19 +1074,15 @@ def embedding_ingest_with_srp_index(
 
     Sink side (returned ``make_sink``; all batch Spark — the
     collide-then-verify + component loop is not expressible as a
-    streaming join): per batch, the stored index minus the batch's OWN
-    ``(ingest_run, ingest_batch)`` partition (foreachBatch replay
-    exclusion — partition pruning, not a scan) gates the batch through
-    ``admit_against_srp_index``; survivors and the index delta (rep
-    id, vector, bucket) land via the same idempotent dynamic-partition
-    overwrite as the text sinks. Per-batch cost is batch-proportional:
-    the corpus side is the distinct-vector rep table joined per
-    bucket (SCALE_PROBE ``incremental_srp_delta``).
+    streaming join): per batch, the stored index minus the batch's own
+    leaf (the replay exclusion of ``streaming.sinks``) gates the batch
+    through ``admit_against_srp_index``; survivors and the index delta
+    (rep id, vector, bucket) land as leaves, as in the text sinks.
+    Per-batch cost is batch-proportional: the corpus side is the
+    distinct-vector rep table joined per bucket (SCALE_PROBE
+    ``incremental_srp_delta``).
     """
-    import hashlib
-    import os
-    import uuid
-
+    from .operators.cache import release_sketch_caches
     from .operators.knn import admit_against_srp_index
 
     if observe:
@@ -1219,30 +1105,11 @@ def embedding_ingest_with_srp_index(
         )
 
     def make_sink(out_path: str, run_id: str | None = None):
-        token = (
-            hashlib.md5(run_id.encode()).hexdigest()[:16]
-            if run_id
-            else uuid.uuid4().hex[:16]
-        )
-
-        def sink(batch_df, batch_id: int):
-            batch_df = batch_df.persist()
+        def write(batch_df: DataFrame, token: str, batch_id: int) -> None:
             try:
-                idx = (
-                    spark.read.parquet(index_path)
-                    if _has_committed_leaves(index_path)
-                    else None
-                )
-                if idx is not None:
-                    idx = idx.filter(
-                        ~(
-                            (F.col("ingest_run") == token)
-                            & (F.col("ingest_batch") == int(batch_id))
-                        )
-                    )
                 survivors, idx_delta = admit_against_srp_index(
                     batch_df.select(id_col, vec_col),
-                    idx,
+                    read_leaves(spark, index_path, (token, batch_id)),
                     threshold=threshold,
                     planes=planes,
                     id_col=id_col,
@@ -1253,31 +1120,12 @@ def embedding_ingest_with_srp_index(
                 survivors = batch_df.join(
                     survivors.select(id_col), id_col, "left_semi"
                 )
-                meta = [
-                    F.lit(token).alias("ingest_run"),
-                    F.lit(int(batch_id)).alias("ingest_batch"),
-                ]
-                (
-                    survivors.select("*", *meta)
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("ingest_run", "ingest_batch")
-                    .parquet(out_path)
-                )
-                (
-                    idx_delta.select("*", *meta)
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("ingest_run", "ingest_batch")
-                    .parquet(index_path)
-                )
+                write_leaf(survivors, out_path, token, batch_id)
+                write_leaf(idx_delta, index_path, token, batch_id)
             finally:
-                batch_df.unpersist()
-                from .operators.cache import release_sketch_caches
-
                 release_sketch_caches()
 
-        return sink
+        return leaf_sink(out_path, write, run_id)
 
     return out, make_sink
 

@@ -1238,15 +1238,14 @@ def probe_streaming(spark, base: str, n_batches: int = 6) -> dict:
     # retained versions (dimension-sized, grows only with CHANGES, and
     # this feed alternates each key between two values so versions =
     # keys × batches seen, never row count).
-    from example_kafkastreams_spark.operators.scd import (
-        scd2_store_read,
-        scd2_store_sink,
-    )
+    from example_kafkastreams_spark.operators.scd import scd2_fold
     from example_kafkastreams_spark.operators.sketches import (
-        bloom_store_read,
-        bloom_store_sink,
-        cms_store_read,
-        cms_store_sink,
+        bloom_fold,
+        cms_fold,
+    )
+    from example_kafkastreams_spark.streaming.sinks import (
+        snapshot_read,
+        snapshot_sink,
     )
 
     val_schema = T.StructType(
@@ -1274,19 +1273,10 @@ def probe_streaming(spark, base: str, n_batches: int = 6) -> dict:
             ]
             for b in range(n_batches)
         ]
-        for fam, mk_sink, read_store, bound in (
-            (
-                "bloom_sink",
-                lambda p: bloom_store_sink(spark, p),
-                bloom_store_read,
-                256,  # m/32 words at the default BLOOM_M=8192
-            ),
-            (
-                "cms_sink",
-                lambda p: cms_store_sink(spark, p),
-                cms_store_read,
-                4 * 256,  # depth x width counters
-            ),
+        for fam, fold, bound in (
+            # m/32 words at the default BLOOM_M=8192
+            ("bloom_sink", bloom_fold(), 256),
+            ("cms_sink", cms_fold(), 4 * 256),  # depth x width counters
         ):
             src = os.path.join(work, f"{fam}_src_{label}")
             stage_replayable_batches(spark, src, val_schema, vbatches)
@@ -1296,9 +1286,9 @@ def probe_streaming(spark, base: str, n_batches: int = 6) -> dict:
             store = os.path.join(work, f"{fam}_store_{label}")
             summary = drive(
                 stream.select("v"), f"{fam}_{label}",
-                sink_fn=mk_sink(store),
+                sink_fn=snapshot_sink(spark, store, fold),
             )
-            summary["store_rows"] = read_store(spark, store).count()
+            summary["store_rows"] = snapshot_read(spark, store).count()
             summary["store_rows_bound"] = bound
             out[f"{fam}_{label}"] = summary
 
@@ -1325,12 +1315,13 @@ def probe_streaming(spark, base: str, n_batches: int = 6) -> dict:
         store = os.path.join(work, f"scd2_store_{label}")
         summary = drive(
             stream, f"scd2_{label}",
-            sink_fn=scd2_store_sink(
-                spark, store, key="user_id", ts="ts",
-                attrs=["tier"], tie="event_id",
+            sink_fn=snapshot_sink(
+                spark, store, scd2_fold(
+                    key="user_id", ts="ts", attrs=["tier"], tie="event_id"
+                ),
             ),
         )
-        summary["store_rows"] = scd2_store_read(spark, store).count()
+        summary["store_rows"] = snapshot_read(spark, store).count()
         summary["store_rows_bound"] = bsz * n_batches
         out[f"scd2_sink_{label}"] = summary
 
@@ -1338,14 +1329,8 @@ def probe_streaming(spark, base: str, n_batches: int = 6) -> dict:
         # |groups| rows of keys + longs, CONSTANT in stream length
         from pyspark.sql import functions as F
 
-        from example_kafkastreams_spark.operators.rollup import (
-            rollup_store_read,
-            rollup_store_sink,
-        )
-        from example_kafkastreams_spark.operators.topk import (
-            topk_store_read,
-            topk_store_sink,
-        )
+        from example_kafkastreams_spark.operators.rollup import rollup_fold
+        from example_kafkastreams_spark.operators.topk import topk_fold
 
         kv_schema = T.StructType(
             [
@@ -1373,14 +1358,16 @@ def probe_streaming(spark, base: str, n_batches: int = 6) -> dict:
         store = os.path.join(work, f"rollup_store_{label}")
         summary = drive(
             stream.select("k", "v"), f"rollup_{label}",
-            sink_fn=rollup_store_sink(
-                spark, store, ["k"],
-                sums={"v_sum": (F.col("v"), 3)},
-                mins={"v_min": F.col("v")},
-                maxs={"v_max": F.col("v")},
+            sink_fn=snapshot_sink(
+                spark, store, rollup_fold(
+                    ["k"],
+                    sums={"v_sum": (F.col("v"), 3)},
+                    mins={"v_min": F.col("v")},
+                    maxs={"v_max": F.col("v")},
+                ),
             ),
         )
-        summary["store_rows"] = rollup_store_read(spark, store).count()
+        summary["store_rows"] = snapshot_read(spark, store).count()
         summary["store_rows_bound"] = 20  # |groups|, not rows
         out[f"rollup_sink_{label}"] = summary
 
@@ -1389,8 +1376,7 @@ def probe_streaming(spark, base: str, n_batches: int = 6) -> dict:
         from example_kafkastreams_spark.operators.sketches import (
             QDIG_K,
             QDIG_LEVELS,
-            qdigest_store_read,
-            qdigest_store_sink,
+            qdigest_fold,
         )
 
         qsrc = os.path.join(work, f"qdig_src_{label}")
@@ -1401,9 +1387,9 @@ def probe_streaming(spark, base: str, n_batches: int = 6) -> dict:
         qstore = os.path.join(work, f"qdig_store_{label}")
         summary = drive(
             qstream.select("v"), f"qdig_{label}",
-            sink_fn=qdigest_store_sink(spark, qstore, "v"),
+            sink_fn=snapshot_sink(spark, qstore, qdigest_fold("v")),
         )
-        summary["store_rows"] = qdigest_store_read(spark, qstore).count()
+        summary["store_rows"] = snapshot_read(spark, qstore).count()
         summary["store_rows_bound"] = 2 * QDIG_K * (QDIG_LEVELS + 1)
         out[f"qdigest_sink_{label}"] = summary
 
@@ -1436,11 +1422,13 @@ def probe_streaming(spark, base: str, n_batches: int = 6) -> dict:
         store = os.path.join(work, f"topk_store_{label}")
         summary = drive(
             stream.select("g", "id", "v"), f"topk_{label}",
-            sink_fn=topk_store_sink(
-                spark, store, ["g"], [("v", True), ("id", False)], k=5
+            sink_fn=snapshot_sink(
+                spark,
+                store,
+                topk_fold(["g"], [("v", True), ("id", False)], k=5),
             ),
         )
-        summary["store_rows"] = topk_store_read(spark, store).count()
+        summary["store_rows"] = snapshot_read(spark, store).count()
         summary["store_rows_bound"] = 20 * 5
         out[f"topk_sink_{label}"] = summary
 

@@ -125,14 +125,15 @@ def test_bloom_cardinality_estimate(spark):
 
 def test_bloom_store_stream_equals_batch_build(spark, tmp_path):
     """Golden: values split across micro-batches through the
-    bloom_store_sink leave the stored filter EQUAL to the one-shot
+    bloom_fold snapshot store leave the stored filter EQUAL to the one-shot
     build over all values (OR-merge associativity), through a real
     file-backed streaming query."""
     import pyspark.sql.types as T
 
-    from example_kafkastreams_spark.operators.sketches import (
-        bloom_store_read,
-        bloom_store_sink,
+    from example_kafkastreams_spark.operators.sketches import bloom_fold
+    from example_kafkastreams_spark.streaming.sinks import (
+        snapshot_read,
+        snapshot_sink,
     )
     from example_kafkastreams_spark.streaming.sources import (
         file_stream,
@@ -150,56 +151,16 @@ def test_bloom_store_stream_equals_batch_build(spark, tmp_path):
     store = str(tmp_path / "bloom")
     q = (
         file_stream(spark, src, schema, max_files_per_trigger=1)
-        .writeStream.foreachBatch(bloom_store_sink(spark, store))
+        .writeStream.foreachBatch(snapshot_sink(spark, store, bloom_fold()))
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
     q.processAllAvailable()
     q.stop()
 
-    got = sorted(map(tuple, bloom_store_read(spark, store).collect()))
+    got = sorted(map(tuple, snapshot_read(spark, store).collect()))
     want = sorted(map(tuple, bloom_words(_vals(spark, 260)).collect()))
     assert got == want
-
-
-def test_bloom_store_sink_replay_and_crash_heal(spark, tmp_path):
-    """OR is idempotent: re-invoking the sink with the same batch is a
-    storage no-op with no bookkeeping at all; a crash between the two
-    publish renames (store dir missing, .__old__ present) keeps the
-    previous filter serving and the replay republishes."""
-    import os
-    import shutil
-
-    from example_kafkastreams_spark.operators.sketches import (
-        bloom_store_read,
-        bloom_store_sink,
-    )
-
-    store = str(tmp_path / "bloom")
-    sink = bloom_store_sink(spark, store)
-    b0 = _vals(spark, 100)
-    b1 = spark.createDataFrame(
-        [(f"tok{i}",) for i in range(100, 200)], "v string"
-    )
-    sink(b0, 0)
-    sink(b1, 1)
-    rows1 = sorted(map(tuple, bloom_store_read(spark, store).collect()))
-    sink(b1, 1)  # replay: idempotent merge
-    assert sorted(
-        map(tuple, bloom_store_read(spark, store).collect())
-    ) == rows1
-
-    # crash simulation: mid-publish state (store renamed away)
-    os.rename(store, store + ".__old__")
-    assert sorted(
-        map(tuple, bloom_store_read(spark, store).collect())
-    ) is not None  # previous filter still serves from .__old__
-    sink(b1, 1)  # the replay heals the store
-    assert sorted(
-        map(tuple, bloom_store_read(spark, store).collect())
-    ) == rows1
-    assert not os.path.exists(store + ".__old__")
-    shutil.rmtree(store, ignore_errors=True)
 
 
 def test_bloom_decontam_superset_of_exact_and_map_side(spark):
@@ -226,59 +187,6 @@ def test_bloom_decontam_superset_of_exact_and_map_side(spark):
         r.doc_id for r in bloom_df.filter("contaminated").collect()
     }
     assert exact_ids <= flagged
-
-
-def test_bloom_store_sink_recovery_batch_keeps_fallback_readable(
-    spark, tmp_path, monkeypatch
-):
-    """ADVICE r9 regression: in a RECOVERY batch (store dir missing,
-    .__old__ serving), the sink must NOT delete .__old__ before the
-    publish rename — a crash in that window would otherwise leave no
-    _SUCCESS-bearing copy and the next replay would silently rebuild
-    from None, dropping all pre-batch history."""
-    import os
-
-    from example_kafkastreams_spark.operators.sketches import (
-        bloom_store_read,
-        bloom_store_sink,
-    )
-
-    store = str(tmp_path / "bloom")
-    sink = bloom_store_sink(spark, store)
-    sink(_vals(spark, 100), 0)
-    served = sorted(map(tuple, bloom_store_read(spark, store).collect()))
-
-    # crash state: mid-publish of some later batch — store renamed
-    # away, .__old__ is the only readable copy
-    os.rename(store, store + ".__old__")
-
-    # the recovery batch itself crashes right at the publish rename
-    real_rename = os.rename
-
-    def exploding_rename(src, dst):
-        if dst == store:
-            raise OSError("simulated crash at publish")
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(os, "rename", exploding_rename)
-    import pytest as _pytest
-
-    with _pytest.raises(OSError, match="simulated crash"):
-        sink(_vals(spark, 100), 1)
-    monkeypatch.setattr(os, "rename", real_rename)
-
-    # the previous filter MUST still serve (pre-fix: .__old__ was
-    # rmtree'd before the rename and this read returned None)
-    cur = bloom_store_read(spark, store)
-    assert cur is not None
-    assert sorted(map(tuple, cur.collect())) == served
-
-    # and the replay completes the recovery
-    sink(_vals(spark, 100), 1)
-    assert sorted(
-        map(tuple, bloom_store_read(spark, store).collect())
-    ) == served
-    assert not os.path.exists(store + ".__old__")
 
 
 def test_bloom_rejects_bad_m_bits(spark):

@@ -120,9 +120,12 @@ def test_qdigest_store_stream_and_replay(spark, tmp_path):
     import pyspark.sql.types as T
 
     from example_kafkastreams_spark.operators.sketches import (
+        qdigest_fold,
         qdigest_quantiles,
-        qdigest_store_read,
-        qdigest_store_sink,
+    )
+    from example_kafkastreams_spark.streaming.sinks import (
+        snapshot_read,
+        snapshot_sink,
     )
     from example_kafkastreams_spark.streaming.sources import (
         file_stream,
@@ -141,7 +144,7 @@ def test_qdigest_store_stream_and_replay(spark, tmp_path):
     q = (
         file_stream(spark, src, schema, max_files_per_trigger=1)
         .writeStream.foreachBatch(
-            qdigest_store_sink(spark, store, run_id="run-a")
+            snapshot_sink(spark, store, qdigest_fold(), "run-a")
         )
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
@@ -149,7 +152,7 @@ def test_qdigest_store_stream_and_replay(spark, tmp_path):
     q.processAllAvailable()
     q.stop()
 
-    dig = qdigest_store_read(spark, store)
+    dig = snapshot_read(spark, store)
     rows = dig.collect()
     n = sum(r.cnt for r in rows)
     assert n == 1000
@@ -162,10 +165,10 @@ def test_qdigest_store_stream_and_replay(spark, tmp_path):
         assert _exact_rank(xs, r.est - 1) <= target + eps * n
 
     before = sorted(map(tuple, rows))
-    sink_b = qdigest_store_sink(spark, store, run_id="run-a")
+    sink_b = snapshot_sink(spark, store, qdigest_fold(), "run-a")
     sink_b(spark.createDataFrame(batches[2], schema), 2)  # restart replay
     assert sorted(
-        map(tuple, qdigest_store_read(spark, store).collect())
+        map(tuple, snapshot_read(spark, store).collect())
     ) == before
 
 

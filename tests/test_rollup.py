@@ -8,9 +8,12 @@ from example_kafkastreams_spark.operators.rollup import (
     rollup_apply_delta,
     rollup_build,
     rollup_finalize,
+    rollup_fold,
     rollup_merge,
-    rollup_store_read,
-    rollup_store_sink,
+)
+from example_kafkastreams_spark.streaming.sinks import (
+    snapshot_read,
+    snapshot_sink,
 )
 
 # F.col needs an active SparkContext — build specs lazily per test
@@ -126,7 +129,9 @@ def test_rollup_store_stream_equals_batch_build(spark, tmp_path):
     q = (
         file_stream(spark, src, schema, max_files_per_trigger=1)
         .writeStream.foreachBatch(
-            rollup_store_sink(spark, store, ["k"], SUMS(), MINS(), MAXS())
+            snapshot_sink(
+                spark, store, rollup_fold(["k"], SUMS(), MINS(), MAXS())
+            )
         )
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
@@ -134,7 +139,7 @@ def test_rollup_store_stream_equals_batch_build(spark, tmp_path):
     q.processAllAvailable()
     q.stop()
 
-    got = sorted(map(tuple, rollup_store_read(spark, store).collect()))
+    got = sorted(map(tuple, snapshot_read(spark, store).collect()))
     want = sorted(
         map(
             tuple,
@@ -143,65 +148,6 @@ def test_rollup_store_stream_equals_batch_build(spark, tmp_path):
         )
     )
     assert got == want
-
-
-def test_rollup_store_replay_skipped_and_crash_heals(spark, tmp_path):
-    """Long-sum partials are NOT idempotent — the high-water mark must
-    skip a replayed batch; a crash before the pointer flip (orphan
-    snapshot, old pointer) must heal to the same state."""
-    import hashlib
-    import json
-    import os
-    import shutil
-
-    store = str(tmp_path / "mv")
-    sink = rollup_store_sink(spark, store, ["k"], SUMS(), run_id="run-a")
-    b0, b1 = _df(spark, 0, 100), _df(spark, 100, 250)
-    sink(b0, 0)
-    sink(b1, 1)
-    rows1 = sorted(map(tuple, rollup_store_read(spark, store).collect()))
-    sink(b1, 1)  # replay: skipped outright
-    assert (
-        sorted(map(tuple, rollup_store_read(spark, store).collect()))
-        == rows1
-    )
-
-    # crash before the pointer flip: meta rolled back one batch, the
-    # batch-1 snapshot surviving as an orphan — the replay recomputes
-    # from the pointed-at snapshot and overwrites it byte-identically
-    token = hashlib.md5(b"run-a").hexdigest()[:16]
-    sink0 = rollup_store_sink(
-        spark, str(tmp_path / "s2"), ["k"], SUMS(), run_id="run-a"
-    )
-    sink0(b0, 0)
-    shutil.copytree(
-        os.path.join(str(tmp_path / "s2"), f"v_{token}_0"),
-        os.path.join(store, f"v_{token}_0"),
-        dirs_exist_ok=True,
-    )
-    with open(os.path.join(store, "meta.json"), "w") as f:
-        json.dump({"current": f"v_{token}_0", "applied": {token: 0}}, f)
-    sink(b1, 1)
-    assert (
-        sorted(map(tuple, rollup_store_read(spark, store).collect()))
-        == rows1
-    )
-
-
-def test_rollup_store_default_token_survives_restart(spark, tmp_path):
-    """Default run_id=None derives the replay token from the store
-    path, so a restarted driver recognizes checkpoint-replayed
-    batches."""
-    store = str(tmp_path / "mv")
-    b0 = _df(spark, 0, 100)
-    rollup_store_sink(spark, store, ["k"], SUMS())(b0, 0)
-    rows = sorted(map(tuple, rollup_store_read(spark, store).collect()))
-    # "restart": a fresh sink instance replays batch 0
-    rollup_store_sink(spark, store, ["k"], SUMS())(b0, 0)
-    assert (
-        sorted(map(tuple, rollup_store_read(spark, store).collect()))
-        == rows
-    )
 
 
 def test_finalize_minmax_only_state(spark):

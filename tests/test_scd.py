@@ -219,13 +219,16 @@ _UPD_SCHEMA = "user_id long, ts timestamp, event_id long, tier string"
 
 def test_scd2_store_stream_equals_batch_rebuild(spark, tmp_path):
     """Golden: a change log split across micro-batches through the
-    scd2_store_sink leaves the store BITWISE equal to the one-shot
+    scd2_fold snapshot store leaves it BITWISE equal to the one-shot
     build over the concatenated log — the KTable-materialization
     contract, maintained incrementally."""
     from example_kafkastreams_spark.operators.scd import (
+        scd2_fold,
         scd2_from_changelog,
-        scd2_store_read,
-        scd2_store_sink,
+    )
+    from example_kafkastreams_spark.streaming.sinks import (
+        snapshot_read,
+        snapshot_sink,
     )
     from example_kafkastreams_spark.streaming.sources import (
         file_stream,
@@ -248,9 +251,11 @@ def test_scd2_store_stream_equals_batch_rebuild(spark, tmp_path):
     src = str(tmp_path / "in")
     stage_replayable_batches(spark, src, schema, batches)
     store = str(tmp_path / "dim_store")
-    sink = scd2_store_sink(
-        spark, store, "user_id", "ts", ["tier"], "event_id",
-        run_id=str(tmp_path / "ckpt"),
+    sink = snapshot_sink(
+        spark,
+        store,
+        scd2_fold("user_id", "ts", ["tier"], "event_id"),
+        str(tmp_path / "ckpt"),
     )
     q = (
         file_stream(spark, src, schema, max_files_per_trigger=1)
@@ -262,7 +267,7 @@ def test_scd2_store_stream_equals_batch_rebuild(spark, tmp_path):
     q.stop()
 
     got = sorted(
-        scd2_store_read(spark, store).collect(),
+        snapshot_read(spark, store).collect(),
         key=lambda r: (r.user_id, r.version),
     )
     full = spark.createDataFrame(
@@ -275,81 +280,6 @@ def test_scd2_store_stream_equals_batch_rebuild(spark, tmp_path):
         key=lambda r: (r.user_id, r.version),
     )
     assert got == want
-
-
-def test_scd2_store_sink_replay_idempotent(spark, tmp_path):
-    """foreachBatch is at-least-once: invoking the sink twice with the
-    same batch id must leave the store byte-identical (high-water-mark
-    skip), and a crash BEFORE the pointer flip (orphan snapshot dir)
-    is healed by the replay."""
-    import json
-    import os
-
-    from example_kafkastreams_spark.operators.scd import (
-        scd2_store_read,
-        scd2_store_sink,
-    )
-
-    store = str(tmp_path / "dim_store")
-    sink = scd2_store_sink(
-        spark, store, "user_id", "ts", ["tier"], "event_id",
-        run_id="run-a",
-    )
-    b0 = spark.createDataFrame(
-        [(1, _ts("2024-01-01T00:00:00"), 10, "bronze")], _UPD_SCHEMA
-    )
-    b1 = spark.createDataFrame(
-        [(1, _ts("2024-01-02T00:00:00"), 11, "gold")], _UPD_SCHEMA
-    )
-    sink(b0, 0)
-    sink(b1, 1)
-    rows1 = sorted(
-        scd2_store_read(spark, store).collect(),
-        key=lambda r: (r.user_id, r.version),
-    )
-    # replay batch 1: skipped outright
-    sink(b1, 1)
-    assert sorted(
-        scd2_store_read(spark, store).collect(),
-        key=lambda r: (r.user_id, r.version),
-    ) == rows1
-
-    # crash simulation: roll the pointer back one batch (the snapshot
-    # dir for batch 1 survives as an orphan), then replay batch 1 —
-    # the orphan is overwritten and the pointer re-flips
-    mp = os.path.join(store, "meta.json")
-    meta = json.load(open(mp))
-    assert meta["applied"] == {_token("run-a"): 1}
-    meta_rolled = {
-        "current": f"v_{_token('run-a')}_0",
-        "applied": {_token("run-a"): 0},
-    }
-    # the pruned v_0 dir is gone; rebuild it by replaying from scratch
-    # in a sibling store to fetch its content
-    sink0 = scd2_store_sink(
-        spark, str(tmp_path / "s2"), "user_id", "ts", ["tier"],
-        "event_id", run_id="run-a",
-    )
-    sink0(b0, 0)
-    import shutil
-
-    shutil.copytree(
-        os.path.join(str(tmp_path / "s2"), f"v_{_token('run-a')}_0"),
-        os.path.join(store, f"v_{_token('run-a')}_0"),
-    )
-    with open(mp, "w") as f:
-        json.dump(meta_rolled, f)
-    sink(b1, 1)
-    assert sorted(
-        scd2_store_read(spark, store).collect(),
-        key=lambda r: (r.user_id, r.version),
-    ) == rows1
-
-
-def _token(run_id: str) -> str:
-    import hashlib
-
-    return hashlib.md5(run_id.encode()).hexdigest()[:16]
 
 
 def test_scd2_join_broadcasts_dim_no_fact_exchange(spark):

@@ -103,9 +103,10 @@ def test_topk_store_stream_equals_batch_build(spark, tmp_path):
     real streaming query."""
     import pyspark.sql.types as T
 
-    from example_kafkastreams_spark.operators.topk import (
-        topk_store_read,
-        topk_store_sink,
+    from example_kafkastreams_spark.operators.topk import topk_fold
+    from example_kafkastreams_spark.streaming.sinks import (
+        snapshot_read,
+        snapshot_sink,
     )
     from example_kafkastreams_spark.streaming.sources import (
         file_stream,
@@ -126,7 +127,7 @@ def test_topk_store_stream_equals_batch_build(spark, tmp_path):
     q = (
         file_stream(spark, src, schema, max_files_per_trigger=1)
         .writeStream.foreachBatch(
-            topk_store_sink(spark, store, ["g"], order, k=3)
+            snapshot_sink(spark, store, topk_fold(["g"], order, k=3))
         )
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
@@ -134,35 +135,12 @@ def test_topk_store_stream_equals_batch_build(spark, tmp_path):
     q.processAllAvailable()
     q.stop()
 
-    got = sorted(map(tuple, topk_store_read(spark, store).collect()))
+    got = sorted(map(tuple, snapshot_read(spark, store).collect()))
     all_df = spark.createDataFrame(_stream_rows(0, 260), schema)
     want = sorted(
         map(tuple, topk_per_group(all_df, ["g"], order, 3).collect())
     )
     assert got == want
-
-
-def test_topk_store_replay_skipped(spark, tmp_path):
-    """A replayed batch would enter the ranking twice and evict
-    legitimate rows — the high-water mark must skip it."""
-    from example_kafkastreams_spark.operators.topk import (
-        topk_store_read,
-        topk_store_sink,
-    )
-
-    store = str(tmp_path / "topk")
-    order = [("v", True), ("id", False)]
-    sink = topk_store_sink(spark, store, ["g"], order, k=3)
-    b0 = spark.createDataFrame(_stream_rows(0, 100), "g long, id long, v double")
-    b1 = spark.createDataFrame(_stream_rows(100, 180), "g long, id long, v double")
-    sink(b0, 0)
-    sink(b1, 1)
-    rows = sorted(map(tuple, topk_store_read(spark, store).collect()))
-    sink(b1, 1)  # replay
-    assert sorted(map(tuple, topk_store_read(spark, store).collect())) == rows
-    # fresh sink instance (driver restart) also recognizes the replay
-    topk_store_sink(spark, store, ["g"], order, k=3)(b1, 1)
-    assert sorted(map(tuple, topk_store_read(spark, store).collect())) == rows
 
 
 def test_null_group_keys_survive(spark):
