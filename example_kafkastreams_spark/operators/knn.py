@@ -27,6 +27,8 @@ broken on vec_id.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 from pyspark.sql import DataFrame, Window as W, functions as F
 from .cache import persist_tracked
@@ -202,15 +204,20 @@ def pca_train(
     and SHIPPED; the collect here is ≤ ``sample_n`` rows by
     construction). Returns (mean, components) — ``out_dim`` unit
     eigenvectors of the sample covariance, variance-descending, each
-    sign-fixed so its largest-|coordinate| is positive (eigh's sign
-    freedom would otherwise make the basis run-dependent).
+    sign-fixed so its largest-|coordinate| is positive (the eigensolver's
+    sign freedom would otherwise make the basis run-dependent).
+
+    The basis is bitwise reproducible on any hardware, so a shipped
+    basis can be re-derived exactly: the mean and scatter entries are
+    ``math.fsum`` sums (correctly rounded) and the eigensolver is
+    ``_jacobi_eigh``, built from element-wise IEEE operations only. A
+    LAPACK SVD goes through BLAS kernels picked per CPU, whose
+    summation order, and so whose last bits, differ between machines.
 
     Use as the OPQ-lite front for ANN: project (map-side literal
     expressions, zero shuffle), search in the reduced space, refine
     full-dim — ``pca_knn`` composes exactly that.
     """
-    import numpy as np
-
     rows = (
         emb.filter(F.col(id_col) < sample_n)
         .orderBy(id_col)
@@ -220,18 +227,58 @@ def pca_train(
     if len(rows) < 2:
         raise ValueError("pca_train needs >= 2 sample vectors")
     x = np.asarray([list(r[0]) for r in rows], dtype=np.float64)
-    mean = x.mean(axis=0)
-    xc = x - mean
-    _, s, vt = np.linalg.svd(xc, full_matrices=False)
-    comps = vt[:out_dim]
-    # sign convention: flip so each component's largest-|.| coord > 0
-    for i in range(comps.shape[0]):
-        j = int(np.abs(comps[i]).argmax())
-        if comps[i][j] < 0:
-            comps[i] = -comps[i]
-    return [float(v) for v in mean], [
-        [float(v) for v in c] for c in comps
-    ]
+    n, d = x.shape
+    mean = np.array([math.fsum(col) / n for col in x.T])
+    xc = (x - mean).T
+    scatter = np.empty((d, d))
+    for i in range(d):
+        for j in range(i, d):
+            scatter[i, j] = scatter[j, i] = math.fsum(xc[i] * xc[j])
+    evals, evecs = _jacobi_eigh(scatter)
+    order = sorted(range(d), key=lambda i: (-evals[i], i))[:out_dim]
+    comps = []
+    for i in order:
+        c = evecs[i]
+        # sign convention: flip so each component's largest-|.| coord > 0
+        if c[int(np.abs(c).argmax())] < 0:
+            c = -c
+        comps.append([float(v) for v in c])
+    return [float(v) for v in mean], comps
+
+
+def _jacobi_eigh(a: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Eigen-decomposition of a symmetric matrix by cyclic Jacobi
+    rotations: returns (eigenvalues, eigenvectors as rows), unsorted.
+    Only element-wise array arithmetic and scalar ``math.sqrt`` run,
+    each correctly rounded, so the result does not depend on the BLAS
+    build or the CPU's vector width. A rotation is skipped once its
+    off-diagonal entry is below double precision relative to the two
+    diagonal entries; the sweeps end when a whole sweep skips every
+    pair (quadratic convergence, ~10 sweeps at d=64; capped at 100)."""
+    a = a.copy()
+    d = a.shape[0]
+    v = np.eye(d)
+    for _ in range(100):
+        rotated = False
+        for p in range(d - 1):
+            for q in range(p + 1, d):
+                apq = a[p, q]
+                if abs(apq) <= 1e-16 * math.sqrt(abs(a[p, p] * a[q, q])):
+                    continue
+                rotated = True
+                # the rotation angle zeroing a[p, q], in its stable form
+                theta = (a[q, q] - a[p, p]) / (2.0 * apq)
+                t = 1.0 / (abs(theta) + math.sqrt(theta * theta + 1.0))
+                if theta < 0:
+                    t = -t
+                c = 1.0 / math.sqrt(t * t + 1.0)
+                s = t * c
+                for m in (a, a.T, v):
+                    mp, mq = m[p].copy(), m[q].copy()
+                    m[p], m[q] = c * mp - s * mq, s * mp + c * mq
+        if not rotated:
+            break
+    return a.diagonal().copy(), v
 
 
 def pca_project_exprs(

@@ -163,6 +163,66 @@ def test_bloom_store_stream_equals_batch_build(spark, tmp_path):
     assert got == want
 
 
+def test_bloom_store_sink_replay_and_crash_heal(
+    spark, tmp_path, monkeypatch
+):
+    """A replayed batch leaves the stored filter unchanged; a crash
+    between the snapshot write and the pointer flip keeps the previous
+    filter serving, and the replay publishes the batch and prunes every
+    snapshot but the current one."""
+    import json
+    import os
+
+    import pytest
+
+    from example_kafkastreams_spark.operators.sketches import bloom_fold
+    from example_kafkastreams_spark.streaming import sinks
+
+    store = str(tmp_path / "bloom")
+    sink = sinks.snapshot_sink(spark, store, bloom_fold())
+    b0 = _vals(spark, 100)
+    b1 = spark.createDataFrame(
+        [(f"tok{i}",) for i in range(100, 200)], "v string"
+    )
+    sink(b0, 0)
+    rows0 = sorted(map(tuple, sinks.snapshot_read(spark, store).collect()))
+    sink(b1, 1)
+    rows1 = sorted(map(tuple, sinks.snapshot_read(spark, store).collect()))
+    sink(b1, 1)  # replay
+    assert sorted(
+        map(tuple, sinks.snapshot_read(spark, store).collect())
+    ) == rows1
+
+    # crash simulation: batch 2's snapshot is written, the flip is not
+    b2 = spark.createDataFrame(
+        [(f"tok{i}",) for i in range(200, 300)], "v string"
+    )
+    fresh = str(tmp_path / "fresh")
+    fresh_sink = sinks.snapshot_sink(spark, fresh, bloom_fold())
+    for i, b in enumerate((b0, b1, b2)):
+        fresh_sink(b, i)
+    rows2 = sorted(map(tuple, sinks.snapshot_read(spark, fresh).collect()))
+    assert rows2 != rows1 != rows0
+
+    def crash(path, meta):
+        raise OSError("simulated crash before the pointer flip")
+
+    with monkeypatch.context() as m:
+        m.setattr(sinks, "_flip", crash)
+        with pytest.raises(OSError, match="simulated crash"):
+            sink(b2, 2)
+    assert sorted(
+        map(tuple, sinks.snapshot_read(spark, store).collect())
+    ) == rows1  # the previous filter still serves
+    sink(b2, 2)  # the replay heals the store
+    assert sorted(
+        map(tuple, sinks.snapshot_read(spark, store).collect())
+    ) == rows2
+    with open(os.path.join(store, "meta.json")) as f:
+        current = json.load(f)["current"]
+    assert [d for d in os.listdir(store) if d.startswith("v_")] == [current]
+
+
 def test_bloom_decontam_superset_of_exact_and_map_side(spark):
     """The bloom prefilter must flag every exactly-contaminated doc
     (no false negatives), and its probe plan must cross zero
@@ -187,6 +247,62 @@ def test_bloom_decontam_superset_of_exact_and_map_side(spark):
         r.doc_id for r in bloom_df.filter("contaminated").collect()
     }
     assert exact_ids <= flagged
+
+
+def test_bloom_store_sink_recovery_batch_keeps_fallback_readable(
+    spark, tmp_path, monkeypatch
+):
+    """A recovery batch (the replay after a crash before the pointer
+    flip) that itself crashes at the flip must leave the previous
+    filter readable, never a store that reads as empty and would be
+    rebuilt from None with all pre-crash history dropped; the next
+    replay completes the recovery."""
+    import os
+
+    import pytest
+
+    from example_kafkastreams_spark.operators.sketches import bloom_fold
+    from example_kafkastreams_spark.streaming.sinks import (
+        snapshot_read,
+        snapshot_sink,
+    )
+
+    store = str(tmp_path / "bloom")
+    sink = snapshot_sink(spark, store, bloom_fold())
+    sink(_vals(spark, 100), 0)
+    served = sorted(map(tuple, snapshot_read(spark, store).collect()))
+    b1 = _vals(spark, 100, prefix="new")
+
+    # every publish of batch 1 crashes at the pointer's rename: the
+    # first attempt and the recovery batch replaying it
+    real_replace = os.replace
+
+    def exploding_replace(src, dst):
+        if os.path.basename(dst) == "meta.json":
+            raise OSError("simulated crash at publish")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", exploding_replace)
+    for _ in range(2):
+        with pytest.raises(OSError, match="simulated crash"):
+            sink(b1, 1)
+        cur = snapshot_read(spark, store)
+        assert cur is not None
+        assert sorted(map(tuple, cur.collect())) == served
+    monkeypatch.setattr(os, "replace", real_replace)
+
+    # and the replay completes the recovery on top of batch 0
+    sink(b1, 1)
+    got = sorted(map(tuple, snapshot_read(spark, store).collect()))
+    want = sorted(
+        map(
+            tuple,
+            bloom_words(
+                _vals(spark, 100).unionByName(_vals(spark, 100, "new"))
+            ).collect(),
+        )
+    )
+    assert got == want
 
 
 def test_bloom_rejects_bad_m_bits(spark):
