@@ -34,7 +34,7 @@ a docstring claim into a measured decision:
   (``imbalance``), overall and per ingest run.
 * ``should_rebuild`` — thresholds the report into the scheduled-
   rebuild decision (rebuild = retrain parameters + re-encode via the
-  ``*_index_write`` path, then ``ann_index_compact`` discipline).
+  ``*_index_write`` path).
 
 Stats are operational telemetry, not oracle rows: float sums ride
 numpy/Spark partial aggregation (no cross-engine bit contract).
@@ -52,7 +52,7 @@ import os
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..streaming.sinks import read_leaves
+from ..streaming.sinks import read_leaves, write_json
 
 _DRIFT = "drift"
 _STATS_SCHEMA = "cell int, n long, err_sum double"
@@ -173,14 +173,7 @@ def record_train_stats(
         },
     }
     meta["train_stats"] = stats
-    # meta.json holds the LIVE index's trained parameters — rewrite it
-    # atomically (tmp + os.replace, the stats.json watermark
-    # discipline) so a crash mid-write can never corrupt a serving
-    # artifact
-    tmp_path = meta_path + ".__tmp__"
-    with open(tmp_path, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp_path, meta_path)
+    write_json(meta_path, meta)
     return stats
 
 

@@ -27,10 +27,19 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..streaming.sinks import leaf_sink, read_leaves, write_leaf
+from ..streaming.sinks import (
+    INGEST_PARTS,
+    leaf_sink,
+    read_leaves,
+    split_frontier,
+    swap_tree,
+    write_json,
+    write_leaf,
+)
 from .knn import (
     _empty_ann_result,
     exact_rerank,
@@ -62,10 +71,7 @@ def _prune_superseded_trees(path: str) -> None:
     parameters) must never union into the new base, and drift stats
     measured against the old baseline no longer apply. Pruned BEFORE
     the new encode lands — a crash mid-rebuild then leaves the old
-    base delta-less (stale, never mixed-generation wrong), the same
-    worst-window discipline as ``ann_index_compact``."""
-    import shutil
-
+    base delta-less (stale, never mixed-generation wrong)."""
     for d in (_DELTA, "drift"):
         shutil.rmtree(os.path.join(path, d), ignore_errors=True)
 
@@ -98,17 +104,16 @@ def pq_index_write(
     encode(emb, codebook, id_col, vec_col).write.mode(
         "overwrite"
     ).parquet(os.path.join(path, _CODES))
-    with open(os.path.join(path, _META), "w") as f:
-        json.dump(
-            {
-                "kind": "pq",
-                "m": m,
-                "num_codes": num_codes,
-                "id_col": id_col,
-                "codebook": codebook,
-            },
-            f,
-        )
+    write_json(
+        os.path.join(path, _META),
+        {
+            "kind": "pq",
+            "m": m,
+            "num_codes": num_codes,
+            "id_col": id_col,
+            "codebook": codebook,
+        },
+    )
 
 
 def ivfpq_index_write(
@@ -145,19 +150,18 @@ def ivfpq_index_write(
             codebook=codebook,
         )
     enc.write.mode("overwrite").parquet(os.path.join(path, _CODES))
-    with open(os.path.join(path, _META), "w") as f:
-        json.dump(
-            {
-                "kind": "ivfpq",
-                "m": len(codebook),
-                "num_codes": len(codebook[0]),
-                "num_centroids": len(cents),
-                "id_col": id_col,
-                "centroids": cents,
-                "codebook": codebook,
-            },
-            f,
-        )
+    write_json(
+        os.path.join(path, _META),
+        {
+            "kind": "ivfpq",
+            "m": len(codebook),
+            "num_codes": len(codebook[0]),
+            "num_centroids": len(cents),
+            "id_col": id_col,
+            "centroids": cents,
+            "codebook": codebook,
+        },
+    )
 
 
 def ivfflat_index_write(
@@ -178,17 +182,16 @@ def ivfflat_index_write(
     ivf_flat_encode(emb, cents, id_col, vec_col).write.mode(
         "overwrite"
     ).parquet(os.path.join(path, _CODES))
-    with open(os.path.join(path, _META), "w") as f:
-        json.dump(
-            {
-                "kind": "ivfflat",
-                "num_centroids": len(cents),
-                "id_col": id_col,
-                "vec_col": vec_col,
-                "centroids": cents,
-            },
-            f,
-        )
+    write_json(
+        os.path.join(path, _META),
+        {
+            "kind": "ivfflat",
+            "num_centroids": len(cents),
+            "id_col": id_col,
+            "vec_col": vec_col,
+            "centroids": cents,
+        },
+    )
 
 
 def ann_index_read(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
@@ -274,54 +277,42 @@ def ann_index_append_sink(
 
 def ann_index_compact(spark: SparkSession, path: str) -> None:
     """Fold ``codes_delta`` (the append sink's per-batch leaves) back
-    into one base ``codes`` tree — the between-runs maintenance an
+    into the base ``codes`` tree — the between-runs maintenance an
     always-on ingest needs so the served scan stays a few large files
     instead of thousands of micro-batch leaves. Codes are already
     canonical (frozen-parameter encode), so compaction is a pure
     rewrite: serve results are bit-identical before and after
-    (golden-pinned). Run only while no append query is writing (the
-    ``index_maint.compact_index`` contract).
+    (golden-pinned). Run only while no append query is writing.
 
-    Crash discipline (same shape as ``compact_index``): recover-on-
-    entry + park-then-promote renames, so every intermediate state is
-    either fully recoverable or already serving correct results, and
-    no state ever serves DUPLICATED rows (which would corrupt top-k
-    ranks, unlike the dedup indexes' harmless supersets):
-
-    1. entry recovery — a parked ``.__pre_compact__`` twin with its
-       live dir missing is restored before anything is read;
-    2. the compacted tree (base ∪ delta, partition columns dropped)
-       writes to ``codes.__compacting__`` while both live dirs still
-       serve;
-    3. park ``codes_delta``, park ``codes``, promote the new tree,
-       prune the parked twins. A crash between renames leaves at
-       worst a briefly delta-less (stale, never wrong) index that the
-       next entry restores."""
-    from .index_maint import _require_local
-
-    local = _require_local(path, "index path").rstrip("/")
-    codes = os.path.join(local, _CODES)
-    delta = os.path.join(local, _DELTA)
-    codes_pre = codes + ".__pre_compact__"
-    delta_pre = delta + ".__pre_compact__"
-    tmp = codes + ".__compacting__"
-    # entry recovery for a prior crash between renames
-    if not os.path.isdir(codes) and os.path.isdir(codes_pre):
-        os.rename(codes_pre, codes)
-    if not os.path.isdir(delta) and os.path.isdir(delta_pre):
-        os.rename(delta_pre, delta)
-    if read_leaves(spark, delta) is None:
-        return  # nothing appended since the last compaction
-    import shutil
-
-    shutil.rmtree(tmp, ignore_errors=True)  # stale attempt
-    enc, _ = ann_index_read(spark, local)
-    enc.write.parquet(tmp)
-    os.rename(delta, delta_pre)
-    os.rename(codes, codes_pre)
-    os.rename(tmp, codes)
-    shutil.rmtree(delta_pre, ignore_errors=True)
-    shutil.rmtree(codes_pre, ignore_errors=True)
+    A row served twice would corrupt top-k ranks, so the whole index
+    root is swapped (``streaming.sinks.swap_tree``): the new root holds
+    base ∪ the folded leaves as ``codes``, each run's held-back
+    frontier leaf under ``codes_delta`` (a replay still overwrites
+    it), and ``meta.json`` and ``drift`` as they were."""
+    with swap_tree(path) as (live, tmp):
+        delta = os.path.join(live, _DELTA)
+        leaves = read_leaves(spark, delta)
+        if leaves is None:
+            return
+        fold, held = split_frontier(
+            leaves.select(*INGEST_PARTS).distinct().collect()
+        )
+        if not fold:
+            return
+        shutil.copytree(  # meta.json, drift, ...
+            live,
+            tmp,
+            ignore=lambda d, _: (_CODES, _DELTA) if d == live else (),
+        )
+        base = spark.read.parquet(os.path.join(live, _CODES))
+        base.unionByName(
+            read_leaves(spark, delta, held).select(*base.columns)
+        ).write.parquet(os.path.join(tmp, _CODES))
+        for run, batch in held:
+            leaf = os.path.join(
+                _DELTA, f"ingest_run={run}", f"ingest_batch={batch}"
+            )
+            shutil.copytree(os.path.join(live, leaf), os.path.join(tmp, leaf))
 
 
 def ann_index_query(

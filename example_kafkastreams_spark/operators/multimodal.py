@@ -123,7 +123,7 @@ FRAME_SCHEMA = T.StructType(
 )
 
 
-def sample_frame_batches(
+def _sample_frame_batches(
     it: Iterator[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:
     """mapInPandas kernel with 1→N output shape: each payload emits one
@@ -155,7 +155,7 @@ def sample_frame_batches(
 
 def sample_frames(media: DataFrame) -> DataFrame:
     ensure_package_shipped(media.sparkSession)
-    return media.mapInPandas(sample_frame_batches, schema=FRAME_SCHEMA)
+    return media.mapInPandas(_sample_frame_batches, schema=FRAME_SCHEMA)
 
 
 # --- resize (binary in → binary OUT through Arrow) ------------------------
@@ -229,7 +229,7 @@ FEATURES_SCHEMA = T.StructType(
 )
 
 
-def feature_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _feature_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas kernel: payload → fixed-width float vector (16-bin
     normalized byte histogram). The fake "feature extractor" is
     deterministic and cheap; the CONTRACT is the real one — a media
@@ -265,4 +265,4 @@ def extract_features(media: DataFrame) -> DataFrame:
     similarity-search bridge: run this, rename to (vec_id, embedding),
     and every ANN operator (knn.py) consumes it directly."""
     ensure_package_shipped(media.sparkSession)
-    return media.mapInPandas(feature_batches, schema=FEATURES_SCHEMA)
+    return media.mapInPandas(_feature_batches, schema=FEATURES_SCHEMA)

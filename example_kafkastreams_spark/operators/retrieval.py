@@ -40,7 +40,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions import portable as P
-from ..streaming.sinks import INGEST_PARTS, leaf_sink, read_leaves, write_leaf
+from ..streaming.sinks import (
+    INGEST_PARTS,
+    leaf_sink,
+    read_leaves,
+    split_frontier,
+    swap_tree,
+    write_json,
+    write_leaf,
+)
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -247,7 +255,6 @@ def bm25_index_write(
     ``df_count`` is computed per term at BUILD time and denormalized
     onto every posting row, so serving needs no corpus-wide aggregate
     — the one piece of global state a posting needs rides with it."""
-    import json
     import os
 
     from .packing import shard_assignment
@@ -266,15 +273,14 @@ def bm25_index_write(
         .parquet(os.path.join(path, "postings"))
     )
     st = stats.first()
-    with open(os.path.join(path, "stats.json"), "w") as f:
-        json.dump(
-            {
-                "n_docs": int(st["n_docs"]),
-                "tot_dl": int(st["tot_dl"]),
-                "num_buckets": num_buckets,
-            },
-            f,
-        )
+    write_json(
+        os.path.join(path, "stats.json"),
+        {
+            "n_docs": int(st["n_docs"]),
+            "tot_dl": int(st["tot_dl"]),
+            "num_buckets": num_buckets,
+        },
+    )
 
 
 def bm25_index_query(
@@ -423,125 +429,80 @@ def bm25_index_compact(spark, path: str) -> None:
     """Fold the append sink's per-batch delta leaves into a fresh base
     tree with recomputed per-term df, merging their stat increments
     into ``stats.json`` — run between runs so the served scan stays a
-    few large bucket files.
+    few large bucket files. The base ``postings`` tree is published by
+    ``streaming.sinks.swap_tree`` and each run's frontier leaf is held
+    back (the compaction rules in ``streaming.sinks``).
 
-    Crash discipline — every intermediate state serves EXACTLY, not
-    just safely, because the two failure modes are each neutralized:
-
-    * duplicated postings (a folded leaf not yet pruned) dedupe at
-      serve on (term, doc_id) — so the base rewrite can be
-      additive-then-prune (`compact_index`'s shape) after the one
-      park-then-promote base swap;
-    * double-counted stats are prevented by the ``folded_runs``
-      watermark written ATOMICALLY into ``stats.json`` (tmp +
-      ``os.replace``): a leaf is marked folded before it is pruned,
-      and serving skips marked leaves' increments whether or not the
-      prune ever ran.
-
-    Frontier hold-back (`compact_index`): each run's max-batch leaf —
-    the only leaf a crash replay can target — stays in the delta tree
-    verbatim and folds on a later compaction once the run has moved
-    past it; a dead run permanently costs one small leaf, which also
-    means the delta tree (and the serve-side df recompute) persists
-    once any append happened. The recomputed base df is therefore a
-    fast-path artifact only; correctness never depends on it."""
+    Every intermediate state serves EXACTLY: a folded leaf not yet
+    pruned duplicates postings that dedupe at serve on (term, doc_id),
+    and its stats are skipped by the ``folded_runs`` watermark, written
+    to ``stats.json`` after the promote and before the prune. A dead
+    run's frontier leaf never folds, so once any append happened the
+    delta tree (and the serve-side df recompute) persists; the
+    recomputed base df is a fast-path artifact only."""
     import json
     import os
     import shutil
 
-    from .index_maint import _require_local
-
-    local = _require_local(path, "bm25 index path").rstrip("/")
-    base = os.path.join(local, "postings")
-    pre = base + ".__pre_compact__"
-    tmp = base + ".__compacting__"
-    if not os.path.isdir(base) and os.path.isdir(pre):
-        os.rename(pre, base)
-    elif os.path.isdir(base) and os.path.isdir(pre):
-        shutil.rmtree(pre)
-    shutil.rmtree(tmp, ignore_errors=True)
-    sdelta = os.path.join(local, _SDELTA)
-    pdelta = os.path.join(local, _PDELTA)
-    with open(os.path.join(local, "stats.json")) as f:
-        st = json.load(f)
-    folded = dict(st.get("folded_runs", {}))
-
-    def prune(run, batch):
-        for root in (pdelta, sdelta):
-            shutil.rmtree(
-                os.path.join(
-                    root, f"ingest_run={run}", f"ingest_batch={batch}"
-                ),
-                ignore_errors=True,
-            )
-
-    # stat increments derive from the postings leaves themselves —
-    # one source of truth with the serve path (_delta_leaf_stats); a
-    # leaf a prior crash left marked-folded but unpruned is pruned now
-    leaves = []
-    for r in _delta_leaf_stats(spark, local):
-        run, batch = r["ingest_run"], int(r["ingest_batch"])
-        if batch <= folded.get(run, -1):
-            prune(run, batch)
-        else:
-            leaves.append((run, batch, int(r["n_docs"]), int(r["tot_dl"])))
-    frontier: dict[str, int] = {}
-    for run, batch, _, _ in leaves:
-        frontier[run] = max(frontier.get(run, -1), batch)
-    foldable = [
-        lf
-        for lf in leaves
-        if lf[1] < frontier[lf[0]] and lf[1] > folded.get(lf[0], -1)
-    ]
-    if not foldable:
-        return
-    fold_keys = sorted(f"{run}/{batch}" for run, batch, _, _ in foldable)
-    core = ["term", "doc_id", "dl", "tf"]
-    delta_rows = (
-        spark.read.parquet(pdelta)
-        .filter(
-            F.concat_ws(
-                "/", F.col("ingest_run"), F.col("ingest_batch").cast("string")
-            ).isin(fold_keys)
-        )
-        .select(*core)
-    )
-    merged = (
-        spark.read.parquet(base)
-        .select(*core)
-        .unionByName(delta_rows)
-        .dropDuplicates(["term", "doc_id"])
-    )
-    dfq = merged.groupBy("term").agg(F.count(F.lit(1)).alias("df_count"))
-
     from .packing import shard_assignment
 
-    keyed = shard_assignment(
-        merged.join(dfq, "term"), st["num_buckets"], key_col="term"
-    ).withColumnRenamed("__shard", "__bucket")
-    (
-        keyed.drop("__shard_ord")
-        .repartition(st["num_buckets"], F.col("__bucket"))
-        .sortWithinPartitions("__bucket", "term")
-        .write.partitionBy("__bucket")
-        .parquet(tmp)
-    )
-    os.rename(base, pre)
-    os.rename(tmp, base)
-    shutil.rmtree(pre, ignore_errors=True)
-    # watermark first (atomic), then prune — a crash between the two
-    # leaves marked leaves whose rows dedupe and whose stats are
-    # skipped: still exact
-    for run, batch, n, dl in foldable:
+    with swap_tree(os.path.join(path, "postings")) as (base, tmp):
+        local = os.path.dirname(base)
+        sdelta = os.path.join(local, _SDELTA)
+        pdelta = os.path.join(local, _PDELTA)
+        with open(os.path.join(local, "stats.json")) as f:
+            st = json.load(f)
+        folded = dict(st.get("folded_runs", {}))
+
+        def prune(run, batch):
+            for root in (pdelta, sdelta):
+                shutil.rmtree(
+                    os.path.join(
+                        root, f"ingest_run={run}", f"ingest_batch={batch}"
+                    ),
+                    ignore_errors=True,
+                )
+
+        # stat increments derive from the postings leaves themselves —
+        # one source of truth with the serve path (_delta_leaf_stats);
+        # a leaf a prior crash left marked-folded but unpruned is
+        # pruned now
+        leaves = {}
+        for r in _delta_leaf_stats(spark, local):
+            run, batch = r["ingest_run"], int(r["ingest_batch"])
+            if batch <= folded.get(run, -1):
+                prune(run, batch)
+            else:
+                leaves[run, batch] = (int(r["n_docs"]), int(r["tot_dl"]))
+        fold, held = split_frontier(leaves)
+        if not fold:
+            return
+        core = ["term", "doc_id", "dl", "tf"]
+        merged = (
+            spark.read.parquet(base)
+            .select(*core)
+            .unionByName(read_leaves(spark, pdelta, held).select(*core))
+            .dropDuplicates(["term", "doc_id"])
+        )
+        dfq = merged.groupBy("term").agg(F.count(F.lit(1)).alias("df_count"))
+        keyed = shard_assignment(
+            merged.join(dfq, "term"), st["num_buckets"], key_col="term"
+        ).withColumnRenamed("__shard", "__bucket")
+        (
+            keyed.drop("__shard_ord")
+            .repartition(st["num_buckets"], F.col("__bucket"))
+            .sortWithinPartitions("__bucket", "term")
+            .write.partitionBy("__bucket")
+            .parquet(tmp)
+        )
+    for run, batch in fold:
+        n, dl = leaves[run, batch]
         st["n_docs"] += n
         st["tot_dl"] += dl
         folded[run] = max(folded.get(run, -1), batch)
     st["folded_runs"] = folded
-    stats_tmp = os.path.join(local, "stats.json.__tmp__")
-    with open(stats_tmp, "w") as f:
-        json.dump(st, f)
-    os.replace(stats_tmp, os.path.join(local, "stats.json"))
-    for run, batch, _, _ in foldable:
+    write_json(os.path.join(local, "stats.json"), st)
+    for run, batch in fold:
         prune(run, batch)
 
 
@@ -1075,7 +1036,6 @@ def maxsim_index_write(
     pass their cached frame so the corpus is featurized once, not once
     per consumer. The caller owns the parameter match; the meta.json
     written here still pins what the caller declared."""
-    import json
     import os
 
     (
@@ -1087,14 +1047,11 @@ def maxsim_index_write(
             id_col=id_col, text_col=text_col,
         )
     ).write.mode("overwrite").parquet(os.path.join(path, "chunks"))
-    tmp = os.path.join(path, "meta.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(
-            {"dim": dim, "n_hashes": n_hashes,
-             "chunk_size": chunk_size, "stride": stride},
-            f,
-        )
-    os.replace(tmp, os.path.join(path, "meta.json"))
+    write_json(
+        os.path.join(path, "meta.json"),
+        {"dim": dim, "n_hashes": n_hashes,
+         "chunk_size": chunk_size, "stride": stride},
+    )
 
 
 def maxsim_index_query(

@@ -350,7 +350,7 @@ def _hll_alpha_m2(p: int) -> float:
     return alpha * m * m
 
 
-def hll_rho_sql(w: str, nbits: int) -> str:
+def _hll_rho_sql(w: str, nbits: int) -> str:
     """rho(w) = 1 + trailing-zero run of ``w`` (an ``nbits``-bit
     non-negative integer expression); w = 0 ⇒ nbits + 1.
 
@@ -377,7 +377,7 @@ def _hll_coord_exprs(h: str, p: int, d: str) -> tuple[str, str]:
     inline would repeat it per arm unless the engine CSEs."""
     m = _hll_m(p)
     w = P.idiv(h, str(m), d)
-    return f"(({h}) % {m})", hll_rho_sql(w, 32 - p)
+    return f"(({h}) % {m})", _hll_rho_sql(w, 32 - p)
 
 
 def _hll_register_exprs(value_col: str, p: int, d: str) -> tuple[str, str]:

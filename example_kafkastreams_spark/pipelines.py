@@ -42,7 +42,15 @@ from .operators.neardup import (
 )
 from .operators.text_chunks import chunk_documents
 from .queries_llm import _quality_exprs
-from .streaming.sinks import INGEST_PARTS, leaf_sink, read_leaves, write_leaf
+from .streaming.sinks import (
+    COMPACTED_RUN,
+    INGEST_PARTS,
+    leaf_sink,
+    read_leaves,
+    split_frontier,
+    swap_tree,
+    write_leaf,
+)
 
 
 def corpus_stages(
@@ -761,80 +769,49 @@ def compact_training_shards(
     of micro-batch leaves. Run only while no ingest query is writing
     (the ``index_maint.compact_index`` contract).
 
-    Three disciplines, inherited from the two existing compactors:
-
-    * **Never-duplicated intermediates** (``ann_index_compact``):
-      duplicate rows here are DUPLICATED TRAINING DATA, so the swap is
-      park-then-promote over a whole new tree — recover-on-entry of a
-      parked ``.__pre_compact__`` twin, write to ``.__compacting__``
-      while the live tree still serves, then two renames. No state
-      ever serves a row twice; the worst crash window leaves the old
-      tree parked for the next entry to restore.
-    * **Frontier hold-back** (``compact_index``): foreachBatch can
-      replay at most each run's LAST batch, and a replayed batch must
-      find its own (run, batch) leaf to dynamic-overwrite — folding it
-      away would turn the replay into a double-append. Each live run's
-      max-``ingest_batch`` leaf is therefore held back verbatim and
-      folds only on a later compaction once the run has moved past it.
-      ``__compacted__`` contains non-hex characters, unmatchable by
-      any real 16-hex run token, so no replay ever targets it.
-    * **Decorrelated order, improved**: the within-leaf md5 sort is a
-      pure function of the key, so the folded leaf re-sorts by the
-      full md5 and carries the seedless decorrelated order across its
-      whole shard — a compacted shard prefix is a BETTER uniform
-      sample than the per-batch leaves it replaced.
+    A row served twice here is DUPLICATED TRAINING DATA, so the store
+    is swapped whole (``streaming.sinks.swap_tree``), and each run's
+    frontier leaf is held back (the compaction rules in
+    ``streaming.sinks``). The within-leaf md5 sort is a pure function
+    of the key, so the folded leaf re-sorts by the full md5 and carries
+    the seedless decorrelated order across its whole shard: a compacted
+    shard prefix is a BETTER uniform sample than the per-batch leaves
+    it replaced.
     """
     import os
-    import shutil
 
-    from .operators.index_maint import COMPACTED_RUN, _require_local
-
-    local = _require_local(path, "shards path").rstrip("/")
-    pre = local + ".__pre_compact__"
-    tmp = local + ".__compacting__"
-    # entry recovery: promote a parked twin whose live dir vanished
-    # mid-swap; prune a parked twin the last promote superseded
-    if not os.path.isdir(local) and os.path.isdir(pre):
-        os.rename(pre, local)
-    elif os.path.isdir(local) and os.path.isdir(pre):
-        shutil.rmtree(pre)
-    shutil.rmtree(tmp, ignore_errors=True)
-    if not os.path.isdir(local):
-        return
-    df = spark.read.parquet(local)
-    frontier = (
-        df.filter(F.col("ingest_run") != COMPACTED_RUN)
-        .groupBy("ingest_run")
-        .agg(F.max("ingest_batch").alias("ingest_batch"))
-    )
-    foldable = df.join(
-        F.broadcast(frontier), ["ingest_run", "ingest_batch"], "left_anti"
-    )
-    already = foldable.filter(F.col("ingest_run") == COMPACTED_RUN)
-    if foldable.count() == already.count():
-        return  # nothing new to fold — idempotent no-op
-    held = df.join(
-        F.broadcast(frontier), ["ingest_run", "ingest_batch"], "left_semi"
-    )
-    merged = foldable.withColumns(
-        {
-            "ingest_run": F.lit(COMPACTED_RUN),
-            "ingest_batch": F.lit(0),
-        }
-    ).unionByName(held)
-    (
-        merged.withColumn("__ord", F.md5(F.col(key_col).cast("string")))
-        .repartition("__shard", "ingest_run", "ingest_batch")
-        .sortWithinPartitions(
-            "__shard", "ingest_run", "ingest_batch", "__ord"
+    with swap_tree(path) as (local, tmp):
+        if not os.path.isdir(local):
+            return
+        df = spark.read.parquet(local)
+        fold, held = split_frontier(
+            df.select(*INGEST_PARTS).distinct().collect()
         )
-        .drop("__ord")
-        .write.partitionBy("__shard", "ingest_run", "ingest_batch")
-        .parquet(tmp)
-    )
-    os.rename(local, pre)
-    os.rename(tmp, local)
-    shutil.rmtree(pre, ignore_errors=True)
+        if all(run == COMPACTED_RUN for run, _ in fold):
+            return  # nothing new to fold — idempotent no-op
+        frontier = F.broadcast(
+            spark.createDataFrame(held, "ingest_run string, ingest_batch int")
+        )
+        merged = (
+            df.join(frontier, list(INGEST_PARTS), "left_anti")
+            .withColumns(
+                {
+                    "ingest_run": F.lit(COMPACTED_RUN),
+                    "ingest_batch": F.lit(0),
+                }
+            )
+            .unionByName(df.join(frontier, list(INGEST_PARTS), "left_semi"))
+        )
+        (
+            merged.withColumn("__ord", F.md5(F.col(key_col).cast("string")))
+            .repartition("__shard", "ingest_run", "ingest_batch")
+            .sortWithinPartitions(
+                "__shard", "ingest_run", "ingest_batch", "__ord"
+            )
+            .drop("__ord")
+            .write.partitionBy("__shard", "ingest_run", "ingest_batch")
+            .parquet(tmp)
+        )
 
 
 def corpus_funnel_counts(stages: dict[str, DataFrame]) -> DataFrame:
@@ -1028,7 +1005,7 @@ def corpus_ingest_with_neardup_index(
             try:
                 survivors, admitted_sigs = admit_against_band_index(
                     batch_df,
-                    read_leaves(spark, index_path, (token, batch_id)),
+                    read_leaves(spark, index_path, [(token, batch_id)]),
                     id_col=id_col, text_col=text_col,
                     num_hashes=num_hashes, bands=bands,
                     shingle_n=shingle_n, threshold=threshold,
@@ -1109,7 +1086,7 @@ def embedding_ingest_with_srp_index(
             try:
                 survivors, idx_delta = admit_against_srp_index(
                     batch_df.select(id_col, vec_col),
-                    read_leaves(spark, index_path, (token, batch_id)),
+                    read_leaves(spark, index_path, [(token, batch_id)]),
                     threshold=threshold,
                     planes=planes,
                     id_col=id_col,

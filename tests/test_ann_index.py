@@ -4,6 +4,7 @@ exactly; the scoring path is literally shared code)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from example_kafkastreams_spark.catalog import load_table
@@ -362,9 +363,12 @@ def test_ann_index_append_sink_ivfflat(spark, tmp_path):
 
 def test_ann_index_compact_serves_identically(spark, tmp_path):
     """Folding the append sink's delta leaves into the base tree must
-    not move a single bit of the served results; the delta dir is
-    gone afterwards, a second compaction is a no-op, and the sink can
-    keep appending to the compacted index."""
+    not move a single bit of the served results; only the run's
+    frontier leaf stays in the delta tree afterwards, a second
+    compaction is a no-op, and the sink can keep appending to the
+    compacted index."""
+    import glob
+    import hashlib
     import os
 
     from example_kafkastreams_spark.operators.ann_index import (
@@ -389,7 +393,12 @@ def test_ann_index_compact_serves_identically(spark, tmp_path):
     args = dict(k=3, nprobe=2, refine=20, rerank_against=emb)
     before = _rows(ann_index_query(spark, path, queries, **args))
     ann_index_compact(spark, path)
-    assert not os.path.isdir(os.path.join(path, "codes_delta"))
+    delta = os.path.join(path, "codes_delta")
+    tok = hashlib.md5(b"run-1").hexdigest()[:16]
+    assert [
+        os.path.relpath(p, delta)
+        for p in glob.glob(delta + "/ingest_run=*/ingest_batch=*")
+    ] == [f"ingest_run={tok}/ingest_batch=1"]
     assert _rows(ann_index_query(spark, path, queries, **args)) == before
     ann_index_compact(spark, path)  # idempotent no-op
     assert _rows(ann_index_query(spark, path, queries, **args)) == before
@@ -405,8 +414,9 @@ def test_ann_index_compact_serves_identically(spark, tmp_path):
 
 def test_ann_index_compact_recovers_parked_dirs(spark, tmp_path):
     """Entry recovery: a crash between the park/promote renames
-    leaves a .__pre_compact__ twin; the next compaction (or a no-op
-    call) restores it before reading, and serves are unchanged."""
+    leaves the index root parked at a .__pre_compact__ twin; the next
+    compaction (or a no-op call) restores it before reading, and
+    serves are unchanged."""
     import os
 
     from example_kafkastreams_spark.operators.ann_index import (
@@ -429,12 +439,85 @@ def test_ann_index_compact_recovers_parked_dirs(spark, tmp_path):
     args = dict(k=3, nprobe=2, refine=20, rerank_against=emb)
     before = _rows(ann_index_query(spark, path, queries, **args))
 
-    # simulate the worst crash window: delta parked AND codes parked
-    codes = os.path.join(path, "codes")
-    delta = os.path.join(path, "codes_delta")
-    os.rename(delta, delta + ".__pre_compact__")
-    os.rename(codes, codes + ".__pre_compact__")
+    # simulate the worst crash window: the root parked, the new one
+    # not yet promoted
+    os.rename(path, path + ".__pre_compact__")
     ann_index_compact(spark, path)  # recovers, then compacts
     assert _rows(ann_index_query(spark, path, queries, **args)) == before
-    assert not os.path.isdir(delta + ".__pre_compact__")
-    assert not os.path.isdir(codes + ".__pre_compact__")
+    assert not os.path.isdir(path + ".__pre_compact__")
+
+
+def _append_two_batches(spark, tmp_path, name):
+    """An IVF-PQ index over two thirds of the corpus plus run-1's two
+    appended batches; returns (path, sink, last batch, corpus size)."""
+    from example_kafkastreams_spark.operators.ann_index import (
+        ann_index_append_sink,
+    )
+    from example_kafkastreams_spark.operators.knn import train_ivfpq_local
+
+    emb = load_table(spark, SMOKE, "embeddings")
+    day1 = emb.filter(F.col("vec_id") % 3 != 0)
+    cents, cb = train_ivfpq_local(
+        day1, num_centroids=4, m=8, num_codes=16, sample_n=256,
+        iterations=4,
+    )
+    path = str(tmp_path / name)
+    ivfpq_index_write(day1, path, cents=cents, codebook=cb)
+    sink = ann_index_append_sink(spark, path, run_id="run-1")
+    b1 = emb.filter(F.col("vec_id") % 6 == 3)
+    sink(emb.filter(F.col("vec_id") % 6 == 0), 0)
+    sink(b1, 1)
+    return path, sink, b1, emb.count()
+
+
+def _served(spark, path):
+    enc, _ = ann_index_read(spark, path)
+    return enc.count(), enc.select("vec_id").distinct().count()
+
+
+def test_ann_index_compact_then_replay_serves_each_row_once(spark, tmp_path):
+    """A restart from run-1's checkpoint replays its last batch. After
+    a compaction that replay must overwrite its own held-back leaf,
+    not add a second copy of rows already in the base codes: a row
+    served twice corrupts top-k ranks."""
+    from example_kafkastreams_spark.operators.ann_index import (
+        ann_index_compact,
+    )
+
+    path, sink, b1, n = _append_two_batches(spark, tmp_path, "ivfpq_replay")
+    assert _served(spark, path) == (n, n)
+    ann_index_compact(spark, path)
+    sink(b1, 1)  # the replay
+    assert _served(spark, path) == (n, n)
+
+
+def test_ann_index_compact_recovers_a_crash_after_the_promote(
+    spark, tmp_path, monkeypatch
+):
+    """A compaction that crashes after promoting the new tree, while
+    pruning the parked one, must not wedge the index: the next call
+    serves each row once, compacts, and leaves no sibling behind."""
+    import glob
+    import shutil
+
+    from example_kafkastreams_spark.operators.ann_index import (
+        ann_index_compact,
+    )
+
+    path, _, _, n = _append_two_batches(spark, tmp_path, "ivfpq_wedge")
+    rmtree = shutil.rmtree
+
+    def crash_on_parked(p, *args, **kwargs):
+        if str(p).endswith(".__pre_compact__"):
+            raise OSError("injected crash while pruning " + str(p))
+        return rmtree(p, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(shutil, "rmtree", crash_on_parked)
+        with pytest.raises(OSError, match="injected"):
+            ann_index_compact(spark, path)
+    ann_index_compact(spark, path)
+    assert _served(spark, path) == (n, n)
+    ann_index_compact(spark, path)
+    assert _served(spark, path) == (n, n)
+    assert glob.glob(path + ".__*") + glob.glob(path + "/*.__*") == []

@@ -1,14 +1,18 @@
-"""Source guard for the one sink replay protocol
+"""Source guard for the one sink replay and compaction protocol
 (example_kafkastreams_spark/streaming/sinks.py).
 
 Every ``foreachBatch`` sink in the package names its output by one
 replay token, writes leaves by one dynamic partition overwrite, checks
 for committed leaves in one place and keeps snapshot stores behind one
-``meta.json`` pointer. This scan fails if a copy of any of those comes
-back elsewhere in the package: a ``partitionOverwriteMode`` write, a
+``meta.json`` pointer; every compactor publishes through one
+park-then-promote swap and every JSON artifact is written by one
+atomic writer. This scan fails if a copy of any of those comes back
+elsewhere in the package: a ``partitionOverwriteMode`` write, a
 ``hexdigest()[:16]`` token, a ``startswith("ingest_run=")`` leaf check,
-or a pointer write (the pointer's ``"applied"`` high-water-mark map or a
-``v_{...}`` snapshot directory name).
+a pointer write (the pointer's ``"applied"`` high-water-mark map or a
+``v_{...}`` snapshot directory name), a swap suffix
+(``__pre_compact__``, ``__compacting__``) or a JSON temp name
+(``__tmp__``, ``json.tmp``).
 """
 
 from __future__ import annotations
@@ -24,6 +28,8 @@ PATTERNS = {
     "replay token": re.compile(r"hexdigest\(\)\[:16\]"),
     "committed-leaf check": re.compile(r"""startswith\(\s*["']ingest_run="""),
     "meta.json pointer write": re.compile(r"""["']applied["']|\bv_\{"""),
+    "park-then-promote swap": re.compile(r"__pre_compact__|__compacting__"),
+    "atomic JSON write": re.compile(r"__tmp__|json\.tmp"),
 }
 
 
@@ -38,6 +44,7 @@ def test_sink_protocol_only_in_sinks_module():
         if pattern.search(line)
     ]
     assert not offenders, (
-        "write sinks through example_kafkastreams_spark.streaming.sinks:\n"
+        "write sinks, swaps and JSON artifacts through "
+        "example_kafkastreams_spark.streaming.sinks:\n"
         + "\n".join(offenders)
     )
