@@ -1002,14 +1002,8 @@ def main() -> None:
     # the shortlist so there is no second corpus scan). "sec" stays
     # build+serve for cross-round continuity. The deploy gate: every
     # trained serve must beat the brute-force wall at this scale.
-    from example_kafkastreams_spark.operators.knn import (
-        ivf_flat_ann_trained_build,
-        ivf_pq_ann_trained_build,
-        ivf_pq_ann_trained_serve,
-        ivfflat_score,
-        pq_ann_trained_build,
-        pq_ann_trained_serve,
-    )
+    from example_kafkastreams_spark.operators.ann_index import ann_build
+    from example_kafkastreams_spark.operators.knn import ann_serve
 
     ann_qrows = qrows  # the NQ (id, vector) rows collected above
 
@@ -1031,21 +1025,22 @@ def main() -> None:
         }
 
     ann_rows["pq_trained"] = _split_row(
-        lambda: pq_ann_trained_build(embt),
-        lambda b: pq_ann_trained_serve(b[-1], b[0], ann_qrows, k=K),
+        lambda: ann_build(embt, {"kind": "pq", "m": 16, "num_codes": 256}),
+        lambda b: ann_serve(*b, ann_qrows, K, refine=100),
     )
     ann_rows["ivfpq_trained"] = _split_row(
-        lambda: ivf_pq_ann_trained_build(embt),
-        lambda b: ivf_pq_ann_trained_serve(
-            b[-1], b[0], b[1], ann_qrows, k=K
+        lambda: ann_build(
+            embt,
+            {"kind": "ivfpq", "num_centroids": 64, "m": 16, "num_codes": 256},
         ),
+        lambda b: ann_serve(*b, ann_qrows, K, nprobe=16, refine=100),
     )
     # nprobe=12 (was 8): the r9 sweep's recall@10 sat EXACTLY on the
     # 0.85 gate floor — 12-of-64 cells buys headroom while the serve
     # stays well under the brute-force wall
     ann_rows["ivfflat_trained"] = _split_row(
-        lambda: ivf_flat_ann_trained_build(embt),
-        lambda b: ivfflat_score(b[-1], b[0], ann_qrows, K, nprobe=12),
+        lambda: ann_build(embt, {"kind": "ivfflat", "num_centroids": 64}),
+        lambda b: ann_serve(*b, ann_qrows, K, nprobe=12),
     )
     # Build/serve split — the deployable story. The *_trained walls
     # above bill sampling + training + encode to EVERY call; a
@@ -1059,24 +1054,18 @@ def main() -> None:
     import shutil
     import tempfile
 
-    from example_kafkastreams_spark.operators.ann_index import (
-        ann_index_query,
-        ivfpq_index_write,
-    )
-    from example_kafkastreams_spark.operators.knn import train_ivfpq_local
+    from example_kafkastreams_spark.operators.ann_index import ann_index_query
 
     NC, NPROBE = 64, 16
     idx_dir = tempfile.mkdtemp(prefix="bench_ivfpq_idx_")
     try:
         def build():
-            trained = train_ivfpq_local(embt, NC, 16, 256)
-            ivfpq_index_write(
-                embt, idx_dir, cents=trained[0], codebook=trained[1]
-            )
-            return trained
+            spec = {"kind": "ivfpq", "num_centroids": NC, "m": 16,
+                    "num_codes": 256}
+            return ann_build(embt, spec, idx_dir)[0]
 
         b = obs.measure(None, build)
-        cents_t = b.value[0]
+        cents_t = b.value["centroids"]
         served = obs.measure(
             None,
             lambda: ann_index_query(
@@ -1100,14 +1089,13 @@ def main() -> None:
         # quadrant: exact cosine inside probed cells, no refine) — its
         # build reuses cents_t, so build_sec here is encode + write
         # only; training is billed once above.
-        from example_kafkastreams_spark.operators.ann_index import (
-            ivfflat_index_write,
-        )
-
         flat_dir = tempfile.mkdtemp(prefix="bench_ivfflat_idx_")
         try:
             flat_build = obs.measure(
-                None, lambda: ivfflat_index_write(embt, flat_dir, cents_t)
+                None,
+                lambda: ann_build(
+                    embt, {"kind": "ivfflat", "centroids": cents_t}, flat_dir
+                ),
             )
             flat_served = obs.measure(
                 None,

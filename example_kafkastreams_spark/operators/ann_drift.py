@@ -22,8 +22,8 @@ a docstring claim into a measured decision:
   per task, never vectors — at 100 TB the stats cost is the scan, and
   for appended batches the vectors are already in hand.
 * ``record_train_stats`` — folds the BUILD corpus's stats into
-  ``meta.json`` after an ``*_index_write``: the baseline every later
-  comparison is against.
+  ``meta.json`` after an ``ann_index.ann_build`` to a path: the
+  baseline every later comparison is against.
 * ``ann_index_append_sink(track_drift=True)`` (in ``ann_index``) —
   the streaming member: each micro-batch's stats land under
   ``drift/ingest_run/ingest_batch`` with the same dynamic-overwrite
@@ -33,8 +33,8 @@ a docstring claim into a measured decision:
   train baseline (``err_ratio``) and worst-cell occupancy vs uniform
   (``imbalance``), overall and per ingest run.
 * ``should_rebuild`` — thresholds the report into the scheduled-
-  rebuild decision (rebuild = retrain parameters + re-encode via the
-  ``*_index_write`` path).
+  rebuild decision (rebuild = retrain parameters + re-encode via
+  ``ann_build`` to the index path).
 
 Stats are operational telemetry, not oracle rows: float sums ride
 numpy/Spark partial aggregation (no cross-engine bit contract).
@@ -58,21 +58,6 @@ _DRIFT = "drift"
 _STATS_SCHEMA = "cell int, n long, err_sum double"
 
 
-def _np_sub_err(X: np.ndarray, cb: list[np.ndarray]) -> np.ndarray:
-    """Summed per-subspace argmin L2² — the quantization error of the
-    code ``_np_codes`` would pick, chunked the same way."""
-    m = len(cb)
-    dsub = X.shape[1] // m
-    err = np.zeros(len(X))
-    for j in range(m):
-        sub = X[:, j * dsub:(j + 1) * dsub]
-        for lo in range(0, len(sub), 1024):
-            blk = sub[lo:lo + 1024]
-            d2 = ((blk[:, None, :] - cb[j][None, :, :]) ** 2).sum(-1)
-            err[lo:lo + 1024] += d2.min(1)
-    return err
-
-
 def quantization_stats(
     emb: DataFrame,
     meta: dict,
@@ -82,6 +67,8 @@ def quantization_stats(
     map-side Arrow pass, per-batch pre-aggregation, then a cell-grain
     hash agg whose exchange carries ≤ num_cells rows per task."""
     import pandas as pd
+
+    from .knn import _pq_argmin, _py_cosine_matrix
 
     kind = meta["kind"]
     vc = vec_col or meta.get("vec_col", "embedding")
@@ -99,14 +86,6 @@ def quantization_stats(
         raise ValueError(f"unknown index kind {kind!r}")
 
     def gen(batches):
-        # epsilon-clamped norms: a zero vector must yield cos 0 / a
-        # finite err, not a NaN that poisons err_sum and makes every
-        # should_rebuild comparison silently false
-        cn = (
-            np.maximum(np.sqrt((C * C).sum(1)), 1e-12)
-            if C is not None
-            else None
-        )
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -115,15 +94,18 @@ def quantization_stats(
             )
             if kind == "pq":
                 cell = np.zeros(len(X), dtype=np.int64)
-                err = _np_sub_err(X, cb)
+                err = _pq_argmin(X, cb)[1]
             else:
-                xn = np.maximum(np.sqrt((X * X).sum(1)), 1e-12)
-                cos = (X @ C.T) / (xn[:, None] * cn[None, :])
+                # the encoders' cell pick; a zero-norm vector or
+                # centroid scores cosine 0, not a NaN that would
+                # poison err_sum and make every should_rebuild
+                # comparison silently false
+                cos = np.nan_to_num(_py_cosine_matrix(X, C), nan=0.0)
                 cell = cos.argmax(1)
                 if kind == "ivfflat":
                     err = 1.0 - cos.max(1)
                 else:
-                    err = _np_sub_err(X - C[cell], cb)
+                    err = _pq_argmin(X - C[cell], cb)[1]
             n_cells = 1 if C is None else len(C)
             yield pd.DataFrame(
                 {
@@ -156,8 +138,8 @@ def record_train_stats(
 ) -> dict:
     """Compute the build corpus's quantization stats and fold them
     into the artifact's ``meta.json`` as ``train_stats`` — run once
-    right after ``*_index_write`` (the corpus frame is still in
-    hand). Returns the recorded dict."""
+    right after ``ann_build`` writes the index (the corpus frame is
+    still in hand). Returns the recorded dict."""
     meta_path = os.path.join(path, "meta.json")
     with open(meta_path) as f:
         meta = json.load(f)

@@ -1,26 +1,32 @@
-"""Persistent ANN index artifacts: build ONCE, query many times.
+"""ANN indexes: build ONCE, serve many query batches.
 
-``pq_ann`` / ``ivf_pq_ann`` rebuild their index per call — right for
-the oracle-checked driver rows, wrong for the production workflow
-where a 100 TB corpus is encoded once and then served thousands of
-queries. This module stores the two halves of an index the way
-billion-vector deployments do (FAISS convention):
+An index is its PARAMETERS plus an ENCODED corpus. The parameters are
+one dict — ``kind`` (``pq``, ``ivfpq`` or ``ivfflat``), ``centroids``
+and/or ``codebook``, their sizes, ``id_col`` and ``vec_col`` — and a
+persistent index stores exactly that dict as ``meta.json``. Kilobytes:
+the artifact a query session loads driver-side to splice LUT literals.
+The encoded corpus is (id, codes) for PQ, (id, cell, codes) for
+IVF-PQ and (id, cell, vector) for IVF-Flat: m bytes per vector instead
+of 4·dim floats for the PQ kinds (FAISS convention).
 
-* the ENCODED CORPUS — parquet, (id, codes) for PQ or
-  (id, cell, codes) for IVF-PQ: m bytes per vector instead of 4·dim
-  floats, written by the same zero-shuffle map-side encode;
-* the TRAINED PARAMETERS — ``meta.json`` beside it: kind, m,
-  codebook (and centroids for IVF-PQ). Kilobytes; the artifact a
-  query session loads driver-side to splice LUT literals.
+``ann_build`` trains whatever parameters the dict leaves out (sampled
+k-means, ``knn.kmeans_train_local`` / ``knn.pq_codebook_local``) and
+encodes through ``knn.ann_encode``, the one encoder dispatch. Without
+a ``path`` the encoded frame is an in-session index: persisted, raw
+vectors kept, so ``knn.ann_serve`` refines in place. With a ``path``
+it is written as parquet next to ``meta.json``; ``ann_index_query`` is
+``ann_index_read`` plus the same ``ann_serve``, and
+``ann_index_append_sink`` encodes each micro-batch through the same
+``ann_encode``. Base ∪ appended codes therefore equal a one-shot encode,
+and a loaded index serves bit-identically to an in-session one.
 
 Floats survive the JSON round trip exactly (``json`` serializes via
-``float.__repr__``, the shortest exact representation), so a query
-against the loaded index is bit-identical to one against the fresh
-build — pinned by unit test.
+``float.__repr__``, the shortest exact representation) — pinned by
+unit test.
 
 Reference parity: the reference has no vector surface at all; this is
 part of the §2.9 similarity-search extension
-(``operators/knn.py`` docstrings carry the file:line citations).
+(``operators/knn.py`` docstrings carry the citations).
 """
 
 from __future__ import annotations
@@ -29,7 +35,8 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import numpy as np
+from pyspark.sql import DataFrame, SparkSession
 
 from ..streaming.sinks import (
     INGEST_PARTS,
@@ -40,29 +47,19 @@ from ..streaming.sinks import (
     write_json,
     write_leaf,
 )
+from .cache import persist_tracked
 from .knn import (
-    _empty_ann_result,
-    exact_rerank,
-    ivf_flat_encode,
-    ivf_pq_encode_local,
-    ivf_pq_index,
-    ivfflat_score,
-    ivfpq_adc_score,
-    pq_adc_score,
-    pq_codebook,
-    pq_encode,
-    pq_encode_vectorized,
+    _cosine_cells,
+    ann_encode,
+    ann_serve,
+    kmeans_train_local,
+    pq_codebook_local,
+    sample_vectors,
 )
 
 _META = "meta.json"
 _CODES = "codes"
 _DELTA = "codes_delta"
-
-# Above this many codes per subspace the expression encoder's spliced
-# literal folds (m * num_codes of them) blow past JIT method limits —
-# switch to the Arrow argmin encoder (same codes, pinned by
-# tests/test_ann_trained.py::test_vectorized_encode_matches_expression).
-_VECTORIZE_ABOVE = 32
 
 
 def _prune_superseded_trees(path: str) -> None:
@@ -76,122 +73,57 @@ def _prune_superseded_trees(path: str) -> None:
         shutil.rmtree(os.path.join(path, d), ignore_errors=True)
 
 
-def pq_index_write(
+def ann_build(
     emb: DataFrame,
-    path: str,
-    m: int = 8,
-    num_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    codebook: list | None = None,
-) -> None:
-    """Encode ``emb`` with a PQ codebook and persist both halves under
-    ``path``. The encode is the scan-shaped zero-shuffle pass of
-    ``pq_encode``; the write is the only data movement.
+    meta: dict,
+    path: str | None = None,
+    sample_n: int = 16384,
+    iterations: int = 10,
+) -> tuple[dict, DataFrame]:
+    """(parameters, encoded frame) of an index over ``emb``.
 
-    Pass ``codebook`` (e.g. ``pq_codebook_local`` over a
-    ``sample_vectors`` draw) to persist a TRAINED index — the
-    serving-grade build ``pq_ann_trained`` runs in-session. Large
-    codebooks encode through the Arrow path automatically."""
+    ``meta`` names the kind and either the sizes to train or frozen
+    parameters: ``{"kind": "ivfpq", "num_centroids": 64, "m": 16,
+    "num_codes": 256}`` trains on a deterministic ``sample_n``-row
+    sample (``iterations`` Lloyd's rounds): cosine centroids, then
+    per-subspace L2 codebooks over the sample — over its RESIDUALS
+    when the index has centroids. ``{"kind": "pq", "codebook": cb}``
+    trains nothing. ``id_col``/``vec_col`` default to
+    ``vec_id``/``embedding``.
+
+    No ``path``: an in-session index — the frame is persisted with the
+    raw vectors kept, so a refine serve needs no second corpus pass.
+    With ``path``: a persistent index — appended leaves and drift stats
+    of an earlier build are pruned and the codes-only frame lands as
+    parquet beside ``meta.json`` (``ann_index_read`` loads both)."""
+    meta = {"id_col": "vec_id", "vec_col": "embedding", **meta}
+    need_cents = "centroids" not in meta and "num_centroids" in meta
+    need_cb = "codebook" not in meta and "num_codes" in meta
+    if need_cents or need_cb:
+        X = sample_vectors(emb, sample_n, meta["id_col"], meta["vec_col"])
+        if need_cents:
+            meta["centroids"] = kmeans_train_local(
+                X, meta["num_centroids"], iterations, "cosine"
+            )
+        if need_cb:
+            if "centroids" in meta:
+                C = np.asarray(meta["centroids"], dtype=np.float64)
+                X = X - C[_cosine_cells(X, C)]
+            meta["codebook"] = pq_codebook_local(
+                X, meta["m"], meta["num_codes"], iterations
+            )
+    if "centroids" in meta:
+        meta["num_centroids"] = len(meta["centroids"])
+    if "codebook" in meta:
+        meta["m"] = len(meta["codebook"])
+        meta["num_codes"] = len(meta["codebook"][0])
+    if path is None:
+        return meta, persist_tracked(ann_encode(emb, meta, keep_vec=True))
     _prune_superseded_trees(path)
-    if codebook is None:
-        codebook = pq_codebook(emb, m, num_codes, id_col, vec_col)
-    else:
-        m, num_codes = len(codebook), len(codebook[0])
-    encode = (
-        pq_encode_vectorized if num_codes > _VECTORIZE_ABOVE else pq_encode
-    )
-    encode(emb, codebook, id_col, vec_col).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, _CODES))
-    write_json(
-        os.path.join(path, _META),
-        {
-            "kind": "pq",
-            "m": m,
-            "num_codes": num_codes,
-            "id_col": id_col,
-            "codebook": codebook,
-        },
-    )
-
-
-def ivfpq_index_write(
-    emb: DataFrame,
-    path: str,
-    num_centroids: int = 8,
-    m: int = 8,
-    num_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cents: list | None = None,
-    codebook: list | None = None,
-) -> None:
-    """IVF-PQ variant: (id, cell, codes) parquet + centroids and the
-    residual codebook in the meta artifact.
-
-    Pass BOTH ``cents`` (``kmeans_train_local``) and ``codebook``
-    (``pq_codebook_local`` over the sample's residuals) to persist the
-    serving-grade trained index ``ivf_pq_ann_trained`` builds
-    in-session; the encode then runs as the one-pass Arrow build."""
-    _prune_superseded_trees(path)
-    if cents is not None and codebook is not None:
-        enc = ivf_pq_encode_local(emb, cents, codebook, id_col, vec_col)
-    else:
-        enc, cents, codebook = ivf_pq_index(
-            emb,
-            num_centroids,
-            m,
-            num_codes,
-            id_col,
-            vec_col,
-            persist=False,
-            cents=cents,
-            codebook=codebook,
-        )
+    enc = ann_encode(emb, meta)
     enc.write.mode("overwrite").parquet(os.path.join(path, _CODES))
-    write_json(
-        os.path.join(path, _META),
-        {
-            "kind": "ivfpq",
-            "m": len(codebook),
-            "num_codes": len(codebook[0]),
-            "num_centroids": len(cents),
-            "id_col": id_col,
-            "centroids": cents,
-            "codebook": codebook,
-        },
-    )
-
-
-def ivfflat_index_write(
-    emb: DataFrame,
-    path: str,
-    cents: list,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """IVF-Flat variant (FAISS IndexIVFFlat): (id, cell, raw vector)
-    parquet + trained centroids in the meta artifact. The high-recall
-    serving option — exact cosine inside probed cells, no refine
-    stage — trading 4·dim bytes/vector of index storage for zero
-    quantization loss. ``cents`` comes from ``kmeans_train_local``
-    (cosine metric), the same coarse quantizer an IVF-PQ index
-    trains."""
-    _prune_superseded_trees(path)
-    ivf_flat_encode(emb, cents, id_col, vec_col).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, _CODES))
-    write_json(
-        os.path.join(path, _META),
-        {
-            "kind": "ivfflat",
-            "num_centroids": len(cents),
-            "id_col": id_col,
-            "vec_col": vec_col,
-            "centroids": cents,
-        },
-    )
+    write_json(os.path.join(path, _META), meta)
+    return meta, enc
 
 
 def ann_index_read(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
@@ -226,12 +158,12 @@ def ann_index_append_sink(
     base ∪ appended codes are BIT-IDENTICAL to a one-shot encode of
     the full corpus with the same parameters (golden-pinned) — the
     FAISS ``add()`` contract. Re-TRAINING on drifted data is a
-    scheduled batch rebuild (``*_index_write``), not a delta decision
-    — the same append-only/rebuild split every dedup index here uses.
+    scheduled batch rebuild (``ann_build`` with a path), not a delta
+    decision — the same append-only/rebuild split every dedup index
+    here uses.
 
-    Encode dispatch matches the writers: ivfflat → spliced-literal
-    cell tag; ivfpq → one-pass Arrow build; pq → Arrow above 32 codes,
-    expression below. All map-side; the parquet write is the only data
+    Each batch encodes through ``knn.ann_encode``, the dispatch the
+    build used — map-side, the parquet write is the only data
     movement. Codes land as ``codes_delta`` leaves of
     ``streaming.sinks``'s replay protocol.
 
@@ -242,31 +174,17 @@ def ann_index_append_sink(
     decision."""
     with open(os.path.join(path, _META)) as f:
         meta = json.load(f)
-    idc = meta["id_col"]
-    vec_col = meta.get("vec_col", "embedding")
 
     def write(batch_df: DataFrame, token: str, batch_id: int) -> None:
-        if meta["kind"] == "ivfflat":
-            enc = ivf_flat_encode(batch_df, meta["centroids"], idc, vec_col)
-        elif meta["kind"] == "ivfpq":
-            enc = ivf_pq_encode_local(
-                batch_df, meta["centroids"], meta["codebook"], idc, vec_col
-            )
-        elif meta["kind"] == "pq":
-            encode = (
-                pq_encode_vectorized
-                if meta["num_codes"] > _VECTORIZE_ABOVE
-                else pq_encode
-            )
-            enc = encode(batch_df, meta["codebook"], idc, vec_col)
-        else:
-            raise ValueError(f"unknown index kind {meta['kind']!r}")
-        write_leaf(enc, os.path.join(path, _DELTA), token, batch_id)
+        write_leaf(
+            ann_encode(batch_df, meta), os.path.join(path, _DELTA), token,
+            batch_id,
+        )
         if track_drift:
             from .ann_drift import quantization_stats
 
             write_leaf(
-                quantization_stats(batch_df, meta, vec_col),
+                quantization_stats(batch_df, meta),
                 os.path.join(path, "drift"),
                 token,
                 batch_id,
@@ -318,76 +236,24 @@ def ann_index_compact(spark: SparkSession, path: str) -> None:
 def ann_index_query(
     spark: SparkSession,
     path: str,
-    queries: DataFrame,
+    queries,
     k: int = 3,
     nprobe: int = 2,
-    id_col: str | None = None,
-    vec_col: str = "embedding",
     refine: int | None = None,
     rerank_against: DataFrame | None = None,
 ) -> DataFrame:
-    """Top-k neighbors for each row of ``queries`` (an (id, vector)
-    frame, collected driver-side — the bounded small side, same
-    convention as ``brute_force_knn``'s query broadcast) against the
-    stored index, dispatching on the artifact's ``kind``.
+    """Top-k neighbors for each row of ``queries`` against the stored
+    index: ``ann_index_read`` plus ``knn.ann_serve``, the scoring an
+    in-session index runs, so a loaded index returns bit-identical
+    results — only the encode cost disappears: queries against 100 TB
+    touch the m-bytes/vector codes parquet (nprobe/num_centroids of it
+    for IVF-PQ), never the raw vectors.
 
-    Scoring is the SAME code path as the fresh-build operators
-    (``pq_adc_score`` / ``ivfpq_adc_score``), so a loaded index
-    returns bit-identical results to an in-session build — only the
-    encode cost disappears: queries against 100 TB touch the m-bytes/
-    vector codes parquet (nprobe/num_centroids of it for IVF-PQ),
-    never the raw vectors.
-
-    Pass ``refine`` + ``rerank_against`` (the raw-vector frame the
-    index was built from) for the FAISS IndexRefineFlat serving shape
-    ``*_ann_trained`` runs in-session: an ADC shortlist of ``refine``
-    candidates per query, then exact cosine re-rank down to ``k`` via
-    a broadcast point-lookup of just those NQ*refine raw vectors —
-    output switches to the ``brute_force_knn`` contract
-    (query_id, neighbor_id, cosine, knn_rank)."""
+    ``refine`` + ``rerank_against`` (the raw-vector frame the index was
+    built from) is the FAISS IndexRefineFlat serving shape: an ADC
+    shortlist of ``refine`` candidates per query, then exact cosine
+    re-rank down to ``k`` via a broadcast point-lookup of just those
+    NQ*refine raw vectors — output switches to the ``brute_force_knn``
+    contract (query_id, neighbor_id, cosine, knn_rank)."""
     enc, meta = ann_index_read(spark, path)
-    idc = id_col or meta["id_col"]
-    # ``queries`` may be a pre-collected id-ordered list of (id, vec)
-    # rows (catalog.load_head_rows) — the collect job disappears
-    qrows = (
-        list(queries)
-        if isinstance(queries, list)
-        else queries.orderBy(idc).select(idc, vec_col).collect()
-    )
-    if not qrows:
-        return _empty_ann_result(enc.select(F.col(idc)), idc)
-    if meta["kind"] == "ivfflat":
-        if refine is not None:
-            raise ValueError(
-                "ivfflat scores exact cosine inside probed cells; "
-                "refine/rerank does not apply"
-            )
-        return ivfflat_score(
-            enc,
-            meta["centroids"],
-            qrows,
-            k,
-            nprobe,
-            idc,
-            meta.get("vec_col", vec_col),
-        )
-    shortlist_k = refine if refine is not None else k
-    if meta["kind"] == "pq":
-        out = pq_adc_score(enc, meta["codebook"], qrows, shortlist_k, idc)
-    elif meta["kind"] == "ivfpq":
-        out = ivfpq_adc_score(
-            enc,
-            meta["centroids"],
-            meta["codebook"],
-            qrows,
-            shortlist_k,
-            nprobe,
-            idc,
-        )
-    else:
-        raise ValueError(f"unknown index kind {meta['kind']!r}")
-    if refine is not None:
-        if rerank_against is None:
-            raise ValueError("refine requires rerank_against")
-        out = exact_rerank(out, rerank_against, qrows, k, idc, vec_col)
-    return out
+    return ann_serve(meta, enc, queries, k, nprobe, refine, rerank_against)

@@ -3,26 +3,34 @@
 North-star extension (SURVEY.md §2.9): approximate-nearest-neighbor
 over `embeddings.embedding` (64-dim float vectors).
 
-Two tiers, mirroring what a 100 TB pipeline runs:
+Three layers, mirroring what a 100 TB pipeline runs:
 
-- ``brute_force_knn`` — exact cosine top-k. The QUERY set is the small
-  side and is broadcast; the corpus streams through scan→(broadcast
-  nested loop)→partial top-k. No shuffle of the corpus: the only
-  exchange is the final per-query k-row aggregation. This is the
-  correctness baseline and is the right physical plan whenever
-  |queries| is small — cost |corpus|·|queries| map work, perfectly
-  parallel.
-- ``lsh_ann`` — sign-random-projection LSH: both sides bucket by the
-  sign pattern of dot products against shared hyperplanes; candidates
-  are an equi-join on the bucket id, so work scales with bucket
-  collision counts. Planes are Python literals from a seeded PRNG and
-  are spliced into both the Spark plan and the DuckDB oracle, so
-  "random" is reproducible across engines.
+- Exact search. ``brute_force_knn`` is exact cosine top-k: the QUERY
+  set is the small side and is broadcast; the corpus streams through
+  scan→(broadcast nested loop)→partial top-k, so the only exchange is
+  the final per-query k-row aggregation. ``matryoshka_knn`` and
+  ``pca_knn`` shortlist in a cheaper space and refine exactly.
+- Oracle-checked ANN operators. ``lsh_ann`` (sign-random-projection
+  buckets), ``ivf_ann``, ``pq_ann`` / ``ivf_pq_ann`` and the IVF-Flat
+  pair ``ivf_flat_encode`` / ``ivfflat_score`` build their quantizers
+  from deterministic samples or the ``*_exact`` trainers, whose
+  literals splice into both the Spark plan and the DuckDB oracle, so
+  "random" and "trained" are reproducible across engines.
+- The serving index path. An index is its parameters (the
+  ``meta.json`` dict of ``operators.ann_index``) plus an encoded frame.
+  ``ann_encode`` is the one place an encoder is picked from those
+  parameters and ``ann_serve`` the one place a scorer is; the
+  in-session build, the persistent artifact and the streaming append
+  sink (``operators.ann_index``) all go through them. Serving-grade
+  parameters come from a bounded driver-side sample
+  (``sample_vectors``, ``kmeans_train_local``, ``pq_codebook_local``).
 
 All vector math is double-precision left folds from
 ``functions.portable`` — bitwise identical in Spark and DuckDB, so
 ranking (and therefore top-k membership) matches exactly with ties
-broken on vec_id.
+broken on vec_id. The numpy kernels (``_cosine_cells``,
+``_pq_argmin``) accumulate in the same order, so an Arrow encode
+assigns the same cells and codes as the SQL expressions.
 """
 
 from __future__ import annotations
@@ -198,8 +206,8 @@ def pca_train(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> tuple[list[float], list[list[float]]]:
-    """Sampled PCA basis — the dimensionality-reduction twin of
-    ``kmeans_train``'s sampled-trainer convention (tokenizers,
+    """Sampled PCA basis — the dimensionality-reduction twin of the
+    sampled-trainer convention (``kmeans_train_local``; tokenizers,
     codebooks, and projection bases are trained on a bounded sample
     and SHIPPED; the collect here is ≤ ``sample_n`` rows by
     construction). Returns (mean, components) — ``out_dim`` unit
@@ -385,91 +393,6 @@ def pca_knn(
     )
 
 
-def brute_force_knn_vectorized(
-    emb: DataFrame,
-    num_queries: int = 8,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Arrow/numpy scale path for exact cosine top-k.
-
-    The declared query (``brute_force_knn``) stays in Catalyst fold
-    expressions for oracle-exact math; this variant is what you run
-    when |corpus|·|queries| grows: the query matrix ships to every
-    task as a closure (it is the small side — same broadcast reasoning),
-    each Arrow batch scores against it with one float64 matmul, and
-    only per-batch top-k survivors (k·|queries| rows per batch) reach
-    the final global rank — the shuffle carries candidates, not the
-    corpus. Results match the expression path except on cosine ties at
-    ~1e-15 (summation order); tests pin rank-set equality on real data.
-    """
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    rows = (
-        emb.filter(F.col(id_col) < num_queries)
-        .select(id_col, vec_col)
-        .collect()
-    )
-    qids = np.array([r[0] for r in rows], dtype=np.int64)
-    Q = np.array([r[1] for r in rows], dtype=np.float64)
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-
-    schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy()
-            M = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
-            sims = Mn @ Qn.T  # (batch, nq)
-            out = []
-            for j, qid in enumerate(qids):
-                col = sims[:, j]
-                mask = ids != qid
-                cand = np.nonzero(mask)[0]
-                top = cand[np.argsort(-col[cand], kind="stable")[:k]]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qid,
-                            "neighbor_id": ids[top],
-                            # raw float64 — the per-batch cut and the
-                            # global rank must use the SAME ordering;
-                            # rounding only in the final select (a
-                            # pruned candidate could otherwise tie a
-                            # survivor at 1e-6 granularity and win on id)
-                            "cosine": col[top],
-                        }
-                    )
-                )
-            yield pd.concat(out, ignore_index=True)
-
-    partial = emb.select(id_col, vec_col).mapInPandas(score, schema=schema)
-    win = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        partial.withColumn("knn_rank", F.row_number().over(win))
-        .filter(F.col("knn_rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("cosine"), 6).alias("cosine"),
-            "knn_rank",
-        )
-    )
-
-
 def with_bucket(
     emb: DataFrame,
     planes: list[list[float]],
@@ -556,7 +479,6 @@ def ivf_ann(
     num_centroids: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """IVF-style ANN: coarse quantizer + within-cell search.
 
@@ -565,8 +487,9 @@ def ivf_ann(
     is tiny); search touches only the query's cell. Here the coarse
     quantizer is a deterministic sample (the first ``num_centroids``
     vectors) instead of k-means — same plan shape and cost model,
-    reproducible in the SQL oracle; swapping in trained centroids is a
-    literal substitution. Single-probe recall < 1, like ``lsh_ann``;
+    reproducible in the SQL oracle (the IVF-Flat serving index,
+    ``ivf_flat_encode`` / ``ivfflat_score``, takes trained centroids).
+    Single-probe recall < 1, like ``lsh_ann``;
     production adds nprobe > 1 by taking the top-n centroids per query
     (same join, rank ≤ nprobe).
 
@@ -574,25 +497,9 @@ def ivf_ann(
     broadcast (no corpus shuffle); the within-cell join shuffles on the
     cell id — collisions scale with cell population, the IVF promise.
     """
-    if centroids is not None:
-        # TRAINED quantizer (kmeans_train) as a drop-in: the promised
-        # "literal substitution" — same broadcast-assign plan, the
-        # centroid frame just comes from the trained list
-        from pyspark.sql import types as T
-
-        cent = emb.sparkSession.createDataFrame(
-            [(i, c) for i, c in enumerate(centroids)],
-            T.StructType(
-                [
-                    T.StructField("cid", T.LongType()),
-                    T.StructField("cv", T.ArrayType(T.DoubleType())),
-                ]
-            ),
-        )
-    else:
-        cent = emb.filter(F.col(id_col) < num_centroids).select(
-            F.col(id_col).alias("cid"), F.col(vec_col).alias("cv")
-        )
+    cent = emb.filter(F.col(id_col) < num_centroids).select(
+        F.col(id_col).alias("cid"), F.col(vec_col).alias("cv")
+    )
     # the |corpus| x |centroids| assignment map is the expensive stage;
     # spread it off the single-row-group scan partition (no-op when the
     # scan is already parallel)
@@ -1098,7 +1005,7 @@ def pq_codebook(
 
     Deterministic "training": the first ``num_codes`` vectors'
     subvectors — the same reproducible-sample convention as
-    ``ivf_ann``'s coarse quantizer (knn.py:291), so results are
+    ``ivf_ann``'s coarse quantizer, so results are
     engine-replayable; swapping in k-means-trained codewords is a
     literal substitution with the identical plan. Driver-side cost is
     a ``num_codes``-row collect — an index-BUILD artifact, exactly how
@@ -1146,19 +1053,67 @@ def pq_encode(
     vector is the deliberate price of zero exchanges (an exploded
     join+groupBy alternative would shuffle m rows per vector, twice).
     """
-    m = len(codebook)
+    return _encode_sql(emb, None, codebook, id_col, vec_col)
+
+
+def _pq_codes_sql(codebook: list[list[list[float]]], vec: str) -> str:
+    """``array(code_0, …, code_{m-1})`` over the array expression
+    ``vec``: per subspace ``array_position(d², array_min(d²)) - 1``
+    against the spliced codewords (ties → lowest code)."""
     dsub = len(codebook[0][0])
     code_exprs = []
-    for j in range(m):
-        sub = f"slice({vec_col}, {j * dsub + 1}, {dsub})"
-        d2s = ", ".join(_l2sq_expr(sub, cw) for cw in codebook[j])
-        arr = f"array({d2s})"
+    for j, words in enumerate(codebook):
+        sub = f"slice({vec}, {j * dsub + 1}, {dsub})"
+        arr = "array(" + ", ".join(_l2sq_expr(sub, cw) for cw in words) + ")"
         code_exprs.append(
             f"CAST(array_position({arr}, array_min({arr})) - 1 AS INT)"
         )
-    return emb.select(
-        F.col(id_col),
-        F.expr(f"array({', '.join(code_exprs)})").alias("codes"),
+    return f"array({', '.join(code_exprs)})"
+
+
+def _encode_sql(
+    emb: DataFrame,
+    cents: list[list[float]] | None,
+    codebook: list[list[list[float]]],
+    id_col: str,
+    vec_col: str,
+    keep_vec: bool = False,
+) -> DataFrame:
+    """The expression encoder: (id, codes) without ``cents`` (PQ), or
+    (id, cell, codes) with them (IVF-PQ: cell = argmax cosine against
+    the spliced centroid literals, ties → lowest cell; residual = x −
+    centroid[cell] via one ``zip_with`` against ``element_at`` of the
+    centroid array-of-arrays literal; codes over the residual).
+    ``keep_vec`` appends the raw vector column."""
+    keep = [F.col(vec_col)] if keep_vec else []
+    if cents is None:
+        return emb.select(
+            F.col(id_col),
+            F.expr(_pq_codes_sql(codebook, vec_col)).alias("codes"),
+            *keep,
+        )
+    cents_lit = (
+        "array("
+        + ", ".join(P.vec_literal(c, P.SPARK) for c in cents)
+        + ")"
+    )
+    n2_expr, coss = _cosine_vs_literal_exprs(vec_col, cents)
+    residual_expr = (
+        f"zip_with({vec_col}, element_at({cents_lit}, cell + 1),"
+        f" (x, y) -> CAST(x AS DOUBLE) - y)"
+    )
+    return (
+        emb.select(F.col(id_col), F.col(vec_col))
+        .withColumn("__n2", F.expr(n2_expr))
+        .withColumn("__cosarr", F.expr("array(" + ", ".join(coss) + ")"))
+        .withColumn("cell", F.expr(_ARGMAX_CELL))
+        .withColumn("__res", F.expr(residual_expr))
+        .select(
+            id_col,
+            "cell",
+            F.expr(_pq_codes_sql(codebook, "__res")).alias("codes"),
+            *keep,
+        )
     )
 
 
@@ -1170,7 +1125,6 @@ def pq_ann(
     num_codes: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    codebook: list[list[list[float]]] | None = None,
 ) -> DataFrame:
     """PQ asymmetric-distance ANN: (query_id, neighbor_id, approx_d2,
     knn_rank) — the memory-bound scale path of the ANN family.
@@ -1180,9 +1134,9 @@ def pq_ann(
     (``pq_encode``, 8 bytes/vector here); per query a k×m lookup table
     of exact subspace distances to every codeword is computed ONCE
     (driver-side Python on the collected ≤``num_queries`` query rows —
-    the same small-side convention as brute_force_knn's query
-    broadcast, knn.py:145), and scoring a vector is m table lookups
-    summed left-to-right. Approximation: d²(q,x) ≈ Σⱼ ‖qⱼ − c_{j,xⱼ}‖².
+    the same small-side convention as ``brute_force_knn``'s query
+    broadcast), and scoring a vector is m table lookups summed
+    left-to-right. Approximation: d²(q,x) ≈ Σⱼ ‖qⱼ − c_{j,xⱼ}‖².
 
     Scale: the encoded corpus never shuffles — per query the score is
     a map-side projection over the codes column; only the two-phase
@@ -1190,22 +1144,15 @@ def pq_ann(
     scan reads m bytes per vector instead of 4·dim — the reason PQ
     indexes hold billions of vectors where raw floats cannot.
 
-    Pass ``codebook`` (e.g. ``pq_codebook_trained``'s k-means output)
-    to skip the deterministic-sample training — identical plan, better
-    recall.
+    The codebook is the deterministic first-``num_codes`` sample
+    (``pq_codebook``); a trained index is ``ann_index.ann_build`` +
+    ``ann_serve``, the same scoring.
     """
-    if codebook is None:
-        codebook = pq_codebook(emb, m, num_codes, id_col, vec_col)
+    codebook = pq_codebook(emb, m, num_codes, id_col, vec_col)
     enc = persist_tracked(pq_encode(emb, codebook, id_col, vec_col))
-    qrows = (
-        emb.filter(F.col(id_col) < num_queries)
-        .orderBy(id_col)
-        .select(id_col, vec_col)
-        .collect()
-    )
-    if not qrows:
-        return _empty_ann_result(emb, id_col)
-    return pq_adc_score(enc, codebook, qrows, k, id_col)
+    meta = {"kind": "pq", "codebook": codebook, "id_col": id_col,
+            "vec_col": vec_col}
+    return ann_serve(meta, enc, emb.filter(F.col(id_col) < num_queries), k)
 
 
 def _query_lut(
@@ -1412,9 +1359,8 @@ def pq_adc_score(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """ADC scoring over an ALREADY-ENCODED corpus — the query-time half
-    of PQ, shared by ``pq_ann`` (fresh build) and the persistent-index
-    path (``operators.ann_index``). ``qrows`` are collected
-    (id, vector) rows.
+    of PQ (q56's ``adc`` branch; ``ann_serve`` runs the same scoring
+    for every PQ index). ``qrows`` are collected (id, vector) rows.
 
     Plan shape: ONE broadcast join, constant in the number of queries
     (the FAISS serving convention). Each query's k×m LUT of exact
@@ -1425,7 +1371,12 @@ def pq_adc_score(
     literals, which built one unioned sub-plan per query and hit
     driver-side plan explosion at realistic batch sizes).
     """
-    scored = _pq_adc_scored(enc, codebook, qrows, id_col)
+    return _adc_topk(_pq_adc_scored(enc, codebook, qrows, id_col), k)
+
+
+def _adc_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Top-``k`` of an ADC-scored (query_id, neighbor_id, __d2) frame:
+    (query_id, neighbor_id, approx_d2, knn_rank)."""
     return _two_phase_topk(
         scored,
         "query_id",
@@ -1441,9 +1392,9 @@ def pq_adc_score(
 
 def _empty_ann_result(emb: DataFrame, id_col: str) -> DataFrame:
     """Empty (query_id, neighbor_id, approx_d2, knn_rank) frame typed
-    off the corpus id column — what the PQ ANN operators return when
-    the query collect finds no rows (empty corpus, or no ids below
-    ``num_queries``) instead of an IndexError on ``parts[0]``."""
+    off the corpus id column — what ``ann_serve`` returns when the
+    query collect finds no rows (empty corpus, or no ids below
+    ``num_queries``)."""
     return emb.select(
         F.col(id_col).alias("query_id"),
         F.col(id_col).alias("neighbor_id"),
@@ -1458,9 +1409,10 @@ def _py_cosine_matrix(Q: np.ndarray, C: np.ndarray) -> np.ndarray:
     accumulate with elementwise ``+=`` along the dim axis (numpy
     float64 elementwise ops are the same IEEE mul/add sequence as the
     scalar loop, and ``0.0 + t0 == t0`` exactly), and np.sqrt is the
-    same correctly-rounded sqrt as math.sqrt. Replaces |queries| ·
-    |centroids| scalar-Python cosine calls in the serve-time cell
-    picks — the last driver-side O(nq·nc·dim) pure-Python term."""
+    same correctly-rounded sqrt as math.sqrt. A zero-norm row or
+    centroid yields NaN (0/0) where the scalar loop raises; the
+    serve-time picks (``_ranked_cells``) raise on it, the encoders'
+    ``_cosine_cells`` sends such a row to cell 0."""
     nq, d = Q.shape
     nc = C.shape[0]
     dot = np.zeros((nq, nc), dtype=np.float64)
@@ -1472,15 +1424,8 @@ def _py_cosine_matrix(Q: np.ndarray, C: np.ndarray) -> np.ndarray:
     n2b = np.zeros(nc, dtype=np.float64)
     for i in range(d):
         n2b += C[:, i] * C[:, i]
-    den = np.sqrt(n2a[:, None] * n2b[None, :])
-    if np.any(den == 0.0):
-        # preserve the scalar loop's loud failure: numpy would yield a
-        # silent NaN whose sort key desynchronizes Python cell picks
-        # from SQL's NaN-greatest argmax
-        raise ZeroDivisionError(
-            "zero-norm vector in serve-time cosine cell pick"
-        )
-    return dot / den
+    with np.errstate(invalid="ignore", divide="ignore"):
+        return dot / np.sqrt(n2a[:, None] * n2b[None, :])
 
 
 def _ranked_cells(
@@ -1494,6 +1439,12 @@ def _ranked_cells(
         np.asarray(qvs, dtype=np.float64),
         np.asarray(cents, dtype=np.float64),
     )
+    if np.isnan(cos).any():
+        # the scalar loop's loud failure: a NaN sort key would
+        # desynchronize the probed cells from the stored ones
+        raise ZeroDivisionError(
+            "zero-norm vector in serve-time cosine cell pick"
+        )
     nc = len(cents)
     return [
         sorted(range(nc), key=lambda ci: (-cos[qi, ci], ci))[:nprobe]
@@ -1527,19 +1478,13 @@ def ivf_pq_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     persist: bool = True,
-    cents: list[list[float]] | None = None,
-    codebook: list[list[list[float]]] | None = None,
     head_rows: list | None = None,
 ) -> tuple[DataFrame, list[list[float]], list[list[list[float]]]]:
     """The IVF-PQ INDEX build: (encoded frame (id, cell, codes),
-    centroids, residual codebook).
+    centroids, residual codebook), with deterministic-sample
+    parameters (a trained index is ``ann_index.ann_build``).
 
-    Pass ``cents`` (``kmeans_train`` output) and/or ``codebook``
-    (``pq_codebook_trained`` output) to swap the
-    deterministic samples for TRAINED parameters — the literal
-    substitution both docstrings promise; the plan is identical.
-
-    All map-side, zero corpus shuffle:
+    All map-side, zero corpus shuffle (``_encode_sql``):
     1. cell = argmax cosine against the spliced centroid literals
        (deterministic first-``num_centroids`` sample, the ivf_ann
        convention; ties → lowest cell via ``array_position`` of
@@ -1552,36 +1497,23 @@ def ivf_pq_index(
        with ``_py_cosine`` — the bit-exact Python twin of the SQL
        cosine fold, so Python and SQL agree on every assignment).
     """
-    if cents is None:
+
+    def head(n: int) -> list:
         if head_rows is not None:
-            cent_vecs = [
-                r[1] for r in head_rows if int(r[0]) < num_centroids
-            ]
-        else:
-            cent_vecs = [
-                r[0]
-                for r in emb.filter(F.col(id_col) < num_centroids)
-                .orderBy(id_col)
-                .select(vec_col)
-                .collect()
-            ]
-        cents = [[float(x) for x in v] for v in cent_vecs]
+            return [r[1] for r in head_rows if int(r[0]) < n]
+        return [
+            r[0]
+            for r in emb.filter(F.col(id_col) < n)
+            .orderBy(id_col)
+            .select(vec_col)
+            .collect()
+        ]
+
+    cents = [[float(x) for x in v] for v in head(num_centroids)]
     dim = len(cents[0])
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     dsub = dim // m
-    cents_lit = (
-        "array("
-        + ", ".join(P.vec_literal(c, P.SPARK) for c in cents)
-        + ")"
-    )
-
-    n2_expr, coss = _cosine_vs_literal_exprs(vec_col, cents)
-    cos_arr = "array(" + ", ".join(coss) + ")"
-    residual_expr = (
-        f"zip_with({vec_col}, element_at({cents_lit}, cell + 1),"
-        f" (x, y) -> CAST(x AS DOUBLE) - y)"
-    )
 
     def py_cell(v: list[float]) -> int:
         best, best_c = None, -1
@@ -1591,49 +1523,16 @@ def ivf_pq_index(
                 best, best_c = cos, ci
         return best_c
 
-    if codebook is None:
-        if head_rows is not None:
-            samp = [
-                r[1] for r in head_rows if int(r[0]) < num_codes
-            ]
-        else:
-            samp = [
-                r[0]
-                for r in emb.filter(F.col(id_col) < num_codes)
-                .orderBy(id_col)
-                .select(vec_col)
-                .collect()
-            ]
-        residuals = []
-        for r in samp:
-            v = [float(x) for x in r]
-            c = cents[py_cell(v)]
-            residuals.append([x - y for x, y in zip(v, c)])
-        codebook = [
-            [r[j * dsub:(j + 1) * dsub] for r in residuals]
-            for j in range(m)
-        ]
-
-    code_exprs = []
-    for j in range(m):
-        sub = f"slice(__res, {j * dsub + 1}, {dsub})"
-        d2s = ", ".join(_l2sq_expr(sub, cw) for cw in codebook[j])
-        arr = f"array({d2s})"
-        code_exprs.append(
-            f"CAST(array_position({arr}, array_min({arr})) - 1 AS INT)"
-        )
-    enc = (
-        emb.select(F.col(id_col), F.col(vec_col))
-        .withColumn("__n2", F.expr(n2_expr))
-        .withColumn("__cosarr", F.expr(cos_arr))
-        .withColumn("cell", F.expr(_ARGMAX_CELL))
-        .withColumn("__res", F.expr(residual_expr))
-        .select(
-            id_col,
-            "cell",
-            F.expr(f"array({', '.join(code_exprs)})").alias("codes"),
-        )
-    )
+    residuals = []
+    for r in head(num_codes):
+        v = [float(x) for x in r]
+        c = cents[py_cell(v)]
+        residuals.append([x - y for x, y in zip(v, c)])
+    codebook = [
+        [r[j * dsub:(j + 1) * dsub] for r in residuals]
+        for j in range(m)
+    ]
+    enc = _encode_sql(emb, cents, codebook, id_col, vec_col)
     if persist:
         enc = persist_tracked(enc)
     return enc, cents, codebook
@@ -1649,8 +1548,6 @@ def ivf_pq_ann(
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cents: list[list[float]] | None = None,
-    codebook: list[list[list[float]]] | None = None,
 ) -> DataFrame:
     """IVF-PQ: coarse cells + PQ over RESIDUALS — the composition
     billion-vector indexes actually ship (FAISS IVFPQ; Jégou et al.
@@ -1676,18 +1573,13 @@ def ivf_pq_ann(
     probed cells match the stored cells bit-for-bit.
     """
     enc, cents, codebook = ivf_pq_index(
-        emb, num_centroids, m, num_codes, id_col, vec_col,
-        cents=cents, codebook=codebook,
+        emb, num_centroids, m, num_codes, id_col, vec_col
     )
-    qrows = (
-        emb.filter(F.col(id_col) < num_queries)
-        .orderBy(id_col)
-        .select(id_col, vec_col)
-        .collect()
+    meta = {"kind": "ivfpq", "centroids": cents, "codebook": codebook,
+            "id_col": id_col, "vec_col": vec_col}
+    return ann_serve(
+        meta, enc, emb.filter(F.col(id_col) < num_queries), k, nprobe
     )
-    if not qrows:
-        return _empty_ann_result(emb, id_col)
-    return ivfpq_adc_score(enc, cents, codebook, qrows, k, nprobe, id_col)
 
 
 def _ivfpq_adc_scored(
@@ -1756,8 +1648,9 @@ def ivfpq_adc_score(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Residual-ADC scoring over an already-built IVF-PQ index — the
-    query-time half shared by ``ivf_pq_ann`` and the persistent-index
-    path (``operators.ann_index``). Python cell picks replay SQL's
+    query-time half ``ann_serve`` runs for every IVF-PQ index, as one
+    call (the two-pass reference the fused refine is pinned against).
+    Python cell picks replay SQL's
     exact IEEE cosine fold (``_py_cosine``), so probed cells match the
     stored ``cell`` column bit-for-bit.
 
@@ -1768,183 +1661,27 @@ def ivfpq_adc_score(
     its cell (the IVF promise as a join predicate) with the same
     left-to-right ADC fold (bit-identical to the former per-(query,
     cell) spliced sub-plans)."""
-    scored = _ivfpq_adc_scored(enc, cents, codebook, qrows, nprobe, id_col)
-    return _two_phase_topk(
-        scored,
-        "query_id",
-        [F.col("__d2").asc(), F.col("neighbor_id")],
-        k,
-    ).select(
-        "query_id",
-        "neighbor_id",
-        F.expr(P.round_dbl("__d2", 6, P.SPARK)).alias("approx_d2"),
-        "knn_rank",
+    return _adc_topk(
+        _ivfpq_adc_scored(enc, cents, codebook, qrows, nprobe, id_col), k
     )
-
-
-def kmeans_train(
-    emb: DataFrame,
-    k: int = 16,
-    iterations: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    metric: str = "cosine",
-) -> list[list[float]]:
-    """Lloyd's k-means over the embedding column — the TRAINED coarse
-    quantizer for ``ivf_ann`` / ``ivf_pq_index`` (their docstrings
-    promise "swapping in trained centroids is a literal substitution";
-    this produces those literals).
-
-    Spark-first shape, one job per iteration:
-    * ASSIGN is map-side — current centroids splice into the scan as
-      exact double literals (the ivf_pq_index cell expression), so the
-      corpus never shuffles for assignment;
-    * UPDATE is a ``posexplode`` to (cell, dim, value) and one
-      partial-aggregated sum/count — the shuffle carries k·dim
-      aggregate rows, not vectors — collected (k·dim doubles) and
-      rebuilt driver-side.
-    Init = first-``k`` sample (the deterministic convention). Empty
-    cells keep their previous centroid. ``metric``: "cosine" (the
-    coarse-quantizer convention the IVF operators assign by) or "l2"
-    (the subvector/residual convention PQ codebooks use). Exact reproducibility caveat:
-    the per-cell double sums are partition-order dependent at the ULP
-    level (like every floating k-means); oracle-checked rows therefore
-    keep the deterministic-sample quantizer, and trained centroids are
-    for recall, pinned by tolerance-based tests.
-    """
-    rows = (
-        emb.filter(F.col(id_col) < k)
-        .orderBy(id_col)
-        .select(vec_col)
-        .collect()
-    )
-    cents = [[float(x) for x in r[0]] for r in rows]
-    if len(cents) < k:
-        raise ValueError(f"need >= {k} vectors with {id_col} < {k}")
-    dim = len(cents[0])
-    for _ in range(iterations):
-        if metric == "cosine":
-            arr = "array(" + ", ".join(
-                P.cosine(vec_col, P.vec_literal(c, P.SPARK), P.SPARK)
-                for c in cents
-            ) + ")"
-            pick = f"array_position({arr}, array_max({arr}))"
-        else:  # l2 — the subvector/residual-codebook convention
-            arr = "array(" + ", ".join(
-                P.l2sq(vec_col, P.vec_literal(c, P.SPARK), P.SPARK)
-                for c in cents
-            ) + ")"
-            pick = f"array_position({arr}, array_min({arr}))"
-        cell = f"CAST({pick} - 1 AS INT)"
-        agg = (
-            emb.select(
-                F.expr(cell).alias("__cell"),
-                F.posexplode(F.col(vec_col)).alias("__dim", "__v"),
-            )
-            .groupBy("__cell", "__dim")
-            .agg(
-                F.sum(F.col("__v").cast("double")).alias("__s"),
-                F.count(F.lit(1)).alias("__n"),
-            )
-            .collect()
-        )
-        new = [list(c) for c in cents]
-        counts = [0] * len(cents)
-        for r in agg:
-            # NULL cell = degenerate vector (e.g. all-zero → every
-            # cosine NaN → array_position NULL): skip the row — it
-            # contributes to no centroid — rather than abort training.
-            if r["__cell"] is None:
-                continue
-            new[r["__cell"]][r["__dim"]] = r["__s"] / r["__n"]
-            counts[r["__cell"]] = r["__n"]
-        cents = [
-            new[i] if counts[i] > 0 else cents[i]
-            for i in range(len(cents))
-        ]
-    return cents
-
-
-def kmeans_inertia(
-    emb: DataFrame,
-    cents: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> float:
-    """Σ min-cell ‖x − c‖² — the Lloyd objective, one map-side pass."""
-    d2s = ", ".join(
-        P.l2sq(vec_col, P.vec_literal(c, P.SPARK), P.SPARK)
-        for c in cents
-    )
-    return (
-        emb.select(F.expr(f"array_min(array({d2s}))").alias("__d"))
-        .agg(F.sum("__d"))
-        .collect()[0][0]
-    )
-
-
-def pq_codebook_trained(
-    emb: DataFrame,
-    m: int = 8,
-    num_codes: int = 16,
-    iterations: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[list[float]]]:
-    """PQ codebooks TRAINED per subspace — L2 k-means over each
-    subvector slice (the production PQ training recipe; ``pq_codebook``
-    stays the deterministic-sample convention oracle rows use).
-
-    One ``kmeans_train(metric="l2")`` per subspace over a projected
-    frame (id, slice) — m small training runs, each with the map-side
-    assign / k·dsub-row update shape. Same return layout as
-    ``pq_codebook``, so ``pq_encode``/``pq_ann`` take it unchanged.
-    """
-    rows = emb.select(vec_col).limit(1).collect()
-    if not rows:
-        raise ValueError("empty corpus")
-    dim = len(rows[0][0])
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub = dim // m
-    codebook = []
-    for j in range(m):
-        sub = emb.select(
-            F.col(id_col),
-            F.expr(
-                f"slice({vec_col}, {j * dsub + 1}, {dsub})"
-            ).alias(vec_col),
-        )
-        codebook.append(
-            kmeans_train(
-                sub, k=num_codes, iterations=iterations,
-                id_col=id_col, vec_col=vec_col, metric="l2",
-            )
-        )
-    return codebook
 
 
 # ---------------------------------------------------------------------------
-# Sampled (driver-side) training + exact re-rank — the SERVING-GRADE
-# ANN recipe.
+# Sampled (driver-side) training, the two encoders and the one serve —
+# the SERVING-GRADE ANN recipe.
 #
-# The distributed trainers above are oracle-grade (every fold is the
-# engine's own IEEE sequence) but spend a full Spark job per Lloyd
-# iteration — at 256 codes x m subspaces that is plan-compile-bound
-# long before it is data-bound.  Production vector indexes do not
-# train that way: FAISS trains codebooks on a BOUNDED host-side sample
-# (~100k vectors regardless of corpus size) and only the ENCODE pass
-# is data-scale.  The same split here: `sample_vectors` takes a
+# Production vector indexes train on a BOUNDED host-side sample (FAISS:
+# ~100k vectors regardless of corpus size) and only the ENCODE pass is
+# data-scale.  The same split here: `sample_vectors` takes a
 # deterministic hash-ordered sample (map-side partial top-n — the
 # driver never sees more than `n` rows no matter the corpus size),
 # numpy Lloyd's runs on the driver in milliseconds, and the trained
-# literals feed the distributed Arrow-vectorized encoders.
+# literals feed the distributed encoders `ann_encode` picks.
 #
 # Recall at serving quality additionally needs the FAISS "refine"
 # stage (IndexRefineFlat): ADC ranks a SHORTLIST (refine >> k), and
 # the true top-k is recovered by exact scoring of only the shortlist's
-# raw vectors — NQ*refine rows, a broadcast-joined point lookup
-# against the corpus, never a second full scan of raw floats.
+# raw vectors — NQ*refine rows, never a second full scan of raw floats.
 # ---------------------------------------------------------------------------
 
 
@@ -1984,18 +1721,16 @@ def kmeans_train_local(
     iterations: int = 10,
     metric: str = "l2",
 ) -> list[list[float]]:
-    """Lloyd's k-means on a driver-side sample (numpy float64) — the
-    bounded-sample twin of ``kmeans_train``; same conventions
-    (first-``k`` init, empty cells keep their previous centroid,
-    ``metric`` = "l2" argmin distance / "cosine" argmax cosine)."""
+    """Lloyd's k-means on a driver-side sample (numpy float64):
+    first-``k`` init, empty cells keep their previous centroid,
+    ``metric`` = "l2" argmin distance / "cosine" argmax cosine (the
+    encoders' cell pick, ``_cosine_cells``)."""
     if len(X) < k:
         raise ValueError(f"sample of {len(X)} rows cannot seed k={k}")
     C = X[:k].copy()
     for _ in range(iterations):
         if metric == "cosine":
-            cn = np.sqrt((C * C).sum(1))
-            xn = np.sqrt((X * X).sum(1))
-            a = ((X @ C.T) / (xn[:, None] * cn[None, :])).argmax(1)
+            a = _cosine_cells(X, C)
         else:
             # ‖x−c‖² via the expanded form: argmin unaffected by ‖x‖²
             d2 = (C * C).sum(1)[None, :] - 2.0 * (X @ C.T)
@@ -2011,8 +1746,8 @@ def pq_codebook_local(
     X: np.ndarray, m: int = 16, num_codes: int = 256, iterations: int = 10
 ) -> list[list[list[float]]]:
     """Per-subspace L2 k-means over a driver-side sample — the
-    bounded-sample twin of ``pq_codebook_trained``; same return layout,
-    so every encoder/scorer takes it unchanged."""
+    ``pq_codebook`` return layout, so every encoder/scorer takes it
+    unchanged."""
     dim = X.shape[1]
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -2025,46 +1760,56 @@ def pq_codebook_local(
     ]
 
 
-def _np_codes(X: np.ndarray, cb: list[np.ndarray]) -> np.ndarray:
-    """Per-subspace argmin codes for a batch — direct (x−c)² like the
-    expression path (NOT the expanded form: same fold, same argmin on
-    near-ties), chunked so the (rows, codes, dsub) broadcast temp stays
-    small."""
-    m = len(cb)
-    dsub = X.shape[1] // m
-    codes = np.empty((X.shape[0], m), dtype=np.int32)
-    for j in range(m):
-        sub = X[:, j * dsub:(j + 1) * dsub]
-        for lo in range(0, len(sub), 1024):
-            blk = sub[lo:lo + 1024]
-            d2 = ((blk[:, None, :] - cb[j][None, :, :]) ** 2).sum(-1)
-            codes[lo:lo + 1024, j] = d2.argmin(1)
-    return codes
+def _cosine_cells(X: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """Per-row argmax-cosine cell, bit for bit the SQL encoders' pick
+    (``_ARGMAX_CELL`` over ``_cosine_vs_literal_exprs``): the cosines
+    are ``_py_cosine_matrix``'s left folds and ``argmax`` keeps the
+    first (lowest) cell on ties. A zero-norm row has all-NaN cosines
+    and lands in cell 0."""
+    return _py_cosine_matrix(X, C).argmax(1)
 
 
-def pq_encode_vectorized(
+def _pq_argmin(
+    X: np.ndarray, cb: list[np.ndarray]
+) -> tuple[np.ndarray, np.ndarray]:
+    """(codes, err): each row's nearest codeword per subspace and the
+    summed squared distance to them. The distances are
+    ``_query_luts_np_batch``'s left folds — the SQL encoders' ``P.l2sq``
+    sequence — and ``argmin`` keeps the first code on ties, like
+    ``array_position(d², array_min(d²))``; rows are chunked so the
+    (rows, codes, dsub) temporaries stay small."""
+    n, m = len(X), len(cb)
+    codes = np.empty((n, m), dtype=np.int32)
+    err = np.zeros(n)
+    for lo in range(0, n, 1024):
+        d2 = _query_luts_np_batch(X[lo:lo + 1024], cb)
+        codes[lo:lo + 1024] = d2.argmin(2)
+        for j in range(m):
+            err[lo:lo + 1024] += d2[:, j, :].min(1)
+    return codes, err
+
+
+def _encode_arrow(
     emb: DataFrame,
+    cents: list[list[float]] | None,
     codebook: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    id_col: str,
+    vec_col: str,
     keep_vec: bool = False,
 ) -> DataFrame:
-    """(id, codes) — ``pq_encode``'s Arrow twin for LARGE codebooks.
+    """``_encode_sql``'s Arrow twin for LARGE codebooks: the same
+    (id[, cell], codes[, vector]) frame, cell for cell and code for
+    code (``_cosine_cells`` and ``_pq_argmin`` fold like the SQL).
 
     The expression encoder splices m·num_codes literal folds into one
-    projection — perfect at oracle scale (16 codes), but at the
-    serving scale this engine trains (256 codes x m=16 = 4096 spliced
-    folds) the generated code blows past JIT limits. Here the codebook
-    rides the closure as a numpy constant and each Arrow batch is one
-    BLAS-shaped argmin — still map-side, still zero corpus shuffle,
-    still embarrassingly parallel.
-
-    ``keep_vec`` passes the raw vector column through alongside the
-    codes — the in-session serve cache shape (fused ADC + refine needs
-    the exact bits the corpus shipped with; the parquet artifact path
-    stays codes-only)."""
+    projection — fine at oracle scale (16 codes), but at the serving
+    scale this engine trains (256 codes x m=16 = 4096 spliced folds)
+    the generated code blows past JIT limits. Here the parameters ride
+    the closure as numpy constants and each Arrow batch is one kernel
+    call — still map-side, still zero corpus shuffle."""
     import pandas as pd
 
+    C = None if cents is None else np.asarray(cents, dtype=np.float64)
     cb = [np.asarray(sub, dtype=np.float64) for sub in codebook]
 
     def gen(batches):
@@ -2074,74 +1819,25 @@ def pq_encode_vectorized(
             X = np.stack(
                 [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
             )
-            out = {
-                id_col: pdf[id_col],
-                "codes": [c.tolist() for c in _np_codes(X, cb)],
-            }
+            out = {id_col: pdf[id_col]}
+            if C is not None:
+                cell = _cosine_cells(X, C)
+                out["cell"] = cell.astype(np.int32)
+                X = X - C[cell]
+            out["codes"] = [c.tolist() for c in _pq_argmin(X, cb)[0]]
             if keep_vec:
                 out[vec_col] = pdf[vec_col]
             yield pd.DataFrame(out)
 
-    schema = (
-        f"{id_col} {emb.schema[id_col].dataType.simpleString()},"
-        " codes array<int>"
-    )
+    schema = [f"{id_col} {emb.schema[id_col].dataType.simpleString()}"]
+    if C is not None:
+        schema.append("cell int")
+    schema.append("codes array<int>")
     if keep_vec:
-        schema += (
-            f", {vec_col} {emb.schema[vec_col].dataType.simpleString()}"
+        schema.append(
+            f"{vec_col} {emb.schema[vec_col].dataType.simpleString()}"
         )
-    return emb.select(id_col, vec_col).mapInPandas(gen, schema)
-
-
-def ivf_pq_encode_local(
-    emb: DataFrame,
-    cents: list[list[float]],
-    codebook: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    keep_vec: bool = False,
-) -> DataFrame:
-    """(id, cell, codes) — the IVF-PQ index build as ONE Arrow pass
-    for trained (large) parameters: cosine cell pick, residual
-    subtraction, and per-subspace argmin in a single batch kernel.
-    Same output contract as ``ivf_pq_index``'s encoded frame, so
-    ``ivfpq_adc_score`` takes it unchanged (scoring joins on the
-    STORED cell, so probe/store cell picks only need self-consistency,
-    not bit-agreement)."""
-    import pandas as pd
-
-    C = np.asarray(cents, dtype=np.float64)
-    cb = [np.asarray(sub, dtype=np.float64) for sub in codebook]
-
-    def gen(batches):
-        cn = np.sqrt((C * C).sum(1))
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            xn = np.sqrt((X * X).sum(1))
-            cell = ((X @ C.T) / (xn[:, None] * cn[None, :])).argmax(1)
-            R = X - C[cell]
-            out = {
-                id_col: pdf[id_col],
-                "cell": cell.astype(np.int32),
-                "codes": [c.tolist() for c in _np_codes(R, cb)],
-            }
-            if keep_vec:
-                out[vec_col] = pdf[vec_col]
-            yield pd.DataFrame(out)
-
-    schema = (
-        f"{id_col} {emb.schema[id_col].dataType.simpleString()},"
-        " cell int, codes array<int>"
-    )
-    if keep_vec:
-        schema += (
-            f", {vec_col} {emb.schema[vec_col].dataType.simpleString()}"
-        )
-    return emb.select(id_col, vec_col).mapInPandas(gen, schema)
+    return emb.select(id_col, vec_col).mapInPandas(gen, ", ".join(schema))
 
 
 def exact_rerank(
@@ -2266,192 +1962,105 @@ def _fused_refine(
     )
 
 
-def pq_ann_trained_build(
-    emb: DataFrame,
-    m: int = 16,
-    num_codes: int = 256,
-    sample_n: int = 16384,
-    iterations: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple:
-    """(codebook, persisted encoded corpus) — the train-and-encode
-    half of serving-grade PQ, paid ONCE per session however many query
-    batches follow (the in-session twin of ``pq_index_write``). The
-    encoded frame keeps the raw vectors alongside the codes so serves
-    can refine without a second corpus pass — the in-session cache
-    trades memory for the artifact path's codes-only storage."""
-    X = sample_vectors(emb, sample_n, id_col, vec_col)
-    cb = pq_codebook_local(X, m, num_codes, iterations)
-    enc = persist_tracked(
-        pq_encode_vectorized(emb, cb, id_col, vec_col, keep_vec=True)
-    )
-    return cb, enc
+# Above this many codes per subspace the expression encoder's spliced
+# literal folds (m * num_codes of them) blow past JIT method limits, so
+# ann_encode switches to the Arrow encoder (same cells and codes).
+_VECTORIZE_ABOVE = 32
 
 
-def pq_ann_trained_serve(
+def ann_encode(
+    emb: DataFrame, meta: dict, keep_vec: bool = False
+) -> DataFrame:
+    """Encode ``emb`` under an index's parameters — the ONE place an
+    encoder is picked. ``meta`` is the index's parameter dict (what an
+    artifact's ``meta.json`` stores: ``kind``, ``centroids``,
+    ``codebook``, ``id_col``, ``vec_col``); the in-session build, the
+    persistent writer and the append sink all encode through here, so
+    base ∪ appended rows always equal a one-shot encode.
+
+    ``ivfflat`` → (id, cell, vector), the spliced-literal cell tag;
+    ``pq`` → (id, codes) and ``ivfpq`` → (id, cell, codes): SQL
+    expressions up to ``_VECTORIZE_ABOVE`` codes per subspace, the
+    Arrow kernel above (the two agree cell for cell and code for code).
+    ``keep_vec`` carries the raw vector column through a PQ encode —
+    the in-session shape the fused refine serve reads."""
+    kind = meta["kind"]
+    idc, vc = meta["id_col"], meta.get("vec_col", "embedding")
+    if kind == "ivfflat":
+        return ivf_flat_encode(emb, meta["centroids"], idc, vc)
+    if kind not in ("pq", "ivfpq"):
+        raise ValueError(f"unknown index kind {kind!r}")
+    cb = meta["codebook"]
+    encode = _encode_arrow if len(cb[0]) > _VECTORIZE_ABOVE else _encode_sql
+    cents = meta["centroids"] if kind == "ivfpq" else None
+    return encode(emb, cents, cb, idc, vc, keep_vec)
+
+
+def ann_serve(
+    meta: dict,
     enc: DataFrame,
-    codebook: list[list[list[float]]],
-    qrows: list,
-    k: int = 10,
-    refine: int = 100,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    queries,
+    k: int,
+    nprobe: int = 2,
+    refine: int | None = None,
+    rerank_against: DataFrame | None = None,
 ) -> DataFrame:
-    """The per-query-batch half over a ``pq_ann_trained_build`` index:
-    broadcast-LUT ADC shortlist + exact refine, fused into one job
-    (``_fused_refine``)."""
-    scored = _pq_adc_scored(
-        enc, codebook, qrows, id_col, carry_cols=(vec_col,)
-    )
-    return _fused_refine(
-        scored, enc.schema[id_col].dataType, qrows, refine, k, vec_col
-    )
+    """Top-``k`` neighbors of each query row against an encoded index —
+    the ONE place a scorer is picked. ``queries`` is an (id, vector)
+    frame in the index's columns, collected driver-side (the bounded
+    small side, ``brute_force_knn``'s broadcast convention), or an
+    already-collected id-ordered row list; no rows → a typed empty
+    (query_id, neighbor_id, approx_d2, knn_rank) frame.
 
-
-def pq_ann_trained(
-    emb: DataFrame,
-    num_queries: int = 64,
-    k: int = 10,
-    m: int = 16,
-    num_codes: int = 256,
-    refine: int = 100,
-    sample_n: int = 16384,
-    iterations: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Serving-grade PQ: sampled k-means codebooks (m=16 x 256 codes
-    = 16 bytes/vector), Arrow encode, broadcast-LUT ADC shortlist of
-    ``refine`` candidates, exact re-rank (fused single-job serve).
-    Returns the ``brute_force_knn`` contract (query_id, neighbor_id,
-    cosine, knn_rank)."""
-    cb, enc = pq_ann_trained_build(
-        emb, m, num_codes, sample_n, iterations, id_col, vec_col
-    )
+    ``ivfflat``: exact cosine inside the ``nprobe`` probed cells
+    (``ivfflat_score``); ``refine`` does not apply. ``pq`` / ``ivfpq``:
+    ADC over all codes / the probed cells' codes (``pq_adc_score`` /
+    ``ivfpq_adc_score``'s scoring), (query_id, neighbor_id, approx_d2,
+    knn_rank). With ``refine``, an ADC shortlist of ``refine``
+    candidates re-ranks by exact cosine to the ``brute_force_knn``
+    contract (query_id, neighbor_id, cosine, knn_rank), in the shape the
+    frame allows: an ``enc`` that carries the vector column (an
+    in-session build) refines in place in one job (``_fused_refine``);
+    a codes-only frame (a persistent artifact) looks the shortlist's
+    vectors up in ``rerank_against`` (``exact_rerank``). The two shapes
+    are bit-identical."""
+    idc, vc = meta["id_col"], meta.get("vec_col", "embedding")
     qrows = (
-        emb.filter(F.col(id_col) < num_queries)
-        .orderBy(id_col)
-        .select(id_col, vec_col)
-        .collect()
+        list(queries)
+        if isinstance(queries, list)
+        else queries.orderBy(idc).select(idc, vc).collect()
     )
     if not qrows:
-        return _empty_ann_result(emb, id_col)
-    return pq_ann_trained_serve(enc, cb, qrows, k, refine, id_col, vec_col)
-
-
-def train_ivfpq_local(
-    emb: DataFrame,
-    num_centroids: int = 64,
-    m: int = 16,
-    num_codes: int = 256,
-    sample_n: int = 16384,
-    iterations: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[list[list[float]], list[list[list[float]]]]:
-    """(centroids, residual codebook) — the sampled training step of
-    ``ivf_pq_ann_trained``, factored out so a persistent index build
-    (``ann_index.ivfpq_index_write(cents=…, codebook=…)``) trains the
-    EXACT same parameters the in-session operator would: cosine
-    k-means coarse quantizer over a deterministic sample, per-subspace
-    L2 codebooks over that sample's residuals."""
-    X = sample_vectors(emb, sample_n, id_col, vec_col)
-    cents = kmeans_train_local(X, num_centroids, iterations, "cosine")
-    C = np.asarray(cents, dtype=np.float64)
-    cn = np.sqrt((C * C).sum(1))
-    xn = np.sqrt((X * X).sum(1))
-    assign = ((X @ C.T) / (xn[:, None] * cn[None, :])).argmax(1)
-    cb = pq_codebook_local(X - C[assign], m, num_codes, iterations)
-    return cents, cb
-
-
-def ivf_pq_ann_trained(
-    emb: DataFrame,
-    num_queries: int = 64,
-    k: int = 10,
-    num_centroids: int = 64,
-    m: int = 16,
-    num_codes: int = 256,
-    nprobe: int = 16,
-    refine: int = 100,
-    sample_n: int = 16384,
-    iterations: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Serving-grade IVF-PQ (FAISS IVFPQ + IndexRefineFlat): sampled
-    k-means coarse quantizer, RESIDUAL codebooks trained on the same
-    sample's residuals, one-pass Arrow index build, per-cell ADC
-    shortlist (touches ~nprobe/num_centroids of the code table), exact
-    re-rank of the shortlist. Returns the ``brute_force_knn``
-    contract.
-
-    Config note: recall at fixed scan fraction rises with
-    num_centroids (smaller cells rank better under a fixed probe
-    budget) — defaults (64 cells, 16 probes, refine=100) sit at ~25%
-    of the code table per query."""
-    cents, cb, enc = ivf_pq_ann_trained_build(
-        emb, num_centroids, m, num_codes, sample_n, iterations,
-        id_col, vec_col,
-    )
-    qrows = (
-        emb.filter(F.col(id_col) < num_queries)
-        .orderBy(id_col)
-        .select(id_col, vec_col)
-        .collect()
-    )
-    if not qrows:
-        return _empty_ann_result(emb, id_col)
-    return ivf_pq_ann_trained_serve(
-        enc, cents, cb, qrows, k, nprobe, refine, id_col, vec_col
-    )
-
-
-def ivf_pq_ann_trained_build(
-    emb: DataFrame,
-    num_centroids: int = 64,
-    m: int = 16,
-    num_codes: int = 256,
-    sample_n: int = 16384,
-    iterations: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple:
-    """(centroids, codebook, persisted encoded corpus) — the
-    train-and-encode half of serving-grade IVF-PQ, paid ONCE per
-    session (the in-session twin of ``ivfpq_index_write``). The
-    encoded frame keeps raw vectors for the fused refine."""
-    cents, cb = train_ivfpq_local(
-        emb, num_centroids, m, num_codes, sample_n, iterations,
-        id_col, vec_col,
-    )
-    enc = persist_tracked(
-        ivf_pq_encode_local(emb, cents, cb, id_col, vec_col, keep_vec=True)
-    )
-    return cents, cb, enc
-
-
-def ivf_pq_ann_trained_serve(
-    enc: DataFrame,
-    cents: list[list[float]],
-    codebook: list[list[list[float]]],
-    qrows: list,
-    k: int = 10,
-    nprobe: int = 16,
-    refine: int = 100,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The per-query-batch half over an ``ivf_pq_ann_trained_build``
-    index: probed-cell residual-ADC shortlist + exact refine, fused
-    into one job (``_fused_refine``)."""
-    scored = _ivfpq_adc_scored(
-        enc, cents, codebook, qrows, nprobe, id_col,
-        carry_cols=(vec_col,),
-    )
-    return _fused_refine(
-        scored, enc.schema[id_col].dataType, qrows, refine, k, vec_col
+        return _empty_ann_result(enc.select(F.col(idc)), idc)
+    kind = meta["kind"]
+    if kind == "ivfflat":
+        if refine is not None:
+            raise ValueError(
+                "ivfflat scores exact cosine inside probed cells; "
+                "refine/rerank does not apply"
+            )
+        return ivfflat_score(enc, meta["centroids"], qrows, k, nprobe, idc, vc)
+    fused = refine is not None and vc in enc.columns
+    carry = (vc,) if fused else ()
+    if kind == "pq":
+        scored = _pq_adc_scored(enc, meta["codebook"], qrows, idc, carry)
+    elif kind == "ivfpq":
+        scored = _ivfpq_adc_scored(
+            enc, meta["centroids"], meta["codebook"], qrows, nprobe, idc,
+            carry,
+        )
+    else:
+        raise ValueError(f"unknown index kind {kind!r}")
+    if refine is None:
+        return _adc_topk(scored, k)
+    if fused:
+        return _fused_refine(
+            scored, enc.schema[idc].dataType, qrows, refine, k, vc
+        )
+    if rerank_against is None:
+        raise ValueError("refine requires rerank_against")
+    return exact_rerank(
+        _adc_topk(scored, refine), rerank_against, qrows, k, idc, vc
     )
 
 
@@ -2586,59 +2195,12 @@ def ivfflat_score(
     )
 
 
-def ivf_flat_ann_trained(
-    emb: DataFrame,
-    num_queries: int = 64,
-    k: int = 10,
-    num_centroids: int = 64,
-    nprobe: int = 8,
-    sample_n: int = 16384,
-    iterations: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Serving-grade IVF-Flat: sampled cosine k-means coarse
-    quantizer, map-side cell tagging, exact cosine inside ``nprobe``
-    probed cells. The high-recall serving option — recall loss comes
-    ONLY from the probe budget (no quantization error), at the cost of
-    storing raw vectors (4·dim bytes each vs IVF-PQ's m)."""
-    cents, enc = ivf_flat_ann_trained_build(
-        emb, num_centroids, sample_n, iterations, id_col, vec_col
-    )
-    qrows = (
-        emb.filter(F.col(id_col) < num_queries)
-        .orderBy(id_col)
-        .select(id_col, vec_col)
-        .collect()
-    )
-    if not qrows:
-        return _empty_ann_result(emb, id_col)
-    return ivfflat_score(enc, cents, qrows, k, nprobe, id_col, vec_col)
-
-
-def ivf_flat_ann_trained_build(
-    emb: DataFrame,
-    num_centroids: int = 64,
-    sample_n: int = 16384,
-    iterations: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple:
-    """(centroids, persisted encoded corpus) — the train-and-tag half
-    of serving-grade IVF-Flat, paid ONCE per session (the in-session
-    twin of ``ivfflat_index_write``; raw vectors are the index, so
-    the serve — ``ivfflat_score`` — is already single-job)."""
-    X = sample_vectors(emb, sample_n, id_col, vec_col)
-    cents = kmeans_train_local(X, num_centroids, iterations, "cosine")
-    enc = persist_tracked(ivf_flat_encode(emb, cents, id_col, vec_col))
-    return cents, enc
-
-
 # --- exact-reproducible k-means (cross-engine-checkable trainer) ------------
-# kmeans_train's docstring quarantines trained centroids from oracle
-# rows because its distributed per-cell sums are partition-order
-# dependent at the ULP level. This trainer removes that caveat for
-# BOUNDED samples (the FAISS train-on-a-sample convention): every op
+# A distributed Lloyd's would keep trained centroids out of oracle rows:
+# its per-cell double sums are partition-order dependent at the ULP
+# level, and kmeans_train_local's numpy means are too. This trainer
+# removes that caveat for BOUNDED samples (the FAISS train-on-a-sample
+# convention): every op
 # is one pinned IEEE sequence — first-k init over the id-ordered
 # sample, cosine assignment via the _py_cosine fold with first-max
 # tie-break (⇔ row_number ORDER BY cos DESC, cid), centroid mean =
@@ -2789,7 +2351,7 @@ def pq_codebook_exact(
     TRAINED product-quantization codebook a DuckDB twin
     (``kmeans_exact_cent_ctes(metric='l2', slice_at=…)`` per subspace)
     re-derives bitwise. Same return layout as ``pq_codebook`` /
-    ``pq_codebook_trained``, so every encoder/scorer takes it
+    ``pq_codebook_local``, so every encoder/scorer takes it
     unchanged. ONE collect of the id-ordered sample; each subspace
     trains on its slice. Same contiguous-id contract as
     ``kmeans_train_exact`` (SQL twin seeds ``WHERE id < num_codes``).

@@ -952,7 +952,7 @@ def q46_ann_lsh_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ``ivfflat_idx`` (round 9): the persistent-ANN-artifact serve path
     driver-checked end to end — the query WRITES the IVF-Flat index
-    (``ivfflat_index_write``, same deterministic quantizer) to a temp
+    (``ann_build`` to a path, same deterministic quantizer) to a temp
     dir and serves the same queries from the stored cells
     (``ann_index_query``: meta.json parameters, In(cell) pushed to the
     codes parquet); the oracle rows are the ivfflat_mp derivation
@@ -977,7 +977,7 @@ def q46_ann_lsh_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from .operators.ann_index import ann_index_query, ivfflat_index_write
+    from .operators.ann_index import ann_build, ann_index_query
     from .catalog import load_head_rows
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1001,7 +1001,7 @@ def q46_ann_lsh_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     if idx_dir is None or not os.path.isdir(idx_dir):
         idx_dir = tempfile.mkdtemp(prefix="q46_ivfflat_idx_")
         atexit.register(shutil.rmtree, idx_dir, ignore_errors=True)
-        ivfflat_index_write(emb, idx_dir, cents)
+        ann_build(emb, {"kind": "ivfflat", "centroids": cents}, idx_dir)
         _Q46_IDX_CACHE[sf_dir] = idx_dir
     flat_idx = ann_index_query(spark, idx_dir, qrows, k=3, nprobe=2)
     # ivf_tr (round 10): the exact-reproducible TRAINED quantizer —

@@ -388,11 +388,11 @@ def probe_ops(spark, sf_dir: str, bench_base: str) -> dict[str, dict]:
     )
     flat_cents = [[float(x) for x in r[0]] for r in cent_rows]
     from example_kafkastreams_spark.operators.ann_index import (
+        ann_build,
         ann_index_query,
-        ivfflat_index_write,
     )
 
-    ivfflat_index_write(emb, flat_idx_path, flat_cents)
+    ann_build(emb, {"kind": "ivfflat", "centroids": flat_cents}, flat_idx_path)
     release_sketch_caches()
 
     # one query-set literal shared by the bm25 probe and the

@@ -17,19 +17,18 @@ from example_kafkastreams_spark.operators.ann_drift import (
     should_rebuild,
 )
 from example_kafkastreams_spark.operators.ann_index import (
+    ann_build,
     ann_index_append_sink,
     ann_index_read,
-    ivfflat_index_write,
-    ivfpq_index_write,
-    pq_index_write,
 )
 from example_kafkastreams_spark.operators.knn import (
     sample_vectors,
     kmeans_train_local,
-    train_ivfpq_local,
+    pq_codebook,
 )
 
 SMOKE = "/root/testdata/sf0.001"
+_IVFPQ = {"kind": "ivfpq", "num_centroids": 4, "m": 8, "num_codes": 16}
 
 
 def _emb(spark):
@@ -56,15 +55,12 @@ def test_quantization_stats_conserve_mass_all_kinds(spark, tmp_path):
     cents = kmeans_train_local(X, 4, iterations=4, metric="cosine")
 
     pq_path = str(tmp_path / "pq")
-    pq_index_write(emb, pq_path, m=8, num_codes=16)
+    pq = {"kind": "pq", "codebook": pq_codebook(emb, 8, 16)}
+    ann_build(emb, pq, pq_path)
     ivfflat_path = str(tmp_path / "flat")
-    ivfflat_index_write(emb, ivfflat_path, cents)
-    tcents, tcb = train_ivfpq_local(
-        emb, num_centroids=4, m=8, num_codes=16, sample_n=256,
-        iterations=4,
-    )
+    ann_build(emb, {"kind": "ivfflat", "centroids": cents}, ivfflat_path)
     ivfpq_path = str(tmp_path / "ivfpq")
-    ivfpq_index_write(emb, ivfpq_path, cents=tcents, codebook=tcb)
+    ann_build(emb, _IVFPQ, ivfpq_path, sample_n=256, iterations=4)
 
     import json
 
@@ -94,7 +90,7 @@ def test_quantization_stats_zero_vector_finite(spark, tmp_path):
     X = sample_vectors(emb, 256)
     cents = kmeans_train_local(X, 4, iterations=4, metric="cosine")
     path = str(tmp_path / "flat")
-    ivfflat_index_write(emb, path, cents)
+    ann_build(emb, {"kind": "ivfflat", "centroids": cents}, path)
     import json
 
     with open(os.path.join(path, "meta.json")) as f:
@@ -114,12 +110,8 @@ def test_quantization_stats_zero_vector_finite(spark, tmp_path):
 def test_drift_flags_shifted_appends_not_indistribution(spark, tmp_path):
     emb = _emb(spark)
     day1 = emb.filter(F.col("vec_id") % 3 != 0)
-    cents, cb = train_ivfpq_local(
-        day1, num_centroids=4, m=8, num_codes=16, sample_n=256,
-        iterations=4,
-    )
     path = str(tmp_path / "live")
-    ivfpq_index_write(day1, path, cents=cents, codebook=cb)
+    ann_build(day1, _IVFPQ, path, sample_n=256, iterations=4)
     ts = record_train_stats(spark, path, day1)
     assert ts["n"] == day1.count() and ts["mean_err"] > 0
 
@@ -152,7 +144,11 @@ def test_drift_replay_never_double_counts(spark, tmp_path):
     X = sample_vectors(emb, 256)
     cents = kmeans_train_local(X, 4, iterations=4, metric="cosine")
     path = str(tmp_path / "flat")
-    ivfflat_index_write(emb.filter(F.col("vec_id") % 2 == 0), path, cents)
+    ann_build(
+        emb.filter(F.col("vec_id") % 2 == 0),
+        {"kind": "ivfflat", "centroids": cents},
+        path,
+    )
     record_train_stats(spark, path, emb.filter(F.col("vec_id") % 2 == 0))
 
     sink = ann_index_append_sink(spark, path, run_id="r1", track_drift=True)
@@ -171,12 +167,8 @@ def test_rebuild_prunes_superseded_trees(spark, tmp_path):
     mixed-generation codes into the new base."""
     emb = _emb(spark)
     day1 = emb.filter(F.col("vec_id") % 2 == 0)
-    cents, cb = train_ivfpq_local(
-        day1, num_centroids=4, m=8, num_codes=16, sample_n=256,
-        iterations=4,
-    )
     path = str(tmp_path / "live")
-    ivfpq_index_write(day1, path, cents=cents, codebook=cb)
+    ann_build(day1, _IVFPQ, path, sample_n=256, iterations=4)
     record_train_stats(spark, path, day1)
     sink = ann_index_append_sink(spark, path, run_id="r1", track_drift=True)
     sink(emb.filter(F.col("vec_id") % 2 == 1), 0)
@@ -184,11 +176,7 @@ def test_rebuild_prunes_superseded_trees(spark, tmp_path):
     assert os.path.isdir(os.path.join(path, "drift"))
 
     # scheduled rebuild over the full corpus with fresh parameters
-    cents2, cb2 = train_ivfpq_local(
-        emb, num_centroids=4, m=8, num_codes=16, sample_n=256,
-        iterations=4,
-    )
-    ivfpq_index_write(emb, path, cents=cents2, codebook=cb2)
+    ann_build(emb, _IVFPQ, path, sample_n=256, iterations=4)
     assert not os.path.isdir(os.path.join(path, "codes_delta"))
     assert not os.path.isdir(os.path.join(path, "drift"))
     enc, meta = ann_index_read(spark, path)
@@ -207,12 +195,8 @@ def test_drift_rebuild_loop_resets_baseline(spark, tmp_path):
     trigger), and the rebuilt index serves the new distribution."""
     emb = _emb(spark)
     day1 = emb.filter(F.col("vec_id") % 2 == 0)
-    cents, cb = train_ivfpq_local(
-        day1, num_centroids=4, m=8, num_codes=16, sample_n=256,
-        iterations=4,
-    )
     path = str(tmp_path / "live")
-    ivfpq_index_write(day1, path, cents=cents, codebook=cb)
+    ann_build(day1, _IVFPQ, path, sample_n=256, iterations=4)
     record_train_stats(spark, path, day1)
     sink = ann_index_append_sink(spark, path, run_id="r1", track_drift=True)
     drifted = _scaled(emb.filter(F.col("vec_id") % 2 == 1))
@@ -222,11 +206,7 @@ def test_drift_rebuild_loop_resets_baseline(spark, tmp_path):
 
     # the rebuild: retrain on everything ingested, re-encode, rebase
     full = day1.select("vec_id", "embedding").unionByName(drifted)
-    cents2, cb2 = train_ivfpq_local(
-        full, num_centroids=4, m=8, num_codes=16, sample_n=256,
-        iterations=4,
-    )
-    ivfpq_index_write(full, path, cents=cents2, codebook=cb2)
+    ann_build(full, _IVFPQ, path, sample_n=256, iterations=4)
     record_train_stats(spark, path, full)
 
     rep = ann_index_drift(spark, path)
@@ -240,7 +220,6 @@ def test_drift_rebuild_loop_resets_baseline(spark, tmp_path):
     )
 
     got = ann_index_query(
-        spark, path, drifted.limit(4), k=3, nprobe=4,
-        id_col="vec_id",
+        spark, path, drifted.limit(4), k=3, nprobe=4
     )
     assert got.count() == 12  # 4 queries x top-3 from the new corpus

@@ -1,6 +1,7 @@
 """Persistent ANN index: a query against the stored artifact must be
 BIT-IDENTICAL to the fresh in-session build (floats round-trip JSON
-exactly; the scoring path is literally shared code)."""
+exactly; the encode and scoring dispatches are literally shared
+code)."""
 
 from __future__ import annotations
 
@@ -9,24 +10,43 @@ from pyspark.sql import functions as F
 
 from example_kafkastreams_spark.catalog import load_table
 from example_kafkastreams_spark.operators.ann_index import (
+    ann_build,
     ann_index_query,
     ann_index_read,
-    ivfpq_index_write,
-    pq_index_write,
 )
-from example_kafkastreams_spark.operators.knn import ivf_pq_ann, pq_ann
+from example_kafkastreams_spark.operators.knn import (
+    ann_serve,
+    ivf_pq_ann,
+    ivf_pq_index,
+    pq_ann,
+    pq_codebook,
+)
 
 SMOKE = "/root/testdata/sf0.001"
+_IVFPQ = {"kind": "ivfpq", "num_centroids": 4, "m": 8, "num_codes": 16}
 
 
 def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
+def _sample_pq(emb, m=8, num_codes=16):
+    """pq_ann's deterministic first-``num_codes`` codebook."""
+    return {"kind": "pq", "codebook": pq_codebook(emb, m, num_codes)}
+
+
+def _sample_ivfpq(emb, num_centroids=8, m=8, num_codes=16):
+    """ivf_pq_ann's deterministic-sample centroids and codebook."""
+    _, cents, cb = ivf_pq_index(
+        emb, num_centroids, m, num_codes, persist=False
+    )
+    return {"kind": "ivfpq", "centroids": cents, "codebook": cb}
+
+
 def test_pq_index_roundtrip_matches_fresh_build(spark, tmp_path):
     emb = load_table(spark, SMOKE, "embeddings")
     path = str(tmp_path / "pq_idx")
-    pq_index_write(emb, path, m=8, num_codes=16)
+    ann_build(emb, _sample_pq(emb), path)
 
     enc, meta = ann_index_read(spark, path)
     assert meta["kind"] == "pq" and len(meta["codebook"]) == 8
@@ -41,7 +61,7 @@ def test_pq_index_roundtrip_matches_fresh_build(spark, tmp_path):
 def test_ivfpq_index_roundtrip_matches_fresh_build(spark, tmp_path):
     emb = load_table(spark, SMOKE, "embeddings")
     path = str(tmp_path / "ivfpq_idx")
-    ivfpq_index_write(emb, path, num_centroids=8, m=8, num_codes=16)
+    ann_build(emb, _sample_ivfpq(emb), path)
 
     enc, meta = ann_index_read(spark, path)
     assert meta["kind"] == "ivfpq" and len(meta["centroids"]) == 8
@@ -60,7 +80,7 @@ def test_ivfpq_index_query_prunes_cells(spark, tmp_path):
 
     emb = load_table(spark, SMOKE, "embeddings")
     path = str(tmp_path / "ivfpq_idx2")
-    ivfpq_index_write(emb, path, num_centroids=8, m=8, num_codes=16)
+    ann_build(emb, _sample_ivfpq(emb), path)
     queries = emb.filter(F.col("vec_id") < 2)
     out = ann_index_query(spark, path, queries, k=3, nprobe=1)
     pushed = " ".join(pushed_filters(out))
@@ -71,22 +91,16 @@ def test_ivfpq_index_query_prunes_cells(spark, tmp_path):
 
 def test_trained_ivfpq_index_serve_matches_fresh_build(spark, tmp_path):
     """The deployable split: train + encode + persist ONCE
-    (``ivfpq_index_write(cents=…, codebook=…)``), then serve with
-    ADC-shortlist + exact refine from the artifact — bit-identical to
-    the in-session ``ivf_pq_ann_trained`` (same deterministic sample,
-    literally shared scoring/refine code, floats round-trip JSON
-    exactly)."""
-    from example_kafkastreams_spark.operators.knn import (
-        ivf_pq_ann_trained,
-        train_ivfpq_local,
-    )
-
+    (``ann_build`` to a path), then serve with ADC-shortlist + exact
+    refine from the artifact — bit-identical to the in-session build
+    (same deterministic sample, literally shared scoring/refine code,
+    floats round-trip JSON exactly)."""
     emb = load_table(spark, SMOKE, "embeddings")
-    cfg = dict(num_centroids=4, m=8, num_codes=16, sample_n=256,
-               iterations=4)
-    cents, cb = train_ivfpq_local(emb, **cfg)
+    train = dict(sample_n=256, iterations=4)
+    live, enc = ann_build(emb, _IVFPQ, **train)
+    cents, cb = live["centroids"], live["codebook"]
     path = str(tmp_path / "ivfpq_trained")
-    ivfpq_index_write(emb, path, cents=cents, codebook=cb)
+    ann_build(emb, _IVFPQ, path, **train)
 
     _, meta = ann_index_read(spark, path)
     assert meta["num_centroids"] == 4 and meta["m"] == 8
@@ -98,9 +112,7 @@ def test_trained_ivfpq_index_serve_matches_fresh_build(spark, tmp_path):
         rerank_against=emb,
     )
     assert got.columns == ["query_id", "neighbor_id", "cosine", "knn_rank"]
-    want = ivf_pq_ann_trained(
-        emb, num_queries=6, k=3, nprobe=2, refine=20, **cfg
-    )
+    want = ann_serve(live, enc, queries, 3, nprobe=2, refine=20)
     assert _rows(got) == _rows(want)
 
 
@@ -108,9 +120,8 @@ def test_trained_pq_index_uses_arrow_encoder_above_threshold(spark, tmp_path):
     """A >32-code trained codebook must persist through the Arrow
     encoder (the expression path would splice m*num_codes literal
     folds past JIT limits at serving scale) and still round-trip:
-    loaded refine+rerank == in-session ``pq_ann_trained``."""
+    loaded refine+rerank == the in-session build's fused serve."""
     from example_kafkastreams_spark.operators.knn import (
-        pq_ann_trained,
         pq_codebook_local,
         sample_vectors,
     )
@@ -119,7 +130,7 @@ def test_trained_pq_index_uses_arrow_encoder_above_threshold(spark, tmp_path):
     X = sample_vectors(emb, 256)
     cb = pq_codebook_local(X, m=8, num_codes=48, iterations=4)
     path = str(tmp_path / "pq_trained")
-    pq_index_write(emb, path, codebook=cb)
+    ann_build(emb, {"kind": "pq", "codebook": cb}, path)
 
     _, meta = ann_index_read(spark, path)
     assert meta["m"] == 8 and meta["num_codes"] == 48
@@ -128,24 +139,23 @@ def test_trained_pq_index_uses_arrow_encoder_above_threshold(spark, tmp_path):
     got = ann_index_query(
         spark, path, queries, k=3, refine=20, rerank_against=emb
     )
-    want = pq_ann_trained(
-        emb, num_queries=6, k=3, m=8, num_codes=48, refine=20,
-        sample_n=256, iterations=4,
+    want = ann_serve(
+        *ann_build(
+            emb, {"kind": "pq", "m": 8, "num_codes": 48}, sample_n=256,
+            iterations=4,
+        ),
+        queries, 3, refine=20,
     )
     assert _rows(got) == _rows(want)
 
 
 def test_ivfflat_index_roundtrip_matches_fresh_build(spark, tmp_path):
     """IVF-Flat (raw vectors, exact cosine within probed cells): the
-    loaded artifact serves bit-identically to the in-session
-    ``ivf_flat_ann_trained`` — raw vectors round-trip parquet exactly,
-    centroids round-trip JSON exactly, probed cells are the same
-    driver-side ``_py_cosine`` picks."""
-    from example_kafkastreams_spark.operators.ann_index import (
-        ivfflat_index_write,
-    )
+    loaded artifact serves bit-identically to the in-session build —
+    raw vectors round-trip parquet exactly, centroids round-trip JSON
+    exactly, probed cells are the same driver-side ``_py_cosine``
+    picks."""
     from example_kafkastreams_spark.operators.knn import (
-        ivf_flat_ann_trained,
         kmeans_train_local,
         sample_vectors,
     )
@@ -154,7 +164,7 @@ def test_ivfflat_index_roundtrip_matches_fresh_build(spark, tmp_path):
     X = sample_vectors(emb, 256)
     cents = kmeans_train_local(X, 4, 4, "cosine")
     path = str(tmp_path / "ivfflat_idx")
-    ivfflat_index_write(emb, path, cents)
+    ann_build(emb, {"kind": "ivfflat", "centroids": cents}, path)
 
     enc, meta = ann_index_read(spark, path)
     assert meta["kind"] == "ivfflat" and meta["num_centroids"] == 4
@@ -163,9 +173,12 @@ def test_ivfflat_index_roundtrip_matches_fresh_build(spark, tmp_path):
     queries = emb.filter(F.col("vec_id") < 6)
     got = ann_index_query(spark, path, queries, k=3, nprobe=2)
     assert got.columns == ["query_id", "neighbor_id", "cosine", "knn_rank"]
-    want = ivf_flat_ann_trained(
-        emb, num_queries=6, k=3, num_centroids=4, nprobe=2,
-        sample_n=256, iterations=4,
+    want = ann_serve(
+        *ann_build(
+            emb, {"kind": "ivfflat", "num_centroids": 4}, sample_n=256,
+            iterations=4,
+        ),
+        queries, 3, nprobe=2,
     )
     assert _rows(got) == _rows(want)
 
@@ -175,24 +188,21 @@ def test_ivfflat_full_probe_is_brute_force(spark, tmp_path):
     exact in-cell scoring makes the result THE brute-force answer —
     the correctness anchor: recall loss in IVF-Flat comes only from
     the probe budget."""
-    from example_kafkastreams_spark.operators.knn import (
-        brute_force_knn,
-        ivf_flat_ann_trained,
-    )
+    from example_kafkastreams_spark.operators.knn import brute_force_knn
 
     emb = load_table(spark, SMOKE, "embeddings")
-    got = ivf_flat_ann_trained(
-        emb, num_queries=6, k=3, num_centroids=4, nprobe=4,
-        sample_n=256, iterations=4,
+    got = ann_serve(
+        *ann_build(
+            emb, {"kind": "ivfflat", "num_centroids": 4}, sample_n=256,
+            iterations=4,
+        ),
+        emb.filter(F.col("vec_id") < 6), 3, nprobe=4,
     )
     want = brute_force_knn(emb, num_queries=6, k=3)
     assert _rows(got) == _rows(want)
 
 
 def test_ivfflat_index_query_prunes_cells(spark, tmp_path):
-    from example_kafkastreams_spark.operators.ann_index import (
-        ivfflat_index_write,
-    )
     from example_kafkastreams_spark.operators.knn import (
         kmeans_train_local,
         sample_vectors,
@@ -203,7 +213,7 @@ def test_ivfflat_index_query_prunes_cells(spark, tmp_path):
     X = sample_vectors(emb, 256)
     cents = kmeans_train_local(X, 4, 4, "cosine")
     path = str(tmp_path / "ivfflat_idx2")
-    ivfflat_index_write(emb, path, cents)
+    ann_build(emb, {"kind": "ivfflat", "centroids": cents}, path)
     out = ann_index_query(
         spark, path, emb.filter(F.col("vec_id") < 2), k=3, nprobe=1
     )
@@ -214,9 +224,6 @@ def test_ivfflat_index_query_prunes_cells(spark, tmp_path):
 def test_ivfflat_refine_raises(spark, tmp_path):
     import pytest
 
-    from example_kafkastreams_spark.operators.ann_index import (
-        ivfflat_index_write,
-    )
     from example_kafkastreams_spark.operators.knn import (
         kmeans_train_local,
         sample_vectors,
@@ -225,7 +232,7 @@ def test_ivfflat_refine_raises(spark, tmp_path):
     emb = load_table(spark, SMOKE, "embeddings")
     cents = kmeans_train_local(sample_vectors(emb, 256), 4, 2, "cosine")
     path = str(tmp_path / "ivfflat_idx3")
-    ivfflat_index_write(emb, path, cents)
+    ann_build(emb, {"kind": "ivfflat", "centroids": cents}, path)
     with pytest.raises(ValueError, match="refine"):
         ann_index_query(
             spark, path, emb.filter(F.col("vec_id") < 2), k=3,
@@ -238,7 +245,7 @@ def test_refine_requires_rerank_frame(spark, tmp_path):
 
     emb = load_table(spark, SMOKE, "embeddings")
     path = str(tmp_path / "pq_idx4")
-    pq_index_write(emb, path)
+    ann_build(emb, _sample_pq(emb), path)
     with pytest.raises(ValueError, match="rerank_against"):
         ann_index_query(
             spark, path, emb.filter(F.col("vec_id") < 2), k=3, refine=10
@@ -248,7 +255,7 @@ def test_refine_requires_rerank_frame(spark, tmp_path):
 def test_empty_query_frame_returns_typed_empty(spark, tmp_path):
     emb = load_table(spark, SMOKE, "embeddings")
     path = str(tmp_path / "pq_idx3")
-    pq_index_write(emb, path)
+    ann_build(emb, _sample_pq(emb), path)
     out = ann_index_query(
         spark, path, emb.filter(F.col("vec_id") < 0), k=3
     )
@@ -267,21 +274,16 @@ def test_ann_index_append_sink_matches_full_encode(spark, tmp_path):
         ann_index_append_sink,
     )
     from example_kafkastreams_spark.operators.knn import (
+        ann_encode,
         exact_rerank,
-        ivf_pq_encode_local,
         ivfpq_adc_score,
-        train_ivfpq_local,
     )
     from example_kafkastreams_spark.plans import pushed_filters
 
     emb = load_table(spark, SMOKE, "embeddings")
     day1 = emb.filter(F.col("vec_id") % 3 != 0)
-    cents, cb = train_ivfpq_local(
-        day1, num_centroids=4, m=8, num_codes=16, sample_n=256,
-        iterations=4,
-    )
     path = str(tmp_path / "ivfpq_live")
-    ivfpq_index_write(day1, path, cents=cents, codebook=cb)
+    meta, _ = ann_build(day1, _IVFPQ, path, sample_n=256, iterations=4)
 
     sink = ann_index_append_sink(spark, path, run_id="run-1")
     batch0 = emb.filter(F.col("vec_id") % 6 == 0)
@@ -299,10 +301,9 @@ def test_ann_index_append_sink_matches_full_encode(spark, tmp_path):
         .select("vec_id", "embedding")
         .collect()
     )
+    cents, cb = meta["centroids"], meta["codebook"]
     want = exact_rerank(
-        ivfpq_adc_score(
-            ivf_pq_encode_local(emb, cents, cb), cents, cb, qrows, 20, 2
-        ),
+        ivfpq_adc_score(ann_encode(emb, meta), cents, cb, qrows, 20, 2),
         emb,
         qrows,
         3,
@@ -330,7 +331,6 @@ def test_ann_index_append_sink_ivfflat(spark, tmp_path):
     centroids."""
     from example_kafkastreams_spark.operators.ann_index import (
         ann_index_append_sink,
-        ivfflat_index_write,
     )
     from example_kafkastreams_spark.operators.knn import (
         ivf_flat_encode,
@@ -343,7 +343,7 @@ def test_ann_index_append_sink_ivfflat(spark, tmp_path):
     day1 = emb.filter(F.col("vec_id") % 3 != 0)
     cents = kmeans_train_local(sample_vectors(day1, 256), 4, 4, "cosine")
     path = str(tmp_path / "ivfflat_live")
-    ivfflat_index_write(day1, path, cents)
+    ann_build(day1, {"kind": "ivfflat", "centroids": cents}, path)
     sink = ann_index_append_sink(spark, path, run_id="run-1")
     sink(emb.filter(F.col("vec_id") % 3 == 0), 0)
 
@@ -361,6 +361,60 @@ def test_ann_index_append_sink_ivfflat(spark, tmp_path):
     assert _rows(got) == _rows(want)
 
 
+def test_untrained_ivfpq_append_matches_one_shot(spark, tmp_path):
+    """Base ∪ appended codes must equal a one-shot encode for an index
+    with deterministic-sample parameters too, not only a trained one:
+    the sink encodes each batch through the build's dispatch. Every
+    row here is an exact cell tie — centroid 1 (id 1) is centroid 0
+    (id 0) reversed and every other vector is a palindrome — so only
+    the rounding of the cell fold decides its cell, and two encoders
+    that fold differently put some rows in different cells. Ids
+    1100–1199 duplicate the appended ids 100–199, so a single-probe
+    top-1 of each duplicate must find its twin."""
+    import numpy as np
+
+    from example_kafkastreams_spark.operators.ann_index import (
+        ann_index_append_sink,
+    )
+
+    rng = np.random.default_rng(12)
+    c0 = rng.normal(size=64)
+    vecs = {0: c0, 1: c0[::-1]}
+    for i in range(2, 1100):
+        half = rng.normal(size=32)
+        vecs[i] = np.concatenate([half, half[::-1]])
+    for i in range(100, 200):
+        vecs[1000 + i] = vecs[i]
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in sorted(vecs.items())],
+        "vec_id long, embedding array<float>",
+    )
+    appended = (F.col("vec_id") >= 100) & (F.col("vec_id") < 200)
+    day1 = emb.filter(~appended)
+    spec = _sample_ivfpq(day1, num_centroids=2)
+    live = str(tmp_path / "live")
+    ann_build(day1, spec, live)
+    ann_index_append_sink(spark, live, run_id="run-1")(
+        emb.filter(appended), 0
+    )
+    oneshot = str(tmp_path / "oneshot")
+    ann_build(emb, spec, oneshot)
+
+    def encoded(path):
+        enc, _ = ann_index_read(spark, path)
+        return {r.vec_id: (r.cell, list(r.codes)) for r in enc.collect()}
+
+    got = encoded(live)
+    want = encoded(oneshot)
+    assert len(got) == len(want) == 1200
+    assert sorted(i for i in want if got[i] != want[i]) == []
+    dups = emb.filter(F.col("vec_id") >= 1100)
+    top1 = ann_index_query(spark, live, dups, k=1, nprobe=1).collect()
+    assert {r.query_id: r.neighbor_id for r in top1} == {
+        1000 + i: i for i in range(100, 200)
+    }
+
+
 def test_ann_index_compact_serves_identically(spark, tmp_path):
     """Folding the append sink's delta leaves into the base tree must
     not move a single bit of the served results; only the run's
@@ -375,16 +429,11 @@ def test_ann_index_compact_serves_identically(spark, tmp_path):
         ann_index_append_sink,
         ann_index_compact,
     )
-    from example_kafkastreams_spark.operators.knn import train_ivfpq_local
 
     emb = load_table(spark, SMOKE, "embeddings")
     day1 = emb.filter(F.col("vec_id") % 3 != 0)
-    cents, cb = train_ivfpq_local(
-        day1, num_centroids=4, m=8, num_codes=16, sample_n=256,
-        iterations=4,
-    )
     path = str(tmp_path / "ivfpq_cmp")
-    ivfpq_index_write(day1, path, cents=cents, codebook=cb)
+    ann_build(day1, _IVFPQ, path, sample_n=256, iterations=4)
     sink = ann_index_append_sink(spark, path, run_id="run-1")
     sink(emb.filter(F.col("vec_id") % 6 == 0), 0)
     sink(emb.filter(F.col("vec_id") % 6 == 3), 1)
@@ -423,16 +472,11 @@ def test_ann_index_compact_recovers_parked_dirs(spark, tmp_path):
         ann_index_append_sink,
         ann_index_compact,
     )
-    from example_kafkastreams_spark.operators.knn import train_ivfpq_local
 
     emb = load_table(spark, SMOKE, "embeddings")
     day1 = emb.filter(F.col("vec_id") % 3 != 0)
-    cents, cb = train_ivfpq_local(
-        day1, num_centroids=4, m=8, num_codes=16, sample_n=256,
-        iterations=4,
-    )
     path = str(tmp_path / "ivfpq_crash")
-    ivfpq_index_write(day1, path, cents=cents, codebook=cb)
+    ann_build(day1, _IVFPQ, path, sample_n=256, iterations=4)
     sink = ann_index_append_sink(spark, path, run_id="run-1")
     sink(emb.filter(F.col("vec_id") % 3 == 0), 0)
     queries = emb.filter(F.col("vec_id") < 6)
@@ -453,16 +497,11 @@ def _append_two_batches(spark, tmp_path, name):
     from example_kafkastreams_spark.operators.ann_index import (
         ann_index_append_sink,
     )
-    from example_kafkastreams_spark.operators.knn import train_ivfpq_local
 
     emb = load_table(spark, SMOKE, "embeddings")
     day1 = emb.filter(F.col("vec_id") % 3 != 0)
-    cents, cb = train_ivfpq_local(
-        day1, num_centroids=4, m=8, num_codes=16, sample_n=256,
-        iterations=4,
-    )
     path = str(tmp_path / name)
-    ivfpq_index_write(day1, path, cents=cents, codebook=cb)
+    ann_build(day1, _IVFPQ, path, sample_n=256, iterations=4)
     sink = ann_index_append_sink(spark, path, run_id="run-1")
     b1 = emb.filter(F.col("vec_id") % 6 == 3)
     sink(emb.filter(F.col("vec_id") % 6 == 0), 0)

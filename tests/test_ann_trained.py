@@ -1,12 +1,13 @@
 """Sampled-training + exact-refine ANN (knn.sample_vectors /
-kmeans_train_local / pq_codebook_local / pq_encode_vectorized /
-ivf_pq_encode_local / exact_rerank / *_ann_trained) — the
+kmeans_train_local / pq_codebook_local / the Arrow encoder /
+exact_rerank / ann_index.ann_build + knn.ann_serve) — the
 serving-grade recipe VERDICT r6/r7 item 1 asked for.
 
 Conventions under test: the Arrow encoder is row-identical to the
-spliced-expression encoder on the same codebook; refine over a full
-shortlist IS brute force; sampled training is deterministic and
-bounded; string-id corpora survive the ADC path (ADVICE r7)."""
+spliced-expression encoder on the same parameters, ties included;
+refine over a full shortlist IS brute force; sampled training is
+deterministic and bounded; string-id corpora survive the ADC path
+(ADVICE r7)."""
 
 import math
 import random
@@ -15,21 +16,22 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F, types as T
 
+from example_kafkastreams_spark.operators.ann_index import ann_build
 from example_kafkastreams_spark.operators.cache import (
     release_sketch_caches,
 )
 from example_kafkastreams_spark.operators.knn import (
+    _encode_arrow,
+    _encode_sql,
+    ann_encode,
+    ann_serve,
     brute_force_knn,
     exact_rerank,
-    ivf_pq_ann_trained,
-    ivf_pq_encode_local,
     kmeans_train_local,
     pq_adc_score,
-    pq_ann_trained,
     pq_codebook,
     pq_codebook_local,
     pq_encode,
-    pq_encode_vectorized,
     sample_vectors,
 )
 
@@ -109,7 +111,9 @@ def test_vectorized_encode_matches_expression(spark):
     a = {r.vec_id: list(r.codes) for r in pq_encode(emb, cb).collect()}
     b = {
         r.vec_id: list(r.codes)
-        for r in pq_encode_vectorized(emb, cb).collect()
+        for r in _encode_arrow(
+            emb, None, cb, "vec_id", "embedding"
+        ).collect()
     }
     assert a == b
 
@@ -118,7 +122,7 @@ def test_vectorized_encode_shuffle_free(spark):
     emb, _ = _clustered(spark)
     cb = pq_codebook(emb, m=8, num_codes=16)
     plan = (
-        pq_encode_vectorized(emb, cb)
+        _encode_arrow(emb, None, cb, "vec_id", "embedding")
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -126,12 +130,61 @@ def test_vectorized_encode_shuffle_free(spark):
     assert "Exchange" not in plan
 
 
+def test_arrow_and_expression_encoders_agree_on_ties(spark):
+    """The two encoders compute the same folds, so they agree by
+    construction — not because the data happens to hold no ties.
+    Every vector here ties EXACTLY (in real arithmetic) between two
+    cells and, per subspace, between two codewords: each second
+    centroid/codeword is its partner reversed and every (sub)vector is
+    a palindrome, so the two distances sum the same terms in opposite
+    orders and only the rounding of the fold decides the pick. A BLAS
+    dot or a pairwise ``sum`` rounds differently from the SQL left
+    fold and flips a share of them."""
+    rng = np.random.default_rng(20)
+    dim, m, n = 64, 8, 400
+    dsub = dim // m
+
+    def pal(size):
+        half = rng.normal(size=size // 2)
+        return np.concatenate([half, half[::-1]])
+
+    c0 = rng.normal(size=dim)
+    cents = [list(map(float, c0)), list(map(float, c0[::-1]))]
+    words = [rng.normal(size=(8, dsub)) for _ in range(m)]
+    cb = [
+        [list(map(float, w)) for w in ws]
+        + [list(map(float, w[::-1])) for w in ws]
+        for ws in words
+    ]
+    def vec():  # a palindrome made of palindromic subvectors
+        half = [pal(dsub) for _ in range(m // 2)]
+        return np.concatenate(half + half[::-1])
+
+    rows = [(i, [float(x) for x in vec()]) for i in range(n)]
+    # float32 storage, like the corpus; palindromes survive the cast
+    emb = spark.createDataFrame(rows, SCHEMA)
+
+    def by_id(df, cols):
+        return {r.vec_id: tuple(
+            list(r[c]) if c == "codes" else r[c] for c in cols
+        ) for r in df.collect()}
+
+    for cs, cols in ((None, ("codes",)), (cents, ("cell", "codes"))):
+        sql = by_id(_encode_sql(emb, cs, cb, "vec_id", "embedding"), cols)
+        arrow = by_id(
+            _encode_arrow(emb, cs, cb, "vec_id", "embedding"), cols
+        )
+        assert len(sql) == n
+        diff = sorted(i for i in sql if sql[i] != arrow[i])
+        assert not diff, (cols, len(diff), diff[:5])
+
+
 def test_ivf_pq_encode_local_contract(spark):
     emb, _ = _clustered(spark, n_clusters=4)
     X = sample_vectors(emb, n=1000)
     cents = kmeans_train_local(X, 4, metric="cosine")
     cb = pq_codebook_local(X, m=8, num_codes=16, iterations=3)
-    enc = ivf_pq_encode_local(emb, cents, cb)
+    enc = _encode_arrow(emb, cents, cb, "vec_id", "embedding")
     rows = enc.collect()
     assert enc.columns == ["vec_id", "cell", "codes"]
     assert all(0 <= r.cell < 4 for r in rows)
@@ -140,7 +193,9 @@ def test_ivf_pq_encode_local_contract(spark):
     # partition independent
     again = {
         r.vec_id: (r.cell, list(r.codes))
-        for r in ivf_pq_encode_local(emb.repartition(5), cents, cb).collect()
+        for r in _encode_arrow(
+            emb.repartition(5), cents, cb, "vec_id", "embedding"
+        ).collect()
     }
     assert again == {r.vec_id: (r.cell, list(r.codes)) for r in rows}
 
@@ -181,11 +236,13 @@ def test_trained_pq_recall_exact_on_clusters(spark):
     the exact top-k — the shortlist (refine=20 on a 48-vector corpus)
     safely contains the true neighbors and the re-rank is exact."""
     emb, _ = _clustered(spark)
+    meta, enc = ann_build(
+        emb, {"kind": "pq", "m": 8, "num_codes": 16}, iterations=4
+    )
     got = {
         (r.query_id, r.knn_rank): r.neighbor_id
-        for r in pq_ann_trained(
-            emb, num_queries=4, k=3, m=8, num_codes=16,
-            refine=20, iterations=4,
+        for r in ann_serve(
+            meta, enc, emb.filter(F.col("vec_id") < 4), 3, refine=20
         ).collect()
     }
     release_sketch_caches()
@@ -198,11 +255,16 @@ def test_trained_pq_recall_exact_on_clusters(spark):
 
 def test_trained_ivfpq_recall_exact_on_clusters(spark):
     emb, _ = _clustered(spark)
+    meta, enc = ann_build(
+        emb,
+        {"kind": "ivfpq", "num_centroids": 4, "m": 8, "num_codes": 16},
+        iterations=4,
+    )
     got = {
         (r.query_id, r.knn_rank): r.neighbor_id
-        for r in ivf_pq_ann_trained(
-            emb, num_queries=4, k=3, num_centroids=4, m=8,
-            num_codes=16, nprobe=4, refine=20, iterations=4,
+        for r in ann_serve(
+            meta, enc, emb.filter(F.col("vec_id") < 4), 3, nprobe=4,
+            refine=20,
         ).collect()
     }
     release_sketch_caches()
@@ -219,17 +281,7 @@ def test_fused_serve_bitwise_equals_two_pass(spark):
     shape (adc_score → exact_rerank's broadcast + second corpus scan)
     for both PQ and IVF-PQ — same survivor set under the same total
     order, same IEEE cosine fold, same rounding and tie-break."""
-    from example_kafkastreams_spark.operators.knn import (
-        ivf_pq_ann_trained,
-        ivf_pq_encode_local,
-        ivfpq_adc_score,
-        pq_adc_score,
-        pq_ann_trained,
-        pq_codebook_local,
-        pq_encode_vectorized,
-        sample_vectors,
-        train_ivfpq_local,
-    )
+    from example_kafkastreams_spark.operators.knn import ivfpq_adc_score
 
     emb, _ = _clustered(spark)
     qrows = (
@@ -242,34 +294,33 @@ def test_fused_serve_bitwise_equals_two_pass(spark):
         (r.query_id, r.neighbor_id, r.cosine, r.knn_rank)
         for r in df.collect()
     )
-    X = sample_vectors(emb, 2048)
-    cb = pq_codebook_local(X, 8, 16, 4)
-    enc = pq_encode_vectorized(emb, cb)
-    two_pass = rk(
-        exact_rerank(pq_adc_score(enc, cb, qrows, 20), emb, qrows, 3)
+    meta, enc = ann_build(
+        emb, {"kind": "pq", "m": 8, "num_codes": 16}, iterations=4
     )
-    fused = rk(
-        pq_ann_trained(
-            emb, num_queries=4, k=3, m=8, num_codes=16, refine=20,
-            iterations=4,
+    cb = meta["codebook"]
+    two_pass = rk(
+        exact_rerank(
+            pq_adc_score(ann_encode(emb, meta), cb, qrows, 20),
+            emb, qrows, 3,
         )
     )
+    fused = rk(ann_serve(meta, enc, qrows, 3, refine=20))
     release_sketch_caches()
     assert fused == two_pass
 
-    cents, cb2 = train_ivfpq_local(emb, 4, 8, 16, 16384, 4)
-    enc2 = ivf_pq_encode_local(emb, cents, cb2)
+    meta2, enc2 = ann_build(
+        emb,
+        {"kind": "ivfpq", "num_centroids": 4, "m": 8, "num_codes": 16},
+        iterations=4,
+    )
+    cents, cb2 = meta2["centroids"], meta2["codebook"]
     two_pass2 = rk(
         exact_rerank(
-            ivfpq_adc_score(enc2, cents, cb2, qrows, 20, 4), emb, qrows, 3
+            ivfpq_adc_score(ann_encode(emb, meta2), cents, cb2, qrows, 20, 4),
+            emb, qrows, 3,
         )
     )
-    fused2 = rk(
-        ivf_pq_ann_trained(
-            emb, num_queries=4, k=3, num_centroids=4, m=8, num_codes=16,
-            nprobe=4, refine=20, iterations=4,
-        )
-    )
+    fused2 = rk(ann_serve(meta2, enc2, qrows, 3, nprobe=4, refine=20))
     release_sketch_caches()
     assert fused2 == two_pass2
 

@@ -150,27 +150,6 @@ def test_matryoshka_recall_scales_with_prefix_and_shortlist(spark):
     assert r32_64 >= 0.7, r32_64
 
 
-def test_knn_vectorized_matches_expression(spark):
-    """The numpy-matmul scale path returns the same neighbors/ranks as
-    the Catalyst fold expression path (cosine gaps dwarf the 1e-15
-    summation-order difference)."""
-    from example_kafkastreams_spark.operators.knn import (
-        brute_force_knn,
-        brute_force_knn_vectorized,
-    )
-
-    emb = load_table(spark, SMOKE, "embeddings")
-    expr_rows = {
-        (r.query_id, r.knn_rank): r.neighbor_id
-        for r in brute_force_knn(emb, num_queries=8, k=5).collect()
-    }
-    fast_rows = {
-        (r.query_id, r.knn_rank): r.neighbor_id
-        for r in brute_force_knn_vectorized(emb, num_queries=8, k=5).collect()
-    }
-    assert expr_rows == fast_rows
-
-
 def test_bucketed_join_zero_exchange(spark, tmp_path):
     """Two tables bucketed on the join key join WITHOUT any shuffle —
     the persistent co-partitioning the reference builds with keyed

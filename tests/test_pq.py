@@ -271,111 +271,6 @@ def test_lsh_multiprobe_no_duplicate_candidates(spark):
     assert len(pairs) == len(set(pairs))
 
 
-# --- k-means coarse-quantizer training ------------------------------------
-
-
-def test_kmeans_recovers_cluster_centers(spark):
-    """On well-separated clusters, trained centroids land one-per-
-    cluster (each true center's nearest centroid is distinct) and the
-    Lloyd objective is non-increasing vs the init sample."""
-    from example_kafkastreams_spark.operators.knn import (
-        kmeans_inertia,
-        kmeans_train,
-    )
-
-    emb, per_cluster = _clustered(spark, n_clusters=4, per_cluster=12)
-    init = [
-        [float(x) for x in r[0]]
-        for r in emb.filter(F.col("vec_id") < 4)
-        .orderBy("vec_id")
-        .select("embedding")
-        .collect()
-    ]
-    trained = kmeans_train(emb, k=4, iterations=5)
-    assert kmeans_inertia(emb, trained) <= kmeans_inertia(emb, init) + 1e-9
-
-    # one centroid per true cluster: nearest trained centroid of each
-    # cluster's members is the same, and distinct across clusters
-    import math
-
-    def nearest(v):
-        best, bi = None, -1
-        for i, c in enumerate(trained):
-            d = sum((a - b) ** 2 for a, b in zip(v, c))
-            if best is None or d < best:
-                best, bi = d, i
-        return bi
-
-    rows = {r.vec_id: [float(x) for x in r.embedding]
-            for r in emb.collect()}
-    owners = []
-    for cl in range(4):
-        cells = {nearest(rows[cl * per_cluster + i]) for i in range(per_cluster)}
-        assert len(cells) == 1
-        owners.append(cells.pop())
-    assert len(set(owners)) == 4
-
-
-def test_kmeans_centroids_feed_ivf(spark):
-    """ivf_ann with trained centroids is a drop-in: same output shape,
-    and recall@1 on the clustered fixture is exact (the trained
-    quantizer routes every query to its true cluster's cell)."""
-    from example_kafkastreams_spark.operators.knn import (
-        ivf_ann,
-        kmeans_train,
-    )
-
-    emb, per_cluster = _clustered(spark)
-    cents = kmeans_train(emb, k=4, iterations=4)
-    out = ivf_ann(emb, num_queries=4, k=1, centroids=cents)
-    release_sketch_caches()
-    exact = {
-        r.query_id: r.neighbor_id
-        for r in brute_force_knn(emb, num_queries=4, k=1).collect()
-    }
-    got = {r.query_id: r.neighbor_id for r in out.collect()}
-    release_sketch_caches()
-    assert set(got) == set(exact)
-    for q in exact:
-        assert got[q] // per_cluster == exact[q] // per_cluster
-
-
-def test_trained_pq_codebook_reduces_quantization_error(spark):
-    """Per-subspace L2 k-means codebooks reconstruct the corpus with
-    at most the sample codebook's total squared error (Lloyd never
-    increases the objective it optimizes), and pq_encode/pq_ann accept
-    them unchanged."""
-    from example_kafkastreams_spark.operators.knn import (
-        pq_ann,
-        pq_codebook,
-        pq_codebook_trained,
-        pq_encode,
-    )
-
-    emb, _ = _clustered(spark, n_clusters=4, per_cluster=16)
-
-    def total_err(cb):
-        enc = {r.vec_id: list(r.codes) for r in pq_encode(emb, cb).collect()}
-        vecs = {r.vec_id: [float(x) for x in r.embedding]
-                for r in emb.collect()}
-        err = 0.0
-        for vid, codes in enc.items():
-            for j, c in enumerate(codes):
-                cw = cb[j][c]
-                seg = vecs[vid][j * 8:(j + 1) * 8]
-                err += sum((a - b) ** 2 for a, b in zip(seg, cw))
-        return err
-
-    sample_cb = pq_codebook(emb, m=8, num_codes=16)
-    trained_cb = pq_codebook_trained(emb, m=8, num_codes=16, iterations=3)
-    assert len(trained_cb) == 8 and all(len(s) == 16 for s in trained_cb)
-    assert total_err(trained_cb) <= total_err(sample_cb) + 1e-9
-    # drop-in: ann over the trained codebook still ranks sanely
-    out = pq_ann(emb, num_queries=2, k=3)
-    release_sketch_caches()
-    assert len(out.collect()) == 6
-
-
 def test_adc_plan_constant_in_query_count(spark):
     """The serving-path contract: ADC scoring is ONE broadcast join —
     the number of queries (and probed cells) changes broadcast ROWS,

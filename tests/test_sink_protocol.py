@@ -227,15 +227,16 @@ def test_ann_append_sink_reads_each_batch_once(spark, tmp_path):
     from example_kafkastreams_spark import obs
     from example_kafkastreams_spark.catalog import load_table
     from example_kafkastreams_spark.operators.ann_index import (
+        ann_build,
         ann_index_append_sink,
-        pq_index_write,
     )
+    from example_kafkastreams_spark.operators.knn import pq_codebook
     from example_kafkastreams_spark.streaming.sinks import read_leaves
     from tests.conftest import SMOKE
 
     emb = load_table(spark, SMOKE, "embeddings")
     path = str(tmp_path / "pq")
-    pq_index_write(emb, path, m=8, num_codes=16)
+    ann_build(emb, {"kind": "pq", "codebook": pq_codebook(emb, 8, 16)}, path)
     rows = [tuple(r) for r in emb.orderBy("vec_id").limit(100).collect()]
     src = str(tmp_path / "in")
     stage_replayable_batches(spark, src, emb.schema, [rows])
