@@ -256,15 +256,21 @@ def _engine_site(frame) -> str:
 def py4j_calls(sites: bool = False):
     """Count py4j round trips (``GatewayClient.send_command`` calls)
     made inside the block — deterministic under CPU contention, where
-    driver-side build wall is not."""
+    driver-side build wall is not. The release messages py4j's finalizer
+    thread sends for garbage-collected Java handles are not counted:
+    they go out whenever the Python GC frees a handle, whichever code
+    made it."""
+    from py4j import protocol
     from py4j.java_gateway import GatewayClient
 
     calls = Py4jCalls(sites)
     orig = GatewayClient.send_command
+    release = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
 
-    def counted(self, *a, **k):
-        calls.add(sys._getframe(1))
-        return orig(self, *a, **k)
+    def counted(self, command, *a, **k):
+        if not command.startswith(release):
+            calls.add(sys._getframe(1))
+        return orig(self, command, *a, **k)
 
     GatewayClient.send_command = counted
     try:

@@ -1390,15 +1390,16 @@ def _adc_topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _empty_ann_result(emb: DataFrame, id_col: str) -> DataFrame:
-    """Empty (query_id, neighbor_id, approx_d2, knn_rank) frame typed
+def _empty_ann_result(emb: DataFrame, id_col: str, score: str) -> DataFrame:
+    """Empty (query_id, neighbor_id, ``score``, knn_rank) frame typed
     off the corpus id column — what ``ann_serve`` returns when the
     query collect finds no rows (empty corpus, or no ids below
-    ``num_queries``)."""
+    ``num_queries``); ``score`` is ``approx_d2`` or ``cosine``, the
+    column the same call returns with rows."""
     return emb.select(
         F.col(id_col).alias("query_id"),
         F.col(id_col).alias("neighbor_id"),
-        F.lit(0.0).cast("double").alias("approx_d2"),
+        F.lit(0.0).cast("double").alias(score),
         F.lit(0).cast("int").alias("knn_rank"),
     ).limit(0)
 
@@ -2010,7 +2011,8 @@ def ann_serve(
     frame in the index's columns, collected driver-side (the bounded
     small side, ``brute_force_knn``'s broadcast convention), or an
     already-collected id-ordered row list; no rows → a typed empty
-    (query_id, neighbor_id, approx_d2, knn_rank) frame.
+    frame with the columns the call returns with rows (the argument
+    errors below are raised either way).
 
     ``ivfflat``: exact cosine inside the ``nprobe`` probed cells
     (``ivfflat_score``); ``refine`` does not apply. ``pq`` / ``ivfpq``:
@@ -2025,40 +2027,41 @@ def ann_serve(
     vectors up in ``rerank_against`` (``exact_rerank``). The two shapes
     are bit-identical."""
     idc, vc = meta["id_col"], meta.get("vec_col", "embedding")
+    kind = meta["kind"]
+    if kind not in ("pq", "ivfpq", "ivfflat"):
+        raise ValueError(f"unknown index kind {kind!r}")
+    if kind == "ivfflat" and refine is not None:
+        raise ValueError(
+            "ivfflat scores exact cosine inside probed cells; "
+            "refine/rerank does not apply"
+        )
+    fused = refine is not None and vc in enc.columns
+    if refine is not None and not fused and rerank_against is None:
+        raise ValueError("refine requires rerank_against")
     qrows = (
         list(queries)
         if isinstance(queries, list)
         else queries.orderBy(idc).select(idc, vc).collect()
     )
     if not qrows:
-        return _empty_ann_result(enc.select(F.col(idc)), idc)
-    kind = meta["kind"]
+        score = "approx_d2" if kind != "ivfflat" and refine is None else "cosine"
+        return _empty_ann_result(enc.select(F.col(idc)), idc, score)
     if kind == "ivfflat":
-        if refine is not None:
-            raise ValueError(
-                "ivfflat scores exact cosine inside probed cells; "
-                "refine/rerank does not apply"
-            )
         return ivfflat_score(enc, meta["centroids"], qrows, k, nprobe, idc, vc)
-    fused = refine is not None and vc in enc.columns
     carry = (vc,) if fused else ()
     if kind == "pq":
         scored = _pq_adc_scored(enc, meta["codebook"], qrows, idc, carry)
-    elif kind == "ivfpq":
+    else:
         scored = _ivfpq_adc_scored(
             enc, meta["centroids"], meta["codebook"], qrows, nprobe, idc,
             carry,
         )
-    else:
-        raise ValueError(f"unknown index kind {kind!r}")
     if refine is None:
         return _adc_topk(scored, k)
     if fused:
         return _fused_refine(
             scored, enc.schema[idc].dataType, qrows, refine, k, vc
         )
-    if rerank_against is None:
-        raise ValueError("refine requires rerank_against")
     return exact_rerank(
         _adc_topk(scored, refine), rerank_against, qrows, k, idc, vc
     )

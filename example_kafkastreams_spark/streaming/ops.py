@@ -23,7 +23,10 @@ event time passes, so steady-state footprint is (distinct keys in the
 retention horizon) × O(1), independent of stream length. The
 stream-stream join keys include the equi-columns, so Spark partitions
 both sides identically — one exchange per side, the same property the
-reference hand-builds with co-partitioned topics (SURVEY.md §4).
+reference hand-builds with co-partitioned topics (SURVEY.md §4). A
+streaming stateful operator requires hash partitioning on exactly its
+own keys, so a downstream dedup on a superset of the join key still
+re-shuffles: ``clickstream_enrich_stream`` plans three exchanges.
 """
 
 from __future__ import annotations
@@ -133,10 +136,14 @@ def clickstream_enrich_stream(
     fixture (:144-149) matches, the documented behavioral split between
     the two.
 
-    Both stateful stages key on supersets of ``on``, so Spark plans one
-    exchange per input — the co-partitioning property the reference
-    hand-builds by keeping both topics keyed by ClientKey (its entire
-    10× optimization, README.md:12).
+    The join plans one exchange per input, hash-partitioned on ``on``
+    — the co-partitioning property the reference hand-builds by
+    keeping both topics keyed by ClientKey (its entire 10×
+    optimization, README.md:12). The dedup keys are a superset of
+    ``on``, but a streaming stateful operator requires hash
+    partitioning on exactly its own keys, so the dedup re-shuffles the
+    join output: three exchanges in all (pinned by
+    ``test_enrich_stream_restart_recovers_join_and_dedup_state``).
     """
     joined, _, _ = interval_left_join(
         ev.withWatermark(left_ts, watermark_delay),

@@ -263,6 +263,44 @@ def test_empty_query_frame_returns_typed_empty(spark, tmp_path):
     assert out.columns == ["query_id", "neighbor_id", "approx_d2", "knn_rank"]
 
 
+def test_empty_query_frame_keeps_the_serve_contract(spark, tmp_path):
+    """An empty query frame returns the columns and types the same call
+    returns with rows (a refined or ivfflat serve is the cosine
+    contract), and an argument error is raised whether or not there are
+    query rows."""
+    from example_kafkastreams_spark.operators.knn import (
+        kmeans_train_local,
+        sample_vectors,
+    )
+
+    emb = load_table(spark, SMOKE, "embeddings")
+    pq_path = str(tmp_path / "pq_idx5")
+    ann_build(emb, _sample_pq(emb), pq_path)
+    flat_path = str(tmp_path / "ivfflat_idx5")
+    cents = kmeans_train_local(sample_vectors(emb, 256), 4, 2, "cosine")
+    ann_build(emb, {"kind": "ivfflat", "centroids": cents}, flat_path)
+
+    some, none = emb.filter(F.col("vec_id") < 2), emb.filter(F.col("vec_id") < 0)
+    for path, kw in (
+        (pq_path, {"refine": 10, "rerank_against": emb}),
+        (flat_path, {}),
+    ):
+        full = ann_index_query(spark, path, some, k=3, **kw)
+        empty = ann_index_query(spark, path, none, k=3, **kw)
+        assert "cosine" in full.columns
+        assert [(f.name, f.dataType) for f in empty.schema] == [
+            (f.name, f.dataType) for f in full.schema
+        ], path
+        assert empty.count() == 0
+    for queries in (some, none):
+        with pytest.raises(ValueError, match="refine"):
+            ann_index_query(
+                spark, flat_path, queries, k=3, refine=10, rerank_against=emb
+            )
+        with pytest.raises(ValueError, match="rerank_against"):
+            ann_index_query(spark, pq_path, queries, k=3, refine=10)
+
+
 def test_ann_index_append_sink_matches_full_encode(spark, tmp_path):
     """Streaming index maintenance: day-1 trained build + two appended
     micro-batches must serve BIT-IDENTICALLY to a one-shot encode of

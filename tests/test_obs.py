@@ -159,6 +159,22 @@ def test_py4j_calls_counts_every_thread_and_restores(monkeypatch):
     assert GatewayClient.send_command is stub
 
 
+def test_py4j_calls_skips_finalizer_releases(monkeypatch):
+    # py4j's finalizer thread frees garbage-collected Java handles
+    # whenever the Python GC runs, so a release inside the block may
+    # belong to any earlier code
+    from py4j.java_gateway import GatewayClient
+
+    monkeypatch.setattr(GatewayClient, "send_command", lambda self, cmd: cmd)
+    client = object.__new__(GatewayClient)
+    client.is_connected = True
+    with obs.py4j_calls(sites=True) as calls:
+        GatewayClient.send_command(client, "c")
+        client.garbage_collect_object("o7")
+    assert calls.n == 1
+    assert sum(calls.sites.values()) == 1
+
+
 def test_progress_parses_every_report():
     """``progress`` returns one dict per retained report, oldest first,
     from progress objects (their JSON form) and plain dicts alike."""

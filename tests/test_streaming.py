@@ -612,6 +612,144 @@ def test_checkpoint_restart_recovers_state(spark, tmp_path):
     assert run() == ["v0", "v17"]
 
 
+_RESTART_EV = T.StructType(
+    [
+        T.StructField("user_id", T.LongType()),
+        T.StructField("event_id", T.LongType()),
+        T.StructField("ts", T.TimestampType()),
+    ]
+)
+_RESTART_PV = T.StructType(
+    [
+        T.StructField("user_id", T.LongType()),
+        T.StructField("pv_event_id", T.LongType()),
+        T.StructField("pv_ts", T.TimestampType()),
+    ]
+)
+
+
+def _restart_batches():
+    """Four 20 s micro-batches plus a far-ahead sentinel. Users 0-2
+    view a page at +u and +10+u s of each batch and send events at
+    +2/+7/+12/+17+u s, so a batch's first events join a page view of
+    the batch before; user 3 only sends events (unmatched, NULL-filled).
+    Each batch re-sends the previous batch's last event."""
+    evs, pvs, resent = [], [], []
+    for b in range(4):
+        t0 = 20 * b
+        pvs.append(
+            [
+                (u, 1000 * b + 10 * u + i, at(t0 + 10 * i + u))
+                for u in range(3)
+                for i in range(2)
+            ]
+        )
+        ev = [
+            (u, 1000 * b + 100 + 10 * u + i, at(t0 + off + u))
+            for u in range(3)
+            for i, off in enumerate((2, 7, 12, 17))
+        ]
+        evs.append(ev + [(3, 1000 * b + 900, at(t0 + 5))] + resent)
+        resent = ev[-1:]
+    evs.append([(9, 9999, at(1000.0))])
+    pvs.append([(9, 9998, at(1000.0))])
+    return evs, pvs
+
+
+def _us(ts: dt.datetime) -> int:
+    return int(ts.timestamp() * 1_000_000)
+
+
+def test_enrich_stream_restart_recovers_join_and_dedup_state(spark, tmp_path):
+    """Stop the enrich stream after two batches, land two more plus a
+    sentinel, restart from the SAME checkpoint into a durable sink: the
+    join state (page views of batch 1 matched by events of batch 2) and
+    the dedup state (batch 1's last event re-sent in batch 2) must
+    survive the restart. Below the final watermark the sink holds the
+    rows of an uninterrupted run and of a reference look-back join, and
+    no (event, page view) pair twice. The running plan has three
+    exchanges: one per join input, and one more for the dedup, since a
+    streaming stateful operator needs hash partitioning on exactly its
+    own keys."""
+    import re
+    import time
+
+    from example_kafkastreams_spark.streaming.ops import clickstream_enrich_stream
+
+    evs, pvs = _restart_batches()
+    for d, schema, batches in (("ev", _RESTART_EV, evs), ("pv", _RESTART_PV, pvs)):
+        write_batches(spark, str(tmp_path / f"staged_{d}"), schema, batches)
+
+    def land(name, batches):
+        for d in ("ev", "pv"):
+            src = tmp_path / f"{name}_{d}"
+            src.mkdir(exist_ok=True)
+            for i in batches:
+                f = f"batch_{i:03d}.parquet"
+                # a hard link keeps the staged mtime, which orders the batches
+                os.link(tmp_path / f"staged_{d}" / f, src / f)
+
+    def run(name):
+        out = clickstream_enrich_stream(
+            file_stream(spark, str(tmp_path / f"{name}_ev"), _RESTART_EV, 1),
+            file_stream(spark, str(tmp_path / f"{name}_pv"), _RESTART_PV, 1),
+            on=["user_id"],
+            lookback_seconds=15,
+            dedup_keys=["user_id", "event_id", "pv_event_id"],
+            client_key="user_id",
+        )
+        q = (
+            out.writeStream.format("parquet")
+            .outputMode("append")
+            .option("path", str(tmp_path / f"{name}_out"))
+            .option("checkpointLocation", str(tmp_path / f"{name}_ckpt"))
+            .start()
+        )
+        q.processAllAvailable()
+        time.sleep(2)  # let the no-data batch advance the watermark
+        q.processAllAvailable()
+        plan = q._jsq.explainInternal(False)
+        wm = q.lastProgress["eventTime"]["watermark"]
+        q.stop()
+        q.awaitTermination()
+        return plan, _us(dt.datetime.fromisoformat(wm.replace("Z", "+00:00")))
+
+    land("restart", [0, 1])
+    run("restart")
+    land("restart", [2, 3, 4])
+    plan, wm_restart = run("restart")
+    land("whole", range(5))
+    _, wm_whole = run("whole")
+
+    assert len(re.findall(r"Exchange (?:hash|range|Single)", plan)) == 3, plan
+    wm = min(wm_restart, wm_whole)
+    assert wm > _us(at(80)), wm  # every event but the sentinel's is final
+
+    def rows(name):
+        got = spark.read.parquet(str(tmp_path / f"{name}_out")).selectExpr(
+            "user_id", "event_id", "pv_event_id", "unix_micros(ts) AS ts_us"
+        ).collect()
+        pairs = [(r.event_id, r.pv_event_id) for r in got]
+        assert len(pairs) == len(set(pairs)), name  # no pair twice
+        return sorted(
+            (r.user_id, r.event_id, r.pv_event_id) for r in got if r.ts_us < wm
+        )
+
+    all_pvs = [p for batch in pvs for p in batch]
+    want = sorted(
+        (u, e, p)
+        for u, e, ts in {e for batch in evs for e in batch}
+        if _us(ts) < wm
+        for p in [
+            p for pu, p, pts in all_pvs
+            if pu == u and ts - dt.timedelta(seconds=15) <= pts <= ts
+        ] or [None]
+    )
+    assert (3, 900, None) in want  # an unmatched event
+    assert (0, 2100, 1001) in want  # batch 2's event on batch 1's view
+    assert rows("restart") == rows("whole") == want
+
+
 def test_emission_anchored_stream_state_bound(spark, tmp_path):
     """Many keys in one batch: output stays per-key correct (shuffle on
     key, O(1) state per key)."""
